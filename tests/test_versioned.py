@@ -5583,3 +5583,184 @@ class TestScopedOptimize:
         assert blob["files_rewritten"] == 3
         got = {r["id"] for r in vt_read(spark, path).collect()}
         assert got == set(range(64))
+
+
+_DML_RACE_CASES = [
+    ("merge", "rewrite"),
+    ("merge", "dv"),
+    ("delete", "rewrite"),
+    ("delete", "dv"),
+    ("update", "rewrite"),
+    ("update", "dv"),
+    ("replace_where", "rewrite"),
+]
+
+
+def _run_dml(spark, path, verb, mode):
+    """One change-feed DML call per verb, each touching row id=1."""
+    from dynamicqueryengine_spark.sources.versioned import (
+        vt_delete,
+        vt_replace_where,
+        vt_update,
+    )
+
+    if verb == "merge":
+        return vt_merge(
+            spark, path, _df(spark, [(1, "merged"), (100, "new")]),
+            ["id"], change_feed=True, mode=mode,
+        )
+    if verb == "delete":
+        return vt_delete(
+            spark, path, ("id", "=", 1), change_feed=True, mode=mode
+        )
+    if verb == "update":
+        return vt_update(
+            spark, path, ("id", "=", 1), {"v": "'upd'"},
+            change_feed=True, mode=mode,
+        )
+    return vt_replace_where(
+        spark, path, _df(spark, [(1, "rw")]), ("id", "=", 1),
+        change_feed=True,
+    )
+
+
+class TestDmlLostRace:
+    """Every DML verb that loses its commit race re-derives against the
+    winner's head: it lands one version later, its change rows carry
+    the winner's pre-images, and nothing it staged for the lost attempt
+    (data dirs, change dirs, deletion-vector sidecars) stays on disk."""
+
+    _EXPECTED = {
+        "merge": (
+            {(1, "merged"), (100, "new")},
+            {
+                (1, "RACE", "update_preimage"),
+                (1, "merged", "update_postimage"),
+                (100, "new", "insert"),
+            },
+        ),
+        "delete": (set(), {(1, "RACE", "delete")}),
+        "update": (
+            {(1, "upd")},
+            {
+                (1, "RACE", "update_preimage"),
+                (1, "upd", "update_postimage"),
+            },
+        ),
+        "replace_where": (
+            {(1, "rw")},
+            {(1, "RACE", "delete"), (1, "rw", "insert")},
+        ),
+    }
+
+    @pytest.mark.parametrize("verb,mode", _DML_RACE_CASES)
+    def test_loser_lands_on_winner_head(
+        self, spark, tmp_path, monkeypatch, verb, mode
+    ):
+        import threading
+
+        import dynamicqueryengine_spark.sources.versioned as V
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_optimize,
+            vt_read_changes,
+            vt_update,
+        )
+
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, [(i, f"v{i}") for i in range(8)]))
+        vt_optimize(spark, path, ["id"], n_partitions=2)
+        base = vt_versions(path)[-1]
+        real = V._write_data_dir
+        lock = threading.Lock()
+        pending = [True]
+
+        def racy(df, p, *a, **kw):
+            with lock:
+                fire = bool(pending) and pending.pop()
+            if fire:
+                # the winner commits base+1 after the loser read base
+                vt_update(spark, path, ("id", "=", 1), {"v": "'RACE'"})
+            return real(df, p, *a, **kw)
+
+        monkeypatch.setattr(V, "_write_data_dir", racy)
+        v = _run_dml(spark, path, verb, mode)
+        monkeypatch.setattr(V, "_write_data_dir", real)
+        assert not pending, "the race was never injected"
+        assert v == base + 2
+        assert _read_manifest(path, base + 1)["op"] == "update"
+        want_rows, want_changes = self._EXPECTED[verb]
+        others = {(i, f"v{i}") for i in range(8) if i != 1}
+        assert _rows(vt_read(spark, path)) == others | want_rows
+        got = {
+            (r["id"], r["v"], r["_change_type"])
+            for r in vt_read_changes(spark, path, v - 1, v).collect()
+        }
+        assert got == want_changes
+        # every d_*/c_* dir and DV sidecar on disk is referenced by a
+        # committed manifest: the lost attempt left nothing behind
+        dirs, refs = set(), set()
+        for ver in vt_versions(path):
+            m = _read_manifest(path, ver)
+            dirs.update(m["dirs"])
+            if m.get("changes"):
+                dirs.add(m["changes"])
+            for fmap in (m.get("dv") or {}).values():
+                refs.update(e["ref"] for e in fmap.values())
+        on_disk = {
+            n for n in os.listdir(path) if n.startswith(("d_", "c_"))
+        }
+        assert on_disk == dirs
+        dvd = V._dv_dir(path)
+        sidecars = set(os.listdir(dvd)) if os.path.isdir(dvd) else set()
+        assert sidecars == refs
+
+
+class TestDmlJobCount:
+    """Spark job budget of the change-feed DML verbs on a fixed small
+    table. One fixed-cost job is 50-130 ms at this size, so a DML path
+    that grows a job is a latency regression even when its output is
+    unchanged. The bounds are the counts the verbs measured when this
+    guard was added."""
+
+    _MAX_JOBS = {"merge": 17, "delete": 2, "update": 2}
+
+    def test_change_feed_dml_job_counts(self, spark, tmp_path):
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_delete,
+            vt_optimize,
+            vt_update,
+        )
+
+        path = str(tmp_path / "t")
+        df = spark.range(400).selectExpr("id", "concat('v', id) AS v")
+        vt_write(spark, path, df)
+        vt_optimize(spark, path, ["id"], n_partitions=4)
+        ups = _df(spark, [(i, f"m{i}") for i in range(0, 20)] + [(1000, "n")])
+        calls = {
+            "merge": lambda: vt_merge(
+                spark, path, ups, ["id"], change_feed=True
+            ),
+            "delete": lambda: vt_delete(
+                spark, path, ("id", "<", 5), change_feed=True
+            ),
+            "update": lambda: vt_update(
+                spark, path, ("id", "=", 7), {"v": "'u'"},
+                change_feed=True,
+            ),
+        }
+        sc = spark.sparkContext
+        counts = {}
+        for verb, call in calls.items():
+            group = f"dml-jobs-{verb}"
+            sc.setJobGroup(group, "vt DML job count")
+            try:
+                call()
+            finally:
+                sc.setJobGroup(None, None)
+            counts[verb] = len(sc.statusTracker().getJobIdsForGroup(group))
+        for verb, n in counts.items():
+            assert n <= self._MAX_JOBS[verb], counts
+        got = {r["id"]: r["v"] for r in vt_read(spark, path).collect()}
+        assert 3 not in got and got[7] == "u" and got[10] == "m10"
+        assert got[1000] == "n" and len(got) == 396
