@@ -12,6 +12,35 @@ import os
 
 from pyspark.sql import SparkSession
 
+# ceiling of the derived default heap: beyond it local-mode sessions
+# measured no further GC relief
+_DRIVER_MEMORY_MAX_GB = 32
+
+
+def _driver_memory(meminfo_path: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set, else
+    half the host's RAM (MemTotal of ``/proc/meminfo``) in whole GiB, at
+    least 1g and at most 32g. Local mode runs executors, broadcasts and
+    driver state in this one heap; the other half stays for the
+    Python/Arrow workers, off-heap buffers and the page cache — a heap
+    sized past physical memory gets the process killed instead of
+    collected. Hosts without ``/proc/meminfo`` get the ceiling."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    try:
+        with open(meminfo_path) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    break
+            else:
+                return f"{_DRIVER_MEMORY_MAX_GB}g"
+    except (OSError, ValueError, IndexError):
+        return f"{_DRIVER_MEMORY_MAX_GB}g"
+    gib = kib // (2 * 1024 * 1024)
+    return f"{max(1, min(_DRIVER_MEMORY_MAX_GB, gib))}g"
+
 
 def get_spark(
     app_name: str = "dynamicqueryengine_spark",
@@ -39,9 +68,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # local mode runs executors, broadcasts, and driver state in ONE
         # JVM heap; 8g measured 2-3× query-time inflation late in a
-        # 77-query bench session (GC pressure, not engine cost). On a real
-        # cluster this setting is per-daemon and modest heaps are fine.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        # 77-query bench session (GC pressure, not engine cost), so the
+        # default is as large as the host allows. On a real cluster this
+        # setting is per-daemon and modest heaps are fine.
+        .config("spark.driver.memory", _driver_memory())
         # the generated-class cache defaults to 100 entries; a session
         # running ~77 distinct queries × several codegen units each cycles
         # the LRU completely, so every re-run pays janino + JIT again

@@ -1095,15 +1095,16 @@ class _VtBatchWriter(DataSourceArrowWriter):
                     # driver-side commit hook must not launch rewrite
                     # jobs). Partition-aligned backfills — the idiom
                     # replaceWhere exists for — always satisfy it.
+                    # Classification, audit shape and the successor
+                    # commit are the DML rewrite core's (versioned.py).
                     from .versioned import (
                         _bloom_col_types,
                         _col_mapping,
-                        _file_fully_matches,
-                        _logical_rows_dropped,
+                        _land,
                         _map_conjuncts,
-                        _partition_proves_all,
                         _partition_snapshot,
                         _pred_touch_fn,
+                        _shape_blob,
                     )
 
                     if prev is None:
@@ -1117,36 +1118,13 @@ class _VtBatchWriter(DataSourceArrowWriter):
                             "schema — schema evolution is "
                             "vt_write(merge_schema=True)'s"
                         )
-                    cmap = _col_mapping(prev)
-                    pconj = _map_conjuncts(self._replace_where, cmap)
-                    touch = _pred_touch_fn(
-                        pconj, _bloom_col_types(prev)
+                    pconj = _map_conjuncts(
+                        self._replace_where, _col_mapping(prev)
                     )
-                    _pv = prev.get("partitions") or {}
-
-                    def dir_dropper(d):
-                        pv = _pv.get(d)
-                        return pv is not None and \
-                            _partition_proves_all(pv, pconj)
-
-                    def dropper(d, entry, nrows):
-                        lc = pconj
-                        pv = _pv.get(d)
-                        if pv:
-                            lc = [
-                                c for c in lc
-                                if not (
-                                    c[0] in pv
-                                    and _partition_proves_all(pv, [c])
-                                )
-                            ]
-                            if not lc:
-                                return True
-                        return _file_fully_matches(lc, entry, nrows)
-
                     part = _partition_snapshot(
-                        self._path, prev, touch,
-                        drop_file=dropper, drop_dir=dir_dropper,
+                        self._path, prev,
+                        _pred_touch_fn(pconj, _bloom_col_types(prev)),
+                        prove=pconj,
                     )
                     if part["touched_paths"]:
                         raise ValueError(
@@ -1158,63 +1136,33 @@ class _VtBatchWriter(DataSourceArrowWriter):
                             " — use vt_replace_where for boundary "
                             "rewrites"
                         )
-                    dirs = part["dirs"] + dirs
-                    all_stats = {**part["stats"], **all_stats}
-                    all_fstats = {**part["file_stats"], **all_fstats}
-                    files_map = {**part["files"], **files_map}
-                    all_frows = {**part["file_rows"], **all_frows}
-                    all_blooms = {**part["blooms"], **all_blooms}
-                    prev_pvals = prev.get("partitions") or {}
-                    partitions = {
-                        **{
-                            d: prev_pvals[d]
-                            for d in part["dirs"]
-                            if d in prev_pvals
-                        },
-                        **partitions,
-                    }
-                    partial = part["partial_dirs"]
-                    rw_blob: dict = {
-                        "files_total": part["files_total"],
-                        "files_rewritten": 0,
-                        "new_dirs": list(new_dirs),
-                        "predicate": [
-                            list(c) for c in self._replace_where
+                    # derived from the head it read: a lost race is
+                    # non-commuting — FileExistsError surfaces
+                    _land(
+                        self._path,
+                        "replace_where",
+                        expected,
+                        prev,
+                        part,
+                        [
+                            (
+                                d, new_stats.get(d), new_fstats.get(d),
+                                all_files[d], new_frows.get(d),
+                                new_partitions.get(d),
+                            )
+                            for d in new_dirs
                         ],
-                    }
-                    if part["files_dropped"]:
-                        rw_blob["files_dropped"] = part[
-                            "files_dropped"
-                        ]
-                        rw_blob["rows_dropped"] = \
-                            _logical_rows_dropped(part, prev)
-                    if part["dirs_dropped"]:
-                        rw_blob["dirs_dropped"] = part["dirs_dropped"]
-                    try:
-                        _commit(
-                            self._path,
-                            dirs,
-                            "replace_where",
-                            expected,
-                            all_stats,
-                            txn=None,
-                            file_stats=all_fstats or None,
-                            files=files_map,
-                            schema=schema_json,
-                            heterogeneous=bool(
-                                prev.get("schema_heterogeneous")
-                            ),
-                            blooms=all_blooms or None,
-                            file_rows=all_frows or None,
-                            partial_dirs=partial,
-                            partitions=partitions or None,
-                            extra={"replace_where": rw_blob},
-                        )
-                        return
-                    except FileExistsError:
-                        # derived from the head it read: any race is
-                        # non-commuting — surface it (caller retries)
-                        raise
+                        new_blooms,
+                        None,
+                        {
+                            **_shape_blob(part, prev),
+                            "new_dirs": list(new_dirs),
+                            "predicate": [
+                                list(c) for c in self._replace_where
+                            ],
+                        },
+                    )
+                    return
                 if mode == "append" and prev is not None:
                     dirs = prev["dirs"] + dirs
                     all_stats = {**prev.get("stats", {}), **all_stats}

@@ -67,7 +67,8 @@ import re
 import shutil
 import time
 import uuid
-from typing import Sequence
+from dataclasses import dataclass, field
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -3842,8 +3843,7 @@ def _dir_stats_from_file_stats(per_file: dict, files: Sequence[str]) -> dict:
 
 
 def _partition_snapshot(
-    path: str, manifest: dict, touch_file, touch_name=None,
-    drop_file=None, drop_dir=None,
+    path: str, manifest: dict, touch_file, touch_name=None, prove=None,
 ) -> dict:
     """Split a snapshot's file references into TOUCHED (must be read and
     rewritten by a file-granular MERGE/DELETE) and KEPT (referenced
@@ -3853,18 +3853,18 @@ def _partition_snapshot(
     (legacy manifests) is touched whole. ``touch_name(dir, fname)``,
     when given, decides by IDENTITY instead of by stats — the
     incremental-compaction classifier (file size is a filesystem fact,
-    not a footer stat). ``drop_file(stats_entry, num_rows)``, when
-    given, is consulted FIRST per file — called as ``drop_file(dir,
-    stats_entry, num_rows)``: True drops the file's reference outright
-    — never read, never rewritten — the metadata-only whole-file DELETE
-    path (the caller must prove every logical row matches, see
-    _file_fully_matches). ``drop_dir(dir)``, consulted before the file
-    loop, drops a WHOLE directory's references the same way — the
-    ``DROP PARTITION`` path: a partitioned dir's recorded values prove
-    every row matches, no footer evidence needed. Returns the kept
-    manifest fragments plus the touched read paths and the
-    rewrite-shape counts the audit blob records (including
-    ``files_dropped``/``rows_dropped``/``dirs_dropped``)."""
+    not a footer stat). ``prove`` (physical-keyed conjuncts), when
+    given, drops references outright — never read, never rewritten:
+    a WHOLE directory whose recorded partition values prove every
+    conjunct (the ``DROP PARTITION`` path, no footer evidence needed),
+    and, consulted FIRST per file, a file whose footer stats prove
+    every logical row matches (the metadata-only whole-file DELETE
+    path, see _file_fully_matches; conjuncts the dir's partition
+    values prove need no footer evidence — `day < X AND region = 'EU'`
+    on a day-partitioned table drops interior EU files on region stats
+    alone). Returns the kept manifest fragments plus the touched read
+    paths and the rewrite-shape counts the audit blob records
+    (including ``files_dropped``/``rows_dropped``/``dirs_dropped``)."""
     flists = manifest.get("files", {})
     fstats = manifest.get("file_stats", {})
     blooms = manifest.get("blooms", {})
@@ -3886,12 +3886,15 @@ def _partition_snapshot(
     dropped_names: list[tuple] = []
     dirs_rewritten_whole = 0
     dirs_dropped = 0
+    pvals = manifest.get("partitions") or {}
     for d in manifest["dirs"]:
         flist = flists.get(d)
+        pv = pvals.get(d)
         if (
-            drop_dir is not None
+            prove
             and flist  # row accounting needs the authoritative list
-            and drop_dir(d)
+            and pv is not None
+            and _partition_proves_all(pv, prove)
         ):
             # metadata-only whole-directory drop (DROP PARTITION): the
             # caller proved every logical row matches — reference none
@@ -3913,6 +3916,13 @@ def _partition_snapshot(
         dbloom = blooms.get(d, {})
         dbfiles = dbloom.get("files", {}) if dbloom else {}
         drows = frows.get(d, {})
+        if prove and pv:
+            unproven = [
+                c for c in prove
+                if not (c[0] in pv and _partition_proves_all(pv, [c]))
+            ]
+        else:
+            unproven = prove
         keep: list[str] = []
         for f in flist:
             if drows.get(f) == 0:
@@ -3921,8 +3931,11 @@ def _partition_snapshot(
                 # (free compaction; the file itself is vacuum's to reap)
                 files_total -= 1
                 continue
-            if drop_file is not None and drop_file(
-                d, dstats.get(f, {}), drows.get(f)
+            if prove and (
+                not unproven
+                or _file_fully_matches(
+                    unproven, dstats.get(f, {}), drows.get(f)
+                )
             ):
                 files_dropped += 1
                 rows_dropped += int(drows.get(f) or 0)
@@ -4186,75 +4199,588 @@ def _reconcile_to_schema(
     )
 
 
-def _dv_merge_attempt(
+def _logical_rows_dropped(part: dict, manifest: dict) -> int:
+    """``rows_dropped`` counts physical footer rows; a dropped file that
+    already carried a deletion vector hid some of those rows from the
+    logical table, so the audit blob subtracts its vector count —
+    ``rows_dropped`` is exactly the number of LOGICAL rows the commit
+    removed via whole-file drops."""
+    dv = manifest.get("dv") or {}
+    hidden = 0
+    for d, f in part.get("dropped_names", []):
+        entry = dv.get(d, {}).get(f)
+        if entry is not None:
+            hidden += int(entry["count"])
+    return int(part["rows_dropped"]) - hidden
+
+
+def _pred_touch_fn(conjuncts, bloom_types):
+    """Per-file classifier for predicate-driven rewrites (DELETE/UPDATE):
+    True iff the file MAY contain a row the conjunction MATCHES — via
+    min/max stats, exact footer null counts, and Bloom filters; an empty
+    conjunct list (nothing skip-eligible) touches everything."""
+    null_ops = [x for x in conjuncts if x[1] in ("isnull", "notnull")]
+
+    def touch(entry: dict, fbloom: dict) -> bool:
+        if not all(
+            _stats_may_match(entry.get(c), o, v) for c, o, v in conjuncts
+        ):
+            return False
+        if null_ops and not _nulls_may_match(
+            entry.get("__nulls__") or {}, None, null_ops
+        ):
+            return False
+        if fbloom and not all(
+            _bloom_may_match(fbloom.get(c), o, v, bloom_types.get(c))
+            for c, o, v in conjuncts
+        ):
+            return False
+        return True
+
+    return touch
+
+
+# ------------------------------------------------------ DML rewrite core --
+#
+# vt_merge, vt_delete, vt_update and vt_replace_where are one pipeline,
+# _rewrite, parameterized per verb by an _Edit. The format('vt')
+# writer's replaceWhere reuses its classification (_partition_snapshot
+# with ``prove``), audit shape (_shape_blob) and successor commit
+# (_land).
+
+
+def _touched_plan(path: str, manifest: dict, paths: list) -> dict:
+    """Read plan over ``paths`` of ``manifest``'s snapshot, reconciled to
+    its recorded schema and honoring its deletion vectors — a rewrite
+    must not resurrect (nor a new vector re-count) rows an earlier
+    merge-on-read DML already removed."""
+    plan = {
+        "paths": paths,
+        "schema": manifest["schema"],
+        "schema_heterogeneous": manifest.get("schema_heterogeneous", False),
+    }
+    cmap = _col_mapping(manifest)
+    if cmap:
+        plan["column_mapping"] = cmap
+    _attach_plan_dv(plan, path, manifest)
+    return plan
+
+
+def _shape_blob(part: dict, manifest: dict) -> dict:
+    """Rewrite-shape fields of a file-granular DML audit blob (surfaced
+    by vt_history): files rewritten out of the total, files and whole
+    partition directories dropped metadata-only with the LOGICAL rows
+    they held, directories read whole for lack of a file list."""
+    blob = {
+        "files_total": part["files_total"],
+        "files_rewritten": part["files_rewritten"],
+    }
+    if part["files_dropped"]:
+        blob["files_dropped"] = part["files_dropped"]
+        blob["rows_dropped"] = _logical_rows_dropped(part, manifest)
+    for k in ("dirs_dropped", "dirs_rewritten_whole"):
+        if part[k]:
+            blob[k] = part[k]
+    return blob
+
+
+def _dv_union(path: str, manifest: dict, pairs) -> tuple:
+    """Union matched ``(_vt_file_key, _vt_pos)`` rows into the head's
+    deletion vectors. Writes ONE sidecar holding every touched file's
+    merged positions and returns ``(dv map for the successor manifest,
+    sidecar name or None, audit fields)``. Fan-out bound: once the head
+    references :data:`_DV_CONSOLIDATE_REFS` sidecars, this sidecar
+    absorbs EVERY live entry, collapsing the refs back to 1 — scan
+    planning opens O(1) sidecars no matter how many DV commits
+    accumulated."""
+    # map join keys (basename(dir)/file) back to manifest dir entries
+    base_of = {
+        os.path.basename(d.rstrip("/")): d for d in manifest["dirs"]
+    }
+    new_pos: dict[tuple, set] = {}
+    for r in pairs:
+        dbase, _, fname = r["_vt_file_key"].partition("/")
+        new_pos.setdefault((base_of[dbase], fname), set()).add(
+            int(r["_vt_pos"])
+        )
+    head_dv = manifest.get("dv") or {}
+    live_refs = {
+        e["ref"] for fmap in head_dv.values() for e in fmap.values()
+    }
+    consolidate = len(live_refs) >= _DV_CONSOLIDATE_REFS
+    if consolidate:
+        prior = _load_dv_positions(path, head_dv)
+    else:
+        prior_subset: dict = {}
+        for d, fname in new_pos:
+            entry = head_dv.get(d, {}).get(fname)
+            if entry is not None:
+                prior_subset.setdefault(d, {})[fname] = entry
+        prior = _load_dv_positions(path, prior_subset)
+    payload: dict = {}
+    if consolidate:
+        for d, fmap in head_dv.items():
+            for fname in fmap:
+                key = os.path.basename(d.rstrip("/")) + "/" + fname
+                payload.setdefault(d, {})[fname] = prior.get(key, [])
+    for (d, fname), poss in new_pos.items():
+        key = os.path.basename(d.rstrip("/")) + "/" + fname
+        merged = sorted(set(prior.get(key, [])) | poss)
+        payload.setdefault(d, {})[fname] = merged
+    ref = _write_dv_sidecar(path, payload) if payload else None
+    if consolidate and ref is not None:
+        dv_map = {
+            d: {
+                fname: {"ref": ref, "count": len(poss)}
+                for fname, poss in fmap.items()
+            }
+            for d, fmap in payload.items()
+        }
+    else:
+        dv_map = {d: dict(fmap) for d, fmap in head_dv.items()}
+        for d, fmap in payload.items():
+            for fname, poss in fmap.items():
+                dv_map.setdefault(d, {})[fname] = {
+                    "ref": ref,
+                    "count": len(poss),
+                }
+    blob = {
+        "dv": True,
+        "files_rewritten": 0,
+        "files_dv": len(new_pos),
+        "rows_matched": len(pairs),
+    }
+    if consolidate:
+        blob["dv_consolidated_refs"] = len(live_refs)
+    return dv_map, ref, blob
+
+
+def _land(
+    path: str,
+    op: str,
+    expected: int,
+    manifest: dict | None,
+    base: dict | None,
+    written: list,
+    blooms: dict,
+    change_dir: str | None,
+    blob: dict,
+    schema: dict | None = None,
+    dv: dict | None = None,
+    sidecar: str | None = None,
+    txn: tuple | None = None,
+    identity: dict | None = None,
+) -> int:
+    """Commit the successor of ``manifest`` at ``expected + 1``: the
+    ``base`` fragments (the kept side of a :func:`_partition_snapshot`
+    split, the whole manifest when every file stays referenced, or
+    None for a first/legacy commit) plus the ``written`` directories
+    ``[(dir, stats, file_stats, files, file_rows, partition_values),
+    …]`` with their ``blooms`` ``{dir: bloom}``. ``schema`` is only
+    consulted when ``manifest`` records none. On a lost race
+    (FileExistsError, TxnReplayed) everything the attempt staged — the
+    written and change directories and the deletion-vector sidecar —
+    is removed before the error propagates."""
+    base = base or {}
+    dirs = list(base.get("dirs", []))
+    stats = dict(base.get("stats") or {})
+    fstats = dict(base.get("file_stats") or {})
+    files = dict(base.get("files") or {})
+    frows = dict(base.get("file_rows") or {})
+    all_blooms = dict(base.get("blooms") or {})
+    carried = (manifest or {}).get("partitions") or {}
+    partitions = {d: carried[d] for d in dirs if d in carried}
+    for d, dstats, dfstats, dfiles, drows, pvals in written:
+        dirs.append(d)
+        files[d] = dfiles
+        if dstats:
+            stats[d] = dstats
+        if dfstats:
+            fstats[d] = dfstats
+        if drows:
+            frows[d] = drows
+        if pvals is not None:
+            partitions[d] = pvals
+        if blooms.get(d):
+            all_blooms[d] = blooms[d]
+    hetero = False
+    if manifest is not None and manifest.get("schema") is not None:
+        schema = manifest["schema"]
+        hetero = manifest.get("schema_heterogeneous", False)
+    try:
+        return _commit(
+            path,
+            dirs,
+            op,
+            expected,
+            stats,
+            {"app": txn[0], "version": int(txn[1])} if txn else None,
+            fstats or None,
+            files,
+            schema=schema,
+            heterogeneous=hetero,
+            changes=change_dir,
+            blooms=all_blooms or None,
+            file_rows=frows or None,
+            partial_dirs=base.get("partial_dirs"),
+            extra={op: blob} if blob else None,
+            dv=dv,
+            identity=identity,
+            partitions=partitions or None,
+        )
+    except (FileExistsError, TxnReplayed):
+        for d in [w[0] for w in written] + [change_dir]:
+            if d is not None:
+                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+        if sidecar is not None:
+            try:
+                os.unlink(os.path.join(_dv_dir(path), sidecar))
+            except OSError:
+                pass
+        raise
+
+
+def _json_conjuncts(conjuncts) -> list | None:
+    """``[[col, op, value], …]`` when the conjunction is JSON-recordable
+    (the manifest's replay recipe), else None."""
+    if conjuncts is None:
+        return None
+    out = [[c, o, v] for c, o, v in conjuncts]
+    try:
+        json.dumps(out)
+    except (TypeError, ValueError):
+        return None
+    return out
+
+
+class _Region:
+    """The ``predicate=`` / ``rule=`` argument of vt_delete, vt_update
+    and vt_replace_where: validated once per call, resolved per head (a
+    rule compiles against that head's schema). A rule is a compiled
+    :class:`RuleDefinition` or a raw rule dict; only a raw dict with
+    JSON-safe ``external_params`` is recorded in the manifest
+    (``rule_doc``) for change-feed replay."""
+
+    def __init__(self, verb: str, predicate, rule, external_params):
+        self.rule = self.rule_doc = self.conjuncts = None
+        self.params = external_params
+        if rule is not None:
+            if predicate is not None:
+                raise ValueError("pass predicate= or rule=, not both")
+            from collections.abc import Mapping
+
+            from ..plans.model import RuleDefinition
+
+            if isinstance(rule, Mapping):
+                self.rule_doc = dict(rule)
+                rule = RuleDefinition.from_dict(rule)
+            self.rule = rule
+            try:
+                json.dumps([self.rule_doc, dict(external_params or {})])
+            except (TypeError, ValueError):
+                self.rule_doc = None
+        else:
+            self.conjuncts = _normalize_predicate(predicate)
+            if self.conjuncts is None:
+                raise ValueError(f"{verb} requires a predicate or a rule")
+
+    def resolve(self, spark, path: str, manifest: dict) -> tuple:
+        """``(touch, prove, cond, recorded)`` against one head: the
+        per-file classifier (the REQUIRED skip-eligible conjuncts, so
+        pruning is sound for any rule), the physical-keyed EXACT
+        conjunction that may prove whole files/dirs match (None when
+        the region is not one), the row condition (NULL counts as no
+        match — SQL DML semantics) and the exact conjunction as
+        manifest JSON (None when not recordable). The recorded JSON
+        stays LOGICAL; only file stats and blooms are physical-keyed
+        on a column-mapped table."""
+        if self.rule is None:
+            skip = exact = self.conjuncts
+            cond = None
+            for col, op, value in skip:
+                c = _conjunct_column(col, op, value)
+                cond = c if cond is None else (cond & c)
+        else:
+            from pyspark.sql.types import StructType
+
+            from ..operators.predicates import (
+                compile_predicate,
+                rule_exact_conjuncts,
+                rule_skip_conjuncts,
+            )
+
+            if manifest.get("schema") is not None:
+                schema = StructType.fromJson(manifest["schema"])
+            else:  # legacy table: the first directory's footer schema
+                schema = spark.read.parquet(
+                    os.path.join(path, manifest["dirs"][0])
+                ).schema
+            skip = rule_skip_conjuncts(self.rule, schema, self.params) or []
+            exact = rule_exact_conjuncts(self.rule, schema, self.params)
+            cond = compile_predicate(self.rule.conditions, schema, self.params)
+        cmap = _col_mapping(manifest)
+        touch = _pred_touch_fn(
+            _map_conjuncts(skip, cmap), _bloom_col_types(manifest)
+        )
+        prove = _map_conjuncts(exact, cmap) if exact else None
+        return (
+            touch, prove, F.coalesce(cond, F.lit(False)),
+            _json_conjuncts(exact),
+        )
+
+    def recipe(self, recorded) -> dict:
+        """Audit-blob fields the change feed replays this region from:
+        the exact conjunction (the streaming source evaluates it with
+        pyarrow) and the raw rule (batch CDC recompiles it)."""
+        blob: dict = {}
+        if recorded is not None:
+            blob["predicate"] = recorded
+        if self.rule_doc is not None:
+            blob["rule"] = self.rule_doc
+            blob["external_params"] = dict(self.params or {})
+        return blob
+
+
+def _region_rows(cond, need_changes: bool):
+    """``_Edit.rows`` of a region removal (DELETE, replace_where): the
+    touched rows outside ``cond`` survive, the rest are change rows
+    when ``need_changes``; nothing touched writes nothing."""
+
+    def rows(touched):
+        if touched is None:
+            return None, None
+        changes = (
+            touched.filter(cond).withColumn("_change_type", F.lit("delete"))
+            if need_changes
+            else None
+        )
+        return touched.filter(~cond), changes
+
+    return rows
+
+
+@dataclass
+class _Edit:
+    """One DML verb's parameterization of :func:`_rewrite` against ONE
+    head. ``touch(stats_entry, bloom_entry)`` is the per-file classifier
+    (physical-keyed, see :func:`_partition_snapshot`); ``prove`` the
+    physical conjunction whose truth for a whole file or partition
+    directory drops it metadata-only (None disables the drop).
+    ``rows(touched)`` maps the touched rows — None when no file is
+    touched — to ``(rows of the rewritten directory, change rows)``,
+    either None. ``dv_rows(touched_with_positions)``, for verbs with a
+    merge-on-read form, returns ``(matched rows, change rows, rows to
+    append)``. An edit with ``inserts`` lands rows even when nothing
+    matches (merge upserts, replace_where's frame); one without is a
+    pure mutation that commits nothing when nothing (logically) matches
+    — ``cond`` is its matched-row condition. ``persist`` caches the
+    touched rows for the writes (several consumers). ``extra(mapping)``
+    writes directories outside the rewrite and returns their
+    ``_land`` tuples. ``blob`` holds the verb's own audit fields and
+    ``identity`` the identity watermarks to record."""
+
+    touch: Callable
+    rows: Callable
+    blob: dict = field(default_factory=dict)
+    prove: list | None = None
+    dv_rows: Callable | None = None
+    inserts: bool = False
+    cond: Column | None = None
+    persist: bool = False
+    extra: Callable | None = None
+    identity: dict | None = None
+
+
+def _rewrite(
     spark,
     path: str,
-    manifest: dict,
-    expected: int,
-    part: dict,
-    tplan: dict,
-    target,
-    ups_c,
-    keys,
-    all_keys,
-    ups_keys,
-    del_keys,
-    txn,
-    dv_max_rows: int,
-    strict: bool,
+    op: str,
+    plan: Callable,
+    mode: str = "rewrite",
+    dv_max_rows: int = 100_000,
+    max_retries: int = 5,
     bloom_cols: Sequence[str] | None = None,
-    identity: dict | None = None,
-):
-    """One merge-on-read MERGE attempt: rows whose key matches an upsert
-    (or a delete-clause row) are DV'd out of their files and the
-    reconciled upserts are appended as a fresh directory — no existing
-    file is rewritten. Change rows (pre/post images, inserts, delete-
-    clause drops) are always materialized, exactly like DV DELETE/
-    UPDATE, so CDC and the streaming source stay exact. Returns the
-    committed version, ``-1`` on a lost race, or ``None`` above the
-    position cap with ``strict=False`` (caller falls back to
-    copy-on-write)."""
-    tpos = _read_plan(spark, tplan, keep_positions=True)
-    matched = tpos.join(all_keys, keys, "semi")
-    data_cols = [F.col(f.name) for f in target.fields]
-    cur_keys = matched.select(*keys).distinct()
-    pre = (
-        matched.join(ups_keys, keys, "semi")
-        .select(*data_cols)
-        .withColumn("_change_type", F.lit("update_preimage"))
-    )
-    post = ups_c.join(cur_keys, keys, "semi").withColumn(
-        "_change_type", F.lit("update_postimage")
-    )
-    ins = ups_c.join(cur_keys, keys, "left_anti").withColumn(
-        "_change_type", F.lit("insert")
-    )
-    change_rows = pre.unionByName(post).unionByName(ins)
-    if del_keys is not None:
-        dropped = (
-            matched.join(del_keys, keys, "semi")
-            .select(*data_cols)
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        change_rows = change_rows.unionByName(dropped)
-    blob = {"files_total": part["files_total"]}
-    return _dv_mutation_commit(
-        spark,
-        path,
-        manifest,
-        expected,
-        matched,
-        "merge",
-        blob,
-        change_rows,
-        dv_max_rows,
-        strict,
-        new_data=ups_c,
-        txn=txn,
-        commit_on_empty=True,
-        bloom_cols=bloom_cols,
-        identity=identity,
-    )
+    txn: tuple | None = None,
+) -> int:
+    """The DML rewrite core behind vt_merge, vt_delete, vt_update and
+    vt_replace_where. Each attempt reads the head, asks ``plan(manifest)``
+    (None before the first commit) for the verb's :class:`_Edit` and:
+
+    1. classifies the snapshot's files (:func:`_partition_snapshot`):
+       files the stats/blooms refute are KEPT — referenced verbatim with
+       their stats, blooms and footer counts — files and partition dirs
+       ``prove`` shows to match whole are DROPPED metadata-only (Delta's
+       metadata-only DELETE / DROP PARTITION: never read, never
+       rewritten), the rest are TOUCHED. A pure mutation that drops
+       everything falls back to rewriting so the successor keeps a
+       schema-bearing directory; tables without a recorded schema
+       (legacy) read the whole snapshot instead;
+    2. reads the touched files through their deletion vectors and either
+       REWRITES them (copy-on-write: ``rows`` gives the surviving and
+       change rows) or, with ``mode="dv"``/``"auto"``, leaves every file
+       referenced and records the matched rows' positions in a
+       deletion-vector sidecar (merge-on-read, ``files_rewritten = 0``;
+       change rows are then always materialized, so CDC and the
+       streaming source stay exact). ``"dv"`` raises above
+       ``dv_max_rows`` matched rows, ``"auto"`` falls back to the
+       rewrite;
+    3. writes the change directory (``c_*``), the rewritten/appended
+       data directories and their blooms (``bloom_cols``, else the
+       table's recorded property);
+    4. commits the successor manifest (kept fragments + new dirs,
+       ``partial_dirs`` marking partly-kept dirs, the audit blob under
+       ``op``). A lost commit race removes everything the attempt
+       staged and re-derives from the new head — pre-images always come
+       from the head the commit lands on.
+
+    A pure mutation that provably or logically matches nothing commits
+    nothing and returns the head; ``txn=(app, version)`` makes the call
+    exactly-once. Returns the committed (or current) version."""
+    if mode not in ("rewrite", "dv", "auto"):
+        raise ValueError(f"unknown {op} mode {mode!r}")
+    for _ in range(max_retries):
+        head = vt_versions(path)
+        expected = head[-1] if head else 0
+        if txn is not None:
+            last = vt_last_txn(path, txn[0])
+            if last is not None and txn[1] <= last:
+                return expected  # replay of an already-committed txn
+        manifest = _read_manifest(path, expected) if head else None
+        edit = plan(manifest)
+        legacy = manifest is not None and manifest.get("schema") is None
+        if legacy and mode == "dv":
+            raise ValueError(
+                "mode='dv' requires a table with a recorded schema "
+                "(legacy tables rewrite whole snapshots)"
+            )
+        cmap = _col_mapping(manifest)
+        part = touched = cached = None
+        base = dv = sidecar = dv_blob = None
+        new_rows = change_rows = None
+        try:
+            if legacy:
+                touched = vt_read(spark, path, expected)
+            elif manifest is not None:
+                part = base = _partition_snapshot(
+                    path, manifest, edit.touch, prove=edit.prove
+                )
+                if not part["touched_paths"] and not edit.inserts:
+                    if not part["files_dropped"]:
+                        return expected  # provably nothing matches
+                    if not part["dirs"]:
+                        # dropping everything: rewrite instead, so the
+                        # successor keeps a schema-bearing (empty) dir
+                        part = base = _partition_snapshot(
+                            path, manifest, edit.touch
+                        )
+                    elif _logical_rows_dropped(part, manifest) == 0:
+                        # every dropped row was already hidden by a
+                        # deletion vector: logically nothing changes
+                        return expected
+                if part["touched_paths"]:
+                    tplan = _touched_plan(
+                        path, manifest, part["touched_paths"]
+                    )
+                    if mode != "rewrite" and edit.dv_rows is not None:
+                        matched, dv_changes, dv_new = edit.dv_rows(
+                            _read_plan(spark, tplan, keep_positions=True)
+                        )
+                        cached = matched.persist()
+                        pairs = (
+                            matched.select("_vt_file_key", "_vt_pos")
+                            .limit(dv_max_rows + 1)
+                            .collect()
+                        )
+                        if len(pairs) > dv_max_rows:
+                            if mode == "dv":
+                                raise ValueError(
+                                    "mode='dv': more than dv_max_rows="
+                                    f"{dv_max_rows} rows match — a "
+                                    "mutation this large should rewrite "
+                                    "files (mode='rewrite' or 'auto')"
+                                )
+                            cached.unpersist()  # "auto": copy-on-write
+                            cached = None
+                        elif not pairs and not edit.inserts:
+                            return expected
+                        else:
+                            dv, sidecar, dv_blob = _dv_union(
+                                path, manifest, pairs
+                            )
+                            base = manifest
+                            new_rows, change_rows = dv_new, dv_changes
+                    if dv_blob is None:
+                        touched = _read_plan(spark, tplan)
+                        if (
+                            not edit.inserts
+                            and manifest.get("dv")
+                            and _logical_rows_dropped(part, manifest) == 0
+                            and touched.filter(edit.cond).limit(1).count()
+                            == 0
+                        ):
+                            # stats describe PHYSICAL rows: the only
+                            # matches may be rows a vector already hides
+                            return expected
+            if dv_blob is None:
+                if touched is not None and edit.persist:
+                    cached = touched.persist()
+                new_rows, change_rows = edit.rows(touched)
+            change_dir = None
+            if change_rows is not None:
+                change_dir = _write_data_dir(
+                    change_rows, path, prefix="c", mapping=cmap
+                )[0]
+            written = []
+            if new_rows is not None:
+                written.append(
+                    (*_write_data_dir(new_rows, path, mapping=cmap), None)
+                )
+            if edit.extra is not None:
+                written += edit.extra(cmap)
+            eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
+            blooms = {}
+            if eff_bloom_cols:
+                for d, *_ in written:
+                    b = _harvest_blooms(
+                        spark, os.path.join(path, d), eff_bloom_cols,
+                        mapping=cmap,
+                    )
+                    if b:
+                        blooms[d] = b
+            if dv_blob is not None:
+                blob = {
+                    "files_total": part["files_total"],
+                    **edit.blob,
+                    **dv_blob,
+                }
+            elif part is not None:
+                blob = {**_shape_blob(part, manifest), **edit.blob}
+            else:
+                blob = dict(edit.blob)
+            try:
+                return _land(
+                    path, op, expected, manifest, base, written, blooms,
+                    change_dir, blob,
+                    schema=(
+                        None
+                        if part is not None
+                        else json.loads(new_rows.schema.json())
+                    ),
+                    dv=dv,
+                    sidecar=sidecar,
+                    txn=txn,
+                    identity=edit.identity,
+                )
+            except TxnReplayed:
+                # a concurrent replica of this txn landed first —
+                # exactly-once means no-op at the current head
+                return vt_versions(path)[-1]
+            except FileExistsError:
+                continue  # lost the commit race: re-derive from new head
+        finally:
+            if cached is not None:
+                cached.unpersist()
+    raise RuntimeError(f"{op} at {path} lost {max_retries} commit races")
 
 
 def vt_merge(
@@ -4291,8 +4817,9 @@ def vt_merge(
     Tables without a recorded schema (legacy) fall back to the full
     snapshot rewrite.
 
-    ``mode="dv"`` / ``"auto"`` — MERGE-ON-READ (deletion vectors, see
-    :func:`vt_delete`): matched current rows are DV'd out of their
+    ``mode="dv"`` / ``"auto"`` — MERGE-ON-READ (deletion vectors, the
+    DML core's DV step, see :func:`_rewrite`): matched current rows are
+    DV'd out of their
     files and the upserts appended as a fresh directory
     (``files_rewritten = 0``); delete-clause matches are DV'd without
     replacement. Change rows are ALWAYS materialized (pre/post images,
@@ -4328,8 +4855,6 @@ def vt_merge(
     re-checks the guard each attempt."""
     from pyspark.sql.types import StructType
 
-    if mode not in ("rewrite", "dv", "auto"):
-        raise ValueError(f"unknown merge mode {mode!r}")
     keys = list(key_cols)
     if delete_where is not None:
         cond = (
@@ -4346,13 +4871,11 @@ def vt_merge(
         ups = updates
     # table-property CHECK constraints apply to the incoming rows (the
     # surviving current rows were validated by their own commits;
-    # deletion rows are never written). Enforced INSIDE the retry loop
-    # against each attempted head's constraint set: a racing commit can
-    # ADD or tighten constraints between the merge's read and its commit,
-    # and the merge's version is governed by the set in force at ITS
-    # head — the same window vt_write closes on retry (:884-893) and
-    # vt_update closes by enforcing in-loop (:2577). The validation
-    # action re-runs only when the set actually changed across retries.
+    # deletion rows are never written). Enforced per attempted head: a
+    # racing commit can ADD or tighten constraints between the merge's
+    # read and its commit, and the merge's version is governed by the
+    # set in force at ITS head. The validation action re-runs only when
+    # the set actually changed across retries.
     _enforced_against: list = []
 
     def _enforce_for_head(manifest) -> None:
@@ -4439,33 +4962,20 @@ def vt_merge(
             out[icol] = spec
         return out
 
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        expected = head[-1] if head else 0
-        if txn is not None:
-            last = vt_last_txn(path, txn[0])
-            if last is not None and txn[1] <= last:
-                return expected  # replay of an already-committed txn
-        manifest = _read_manifest(path, expected) if head else None
+    def plan(manifest) -> _Edit:
         _enforce_for_head(manifest)
-        identity_commit = _identity_commit(manifest)
-        cmap = _col_mapping(manifest)
-        file_granular = (
-            manifest is not None and manifest.get("schema") is not None
-        )
+        identity = _identity_commit(manifest)
         all_keys = updates.select(*keys).distinct()
         ups_keys = (
             ups.select(*keys).distinct() if dels is not None else all_keys
         )
         del_keys = dels.select(*keys).distinct() if dels is not None else None
-        part = None
-        if manifest is None:
-            # initial commit: the table IS the upserts
-            touched = None
-            merged_new = ups
-            target = None
-        elif file_granular:
+        ups_c = ups
+        data_cols = None
+        touch = None
+        if manifest is not None and manifest.get("schema") is not None:
             target = StructType.fromJson(manifest["schema"])
+            data_cols = [F.col(f.name) for f in target.fields]
             fresh_schema = manifest["schema"] not in _validated_schemas
             ups_c = _reconcile_to_schema(ups, target, validate=fresh_schema)
             if fresh_schema:
@@ -4479,6 +4989,7 @@ def vt_merge(
                 key_vals, key_ranges, key_rangesets = _keys_sample()
                 # file stats/blooms are PHYSICAL-keyed: classify with
                 # physical key names and physically-rekeyed samples
+                cmap = _col_mapping(manifest)
                 pm = {k: _phys(cmap, k) for k in keys}
                 touch = _key_touch_fn(
                     [pm[k] for k in keys],
@@ -4491,570 +5002,63 @@ def vt_merge(
                     if key_rangesets is not None
                     else None,
                 )
-            part = _partition_snapshot(path, manifest, touch)
-            if part["touched_paths"]:
-                tplan = {
-                    "paths": part["touched_paths"],
-                    "schema": manifest["schema"],
-                    "schema_heterogeneous": manifest.get(
-                        "schema_heterogeneous", False
-                    ),
-                }
-                if cmap:
-                    tplan["column_mapping"] = cmap
-                # honor existing deletion vectors: the rewrite must not
-                # resurrect rows a merge-on-read delete already removed
-                _attach_plan_dv(tplan, path, manifest)
-                if mode in ("dv", "auto"):
-                    res = _dv_merge_attempt(
-                        spark,
-                        path,
-                        manifest,
-                        expected,
-                        part,
-                        tplan,
-                        target,
-                        ups_c,
-                        keys,
-                        all_keys,
-                        ups_keys,
-                        del_keys,
-                        txn,
-                        dv_max_rows,
-                        strict=(mode == "dv"),
-                        bloom_cols=bloom_cols,
-                        identity=identity_commit,
-                    )
-                    if res is not None:
-                        if res >= 0:
-                            return res
-                        continue  # lost the commit race — retry
-                    # mode="auto" over dv_max_rows: copy-on-write
-                touched = _read_plan(spark, tplan)
-                merged_new = touched.join(
-                    all_keys, keys, "left_anti"
-                ).unionByName(ups_c)
-            else:
-                # provably pure insert: no target file can hold a
-                # matching key — the merge commits like an append
-                touched = None
-                merged_new = ups_c
-        else:
-            # legacy table without a recorded schema: full-snapshot
-            # rewrite (the pre-r10 path)
-            if mode == "dv":
-                raise ValueError(
-                    "mode='dv' requires a table with a recorded schema "
-                    "(legacy tables rewrite whole snapshots)"
-                )
-            target = None
-            touched = vt_read(spark, path, expected)
-            merged_new = touched.join(
-                all_keys, keys, "left_anti"
-            ).unionByName(ups)
-        change_dir = None
-        # the change-feed computation reads the touched files up to four
-        # more times (cur_keys, pre, ins via cur_keys, dropped) on top of
-        # the snapshot rewrite — persist them for the duration of the
-        # writes so the rewrite is ONE scan of the touched data, released
-        # in finally (r8 lesson: every persist gets an unconditional
-        # release path)
-        touched_cached = touched is not None and change_feed
-        if touched_cached:
-            touched.persist()
-        try:
-            if change_feed:
-                if touched is not None:
-                    cur_keys = touched.select(*keys).distinct()
-                    upserts = (
-                        _reconcile_to_schema(ups, target, validate=False)
-                        if target is not None
-                        else ups
-                    )
-                    pre = touched.join(ups_keys, keys, "semi").withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    )
-                    post = upserts.join(cur_keys, keys, "semi").withColumn(
+        blob: dict = {}
+
+        def changes(cur):
+            # change rows against the current rows ``cur`` the merge
+            # may replace: replaced rows, their replacements, inserts
+            # and delete-clause drops
+            cur_keys = cur.select(*keys).distinct()
+            out = (
+                cur.join(ups_keys, keys, "semi")
+                .withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(
+                    ups_c.join(cur_keys, keys, "semi").withColumn(
                         "_change_type", F.lit("update_postimage")
                     )
-                    ins = upserts.join(
-                        cur_keys, keys, "left_anti"
-                    ).withColumn("_change_type", F.lit("insert"))
-                    change_rows = pre.unionByName(post).unionByName(ins)
-                    if del_keys is not None:
-                        dropped = touched.join(
-                            del_keys, keys, "semi"
-                        ).withColumn("_change_type", F.lit("delete"))
-                        change_rows = change_rows.unionByName(dropped)
-                else:
-                    upserts = (
-                        _reconcile_to_schema(ups, target, validate=False)
-                        if target is not None
-                        else ups
-                    )
-                    change_rows = upserts.withColumn(
+                )
+                .unionByName(
+                    ups_c.join(cur_keys, keys, "left_anti").withColumn(
                         "_change_type", F.lit("insert")
                     )
-                if touched_cached:
-                    # materialize the cache with ONE compute pass, then
-                    # run the two independent directory writes (change
-                    # rows, merged snapshot) CONCURRENTLY — they read
-                    # the cached touched files, and overlapping them
-                    # hides one write job's scheduling tail behind the
-                    # other (r15, guide §2.6). Sequentially this cost
-                    # compute+write, then cache-read+write.
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    from ..util import spark_thread_target
-
-                    touched.count()
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        f_c = pool.submit(
-                            spark_thread_target(spark, _write_data_dir),
-                            change_rows, path, "c", cmap,
-                        )
-                        f_n = pool.submit(
-                            spark_thread_target(spark, _write_data_dir),
-                            merged_new, path, "d", cmap,
-                        )
-                        change_dir = f_c.result()[0]
-                        (
-                            new_dir, new_stats, new_fstats,
-                            new_files, new_rows,
-                        ) = f_n.result()
-                else:
-                    change_dir, _, _, _, _ = _write_data_dir(
-                        change_rows, path, prefix="c", mapping=cmap
+                )
+            )
+            if del_keys is not None:
+                out = out.unionByName(
+                    cur.join(del_keys, keys, "semi").withColumn(
+                        "_change_type", F.lit("delete")
                     )
-                    new_dir, new_stats, new_fstats, new_files, new_rows = (
-                        _write_data_dir(merged_new, path, mapping=cmap)
-                    )
-            else:
-                new_dir, new_stats, new_fstats, new_files, new_rows = (
-                    _write_data_dir(merged_new, path, mapping=cmap)
                 )
-        finally:
-            if touched_cached:
-                touched.unpersist()
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
-        )
-        if part is not None:
-            dirs = part["dirs"] + [new_dir]
-            stats = {**part["stats"], **({new_dir: new_stats} if new_stats else {})}
-            fstats = {**part["file_stats"], **({new_dir: new_fstats} if new_fstats else {})}
-            files = {**part["files"], new_dir: new_files}
-            frows = {**part["file_rows"], **({new_dir: new_rows} if new_rows else {})}
-            blooms = dict(part["blooms"])
-            if new_blooms:
-                blooms[new_dir] = new_blooms
-            partial_dirs = part["partial_dirs"]
-            merge_blob = {
-                "files_total": part["files_total"],
-                "files_rewritten": part["files_rewritten"],
-            }
-            if part["dirs_rewritten_whole"]:
-                merge_blob["dirs_rewritten_whole"] = part[
-                    "dirs_rewritten_whole"
-                ]
-            if touched is None and head:
-                merge_blob["pure_insert"] = True
-            schema_json = manifest["schema"]
-            hetero = manifest.get("schema_heterogeneous", False)
-        else:
-            dirs = [new_dir]
-            stats = {new_dir: new_stats} if new_stats else {}
-            fstats = {new_dir: new_fstats} if new_fstats else None
-            files = {new_dir: new_files}
-            frows = {new_dir: new_rows} if new_rows else None
-            blooms = {new_dir: new_blooms} if new_blooms else None
-            partial_dirs = None
-            merge_blob = None
-            schema_json = json.loads(merged_new.schema.json())
-            hetero = False
-        try:
-            return _commit(
-                path,
-                dirs,
-                "merge",
-                expected,
-                stats,
-                {"app": txn[0], "version": int(txn[1])} if txn else None,
-                fstats,
-                files,
-                schema=schema_json,
-                heterogeneous=hetero,
-                changes=change_dir,
-                blooms=blooms,
-                file_rows=frows,
-                partial_dirs=partial_dirs,
-                extra={"merge": merge_blob} if merge_blob else None,
-                identity=identity_commit,
-            )
-        except TxnReplayed:
-            # a concurrent replica of this txn landed between the entry
-            # guard and our commit — exactly-once means no-op
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
+            return out
+
+        def rows(touched):
+            if touched is None:
+                # provably pure insert: no target file can hold a
+                # matching key — the merge commits like an append
+                if manifest is not None:
+                    blob["pure_insert"] = True
+                return ups_c, (
+                    ups_c.withColumn("_change_type", F.lit("insert"))
+                    if change_feed
+                    else None
                 )
-            return vt_versions(path)[-1]
-        except FileExistsError:
-            # another writer won this version — discard our uncommitted
-            # directories and re-derive from the new head
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-    raise RuntimeError(f"merge at {path} lost {max_retries} commit races")
-
-
-def _logical_rows_dropped(part: dict, manifest: dict) -> int:
-    """``rows_dropped`` counts physical footer rows; a dropped file that
-    already carried a deletion vector hid some of those rows from the
-    logical table, so the audit blob subtracts its vector count —
-    ``rows_dropped`` is exactly the number of LOGICAL rows the commit
-    removed via whole-file drops."""
-    dv = manifest.get("dv") or {}
-    hidden = 0
-    for d, f in part.get("dropped_names", []):
-        entry = dv.get(d, {}).get(f)
-        if entry is not None:
-            hidden += int(entry["count"])
-    return int(part["rows_dropped"]) - hidden
-
-
-def _pred_touch_fn(conjuncts, bloom_types):
-    """Per-file classifier for predicate-driven rewrites (DELETE/UPDATE):
-    True iff the file MAY contain a row the conjunction MATCHES — via
-    min/max stats, exact footer null counts, and Bloom filters; an empty
-    conjunct list (nothing skip-eligible) touches everything."""
-    null_ops = [x for x in conjuncts if x[1] in ("isnull", "notnull")]
-
-    def touch(entry: dict, fbloom: dict) -> bool:
-        if not all(
-            _stats_may_match(entry.get(c), o, v) for c, o, v in conjuncts
-        ):
-            return False
-        if null_ops and not _nulls_may_match(
-            entry.get("__nulls__") or {}, None, null_ops
-        ):
-            return False
-        if fbloom and not all(
-            _bloom_may_match(fbloom.get(c), o, v, bloom_types.get(c))
-            for c, o, v in conjuncts
-        ):
-            return False
-        return True
-
-    return touch
-
-
-def _dv_mutation_commit(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    matched,
-    op: str,
-    blob: dict,
-    change_rows,
-    dv_max_rows: int,
-    strict: bool,
-    new_data=None,
-    txn: tuple | None = None,
-    commit_on_empty: bool = False,
-    bloom_cols: Sequence[str] | None = None,
-    identity: dict | None = None,
-):
-    """Shared merge-on-read commit for DV-mode DELETE/UPDATE: collect the
-    matched rows' (file key, position) pairs — bounded by ``dv_max_rows``
-    — union them into the head's deletion vectors, materialize
-    ``change_rows`` as the commit's change directory, and commit with
-    every data file referenced VERBATIM (``files_rewritten = 0``).
-    ``new_data`` (UPDATE's post-image rows) is appended as a fresh
-    directory. Returns the committed version, ``-1`` on a lost commit
-    race (caller retries against the new head), or ``None`` when more
-    rows matched than ``dv_max_rows`` and ``strict`` is False (caller
-    falls back to copy-on-write)."""
-    # matched feeds the position collect, the change rows, and (UPDATE)
-    # the appended post-image rows — one scan of the touched files
-    matched.persist()
-    try:
-        return _dv_mutation_commit_cached(
-            spark,
-            path,
-            manifest,
-            expected,
-            matched,
-            op,
-            blob,
-            change_rows,
-            dv_max_rows,
-            strict,
-            new_data,
-            txn,
-            commit_on_empty,
-            bloom_cols,
-            identity,
-        )
-    finally:
-        matched.unpersist()
-
-
-def _dv_mutation_commit_cached(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    matched,
-    op: str,
-    blob: dict,
-    change_rows,
-    dv_max_rows: int,
-    strict: bool,
-    new_data,
-    txn: tuple | None = None,
-    commit_on_empty: bool = False,
-    bloom_cols: Sequence[str] | None = None,
-    identity: dict | None = None,
-):
-    pairs = (
-        matched.select("_vt_file_key", "_vt_pos")
-        .limit(dv_max_rows + 1)
-        .collect()
-    )
-    if len(pairs) > dv_max_rows:
-        if strict:
-            raise ValueError(
-                f"mode='dv': more than dv_max_rows={dv_max_rows} rows "
-                "match — a delete this large should rewrite files "
-                "(mode='rewrite' or 'auto')"
+            merged = touched.join(all_keys, keys, "left_anti").unionByName(
+                ups_c
             )
-        return None
-    if not pairs and not commit_on_empty:
-        return expected  # nothing matched — no-op, nothing committed
-    # map join keys (basename(dir)/file) back to manifest dir entries
-    base_of = {
-        os.path.basename(d.rstrip("/")): d for d in manifest["dirs"]
-    }
-    new_pos: dict[tuple, set] = {}
-    for r in pairs:
-        dbase, _, fname = r["_vt_file_key"].partition("/")
-        new_pos.setdefault((base_of[dbase], fname), set()).add(
-            int(r["_vt_pos"])
-        )
-    head_dv = manifest.get("dv") or {}
-    live_refs = {
-        e["ref"] for fmap in head_dv.values() for e in fmap.values()
-    }
-    # fan-out bound: once the head references _DV_CONSOLIDATE_REFS
-    # sidecars, this commit's (mandatory anyway) sidecar absorbs EVERY
-    # live entry, collapsing the refs back to 1 — scan planning opens
-    # O(1) sidecars no matter how many DV commits accumulated
-    consolidate = len(live_refs) >= _DV_CONSOLIDATE_REFS
-    if consolidate:
-        prior = _load_dv_positions(path, head_dv)
-    else:
-        prior_subset: dict = {}
-        for d, fname in new_pos:
-            entry = head_dv.get(d, {}).get(fname)
-            if entry is not None:
-                prior_subset.setdefault(d, {})[fname] = entry
-        prior = _load_dv_positions(path, prior_subset)
-    payload: dict = {}
-    if consolidate:
-        for d, fmap in head_dv.items():
-            for fname in fmap:
-                key = os.path.basename(d.rstrip("/")) + "/" + fname
-                payload.setdefault(d, {})[fname] = prior.get(key, [])
-    for (d, fname), poss in new_pos.items():
-        key = os.path.basename(d.rstrip("/")) + "/" + fname
-        merged = sorted(set(prior.get(key, [])) | poss)
-        payload.setdefault(d, {})[fname] = merged
-    ref = _write_dv_sidecar(path, payload) if payload else None
-    if consolidate and ref is not None:
-        dv_map = {
-            d: {
-                fname: {"ref": ref, "count": len(poss)}
-                for fname, poss in fmap.items()
-            }
-            for d, fmap in payload.items()
-        }
-    else:
-        dv_map = {d: dict(fmap) for d, fmap in head_dv.items()}
-        for d, fmap in payload.items():
-            for fname, poss in fmap.items():
-                dv_map.setdefault(d, {})[fname] = {
-                    "ref": ref,
-                    "count": len(poss),
-                }
-    blob = dict(blob)
-    blob.update(
-        dv=True,
-        files_rewritten=0,
-        files_dv=len(new_pos),
-        rows_matched=len(pairs),
-    )
-    if consolidate:
-        blob["dv_consolidated_refs"] = len(live_refs)
-    cmap = _col_mapping(manifest)
-    change_dir, _, _, _, _ = _write_data_dir(
-        change_rows, path, prefix="c", mapping=cmap
-    )
-    dirs = list(manifest["dirs"])
-    files = dict(manifest.get("files", {}))
-    stats = dict(manifest.get("stats", {}))
-    fstats = dict(manifest.get("file_stats", {}))
-    blooms = dict(manifest.get("blooms", {}))
-    frows = dict(manifest.get("file_rows", {}))
-    new_dir = None
-    if new_data is not None:
-        new_dir, nstats, nfstats, nfiles, nrows = _write_data_dir(
-            new_data, path, mapping=cmap
-        )
-        dirs.append(new_dir)
-        files[new_dir] = nfiles
-        if nstats:
-            stats[new_dir] = nstats
-        if nfstats:
-            fstats[new_dir] = nfstats
-        if nrows:
-            frows[new_dir] = nrows
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        if eff_bloom_cols:
-            # the appended upsert dir must stay bloom-prunable like any
-            # rewrite-path output, or alternating DV merges would
-            # progressively lose the pruning the caller asked for
-            nblooms = _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if nblooms:
-                blooms[new_dir] = nblooms
-    try:
-        return _commit(
-            path,
-            dirs,
-            op,
-            expected,
-            stats,
-            {"app": txn[0], "version": int(txn[1])} if txn else None,
-            fstats or None,
-            files,
-            schema=manifest["schema"],
-            heterogeneous=manifest.get("schema_heterogeneous", False),
-            changes=change_dir,
-            blooms=blooms or None,
-            file_rows=frows or None,
-            partial_dirs=manifest.get("partial_dirs"),
-            extra={op: blob},
-            dv=dv_map,
-            identity=identity,
-        )
-    except (FileExistsError, TxnReplayed) as e:
-        # lost the race: discard everything this attempt staged
-        shutil.rmtree(os.path.join(path, change_dir), ignore_errors=True)
-        if new_dir is not None:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-        if ref is not None:
-            try:
-                os.unlink(os.path.join(_dv_dir(path), ref))
-            except OSError:
-                pass
-        if isinstance(e, TxnReplayed):
-            # a concurrent replica of this txn landed — exactly-once
-            # means no-op at the CURRENT head
-            return vt_versions(path)[-1]
-        return -1
+            return merged, changes(touched) if change_feed else None
 
+        def dv_rows(tpos):
+            matched = tpos.join(all_keys, keys, "semi")
+            return matched, changes(matched.select(*data_cols)), ups_c
 
-def _dv_update_attempt(
-    spark,
-    path: str,
-    manifest: dict,
-    expected: int,
-    tplan: dict,
-    matched_expr,
-    assignments: dict,
-    part: dict,
-    pred_json,
-    rule_doc,
-    external_params,
-    assigns_json,
-    dv_max_rows: int,
-    strict: bool,
-    bloom_cols: Sequence[str] | None = None,
-):
-    """One merge-on-read UPDATE attempt: DV out the matched rows'
-    positions, append the post-image rows as a fresh directory, always
-    materialize pre/post change images. Return contract matches
-    :func:`_dv_mutation_commit`."""
-    from pyspark.sql.types import StructType
-
-    target = StructType.fromJson(manifest["schema"])
-    names = {f.name for f in target.fields}
-    for c in assignments:
-        if c not in names:
-            raise ValueError(f"assignment to unknown column {c!r}")
-    exprs = {
-        c: (F.expr(e) if isinstance(e, str) else e)
-        for c, e in assignments.items()
-    }
-    m = _read_plan(spark, tplan, keep_positions=True).filter(matched_expr)
-    # simultaneous assignment against the PRE-update row, cast back to
-    # the declared type (same semantics as the rewrite path)
-    post = m.select(
-        *[
-            exprs[f.name].cast(f.dataType).alias(f.name)
-            if f.name in exprs
-            else F.col(f.name)
-            for f in target.fields
-        ]
-    )
-    _enforce_constraints(
-        post, manifest.get("constraints") or [], recorded=True
-    )
-    if manifest.get("generated"):
-        _validate_generated(
-            post, manifest["generated"], set(post.columns)
+        return _Edit(
+            touch, rows, blob, dv_rows=dv_rows, inserts=True,
+            persist=change_feed, identity=identity,
         )
-    pre = m.select(*[F.col(f.name) for f in target.fields]).withColumn(
-        "_change_type", F.lit("update_preimage")
-    )
-    change_rows = pre.unionByName(
-        post.withColumn("_change_type", F.lit("update_postimage"))
-    )
-    blob: dict = {"files_total": part["files_total"]}
-    if assigns_json is not None:
-        if pred_json is not None:
-            blob["predicate"] = pred_json
-            blob["assignments"] = assigns_json
-        elif rule_doc is not None:
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
-            blob["assignments"] = assigns_json
-    return _dv_mutation_commit(
-        spark,
-        path,
-        manifest,
-        expected,
-        m,
-        "update",
-        blob,
-        change_rows,
-        dv_max_rows,
-        strict,
-        bloom_cols=bloom_cols,
-        new_data=post,
+
+    return _rewrite(
+        spark, path, "merge", plan, mode=mode, dv_max_rows=dv_max_rows,
+        max_retries=max_retries, bloom_cols=bloom_cols, txn=txn,
     )
 
 
@@ -5105,7 +5109,8 @@ def vt_delete(
     rule deletions too; a compiled object is not JSON-recordable and
     needs ``change_feed=True`` for CDC.
 
-    ``mode`` selects the mutation strategy (Delta's deletion vectors):
+    ``mode`` selects the DML core's mutation strategy (see
+    :func:`_rewrite`; Delta's deletion vectors):
 
     * ``"rewrite"`` (default) — copy-on-write as described above, with
       a WHOLE-FILE fast path (Delta's metadata-only DELETE): a file
@@ -5148,394 +5153,41 @@ def vt_delete(
 
     Concurrency: like OPTIMIZE, a delete is derived from the head it
     read; on a commit race it re-reads the new head and retries."""
-    from collections.abc import Mapping as _Mapping
+    region = _Region("vt_delete", predicate, rule, external_params)
 
-    if mode not in ("rewrite", "dv", "auto"):
-        raise ValueError(f"unknown delete mode {mode!r}")
-
-    rule_doc = None
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..plans.model import RuleDefinition
-
-        if isinstance(rule, _Mapping):
-            rule_doc = dict(rule)
-            rule = RuleDefinition.from_dict(rule)
-        conjuncts = None
-        cond = None
-        pred_json = None
-        try:
-            json.dumps([rule_doc, dict(external_params or {})])
-        except (TypeError, ValueError):
-            rule_doc = None  # non-JSON params: CDC needs change_feed
-    else:
-        conjuncts = _normalize_predicate(predicate)
-        if conjuncts is None:
-            raise ValueError("vt_delete requires a predicate or a rule")
-        cond = None
-        for col, op, value in conjuncts:
-            c = _conjunct_column(col, op, value)
-            cond = c if cond is None else (cond & c)
-        try:
-            json.dumps([[c, o, v] for c, o, v in conjuncts])
-            pred_json: list | None = [[c, o, v] for c, o, v in conjuncts]
-        except (TypeError, ValueError):
-            pred_json = None  # non-JSON values: CDC needs change_feed=True
-
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
+    def plan(manifest) -> _Edit:
+        if manifest is None:
             raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
-        rule_pred_json = None
-        if rule is not None:
-            from pyspark.sql.types import StructType
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_exact_conjuncts,
-                rule_skip_conjuncts,
-            )
-
-            if manifest.get("schema") is not None:
-                schema_st = StructType.fromJson(manifest["schema"])
-            else:
-                schema_st = spark.read.parquet(
-                    os.path.join(path, manifest["dirs"][0])
-                ).schema
-            loop_conjuncts = (
-                rule_skip_conjuncts(rule, schema_st, external_params) or []
-            )
-            cond = compile_predicate(
-                rule.conditions, schema_st, external_params
-            )
-            # when the rule is EXACTLY a skip-grammar conjunction,
-            # record it as a plain predicate too: the streaming change
-            # source replays the skip grammar with pyarrow but cannot
-            # evaluate the full operator set — this closes the
-            # batch-vs-stream replay asymmetry for simple rules
-            exact = rule_exact_conjuncts(rule, schema_st, external_params)
-            if exact is not None:
-                try:
-                    json.dumps([[c, o, v] for c, o, v in exact])
-                    rule_pred_json = [[c, o, v] for c, o, v in exact]
-                except (TypeError, ValueError):
-                    rule_pred_json = None
-        else:
-            loop_conjuncts = conjuncts
+        touch, prove, cond, recorded = region.resolve(spark, path, manifest)
         # a rule the skip grammar cannot express exactly is not
         # stream-replayable from metadata: materialize the deleted rows
         # at delete time so the streaming source never has to refuse
         need_changes = change_feed or (
-            rule is not None and rule_pred_json is None
+            region.rule is not None and recorded is None
         )
-        cmap = _col_mapping(manifest)
-        # file stats/blooms are physical-keyed on mapped tables; the
-        # recorded pred_json and the row-level filter stay LOGICAL
-        pconj = _map_conjuncts(loop_conjuncts, cmap)
-        touch = _pred_touch_fn(pconj, _bloom_col_types(manifest))
-        if manifest.get("schema") is None:
-            if mode == "dv":
-                raise ValueError(
-                    "mode='dv' requires a table with a recorded schema "
-                    "(legacy tables rewrite whole snapshots)"
-                )
-            # legacy table without schema metadata: whole-snapshot rewrite
-            part = None
-            touched = vt_read(spark, path, expected)
-            schema_json = None
-        else:
-            dropper = None
-            dir_dropper = None
-            if mode == "rewrite" and not need_changes and loop_conjuncts:
-                # whole-file fast path (Delta's metadata-only DELETE):
-                # a file whose stats PROVE every logical row matches is
-                # dropped from the successor manifest without being
-                # read. Only safe when no change rows are needed (the
-                # predicate is recorded for streaming replay) and no DV
-                # probe wants the matched rows (dv/auto read them).
-                _lc = pconj  # stats proof probes physical-keyed footers
-                _pvals = manifest.get("partitions") or {}
-                if _pvals:
-                    # DROP PARTITION: when EVERY conjunct is on a
-                    # partition column and the dir's exact values
-                    # satisfy all of them, the whole directory drops
-                    # metadata-only — no footer stats consulted
-                    def dir_dropper(d, _pv=_pvals, _c=_lc):
-                        pv = _pv.get(d)
-                        return pv is not None and _partition_proves_all(
-                            pv, _c
-                        )
-
-                def dropper(d, entry, nrows, _c=_lc, _pv=_pvals):
-                    lc = _c
-                    pv = _pv.get(d)
-                    if pv:
-                        # conjuncts the dir's partition values prove
-                        # TRUE for every row need no footer evidence —
-                        # `day < X AND region = 'EU'` on a day-
-                        # partitioned table drops interior EU files on
-                        # region stats alone
-                        lc = [
-                            c
-                            for c in lc
-                            if not (
-                                c[0] in pv
-                                and _partition_proves_all(pv, [c])
-                            )
-                        ]
-                        if not lc:
-                            return True  # all conjuncts partition-proven
-                    return _file_fully_matches(lc, entry, nrows)
-
-            part = _partition_snapshot(
-                path, manifest, touch, drop_file=dropper,
-                drop_dir=dir_dropper,
-            )
-            if not part["touched_paths"]:
-                if part["files_dropped"] and part["dirs"]:
-                    if _logical_rows_dropped(part, manifest) == 0:
-                        # every dropped file's rows were already hidden
-                        # by deletion vectors: logically nothing is
-                        # deleted — honor the "a no-op delete commits
-                        # nothing" contract (reclaiming fully-DV'd
-                        # files is vt_reorg/vt_optimize's job)
-                        return expected
-                    # EVERY affected file provably fully matches: pure
-                    # metadata delete — zero bytes read or written
-                    blob = {
-                        "files_total": part["files_total"],
-                        "files_rewritten": 0,
-                        "files_dropped": part["files_dropped"],
-                        "rows_dropped": _logical_rows_dropped(
-                            part, manifest
-                        ),
-                    }
-                    if part["dirs_dropped"]:
-                        blob["dirs_dropped"] = part["dirs_dropped"]
-                    if pred_json is not None:
-                        blob["predicate"] = pred_json
-                    elif rule_pred_json is not None:
-                        blob["predicate"] = rule_pred_json
-                    if rule_doc is not None:
-                        blob["rule"] = rule_doc
-                        blob["external_params"] = dict(
-                            external_params or {}
-                        )
-                    try:
-                        return _commit(
-                            path,
-                            part["dirs"],
-                            "delete",
-                            expected,
-                            part["stats"],
-                            None,
-                            part["file_stats"] or None,
-                            part["files"],
-                            schema=manifest["schema"],
-                            heterogeneous=manifest.get(
-                                "schema_heterogeneous", False
-                            ),
-                            blooms=part["blooms"] or None,
-                            file_rows=part["file_rows"] or None,
-                            partial_dirs=part["partial_dirs"],
-                            extra={"delete": blob},
-                        )
-                    except FileExistsError:
-                        continue  # lost the race — retry on new head
-                elif part["files_dropped"]:
-                    # dropping EVERYTHING the table holds: fall back to
-                    # the rewrite walk so the successor keeps a
-                    # schema-bearing (empty) data dir — an empty
-                    # manifest has nothing for readers to infer from
-                    part = _partition_snapshot(path, manifest, touch)
-                else:
-                    return expected  # provably nothing to delete
-            tplan = {
-                "paths": part["touched_paths"],
-                "schema": manifest["schema"],
-                "schema_heterogeneous": manifest.get(
-                    "schema_heterogeneous", False
-                ),
-            }
-            if cmap:
-                tplan["column_mapping"] = cmap
-            # the touched read must honor EXISTING deletion vectors, or
-            # a rewrite would resurrect (and a new DV would re-count)
-            # rows an earlier merge-on-read delete already removed
-            _attach_plan_dv(tplan, path, manifest)
-            if mode in ("dv", "auto"):
-                matched = _read_plan(
-                    spark, tplan, keep_positions=True
-                ).filter(F.coalesce(cond, F.lit(False)))
-                blob = {"files_total": part["files_total"]}
-                if pred_json is not None:
-                    blob["predicate"] = pred_json
-                elif rule_pred_json is not None:
-                    # exact skip-grammar rendering of the rule — makes
-                    # the commit stream-replayable from metadata alone
-                    blob["predicate"] = rule_pred_json
-                if rule_doc is not None:
-                    blob["rule"] = rule_doc
-                    blob["external_params"] = dict(external_params or {})
-                res = _dv_mutation_commit(
-                    spark,
-                    path,
-                    manifest,
-                    expected,
-                    matched,
-                    "delete",
-                    blob,
-                    matched.drop("_vt_file_key", "_vt_pos").withColumn(
-                        "_change_type", F.lit("delete")
-                    ),
-                    dv_max_rows,
-                    strict=(mode == "dv"),
-                    bloom_cols=bloom_cols,
-                )
-                if res is not None:
-                    if res >= 0:
-                        return res
-                    continue  # lost the commit race — retry on new head
-                # mode="auto" over dv_max_rows: copy-on-write this attempt
-            touched = _read_plan(spark, tplan)
-            schema_json = manifest["schema"]
-            if (
-                manifest.get("dv")
-                and _logical_rows_dropped(part, manifest) == 0
-            ):
-                # stats/blooms describe PHYSICAL rows, so a predicate
-                # matching only rows a deletion vector already hides
-                # classifies files as touched — detect the logically
-                # empty delete with one limit-1 probe and no-op instead
-                # of committing a byte-identical rewrite (found by the
-                # r13 partition-op extension of the history model).
-                # Only when the whole-file drops are ALSO logically
-                # empty (a drop with real rows IS the delete).
-                if (
-                    touched.filter(F.coalesce(cond, F.lit(False)))
-                    .limit(1)
-                    .count()
-                    == 0
-                ):
-                    return expected
-        survivors = touched.filter(~F.coalesce(cond, F.lit(False)))
-        change_dir = None
-        if need_changes:
-            # two consumers of the touched files (deleted + survivors):
-            # persist for the duration of the writes, release in finally
-            touched.persist()
-        try:
-            if need_changes:
-                deleted = touched.filter(cond).withColumn(
-                    "_change_type", F.lit("delete")
-                )
-                change_dir, _, _, _, _ = _write_data_dir(
-                    deleted, path, prefix="c", mapping=cmap
-                )
-            new_dir, new_stats, new_fstats, new_files, new_rows = (
-                _write_data_dir(survivors, path, mapping=cmap)
-            )
-        finally:
-            if need_changes:
-                touched.unpersist()
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
-        )
-        if part is not None:
-            dirs = part["dirs"] + [new_dir]
-            stats = {
-                **part["stats"],
-                **({new_dir: new_stats} if new_stats else {}),
-            }
-            fstats = {
-                **part["file_stats"],
-                **({new_dir: new_fstats} if new_fstats else {}),
-            }
-            files = {**part["files"], new_dir: new_files}
-            frows = {
-                **part["file_rows"],
-                **({new_dir: new_rows} if new_rows else {}),
-            }
-            blooms = dict(part["blooms"])
-            if new_blooms:
-                blooms[new_dir] = new_blooms
-            blooms = blooms or None
-            partial_dirs = part["partial_dirs"]
-            blob = {
-                "files_total": part["files_total"],
-                "files_rewritten": part["files_rewritten"],
-            }
-            if part["files_dropped"]:
-                # boundary files rewritten, interior files dropped
-                # metadata-only (see the whole-file fast path above)
-                blob["files_dropped"] = part["files_dropped"]
-                blob["rows_dropped"] = _logical_rows_dropped(
-                    part, manifest
-                )
-            if part["dirs_dropped"]:
-                blob["dirs_dropped"] = part["dirs_dropped"]
-            if part["dirs_rewritten_whole"]:
-                blob["dirs_rewritten_whole"] = part["dirs_rewritten_whole"]
-            hetero = manifest.get("schema_heterogeneous", False)
-        else:
-            dirs = [new_dir]
-            stats = {new_dir: new_stats} if new_stats else {}
-            fstats = {new_dir: new_fstats} if new_fstats else None
-            files = {new_dir: new_files}
-            frows = {new_dir: new_rows} if new_rows else None
-            blooms = {new_dir: new_blooms} if new_blooms else None
-            partial_dirs = None
-            blob = {}
-            schema_json = json.loads(survivors.schema.json())
-            hetero = False
-        if pred_json is not None:
-            blob["predicate"] = pred_json
-        elif rule_pred_json is not None:
-            # exact skip-grammar rendering of the rule — the streaming
-            # source replays it with pyarrow, no change rows needed
-            blob["predicate"] = rule_pred_json
-        if rule_doc is not None:
-            # replayable rule recipe: the change feed recompiles it over
-            # the previous snapshot to reconstruct the deleted rows
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
+        blob = region.recipe(recorded)
         if need_changes and not change_feed:
-            # forced materialization: the rule is not expressible in the
-            # skip grammar, so its deletions were recorded as rows
             blob["materialized_changes"] = "rule_not_skip_expressible"
-        try:
-            return _commit(
-                path,
-                dirs,
-                "delete",
-                expected,
-                stats,
-                None,
-                fstats,
-                files,
-                schema=schema_json,
-                heterogeneous=hetero,
-                changes=change_dir,
-                blooms=blooms,
-                file_rows=frows,
-                partial_dirs=partial_dirs,
-                extra={"delete": blob},
+
+        def dv_rows(tpos):
+            matched = tpos.filter(cond)
+            deleted = matched.drop("_vt_file_key", "_vt_pos").withColumn(
+                "_change_type", F.lit("delete")
             )
-        except FileExistsError:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-    raise RuntimeError(f"delete at {path} lost {max_retries} commit races")
+            return matched, deleted, None
+
+        # whole-file drops read nothing, so they need a delete that
+        # records no change rows and rewrites (dv/auto read the rows)
+        return _Edit(
+            touch, _region_rows(cond, need_changes), blob,
+            prove=prove if mode == "rewrite" and not need_changes else None,
+            dv_rows=dv_rows, cond=cond, persist=need_changes,
+        )
+
+    return _rewrite(
+        spark, path, "delete", plan, mode=mode, dv_max_rows=dv_max_rows,
+        max_retries=max_retries, bloom_cols=bloom_cols,
+    )
 
 
 def vt_convert(
@@ -5679,7 +5331,8 @@ def vt_replace_where(
 
     ``predicate`` is the same skip-eligible grammar as
     :func:`vt_delete` — one ``(col, op, value)`` conjunct or a
-    conjunction list. Removal reuses the delete classifier: directories
+    conjunction list. Removal is the DML core's classification (see
+    :func:`_rewrite`, shared with vt_delete): directories
     whose partition values prove the predicate drop metadata-only,
     files whose stats prove every row matches drop metadata-only,
     files the stats refute carry verbatim (stats/blooms/footer counts
@@ -5716,53 +5369,17 @@ def vt_replace_where(
     leave and validates the incoming rows' containment; a rule the
     skip grammar renders EXACTLY keeps the metadata-only drop path and
     stream-replayable CDC, anything richer materializes its deleted
-    rows (the same division vt_delete documents).
+    rows (the division :meth:`_Region.resolve` draws for every DML
+    verb).
 
     Reference provenance: beyond-reference lakehouse surface
     (SURVEY.md north star), modeled on Delta's documented
     ``option("replaceWhere", …)`` INSERT OVERWRITE contract."""
-    from collections.abc import Mapping as _Mapping
+    region = _Region("vt_replace_where", predicate, rule, external_params)
 
-    rule_doc = None
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..plans.model import RuleDefinition
-
-        if isinstance(rule, _Mapping):
-            rule_doc = dict(rule)
-            rule = RuleDefinition.from_dict(rule)
-        conjuncts = None
-        cond = None
-        pred_json = None
-        try:
-            json.dumps([rule_doc, dict(external_params or {})])
-        except (TypeError, ValueError):
-            rule_doc = None  # non-JSON params: CDC needs change rows
-    else:
-        conjuncts = _normalize_predicate(predicate)
-        if conjuncts is None:
-            raise ValueError(
-                "vt_replace_where requires a predicate or a rule"
-            )
-        cond = None
-        for col, op, value in conjuncts:
-            c = _conjunct_column(col, op, value)
-            cond = c if cond is None else (cond & c)
-        try:
-            json.dumps([[c, o, v] for c, o, v in conjuncts])
-            pred_json: list | None = [
-                [c, o, v] for c, o, v in conjuncts
-            ]
-        except (TypeError, ValueError):
-            pred_json = None  # non-JSON values: must materialize
-
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
+    def plan(manifest) -> _Edit:
+        if manifest is None:
             raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
         if manifest.get("schema") is None:
             raise ValueError(
                 "vt_replace_where requires a table with a recorded "
@@ -5781,9 +5398,9 @@ def vt_replace_where(
             out_df = _apply_generated(out_df, eff_generated)
             _validate_generated(out_df, eff_generated, supplied_cols)
         # store assignment (same implicit safe cast an append gets)
-        from pyspark.sql.types import StructType as _ST
+        from pyspark.sql.types import StructType
 
-        base_st = _ST.fromJson(manifest["schema"])
+        base_st = StructType.fromJson(manifest["schema"])
         base_types = {f.name: f.dataType for f in base_st.fields}
         df_types = {f.name: f.dataType for f in out_df.schema.fields}
         upcasts = {
@@ -5809,249 +5426,61 @@ def vt_replace_where(
                 f"{out_df.columns}) — schema evolution is "
                 "vt_write(merge_schema=True)'s"
             )
-        exact = None
-        rule_pred_json = None
-        if rule is not None:
-            from pyspark.sql.types import StructType as _RST
-
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_exact_conjuncts,
-                rule_skip_conjuncts,
-            )
-
-            schema_st = _RST.fromJson(manifest["schema"])
-            loop_conjuncts = (
-                rule_skip_conjuncts(rule, schema_st, external_params)
-                or []
-            )
-            cond = compile_predicate(
-                rule.conditions, schema_st, external_params
-            )
-            exact = rule_exact_conjuncts(
-                rule, schema_st, external_params
-            )
-            if exact is not None:
-                try:
-                    json.dumps([[c, o, v] for c, o, v in exact])
-                    rule_pred_json = [
-                        [c, o, v] for c, o, v in exact
-                    ]
-                except (TypeError, ValueError):
-                    rule_pred_json = None
-        else:
-            loop_conjuncts = conjuncts
-        eff_pred_json = pred_json if rule is None else rule_pred_json
+        touch, prove, cond, recorded = region.resolve(spark, path, manifest)
         # a region the manifest cannot replay (non-JSON values, or a
         # rule beyond the skip grammar) materializes its deleted rows —
-        # the same stream-replayability line vt_delete draws
-        need_changes = change_feed or eff_pred_json is None
+        # the same stream-replayability line vt_delete draws (see
+        # _Region.resolve)
+        need_changes = change_feed or recorded is None
         # Delta's containment contract: every incoming row satisfies
         # the region predicate (a NULL predicate does not satisfy)
-        stray = (
-            out_df.filter(~F.coalesce(cond, F.lit(False)))
-            .limit(1)
-            .count()
-        )
-        if stray:
-            region = conjuncts if rule is None else "the rule"
+        if out_df.filter(~cond).limit(1).count():
+            region_desc = (
+                region.conjuncts if region.rule is None else "the rule"
+            )
             raise ValueError(
                 "vt_replace_where: the incoming frame holds rows that "
-                f"do not satisfy {region!r} — replaceWhere only "
+                f"do not satisfy {region_desc!r} — replaceWhere only "
                 "writes rows inside the region it replaces"
             )
         _enforce_constraints(
             out_df, manifest.get("constraints") or [], recorded=True
         )
-        cmap = _col_mapping(manifest)
-        pconj = _map_conjuncts(loop_conjuncts, cmap)
-        touch = _pred_touch_fn(pconj, _bloom_col_types(manifest))
-        dropper = None
-        dir_dropper = None
-        prove = conjuncts if rule is None else exact
-        if not need_changes and prove:
-            # metadata-only removal (see vt_delete's whole-file fast
-            # path): needs FULL-MATCH proof conjuncts (the predicate
-            # itself, or the rule's exact skip-grammar rendering) and
-            # is disabled when deleted rows must materialize
-            pprove = _map_conjuncts(prove, cmap)
-            _pvals = manifest.get("partitions") or {}
-            if _pvals:
-                def dir_dropper(d, _pv=_pvals, _c=pprove):
-                    pv = _pv.get(d)
-                    return pv is not None and _partition_proves_all(
-                        pv, _c
-                    )
-
-            def dropper(d, entry, nrows, _c=pprove, _pv=_pvals):
-                lc = _c
-                pv = _pv.get(d)
-                if pv:
-                    lc = [
-                        c
-                        for c in lc
-                        if not (
-                            c[0] in pv and _partition_proves_all(pv, [c])
-                        )
-                    ]
-                    if not lc:
-                        return True
-                return _file_fully_matches(lc, entry, nrows)
-
-        part = _partition_snapshot(
-            path, manifest, touch, drop_file=dropper,
-            drop_dir=dir_dropper,
-        )
-        written_dirs: list[str] = []
-
-        def _discard() -> None:
-            for d in written_dirs:
-                shutil.rmtree(
-                    os.path.join(path, d), ignore_errors=True
-                )
-
-        change_dir = None
-        survivor: tuple | None = None
-        if part["touched_paths"]:
-            tplan = {
-                "paths": part["touched_paths"],
-                "schema": manifest["schema"],
-                "schema_heterogeneous": manifest.get(
-                    "schema_heterogeneous", False
-                ),
-            }
-            if cmap:
-                tplan["column_mapping"] = cmap
-            _attach_plan_dv(tplan, path, manifest)
-            touched = _read_plan(spark, tplan)
-            if need_changes:
-                touched.persist()
-            try:
-                if need_changes:
-                    deleted = touched.filter(
-                        F.coalesce(cond, F.lit(False))
-                    ).withColumn("_change_type", F.lit("delete"))
-                    change_dir, _, _, _, _ = _write_data_dir(
-                        deleted, path, prefix="c", mapping=cmap
-                    )
-                    written_dirs.append(change_dir)
-                survivor = _write_data_dir(
-                    touched.filter(~F.coalesce(cond, F.lit(False))),
-                    path,
-                    mapping=cmap,
-                )
-                written_dirs.append(survivor[0])
-            finally:
-                if need_changes:
-                    touched.unpersist()
-        eff_pby = manifest.get("partition_by") or []
-        if eff_pby:
-            _validate_partition_by(out_df, eff_pby)
-            new_written = _write_partitioned_dirs(
-                out_df, path, eff_pby, mapping=cmap
-            )
-        else:
-            new_written = []
-        if not new_written:
-            # plain write — or a zero-row partitioned frame, which
-            # still needs a directory so the successor snapshot keeps
-            # a schema-bearing dir even when everything else dropped
-            d0, s0, fs0, fl0, fr0 = _write_data_dir(
-                out_df, path, mapping=cmap
-            )
-            new_written = [(d0, s0, fs0, fl0, fr0, None)]
-        written_dirs.extend(w[0] for w in new_written)
-        new_data_dirs = [w[0] for w in new_written]
-        dirs = list(part["dirs"])
-        stats = dict(part["stats"])
-        fstats = dict(part["file_stats"])
-        files = dict(part["files"])
-        frows = dict(part["file_rows"])
-        blooms = dict(part["blooms"])
-        prev_partitions = manifest.get("partitions") or {}
-        partitions = {
-            d: prev_partitions[d]
-            for d in dirs
-            if d in prev_partitions
-        }
-        if survivor is not None:
-            sdir, sstats, sfstats, sfiles, srows = survivor
-            dirs.append(sdir)
-            if sstats:
-                stats[sdir] = sstats
-            if sfstats:
-                fstats[sdir] = sfstats
-            files[sdir] = sfiles
-            if srows:
-                frows[sdir] = srows
-        for d, dstats, dfstats, dfiles, drows, pvals in new_written:
-            dirs.append(d)
-            if dstats:
-                stats[d] = dstats
-            if dfstats:
-                fstats[d] = dfstats
-            files[d] = dfiles
-            if drows:
-                frows[d] = drows
-            if pvals is not None:
-                partitions[d] = pvals
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        if eff_bloom_cols:
-            harvest = list(new_data_dirs)
-            if survivor is not None:
-                harvest.append(survivor[0])
-            for d in harvest:
-                b = _harvest_blooms(
-                    spark, os.path.join(path, d), eff_bloom_cols,
-                    mapping=cmap,
-                )
-                if b:
-                    blooms[d] = b
-        blob: dict = {
-            "files_total": part["files_total"],
-            "files_rewritten": part["files_rewritten"],
-            "new_dirs": new_data_dirs,
-        }
-        if part["files_dropped"]:
-            blob["files_dropped"] = part["files_dropped"]
-            blob["rows_dropped"] = _logical_rows_dropped(
-                part, manifest
-            )
-        if part["dirs_dropped"]:
-            blob["dirs_dropped"] = part["dirs_dropped"]
-        if eff_pred_json is not None:
-            blob["predicate"] = eff_pred_json
-        if rule_doc is not None:
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
+        blob = region.recipe(recorded)
         if need_changes and not change_feed:
             blob["materialized_changes"] = "region_not_replayable"
-        try:
-            return _commit(
-                path,
-                dirs,
-                "replace_where",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                heterogeneous=manifest.get(
-                    "schema_heterogeneous", False
-                ),
-                changes=change_dir,
-                blooms=blooms or None,
-                file_rows=frows or None,
-                partial_dirs=part["partial_dirs"],
-                partitions=partitions or None,
-                extra={"replace_where": blob},
-            )
-        except FileExistsError:
-            _discard()
-            continue  # lost the race — re-derive against the new head
-    raise RuntimeError(
-        f"replace_where at {path} lost {max_retries} commit races"
+
+        def extra(cmap):
+            pby = manifest.get("partition_by") or []
+            written = []
+            if pby:
+                _validate_partition_by(out_df, pby)
+                written = _write_partitioned_dirs(
+                    out_df, path, pby, mapping=cmap
+                )
+            if not written:
+                # plain write — or a zero-row partitioned frame, which
+                # still needs a directory so the successor snapshot
+                # keeps a schema-bearing dir even when everything else
+                # dropped
+                written = [
+                    (*_write_data_dir(out_df, path, mapping=cmap), None)
+                ]
+            blob["new_dirs"] = [w[0] for w in written]
+            return written
+
+        # metadata-only removal needs FULL-MATCH proof (the predicate,
+        # or a rule's exact skip-grammar rendering) and no deleted rows
+        # to materialize
+        return _Edit(
+            touch, _region_rows(cond, need_changes), blob,
+            prove=None if need_changes else prove,
+            inserts=True, persist=need_changes, extra=extra,
+        )
+
+    return _rewrite(
+        spark, path, "replace_where", plan, max_retries=max_retries,
+        bloom_cols=bloom_cols,
     )
 
 
@@ -6103,43 +5532,17 @@ def vt_update(
     the manifest alongside string assignments, so the change feed
     reconstructs rule updates too.
 
-    ``mode="dv"`` / ``"auto"`` — MERGE-ON-READ (deletion vectors, see
-    :func:`vt_delete`): matched rows' positions are DV'd out of their
+    ``mode="dv"`` / ``"auto"`` — MERGE-ON-READ (deletion vectors, the
+    DML core's DV step, see :func:`_rewrite`): matched rows' positions
+    are DV'd out of their
     files (``files_rewritten = 0``) and the post-update rows are
     appended as a fresh directory; pre/post change images are always
     materialized. Bounded by ``dv_max_rows``.
 
     ``bloom_cols=`` harvests Bloom filters for the rewritten (or
     DV-appended post-image) directory — parity with
-    vt_write/vt_merge/vt_optimize/vt_compact, see :func:`vt_delete`."""
-    if mode not in ("rewrite", "dv", "auto"):
-        raise ValueError(f"unknown update mode {mode!r}")
-    from collections.abc import Mapping as _Mapping
-
-    rule_doc = None
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..plans.model import RuleDefinition
-
-        if isinstance(rule, _Mapping):
-            rule_doc = dict(rule)
-            rule = RuleDefinition.from_dict(rule)
-        conjuncts = None
-        pred_json = None
-        try:
-            json.dumps([rule_doc, dict(external_params or {})])
-        except (TypeError, ValueError):
-            rule_doc = None  # non-JSON params: CDC needs change_feed
-    else:
-        conjuncts = _normalize_predicate(predicate)
-        if conjuncts is None:
-            raise ValueError("vt_update requires a predicate or a rule")
-        try:
-            json.dumps([[c, o, v] for c, o, v in conjuncts])
-            pred_json: list | None = [[c, o, v] for c, o, v in conjuncts]
-        except (TypeError, ValueError):
-            pred_json = None
+    vt_write/vt_merge/vt_optimize/vt_compact, see :func:`_rewrite`."""
+    region = _Region("vt_update", predicate, rule, external_params)
     if not assignments:
         raise ValueError("vt_update requires at least one assignment")
     assigns_json = (
@@ -6147,13 +5550,14 @@ def vt_update(
         if all(isinstance(e, str) for e in assignments.values())
         else None
     )
+    exprs = {
+        c: (F.expr(e) if isinstance(e, str) else e)
+        for c, e in assignments.items()
+    }
 
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
+    def plan(manifest) -> _Edit:
+        if manifest is None:
             raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
         bad_ident = sorted(
             set(assignments) & set(manifest.get("identity") or {})
         )
@@ -6163,238 +5567,99 @@ def vt_update(
                 "IDENTITY: vt_update must not SET them (Delta refuses "
                 "explicit identity values in all DML)"
             )
-        if rule is not None:
-            from pyspark.sql.types import StructType
+        touch, _, matched, recorded = region.resolve(spark, path, manifest)
 
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_skip_conjuncts,
-            )
+        def checked(fields):
+            names = {f.name for f in fields}
+            for c in assignments:
+                if c not in names:
+                    raise ValueError(f"assignment to unknown column {c!r}")
+            return fields
 
-            if manifest.get("schema") is not None:
-                schema_st = StructType.fromJson(manifest["schema"])
-            else:
-                schema_st = spark.read.parquet(
-                    os.path.join(path, manifest["dirs"][0])
-                ).schema
-            loop_conjuncts = (
-                rule_skip_conjuncts(rule, schema_st, external_params) or []
-            )
-            cond = compile_predicate(
-                rule.conditions, schema_st, external_params
-            )
-        else:
-            loop_conjuncts = conjuncts
-            cond = None
-            for col, op, value in conjuncts:
-                c = _conjunct_column(col, op, value)
-                cond = c if cond is None else (cond & c)
-        matched = F.coalesce(cond, F.lit(False))
-        cmap = _col_mapping(manifest)
-        touch = _pred_touch_fn(
-            _map_conjuncts(loop_conjuncts, cmap),
-            _bloom_col_types(manifest),
-        )
-        if manifest.get("schema") is None:
-            if mode == "dv":
-                raise ValueError(
-                    "mode='dv' requires a table with a recorded schema "
-                    "(legacy tables rewrite whole snapshots)"
-                )
-            part = None
-            touched = vt_read(spark, path, expected)
-            schema_json = None
-        else:
-            part = _partition_snapshot(path, manifest, touch)
-            if not part["touched_paths"]:
-                return expected  # provably nothing to update — no-op
-            tplan = {
-                "paths": part["touched_paths"],
-                "schema": manifest["schema"],
-                "schema_heterogeneous": manifest.get(
-                    "schema_heterogeneous", False
-                ),
-            }
-            if cmap:
-                tplan["column_mapping"] = cmap
-            # honor existing deletion vectors (see vt_delete)
-            _attach_plan_dv(tplan, path, manifest)
-            if mode in ("dv", "auto"):
-                res = _dv_update_attempt(
-                    spark,
-                    path,
-                    manifest,
-                    expected,
-                    tplan,
-                    matched,
-                    assignments,
-                    part,
-                    pred_json,
-                    rule_doc,
-                    external_params,
-                    assigns_json,
-                    dv_max_rows,
-                    strict=(mode == "dv"),
-                    bloom_cols=bloom_cols,
-                )
-                if res is not None:
-                    if res >= 0:
-                        return res
-                    continue  # lost the commit race — retry on new head
-                # mode="auto" over dv_max_rows: copy-on-write this attempt
-            touched = _read_plan(spark, tplan)
-            schema_json = manifest["schema"]
-            if manifest.get("dv"):
-                # same phantom-match exit as vt_delete: physical stats
-                # can classify files as touched when the only matching
-                # rows are already DV-hidden — probe before rewriting
-                if touched.filter(matched).limit(1).count() == 0:
-                    return expected
-        fields = touched.schema.fields
-        names = {f.name for f in fields}
-        for c in assignments:
-            if c not in names:
-                raise ValueError(f"assignment to unknown column {c!r}")
-        exprs = {
-            c: (F.expr(e) if isinstance(e, str) else e)
-            for c, e in assignments.items()
-        }
-        # ONE select against the input row: every assignment sees the
-        # pre-update values (simultaneous assignment), cast back to the
-        # column's declared type. The match decision is computed ONCE on
-        # the PRE-update row and carried as a flag — re-evaluating the
-        # predicate against ``updated`` would be wrong whenever an
-        # assignment rewrites a predicate column (``SET amount = amount
-        # * 10 WHERE amount = 2``: the post-image no longer matches, so
-        # a post-filter would lose its change rows AND skip constraint
-        # enforcement for exactly the rows that changed).
-        updated_all = touched.select(
-            *[
-                F.when(matched, exprs[f.name].cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in exprs
-                else F.col(f.name)
-                for f in fields
-            ],
-            matched.alias("_vt_matched"),
-        )
-        updated = updated_all.drop("_vt_matched")
-        post_rows = updated_all.filter("_vt_matched").drop("_vt_matched")
-        # three+ consumers of the touched files (constraint check,
-        # pre/post change rows, snapshot rewrite): one scan, released
-        # in finally
-        touched.persist()
-        change_dir = None
-        try:
+        def validate(post) -> None:
+            # the post-update rows must satisfy the head's CHECK
+            # constraints, and an assignment must not leave a generated
+            # column stale (or rewrite it inconsistently)
             _enforce_constraints(
-                post_rows, vt_constraints(path), recorded=True
+                post, manifest.get("constraints") or [], recorded=True
             )
             gen_specs = manifest.get("generated") or {}
             if gen_specs:
-                # an assignment that leaves a generated column stale
-                # (or rewrites it inconsistently) must not commit
-                _validate_generated(
-                    post_rows, gen_specs, set(post_rows.columns)
-                )
+                _validate_generated(post, gen_specs, set(post.columns))
+
+        def rows(touched):
+            fields = checked(touched.schema.fields)
+            # ONE select against the input row: every assignment sees
+            # the pre-update values (simultaneous assignment), cast back
+            # to the column's declared type. The match decision is
+            # computed ONCE on the PRE-update row and carried as a flag
+            # — re-evaluating the predicate against the post-image would
+            # be wrong whenever an assignment rewrites a predicate
+            # column (``SET amount = amount * 10 WHERE amount = 2``: the
+            # post-image no longer matches, so a post-filter would lose
+            # its change rows AND skip constraint enforcement for
+            # exactly the rows that changed).
+            flagged = touched.select(
+                *[
+                    F.when(matched, exprs[f.name].cast(f.dataType))
+                    .otherwise(F.col(f.name))
+                    .alias(f.name)
+                    if f.name in exprs
+                    else F.col(f.name)
+                    for f in fields
+                ],
+                matched.alias("_vt_matched"),
+            )
+            post = flagged.filter("_vt_matched").drop("_vt_matched")
+            validate(post)
+            changes = None
             if change_feed:
-                pre = touched.filter(matched).withColumn(
+                changes = touched.filter(matched).withColumn(
                     "_change_type", F.lit("update_preimage")
+                ).unionByName(
+                    post.withColumn("_change_type", F.lit("update_postimage"))
                 )
-                post = post_rows.withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-                change_dir, _, _, _, _ = _write_data_dir(
-                    pre.unionByName(post), path, prefix="c", mapping=cmap
-                )
-            new_dir, new_stats, new_fstats, new_files, new_rows = (
-                _write_data_dir(updated, path, mapping=cmap)
+            return flagged.drop("_vt_matched"), changes
+
+        def dv_rows(tpos):
+            from pyspark.sql.types import StructType
+
+            fields = checked(StructType.fromJson(manifest["schema"]).fields)
+            m = tpos.filter(matched)
+            # simultaneous assignment against the PRE-update row, cast
+            # back to the declared type (same semantics as the rewrite)
+            post = m.select(
+                *[
+                    exprs[f.name].cast(f.dataType).alias(f.name)
+                    if f.name in exprs
+                    else F.col(f.name)
+                    for f in fields
+                ]
             )
-        finally:
-            touched.unpersist()
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
+            validate(post)
+            pre = m.select(*[F.col(f.name) for f in fields]).withColumn(
+                "_change_type", F.lit("update_preimage")
             )
-            if eff_bloom_cols
-            else {}
-        )
-        if part is not None:
-            dirs = part["dirs"] + [new_dir]
-            stats = {
-                **part["stats"],
-                **({new_dir: new_stats} if new_stats else {}),
-            }
-            fstats = {
-                **part["file_stats"],
-                **({new_dir: new_fstats} if new_fstats else {}),
-            }
-            files = {**part["files"], new_dir: new_files}
-            frows = {
-                **part["file_rows"],
-                **({new_dir: new_rows} if new_rows else {}),
-            }
-            blooms = dict(part["blooms"])
-            if new_blooms:
-                blooms[new_dir] = new_blooms
-            blooms = blooms or None
-            partial_dirs = part["partial_dirs"]
-            blob = {
-                "files_total": part["files_total"],
-                "files_rewritten": part["files_rewritten"],
-            }
-            if part["dirs_rewritten_whole"]:
-                blob["dirs_rewritten_whole"] = part["dirs_rewritten_whole"]
-            hetero = manifest.get("schema_heterogeneous", False)
-        else:
-            dirs = [new_dir]
-            stats = {new_dir: new_stats} if new_stats else {}
-            fstats = {new_dir: new_fstats} if new_fstats else None
-            files = {new_dir: new_files}
-            frows = {new_dir: new_rows} if new_rows else None
-            blooms = {new_dir: new_blooms} if new_blooms else None
-            partial_dirs = None
-            blob = {}
-            schema_json = json.loads(updated.schema.json())
-            hetero = False
-        if assigns_json is not None and pred_json is not None:
+            return m, pre.unionByName(
+                post.withColumn("_change_type", F.lit("update_postimage"))
+            ), post
+
+        blob: dict = {}
+        if assigns_json is not None:
             # replayable recipe: vt_read_changes reconstructs both
-            # images from the previous snapshot + these expressions
-            blob["predicate"] = pred_json
-            blob["assignments"] = assigns_json
-        elif assigns_json is not None and rule_doc is not None:
-            # rule recipe: the change feed recompiles the rule over the
-            # previous snapshot and re-applies the assignments
-            blob["rule"] = rule_doc
-            blob["external_params"] = dict(external_params or {})
-            blob["assignments"] = assigns_json
-        try:
-            return _commit(
-                path,
-                dirs,
-                "update",
-                expected,
-                stats,
-                None,
-                fstats,
-                files,
-                schema=schema_json,
-                heterogeneous=hetero,
-                changes=change_dir,
-                blooms=blooms,
-                file_rows=frows,
-                partial_dirs=partial_dirs,
-                extra={"update": blob},
-            )
-        except FileExistsError:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-            if change_dir is not None:
-                shutil.rmtree(
-                    os.path.join(path, change_dir), ignore_errors=True
-                )
-    raise RuntimeError(f"update at {path} lost {max_retries} commit races")
+            # images from the previous snapshot, the recorded predicate
+            # (or rule) and these expressions
+            blob = region.recipe(recorded if region.rule is None else None)
+            if blob:
+                blob["assignments"] = assigns_json
+        return _Edit(
+            touch, rows, blob, dv_rows=dv_rows, cond=matched, persist=True,
+        )
+
+    return _rewrite(
+        spark, path, "update", plan, mode=mode, dv_max_rows=dv_max_rows,
+        max_retries=max_retries, bloom_cols=bloom_cols,
+    )
 
 
 def vt_history(path: str) -> list[dict]:
@@ -7488,19 +6753,10 @@ def _optimize_where(
         part = _partition_snapshot(path, manifest, touch)
         if not part["touched_paths"]:
             return expected  # nothing in scope — no-op
-        tplan = {
-            "paths": part["touched_paths"],
-            "schema": manifest["schema"],
-            "schema_heterogeneous": manifest.get(
-                "schema_heterogeneous", False
-            ),
-        }
-        if cmap:
-            tplan["column_mapping"] = cmap
         # the scoped rewrite materializes in-scope files' vectors —
         # the read applies them, and _commit's carry-prune drops their
         # entries with the files they described
-        _attach_plan_dv(tplan, path, manifest)
+        tplan = _touched_plan(path, manifest, part["touched_paths"])
         clustered = _cluster_frame(
             spark, _read_plan(spark, tplan), cluster_by, n_partitions,
             method, zorder_bits,
@@ -7644,19 +6900,10 @@ def vt_compact(
         if not part["touched_paths"]:
             return expected
         cmap = _col_mapping(manifest)
-        tplan = {
-            "paths": part["touched_paths"],
-            "schema": manifest["schema"],
-            "schema_heterogeneous": manifest.get(
-                "schema_heterogeneous", False
-            ),
-        }
-        if cmap:
-            tplan["column_mapping"] = cmap
         # the packed rows materialize their deletion vectors (kept
         # files keep theirs — _commit's carry-prune drops only the
         # entries whose files left the manifest)
-        _attach_plan_dv(tplan, path, manifest)
+        tplan = _touched_plan(path, manifest, part["touched_paths"])
         packed = _read_plan(spark, tplan).repartition(
             max(1, -(-small_bytes // max(target_file_bytes, 1)))
         )
@@ -7797,17 +7044,8 @@ def vt_reorg(
             except OSError:
                 continue
         cmap = _col_mapping(manifest)
-        tplan = {
-            "paths": part["touched_paths"],
-            "schema": manifest["schema"],
-            "schema_heterogeneous": manifest.get(
-                "schema_heterogeneous", False
-            ),
-        }
-        if cmap:
-            tplan["column_mapping"] = cmap
         # the purging read applies the vectors — that IS the purge
-        _attach_plan_dv(tplan, path, manifest)
+        tplan = _touched_plan(path, manifest, part["touched_paths"])
         purged = _read_plan(spark, tplan).repartition(
             max(1, -(-touched_bytes // max(target_file_bytes, 1)))
         )

@@ -800,6 +800,21 @@ class VersionedChangesDataSource(DataSource):
         return _ChangesStreamReader(schema, self.options)
 
 
+def _already_registered(exc: Exception) -> bool:
+    """True when ``exc`` is the data-source manager refusing a name that
+    is already registered. Decided by the error condition Spark attaches
+    (``getCondition``; ``getErrorClass`` before Spark 4.0) — message
+    wording is not a contract. Only an exception carrying no condition
+    falls back to the condition name in its message."""
+    getter = getattr(exc, "getCondition", None) or getattr(
+        exc, "getErrorClass", None
+    )
+    condition = getter() if getter is not None else None
+    if condition:
+        return condition == "DATA_SOURCE_ALREADY_EXISTS"
+    return "DATA_SOURCE_ALREADY_EXISTS" in str(exc)
+
+
 def vt_change_stream(
     spark,
     path: str,
@@ -823,7 +838,7 @@ def vt_change_stream(
         # threads registering at once can trip the JVM manager's
         # exists-check — the source being registered IS the desired
         # state, so the race loser proceeds
-        if "DATA_SOURCE_ALREADY_EXISTS" not in str(exc):
+        if not _already_registered(exc):
             raise
     reader = (
         spark.readStream.format(CHANGE_SOURCE_NAME)

@@ -945,3 +945,43 @@ class TestFormatStreamRead:
                 reader = reader.option(k, v)
             with pytest.raises(Exception, match="batch"):
                 _drain_to_memory(reader.load())
+
+
+class _ConditionError(Exception):
+    """Stand-in for a Spark error: a condition plus free message text."""
+
+    def __init__(self, condition, message):
+        super().__init__(message)
+        self._condition = condition
+
+    def getCondition(self):
+        return self._condition
+
+
+class TestRegistrationRace:
+    """vt_change_stream tolerates losing the data-source registration
+    race; the refusal is recognized by its error condition, not by the
+    wording of its message."""
+
+    @pytest.mark.parametrize(
+        "exc, expected",
+        [
+            (_ConditionError("DATA_SOURCE_ALREADY_EXISTS", "refused"), True),
+            (
+                _ConditionError(
+                    "DATA_SOURCE_NOT_FOUND",
+                    "not DATA_SOURCE_ALREADY_EXISTS",
+                ),
+                False,
+            ),
+            (_ConditionError(None, "[DATA_SOURCE_ALREADY_EXISTS] x"), True),
+            (RuntimeError("[DATA_SOURCE_ALREADY_EXISTS] x"), True),
+            (RuntimeError("boom"), False),
+        ],
+    )
+    def test_already_registered_matches_condition_first(self, exc, expected):
+        from dynamicqueryengine_spark.streaming.source import (
+            _already_registered,
+        )
+
+        assert _already_registered(exc) is expected
