@@ -5184,16 +5184,23 @@ class TestReorgConsolidationFaults:
         vt_delete(spark, path, ("id", "=", 3), mode="dv")
         return path
 
-    def test_reorg_lost_race_retries_and_lands(self, spark, tmp_path):
+    @pytest.mark.parametrize("verb", ["compact", "optimize_where", "reorg"])
+    def test_maintenance_lost_race_retries_and_lands(
+        self, spark, tmp_path, monkeypatch, verb
+    ):
+        """The retrying maintenance verbs re-derive against the winner's
+        head after a lost commit race: they land one version later, the
+        winner's rows survive, and the lost attempt's output is gone."""
         import dynamicqueryengine_spark.sources.versioned as V
 
         path = self._staged_with_dv(spark, tmp_path)
+        base = V.vt_head(path)
         real = V._write_data_dir
         injected: list = []
 
         def racy(df, p, *a, **kw):
             out = real(df, p, *a, **kw)
-            if not injected:  # race once: an append lands mid-reorg
+            if not injected:  # race once: an append lands mid-call
                 injected.append(True)
                 V.vt_write(
                     spark,
@@ -5205,16 +5212,30 @@ class TestReorgConsolidationFaults:
                 )
             return out
 
-        V._write_data_dir = racy
-        try:
-            v = V.vt_reorg(spark, path)
-        finally:
-            V._write_data_dir = real
-        assert injected and v == V.vt_head(path)
+        calls = {
+            "compact": lambda: V.vt_compact(spark, path),
+            "optimize_where": lambda: V.vt_optimize(
+                spark, path, ["id"], n_partitions=2, where=("id", ">=", 0)
+            ),
+            "reorg": lambda: V.vt_reorg(spark, path),
+        }
+        monkeypatch.setattr(V, "_write_data_dir", racy)
+        v = calls[verb]()
+        monkeypatch.setattr(V, "_write_data_dir", real)
+        assert injected and v == V.vt_head(path) == base + 2
+        assert V._read_manifest(path, base + 1)["op"] == "append"
         m = V._read_manifest(path, v)
+        assert m["op"] == "optimize"
         assert "dv" not in m  # the retry still purged the vector
         got = {r["id"] for r in V.vt_read(spark, path).collect()}
         assert got == (set(range(64)) - {3}) | {500}
+        # every d_* dir on disk is referenced by a committed manifest:
+        # the lost attempt's output was removed
+        referenced = set()
+        for ver in vt_versions(path):
+            referenced.update(V._read_manifest(path, ver)["dirs"])
+        on_disk = {n for n in os.listdir(path) if n.startswith("d_")}
+        assert on_disk == referenced
 
     def test_crash_mid_reorg_leaves_table_intact(self, spark, tmp_path):
         import dynamicqueryengine_spark.sources.versioned as V
@@ -5717,18 +5738,23 @@ class TestDmlLostRace:
 
 
 class TestDmlJobCount:
-    """Spark job budget of the change-feed DML verbs on a fixed small
-    table. One fixed-cost job is 50-130 ms at this size, so a DML path
-    that grows a job is a latency regression even when its output is
-    unchanged. The bounds are the counts the verbs measured when this
-    guard was added."""
+    """Spark job budget of the change-feed DML verbs and the maintenance
+    verbs on a fixed small table. One fixed-cost job is 50-130 ms at
+    this size, so a DML or maintenance path that grows a job is a
+    latency regression even when its output is unchanged. The bounds
+    are the counts the verbs measured when each was added here."""
 
-    _MAX_JOBS = {"merge": 17, "delete": 2, "update": 2}
+    _MAX_JOBS = {
+        "merge": 17, "delete": 2, "update": 2,
+        "optimize_where": 3, "reorg": 2, "compact": 2, "optimize": 3,
+    }
 
     def test_change_feed_dml_job_counts(self, spark, tmp_path):
         from dynamicqueryengine_spark.sources.versioned import (
+            vt_compact,
             vt_delete,
             vt_optimize,
+            vt_reorg,
             vt_update,
         )
 
@@ -5748,14 +5774,26 @@ class TestDmlJobCount:
                 spark, path, ("id", "=", 7), {"v": "'u'"},
                 change_feed=True,
             ),
+            "optimize_where": lambda: vt_optimize(
+                spark, path, ["id"], n_partitions=2, where=("id", "<", 100)
+            ),
+            "reorg": lambda: vt_reorg(spark, path),
+            "compact": lambda: vt_compact(spark, path),
+            "optimize": lambda: vt_optimize(
+                spark, path, ["id"], n_partitions=4
+            ),
         }
         sc = spark.sparkContext
         counts = {}
         for verb, call in calls.items():
+            if verb == "reorg":
+                # uncounted setup: a deletion vector for reorg to purge
+                vt_delete(spark, path, ("id", "=", 250), mode="dv")
             group = f"dml-jobs-{verb}"
             sc.setJobGroup(group, "vt DML job count")
             try:
-                call()
+                v = vt_versions(path)[-1]
+                assert call() == v + 1, verb  # every call commits
             finally:
                 sc.setJobGroup(None, None)
             counts[verb] = len(sc.statusTracker().getJobIdsForGroup(group))
@@ -5763,4 +5801,5 @@ class TestDmlJobCount:
             assert n <= self._MAX_JOBS[verb], counts
         got = {r["id"]: r["v"] for r in vt_read(spark, path).collect()}
         assert 3 not in got and got[7] == "u" and got[10] == "m10"
-        assert got[1000] == "n" and len(got) == 396
+        assert 250 not in got
+        assert got[1000] == "n" and len(got) == 395
