@@ -1641,51 +1641,32 @@ def _write_partitioned_dirs(
     return out
 
 
-def _write_maintenance_output(
-    spark, df: DataFrame, path: str, manifest: dict,
-    mapping: dict | None, bloom_cols,
-) -> tuple[list, dict, dict, dict, dict, dict, dict]:
-    """Write a maintenance rewrite's output (compact/reorg packed rows)
-    preserving the table's partition layout: partitioned tables re-split
-    per partition value (DROP PARTITION and exact pruning survive the
-    maintenance op), plain tables write one directory. Returns
-    ``(dirs, stats, fstats, files, frows, blooms, partitions)`` for the
-    NEW directories only."""
-    pby = manifest.get("partition_by") or []
-    if pby:
-        # one task per partition value before the staged split, so a
-        # compaction actually REDUCES file count (n_tasks × n_partitions
-        # leaves would defeat it); partitions repack into one file each —
-        # the right unit for small-file maintenance (a partition too big
-        # for one file belongs to OPTIMIZE's size-aware rewrite)
-        written = _write_partitioned_dirs(
-            df.repartition(*[F.col(c) for c in pby]),
-            path, pby, mapping=mapping,
-        )
-    else:
-        written = []
-    if not written:
-        d0, s0, fs0, fl0, fr0 = _write_data_dir(df, path, mapping=mapping)
-        written = [(d0, s0, fs0, fl0, fr0, None)]
-    eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-    blooms: dict = {}
-    if eff_bloom_cols:
-        for d, *_ in written:
-            b = _harvest_blooms(
-                spark, os.path.join(path, d), eff_bloom_cols,
-                mapping=mapping,
-            )
-            if b:
-                blooms[d] = b
-    return (
-        [w[0] for w in written],
-        {d: s for d, s, *_ in written if s},
-        {d: fs for d, _, fs, *_ in written if fs},
-        {d: fl for d, _, _, fl, *_ in written},
-        {d: fr for d, _, _, _, fr, _ in written if fr},
-        blooms,
-        {d: pv for d, _, _, _, _, pv in written if pv is not None},
+def _write_layout(
+    df: DataFrame, path: str, pby: Sequence[str], mapping: dict | None,
+) -> list[tuple]:
+    """Write ``df`` in the table's layout: one directory per partition
+    value on a partitioned table (:func:`_write_partitioned_dirs`),
+    else — or for a zero-row frame, which still needs a schema-bearing
+    directory — one plain directory. Returns the ``_land`` tuples."""
+    written = (
+        _write_partitioned_dirs(df, path, pby, mapping=mapping) if pby else []
     )
+    return written or [(*_write_data_dir(df, path, mapping=mapping), None)]
+
+
+def _dir_blooms(
+    spark, path: str, dirs: list, cols: list, mapping: dict | None,
+) -> dict:
+    """``{dir: bloom}`` harvested over ``cols`` for freshly written
+    ``dirs`` (dirs yielding no bloom are left out)."""
+    out: dict = {}
+    for d in dirs if cols else ():
+        b = _harvest_blooms(
+            spark, os.path.join(path, d), cols, mapping=mapping
+        )
+        if b:
+            out[d] = b
+    return out
 
 
 # Type-widening lattice (Delta's typeWidening feature set, restricted
@@ -2174,34 +2155,16 @@ def vt_write(
     # written: [(dir, dir_stats, file_stats, files, file_rows,
     # partition_values_or_None)] — one entry for plain writes, one per
     # partition value tuple for partitioned writes (still ONE Spark job)
-    if eff_pby:
-        written = _write_partitioned_dirs(
-            df, path, eff_pby, mapping=write_mapping
-        )
-    else:
-        written = []
-    if not written:
-        # plain write — or a zero-row partitioned frame, which still
-        # needs a directory so an overwrite can commit an empty snapshot
-        d0, s0, fs0, fl0, fr0 = _write_data_dir(
-            df, path, mapping=write_mapping
-        )
-        written = [(d0, s0, fs0, fl0, fr0, None)]
+    written = _write_layout(df, path, eff_pby, write_mapping)
     new_dirs = [w[0] for w in written]
 
     def _discard_written() -> None:
         for d in new_dirs:
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
-    new_blooms_by_dir: dict = {}
-    if eff_bloom_cols:
-        for d in new_dirs:
-            b = _harvest_blooms(
-                spark, os.path.join(path, d), eff_bloom_cols,
-                mapping=write_mapping,
-            )
-            if b:
-                new_blooms_by_dir[d] = b
+    new_blooms_by_dir = _dir_blooms(
+        spark, path, new_dirs, eff_bloom_cols, write_mapping
+    )
     # advance each identity column's high watermark to the EXTREME id
     # actually written (footer stats when they cover the new dir, a
     # one-dir read-back otherwise — e.g. a zero-row partition file
@@ -4370,6 +4333,7 @@ def _land(
     sidecar: str | None = None,
     txn: tuple | None = None,
     identity: dict | None = None,
+    key: str | None = None,
 ) -> int:
     """Commit the successor of ``manifest`` at ``expected + 1``: the
     ``base`` fragments (the kept side of a :func:`_partition_snapshot`
@@ -4377,7 +4341,10 @@ def _land(
     None for a first/legacy commit) plus the ``written`` directories
     ``[(dir, stats, file_stats, files, file_rows, partition_values),
     …]`` with their ``blooms`` ``{dir: bloom}``. ``schema`` is only
-    consulted when ``manifest`` records none. On a lost race
+    consulted when ``manifest`` records none. The audit ``blob`` is
+    recorded under ``key`` (default ``op``). The written rows carry the
+    head's logical schema, so ``schema_heterogeneous`` survives only
+    while ``base`` keeps a head directory referenced. On a lost race
     (FileExistsError, TxnReplayed) everything the attempt staged — the
     written and change directories and the deletion-vector sidecar —
     is removed before the error propagates."""
@@ -4406,7 +4373,9 @@ def _land(
     hetero = False
     if manifest is not None and manifest.get("schema") is not None:
         schema = manifest["schema"]
-        hetero = manifest.get("schema_heterogeneous", False)
+        hetero = manifest.get("schema_heterogeneous", False) and bool(
+            base.get("dirs")
+        )
     try:
         return _commit(
             path,
@@ -4423,7 +4392,7 @@ def _land(
             blooms=all_blooms or None,
             file_rows=frows or None,
             partial_dirs=base.get("partial_dirs"),
-            extra={op: blob} if blob else None,
+            extra={key or op: blob} if blob else None,
             dv=dv,
             identity=identity,
             partitions=partitions or None,
@@ -4737,16 +4706,10 @@ def _rewrite(
                 )
             if edit.extra is not None:
                 written += edit.extra(cmap)
-            eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-            blooms = {}
-            if eff_bloom_cols:
-                for d, *_ in written:
-                    b = _harvest_blooms(
-                        spark, os.path.join(path, d), eff_bloom_cols,
-                        mapping=cmap,
-                    )
-                    if b:
-                        blooms[d] = b
+            blooms = _dir_blooms(
+                spark, path, [w[0] for w in written],
+                _effective_bloom_cols(bloom_cols, manifest), cmap,
+            )
             if dv_blob is not None:
                 blob = {
                     "files_total": part["files_total"],
@@ -4781,6 +4744,121 @@ def _rewrite(
             if cached is not None:
                 cached.unpersist()
     raise RuntimeError(f"{op} at {path} lost {max_retries} commit races")
+
+
+# ------------------------------------------------------ maintenance core --
+#
+# vt_optimize (whole-table and ``where=``), vt_compact and vt_reorg are
+# one pipeline, _repack: a rewrite of some of the head's files with no
+# logical change, parameterized per verb by a file selection and an
+# output shape, committed through the DML core's _land.
+
+
+def _paths_bytes(paths: list) -> int:
+    """On-disk bytes of touched read paths: a file's size, or for a
+    directory read whole (no authoritative file list) the parquet files
+    inside it — its bytes must count toward output sizing, or a 10 GB
+    legacy dir would pack into one oversized file. Unreadable sizes
+    count 0."""
+    total = 0
+    for p in paths:
+        try:
+            if os.path.isdir(p):
+                total += sum(
+                    os.path.getsize(os.path.join(p, n))
+                    for n in os.listdir(p)
+                    if n.endswith(".parquet")
+                )
+            else:
+                total += os.path.getsize(p)
+        except OSError:
+            continue
+    return total
+
+
+def _repack(
+    spark,
+    path: str,
+    key: str,
+    select: Callable,
+    shape: Callable,
+    bloom_cols: Sequence[str] | None = None,
+    max_retries: int | None = 5,
+) -> int:
+    """The maintenance core behind vt_optimize (whole-table and
+    ``where=``), vt_compact and vt_reorg. Each attempt:
+
+    1. reads the head and asks ``select(manifest)`` for the files to
+       rewrite: None is a no-op that returns the head, else
+       ``(touch_file, touch_name, audit)`` — the
+       :func:`_partition_snapshot` classifier (by stats, or by name) and
+       ``audit(part, nbytes)``, the verb's audit-blob fields;
+    2. reads the touched files through their deletion vectors (the
+       rewrite materializes them) and measures their bytes
+       (:func:`_paths_bytes`). When nothing stays referenced verbatim —
+       and on tables without a recorded schema (legacy, only the
+       whole-table OPTIMIZE selects them) — the touched set is the
+       snapshot, read through its own scan plan: a few directory paths
+       instead of one path per file (Spark lists more than 32 paths in
+       an extra job);
+    3. lays the rows out with ``shape(frame, nbytes, partition_by)``;
+    4. writes one directory per partition value on partitioned tables,
+       else one directory (:func:`_write_layout`), and harvests their
+       blooms (``bloom_cols``, else the table's recorded property);
+    5. commits the kept side of the split plus the new directories
+       through :func:`_land` as ``op="optimize"`` — the change feed and
+       the streaming source skip it — with the audit blob under
+       ``key``.
+
+    A lost commit race removes the attempt's output; the attempt then
+    re-derives from the new head, and after ``max_retries`` lost races
+    RuntimeError is raised. ``max_retries=None`` makes one attempt whose
+    lost race raises FileExistsError."""
+    for _ in range(max_retries or 1):
+        head = vt_versions(path)
+        if not head:
+            raise FileNotFoundError(f"no committed versions at {path}")
+        expected = head[-1]
+        manifest = _read_manifest(path, expected)
+        picked = select(manifest)
+        if picked is None:
+            return expected
+        touch_file, touch_name, audit = picked
+        part = nbytes = None
+        if manifest.get("schema") is not None:
+            part = _partition_snapshot(
+                path, manifest, touch_file, touch_name=touch_name
+            )
+            if not part["touched_paths"]:
+                return expected
+            nbytes = _paths_bytes(part["touched_paths"])
+        if part is None or not part["dirs"]:
+            frame = vt_read(spark, path, expected)
+        else:
+            frame = _read_plan(
+                spark, _touched_plan(path, manifest, part["touched_paths"])
+            )
+        pby = manifest.get("partition_by") or []
+        out = shape(frame, nbytes, pby)
+        cmap = _col_mapping(manifest)
+        written = _write_layout(out, path, pby, cmap)
+        blooms = _dir_blooms(
+            spark, path, [w[0] for w in written],
+            _effective_bloom_cols(bloom_cols, manifest), cmap,
+        )
+        try:
+            return _land(
+                path, "optimize", expected, manifest, part, written,
+                blooms, None, audit(part, nbytes), key=key,
+                schema=(
+                    None if part is not None
+                    else json.loads(out.schema.json())
+                ),
+            )
+        except FileExistsError:
+            if max_retries is None:
+                raise
+    raise RuntimeError(f"{key} at {path} lost {max_retries} commit races")
 
 
 def vt_merge(
@@ -5452,20 +5530,9 @@ def vt_replace_where(
 
         def extra(cmap):
             pby = manifest.get("partition_by") or []
-            written = []
             if pby:
                 _validate_partition_by(out_df, pby)
-                written = _write_partitioned_dirs(
-                    out_df, path, pby, mapping=cmap
-                )
-            if not written:
-                # plain write — or a zero-row partitioned frame, which
-                # still needs a directory so the successor snapshot
-                # keeps a schema-bearing dir even when everything else
-                # dropped
-                written = [
-                    (*_write_data_dir(out_df, path, mapping=cmap), None)
-                ]
+            written = _write_layout(out_df, path, pby, cmap)
             blob["new_dirs"] = [w[0] for w in written]
             return written
 
@@ -6604,6 +6671,9 @@ def vt_optimize(
     vacuumed, and concurrent-commit losers clean up their orphan
     directory exactly like vt_write. Range boundaries come from Spark's
     reservoir sampling — layout, not results, depends on them.
+    Partitioned tables keep one directory per partition value (Delta's
+    OPTIMIZE never crosses partitions either), so DROP PARTITION and
+    exact directory pruning survive the rewrite.
 
     ``method="range"`` clusters lexicographically: perfect skipping on
     the FIRST cluster column, little on the rest. ``method="zorder"``
@@ -6622,81 +6692,51 @@ def vt_optimize(
     "recluster yesterday's ingest" reads yesterday's files, every
     out-of-scope file is referenced verbatim with stats/blooms/vectors
     carried, and the rewrite materializes the in-scope files'
-    accumulated deletion vectors. Scoped runs retry lost commit races
-    like vt_compact/vt_reorg; the audit blob records the scope
-    (``optimize: {predicate, files_total, files_rewritten}``)."""
-    keys = [F.col(c) for c in cluster_by]
-    if method != "compact" and not keys:
+    accumulated deletion vectors. The audit blob records the scope
+    (``optimize: {predicate, files_total, files_rewritten}``).
+
+    ``max_retries`` applies only with ``where=``: a scoped run retries
+    lost commit races like vt_compact/vt_reorg. The whole-table rewrite
+    makes ONE attempt — a lost race removes its output and raises
+    FileExistsError. Both run through :func:`_repack`."""
+    if method != "compact" and not cluster_by:
         raise ValueError(f"optimize method {method!r} requires cluster_by")
-    if where is not None:
-        return _optimize_where(
-            spark, path, cluster_by, n_partitions, method, zorder_bits,
-            bloom_cols, where, max_retries,
+
+    def shape(df, nbytes, pby):
+        return _cluster_frame(
+            spark, df, cluster_by, n_partitions, method, zorder_bits
         )
-    head = vt_versions(path)
-    if not head:
-        raise FileNotFoundError(f"no committed versions at {path}")
-    expected = head[-1]
-    head_manifest = _read_manifest(path, expected)
-    cmap = _col_mapping(head_manifest)
-    snap = vt_read(spark, path, expected)
-    # "compact" = bin-packing only (Delta OPTIMIZE without ZORDER): the
-    # no-cluster-key maintenance path vt_maintain uses when no one
-    # declared query columns
-    clustered = _cluster_frame(
-        spark, snap, cluster_by, n_partitions, method, zorder_bits
-    )
-    # partitioned tables keep their layout through OPTIMIZE: the
-    # clustered frame is re-split one dir per partition value (still one
-    # Spark job), so DROP PARTITION and exact dir pruning survive the
-    # rewrite — Delta's OPTIMIZE likewise never crosses partitions
-    recorded_pby = head_manifest.get("partition_by") or []
-    if recorded_pby:
-        written = _write_partitioned_dirs(
-            clustered, path, recorded_pby, mapping=cmap
+
+    if where is None:
+        # every file, no audit blob; legacy tables rewrite too
+        return _repack(
+            spark, path, "optimize",
+            lambda m: (None, lambda d, f: True, lambda part, nbytes: {}),
+            shape, bloom_cols, max_retries=None,
         )
-    else:
-        written = []
-    if not written:
-        d0, s0, fs0, fl0, fr0 = _write_data_dir(
-            clustered, path, mapping=cmap
-        )
-        written = [(d0, s0, fs0, fl0, fr0, None)]
-    new_dirs = [w[0] for w in written]
-    eff_bloom_cols = _effective_bloom_cols(bloom_cols, head_manifest)
-    new_blooms_by_dir: dict = {}
-    if eff_bloom_cols:
-        for d in new_dirs:
-            b = _harvest_blooms(
-                spark, os.path.join(path, d), eff_bloom_cols,
-                mapping=cmap,
+    conjuncts = _normalize_predicate(where)
+    recorded = _json_conjuncts(conjuncts)
+
+    def select(manifest):
+        if manifest.get("schema") is None:
+            raise ValueError(
+                "vt_optimize(where=...) requires a table with a "
+                "recorded schema (legacy tables rewrite whole snapshots)"
             )
-            if b:
-                new_blooms_by_dir[d] = b
-    try:
-        # the rewrite reconciled every row to the head's logical schema,
-        # so the layout is homogeneous again (heterogeneous flag cleared)
-        return _commit(
-            path,
-            new_dirs,
-            "optimize",
-            expected,
-            {d: s for d, s, *_ in written if s},
-            None,
-            {d: fs for d, _, fs, *_ in written if fs} or None,
-            {d: fl for d, _, _, fl, *_ in written},
-            schema=json.loads(clustered.schema.json()),
-            blooms=new_blooms_by_dir or None,
-            file_rows={d: fr for d, _, _, _, fr, _ in written if fr}
-            or None,
-            partitions={
-                d: pv for d, _, _, _, _, pv in written if pv is not None
-            },
+        touch = _pred_touch_fn(
+            _map_conjuncts(conjuncts, _col_mapping(manifest)),
+            _bloom_col_types(manifest),
         )
-    except FileExistsError:
-        for d in new_dirs:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-        raise
+        return touch, None, lambda part, nbytes: {
+            "scope": "where",
+            "files_total": part["files_total"],
+            "files_rewritten": part["files_rewritten"],
+            **({"predicate": recorded} if recorded is not None else {}),
+        }
+
+    return _repack(
+        spark, path, "optimize", select, shape, bloom_cols, max_retries
+    )
 
 
 def _cluster_frame(spark, df, cluster_by, n_partitions, method, zorder_bits):
@@ -6720,105 +6760,21 @@ def _cluster_frame(spark, df, cluster_by, n_partitions, method, zorder_bits):
     raise ValueError(f"unknown optimize method {method!r}")
 
 
-def _optimize_where(
-    spark, path, cluster_by, n_partitions, method, zorder_bits,
-    bloom_cols, where, max_retries,
-) -> int:
-    """Predicate-scoped OPTIMIZE (Delta's ``OPTIMIZE … WHERE``): rewrite
-    clustered ONLY the files whose stats say they MAY hold rows matching
-    the conjunction; everything out of scope is referenced verbatim.
-    See :func:`vt_optimize` for the contract."""
-    conjuncts = _normalize_predicate(where)
-    pred_json = None
-    try:
-        json.dumps([[c, o, v] for c, o, v in conjuncts])
-        pred_json = [[c, o, v] for c, o, v in conjuncts]
-    except (TypeError, ValueError):
-        pass  # non-JSON values: blob simply omits the predicate
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
-        if manifest.get("schema") is None:
-            raise ValueError(
-                "vt_optimize(where=...) requires a table with a "
-                "recorded schema (legacy tables rewrite whole snapshots)"
-            )
-        cmap = _col_mapping(manifest)
-        touch = _pred_touch_fn(
-            _map_conjuncts(conjuncts, cmap), _bloom_col_types(manifest)
+def _bin_pack(target_file_bytes: int):
+    """``shape`` of vt_compact and vt_reorg: ``ceil(bytes /
+    target_file_bytes)`` right-sized files; on a partitioned table one
+    task per partition value instead, so each partition repacks into
+    one file (n_tasks × n_partitions leaves would defeat compaction; a
+    partition too big for one file belongs to OPTIMIZE)."""
+
+    def shape(df, nbytes, pby):
+        if pby:
+            return df.repartition(*[F.col(c) for c in pby])
+        return df.repartition(
+            max(1, -(-nbytes // max(target_file_bytes, 1)))
         )
-        part = _partition_snapshot(path, manifest, touch)
-        if not part["touched_paths"]:
-            return expected  # nothing in scope — no-op
-        # the scoped rewrite materializes in-scope files' vectors —
-        # the read applies them, and _commit's carry-prune drops their
-        # entries with the files they described
-        tplan = _touched_plan(path, manifest, part["touched_paths"])
-        clustered = _cluster_frame(
-            spark, _read_plan(spark, tplan), cluster_by, n_partitions,
-            method, zorder_bits,
-        )
-        new_dir, new_stats, new_fstats, new_files, new_rows = (
-            _write_data_dir(clustered, path, mapping=cmap)
-        )
-        eff_bloom_cols = _effective_bloom_cols(bloom_cols, manifest)
-        new_blooms = (
-            _harvest_blooms(
-                spark, os.path.join(path, new_dir), eff_bloom_cols,
-                mapping=cmap,
-            )
-            if eff_bloom_cols
-            else {}
-        )
-        dirs = part["dirs"] + [new_dir]
-        stats = {
-            **part["stats"],
-            **({new_dir: new_stats} if new_stats else {}),
-        }
-        fstats = {
-            **part["file_stats"],
-            **({new_dir: new_fstats} if new_fstats else {}),
-        }
-        files = {**part["files"], new_dir: new_files}
-        frows = {
-            **part["file_rows"],
-            **({new_dir: new_rows} if new_rows else {}),
-        }
-        blooms = dict(part["blooms"])
-        if new_blooms:
-            blooms[new_dir] = new_blooms
-        blob = {
-            "scope": "where",
-            "files_total": part["files_total"],
-            "files_rewritten": part["files_rewritten"],
-        }
-        if pred_json is not None:
-            blob["predicate"] = pred_json
-        try:
-            return _commit(
-                path,
-                dirs,
-                "optimize",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                heterogeneous=manifest.get("schema_heterogeneous", False),
-                blooms=blooms or None,
-                file_rows=frows or None,
-                partial_dirs=part["partial_dirs"],
-                extra={"optimize": blob},
-            )
-        except FileExistsError:
-            shutil.rmtree(os.path.join(path, new_dir), ignore_errors=True)
-    raise RuntimeError(
-        f"scoped optimize at {path} lost {max_retries} commit races"
-    )
+
+    return shape
 
 
 def vt_compact(
@@ -6846,18 +6802,16 @@ def vt_compact(
     the manifest's ``compact`` blob (``files_total`` /
     ``files_compacted`` / ``bytes_compacted``). Commits as
     ``op="optimize"`` (no logical change: the change feed and the
-    streaming source skip it). Returns the new version, or the current
-    head when fewer than ``min_files`` small files exist.
+    streaming source skip it) through the maintenance core
+    :func:`_repack`, which retries lost commit races. Returns the new
+    version, or the current head when fewer than ``min_files`` small
+    files exist.
 
     Compaction is NOT clustering: packed files get whatever footer
     ranges their input rows had. Run :func:`vt_optimize` (range/zorder)
     when per-file min/max tightness — not file count — is the problem."""
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+
+    def select(manifest):
         if manifest.get("schema") is None:
             raise ValueError(
                 "vt_compact requires a table with a recorded schema — "
@@ -6865,104 +6819,29 @@ def vt_compact(
             )
         flists = manifest.get("files", {})
         small: set[tuple] = set()
-        small_bytes = 0
-        whole_dirs = 0
+        # dirs without a file list are touched whole (_partition_snapshot)
+        whole_dirs = sum(1 for d in manifest["dirs"] if not flists.get(d))
         for d in manifest["dirs"]:
-            flist = flists.get(d)
-            if not flist:
-                # _partition_snapshot touches legacy dirs whole — their
-                # bytes MUST count toward the output sizing or a 10 GB
-                # legacy dir would pack into one oversized file
-                whole_dirs += 1
-                full = os.path.join(path, d)
-                try:
-                    for n in os.listdir(full):
-                        if n.endswith(".parquet"):
-                            small_bytes += os.path.getsize(
-                                os.path.join(full, n)
-                            )
-                except OSError:
-                    pass
-                continue
-            for f in flist:
+            for f in flists.get(d) or ():
                 try:
                     sz = os.path.getsize(os.path.join(path, d, f))
                 except OSError:
                     continue  # unreadable size: leave the file alone
                 if sz < small_file_bytes:
                     small.add((d, f))
-                    small_bytes += sz
         if len(small) + whole_dirs < max(min_files, 2):
-            return expected  # nothing worth packing — no-op
-        part = _partition_snapshot(
-            path, manifest, None, touch_name=lambda d, f: (d, f) in small
-        )
-        if not part["touched_paths"]:
-            return expected
-        cmap = _col_mapping(manifest)
-        # the packed rows materialize their deletion vectors (kept
-        # files keep theirs — _commit's carry-prune drops only the
-        # entries whose files left the manifest)
-        tplan = _touched_plan(path, manifest, part["touched_paths"])
-        packed = _read_plan(spark, tplan).repartition(
-            max(1, -(-small_bytes // max(target_file_bytes, 1)))
-        )
-        new_dirs, nstats, nfstats, nfiles, nfrows, nblooms, nparts = (
-            _write_maintenance_output(
-                spark, packed, path, manifest, cmap, bloom_cols
-            )
-        )
-        dirs = part["dirs"] + new_dirs
-        stats = {**part["stats"], **nstats}
-        fstats = {**part["file_stats"], **nfstats}
-        files = {**part["files"], **nfiles}
-        frows = {**part["file_rows"], **nfrows}
-        blooms = {**part["blooms"], **nblooms}
-        # kept partitioned dirs keep their recorded values (carry-prune
-        # in _commit); the repacked dirs add theirs explicitly
-        partitions = {
-            **{
-                d: v
-                for d, v in (manifest.get("partitions") or {}).items()
-                if d in set(part["dirs"])
-            },
-            **nparts,
+            return None  # nothing worth packing
+        return None, lambda d, f: (d, f) in small, lambda part, nbytes: {
+            "files_total": part["files_total"],
+            "files_compacted": part["files_rewritten"],
+            "dirs_compacted_whole": part["dirs_rewritten_whole"],
+            "bytes_compacted": nbytes,
         }
-        try:
-            return _commit(
-                path,
-                dirs,
-                "optimize",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                # a compact that kept NO file verbatim reconciled every
-                # row to the head's logical schema — the layout is
-                # homogeneous again, exactly like a full OPTIMIZE
-                heterogeneous=(
-                    manifest.get("schema_heterogeneous", False)
-                    and bool(part["dirs"])
-                ),
-                blooms=blooms or None,
-                file_rows=frows or None,
-                partial_dirs=part["partial_dirs"],
-                extra={
-                    "compact": {
-                        "files_total": part["files_total"],
-                        "files_compacted": part["files_rewritten"],
-                        "dirs_compacted_whole": part["dirs_rewritten_whole"],
-                        "bytes_compacted": small_bytes,
-                    }
-                },
-                partitions=partitions,
-            )
-        except FileExistsError:
-            for d in new_dirs:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    raise RuntimeError(f"compact at {path} lost {max_retries} commit races")
+
+    return _repack(
+        spark, path, "compact", select, _bin_pack(target_file_bytes),
+        bloom_cols, max_retries,
+    )
 
 
 def vt_reorg(
@@ -6997,109 +6876,47 @@ def vt_reorg(
     into ``ceil(bytes / target_file_bytes)`` right-sized files.
 
     Commits as ``op="optimize"`` (no logical change: CDC and the
-    streaming source skip it) with a ``reorg`` audit blob —
-    ``files_total`` / ``files_rewritten`` / ``dv_files_purged`` /
-    ``dv_rows_purged``. Returns the new version, or the current head
-    when no file crosses the threshold. Requires a recorded schema
-    (legacy tables have no DVs by construction)."""
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
+    streaming source skip it) through the maintenance core
+    :func:`_repack`, which retries lost commit races, with a ``reorg``
+    audit blob — ``files_total`` / ``files_rewritten`` /
+    ``dv_files_purged`` / ``dv_rows_purged``. Returns the new version,
+    or the current head when no file crosses the threshold. Requires a
+    recorded schema (legacy tables have no DVs by construction)."""
+
+    def select(manifest):
         dv_map = manifest.get("dv") or {}
         if not dv_map:
-            return expected  # nothing vectored — no-op
+            return None  # nothing vectored
         if manifest.get("schema") is None:  # pragma: no cover - legacy
             raise ValueError(
                 "vt_reorg requires a table with a recorded schema"
             )
         frows = manifest.get("file_rows", {})
-        dirty: set[tuple] = set()
-        purged_rows = 0
+        dirty: dict[tuple, int] = {}
         for d, fmap in dv_map.items():
             for fname, entry in fmap.items():
                 count = int(entry["count"])
                 nrows = frows.get(d, {}).get(fname)
-                hit = count >= min_dv_rows or (
+                if count >= min_dv_rows or (
                     min_dv_fraction > 0
                     and nrows
                     and count / nrows >= min_dv_fraction
-                )
-                if hit:
-                    dirty.add((d, fname))
-                    purged_rows += count
+                ):
+                    dirty[(d, fname)] = count
         if not dirty:
-            return expected  # all vectors below threshold — no-op
-        part = _partition_snapshot(
-            path, manifest, None, touch_name=lambda d, f: (d, f) in dirty
-        )
-        if not part["touched_paths"]:  # pragma: no cover - defensive
-            return expected
-        touched_bytes = 0
-        for p in part["touched_paths"]:
-            try:
-                touched_bytes += os.path.getsize(p)
-            except OSError:
-                continue
-        cmap = _col_mapping(manifest)
+            return None  # all vectors below threshold
         # the purging read applies the vectors — that IS the purge
-        tplan = _touched_plan(path, manifest, part["touched_paths"])
-        purged = _read_plan(spark, tplan).repartition(
-            max(1, -(-touched_bytes // max(target_file_bytes, 1)))
-        )
-        new_dirs, nstats, nfstats, nfiles, nfrows, nblooms, nparts = (
-            _write_maintenance_output(
-                spark, purged, path, manifest, cmap, bloom_cols
-            )
-        )
-        dirs = part["dirs"] + new_dirs
-        stats = {**part["stats"], **nstats}
-        fstats = {**part["file_stats"], **nfstats}
-        files = {**part["files"], **nfiles}
-        frows_out = {**part["file_rows"], **nfrows}
-        blooms = {**part["blooms"], **nblooms}
-        partitions = {
-            **{
-                d: v
-                for d, v in (manifest.get("partitions") or {}).items()
-                if d in set(part["dirs"])
-            },
-            **nparts,
+        return None, lambda d, f: (d, f) in dirty, lambda part, nbytes: {
+            "files_total": part["files_total"],
+            "files_rewritten": part["files_rewritten"],
+            "dv_files_purged": len(dirty),
+            "dv_rows_purged": sum(dirty.values()),
         }
-        try:
-            # dv=None carries the head's map pruned to still-referenced
-            # files: purged files left the manifest, so their entries
-            # drop; sub-threshold files keep theirs verbatim
-            return _commit(
-                path,
-                dirs,
-                "optimize",
-                expected,
-                stats,
-                None,
-                fstats or None,
-                files,
-                schema=manifest["schema"],
-                heterogeneous=manifest.get("schema_heterogeneous", False),
-                blooms=blooms or None,
-                file_rows=frows_out or None,
-                partial_dirs=part["partial_dirs"],
-                extra={
-                    "reorg": {
-                        "files_total": part["files_total"],
-                        "files_rewritten": part["files_rewritten"],
-                        "dv_files_purged": len(dirty),
-                        "dv_rows_purged": purged_rows,
-                    }
-                },
-                partitions=partitions,
-            )
-        except FileExistsError:
-            for d in new_dirs:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    raise RuntimeError(f"reorg at {path} lost {max_retries} commit races")
+
+    return _repack(
+        spark, path, "reorg", select, _bin_pack(target_file_bytes),
+        bloom_cols, max_retries,
+    )
 
 
 def vt_vacuum(

@@ -5,6 +5,8 @@ the exact ntile assignment."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -91,3 +93,29 @@ class TestRfmSegmentsApprox:
             (r["segment"], r["n_customers"], r["segment_value"]) for r in arows
         }
         assert trimmed == _rows(exact)
+
+
+class TestEmptyOrders:
+    """On an empty ``orders`` table both approx queries return the empty
+    report their DuckDB oracles return instead of raising in Python."""
+
+    @pytest.mark.parametrize(
+        "name",
+        [
+            "window_customer_ltv_deciles_approx",
+            "window_customer_rfm_segments_approx",
+        ],
+    )
+    def test_empty_orders_returns_empty_report(self, spark, tmp_path, name):
+        import duckdb
+        import pyarrow.parquet as pq
+
+        empty = str(tmp_path / "orders.parquet")
+        pq.write_table(
+            pq.read_schema(f"{SF_DIR}/orders.parquet").empty_table(), empty
+        )
+        rows = entry_mod.queries()[name](spark, str(tmp_path)).collect()
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW orders AS SELECT * FROM '{empty}'")
+        assert rows == []
+        assert con.sql(entry_mod.oracle_sql()[name]).fetchall() == []

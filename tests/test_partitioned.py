@@ -309,6 +309,25 @@ class TestPartitionLifecycle:
         v2 = vt_delete(spark, path, ("day", "=", "2020-01-02"))
         assert _read_manifest(path, v2)["delete"]["dirs_dropped"] == 1
 
+    def test_scoped_optimize_preserves_partition_layout(
+        self, spark, tmp_path
+    ):
+        """OPTIMIZE … WHERE re-splits its output one dir per partition
+        value like the full OPTIMIZE, so DROP PARTITION stays
+        metadata-only afterwards."""
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 30), partition_by=["day"])
+        vt_write(spark, path, _df(spark, 12), mode="append")
+        v = vt_optimize(
+            spark, path, ["id"], n_partitions=2, where=("id", ">=", 0)
+        )
+        m = _read_manifest(path, v)
+        assert len(m["partitions"]) == len(m["dirs"]) == 3
+        v2 = vt_delete(spark, path, ("day", "=", "2020-01-02"))
+        blob = _read_manifest(path, v2)["delete"]
+        assert blob["dirs_dropped"] == 1 and blob["files_rewritten"] == 0
+        assert vt_read(spark, path).count() == 42 - 14
+
     def test_restore_past_partitioning_clears_it(self, spark, tmp_path):
         path = str(tmp_path / "t")
         vt_write(spark, path, _df(spark))  # v1: unpartitioned

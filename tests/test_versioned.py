@@ -736,6 +736,37 @@ class TestSchemaEvolution:
         assert head.columns == ["id", "v", "score"]
         assert head.count() == 100
 
+    @pytest.mark.parametrize(
+        "where,hetero", [(("id", ">=", 0), False), (("id", ">=", 100), True)]
+    )
+    def test_scoped_optimize_clears_flag_only_when_nothing_kept(
+        self, spark, tmp_path, where, hetero
+    ):
+        """A scoped OPTIMIZE that rewrites every file re-homogenizes the
+        layout like a full one; one that keeps a pre-evolution file
+        verbatim keeps the heterogeneous flag. Rows never change."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_optimize,
+        )
+
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, [(i, f"r{i}") for i in range(50)]))
+        evolved = spark.createDataFrame(
+            [(100 + i, f"e{i}", float(i)) for i in range(50)],
+            "id long, v string, score double",
+        )
+        vt_write(spark, path, evolved, mode="append", merge_schema=True)
+        assert _read_manifest(path, 2).get("schema_heterogeneous")
+        before = sorted(tuple(r) for r in vt_read(spark, path).collect())
+        v3 = vt_optimize(spark, path, ["id"], n_partitions=2, where=where)
+        assert v3 == 3
+        m = _read_manifest(path, v3)
+        assert bool(m.get("schema_heterogeneous")) is hetero
+        assert sorted(tuple(r) for r in vt_read(spark, path).collect()) == (
+            before
+        )
+
     def test_pruning_on_evolved_column_keeps_statless_old_dirs(
         self, spark, tmp_path
     ):
