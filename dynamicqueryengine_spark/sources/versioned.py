@@ -3815,9 +3815,10 @@ def _partition_snapshot(
     decides per file; a directory WITHOUT an authoritative file list
     (legacy manifests) is touched whole. ``touch_name(dir, fname)``,
     when given, decides by IDENTITY instead of by stats — the
-    incremental-compaction classifier (file size is a filesystem fact,
-    not a footer stat). ``prove`` (physical-keyed conjuncts), when
-    given, drops references outright — never read, never rewritten:
+    classifier of the maintenance verbs (:func:`_repack`: file size is
+    a filesystem fact, not a footer stat). ``prove`` (physical-keyed
+    conjuncts), when given, drops references outright — never read,
+    never rewritten:
     a WHOLE directory whose recorded partition values prove every
     conjunct (the ``DROP PARTITION`` path, no footer evidence needed),
     and, consulted FIRST per file, a file whose footer stats prove
@@ -6756,6 +6757,9 @@ def _cluster_frame(spark, df, cluster_by, n_partitions, method, zorder_bits):
             n_partitions, *keys
         ).sortWithinPartitions(*keys)
     if method == "compact":
+        # bin-packing only (Delta OPTIMIZE without ZORDER): the
+        # no-cluster-key path vt_maintain uses when no one declared
+        # query columns
         return df.repartition(n_partitions)
     raise ValueError(f"unknown optimize method {method!r}")
 
