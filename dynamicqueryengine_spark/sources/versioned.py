@@ -4217,9 +4217,27 @@ def _touched_plan(path: str, manifest: dict, paths: list) -> dict:
     """Read plan over ``paths`` of ``manifest``'s snapshot, reconciled to
     its recorded schema and honoring its deletion vectors — a rewrite
     must not resurrect (nor a new vector re-count) rows an earlier
-    merge-on-read DML already removed."""
+    merge-on-read DML already removed. A directory whose listed files
+    are all touched is read as ONE directory path, the rule
+    :func:`vt_scan_plan` reads a snapshot by (Spark lists more than 32
+    explicit paths in an extra job); partial and deletion-vector
+    directories stay file-granular, as they do there."""
+    touched = set(paths)
+    by_file = set(manifest.get("partial_dirs", [])) | set(
+        manifest.get("dv") or {}
+    )
+    whole = {
+        os.path.join(path, d)
+        for d, flist in manifest.get("files", {}).items()
+        if flist
+        and d not in by_file
+        and all(os.path.join(path, d, f) in touched for f in flist)
+    }
     plan = {
-        "paths": paths,
+        "paths": list(dict.fromkeys(
+            os.path.dirname(p) if os.path.dirname(p) in whole else p
+            for p in paths
+        )),
         "schema": manifest["schema"],
         "schema_heterogeneous": manifest.get("schema_heterogeneous", False),
     }

@@ -5834,3 +5834,29 @@ class TestDmlJobCount:
         assert 3 not in got and got[7] == "u" and got[10] == "m10"
         assert 250 not in got
         assert got[1000] == "n" and len(got) == 395
+
+    def test_all_touched_update_reads_directories(self, spark, tmp_path):
+        """An update that touches every file of a 40-file directory reads
+        that directory as one path: 40 explicit file paths cost Spark an
+        extra listing job."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_update,
+        )
+
+        path = str(tmp_path / "t")
+        df = spark.range(4000).selectExpr("id", "concat('v', id) AS v")
+        vt_write(spark, path, df.repartition(40))
+        v = vt_versions(path)[-1]
+        (flist,) = _read_manifest(path, v)["files"].values()
+        assert len(flist) == 40
+        sc = spark.sparkContext
+        sc.setJobGroup("dml-jobs-update-all", "vt DML job count")
+        try:
+            assert vt_update(spark, path, ("id", ">=", 0), {"v": "'u'"}) == v + 1
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = sc.statusTracker().getJobIdsForGroup("dml-jobs-update-all")
+        assert len(jobs) == 1
+        rows = vt_read(spark, path).collect()
+        assert len(rows) == 4000 and {r["v"] for r in rows} == {"u"}
