@@ -1,4 +1,5 @@
 from .analytics import ANALYTICS_QUERIES
+from .lakehouse import LAKEHOUSE_QUERIES
 from .llm import LLM_QUERIES
 from .reference import REFERENCE_QUERIES, TESTDATA_SCHEMAS
 from .temporal import TEMPORAL_QUERIES
@@ -10,6 +11,7 @@ _MERGED = {
     **TEMPORAL_QUERIES,
     **TREND_QUERIES,
     **LLM_QUERIES,
+    **LAKEHOUSE_QUERIES,
 }
 
 # Standing freshness-rotation policy (adopted round 4, per r3 verdict ask #2).

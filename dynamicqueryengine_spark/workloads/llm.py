@@ -114,85 +114,6 @@ _PAIR_MEMO: dict = {}
 _PAIR_MEMO_MAX_ROWS = 500_000
 
 
-def _multiset_equal(a: DataFrame, b: DataFrame) -> bool:
-    """ONE-job multiset equality (r14, guide §1.2 — fewer passes):
-    ``a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0`` costs
-    two full anti-join jobs; equality of multisets is equivalently "the
-    ±1-signed union has no row group with nonzero net weight", which is
-    one union + one aggregation + limit(1). NULL and float grouping
-    semantics match the set operators' (both normalize NaN/-0.0 and
-    treat NULLs as equal), so every parity pin computed through this
-    helper is the same boolean the two-exceptAll form produced."""
-    cols = a.columns
-    tagged = a.select(*cols, F.lit(1).alias("_w")).unionByName(
-        b.select(*cols, F.lit(-1).alias("_w"))
-    )
-    return (
-        tagged.groupBy(*cols)
-        .agg(F.sum("_w").alias("_n"))
-        .filter(F.col("_n") != 0)
-        .limit(1)
-        .count()
-        == 0
-    )
-
-
-def _signed_fold_zero(parts) -> bool:
-    """ONE-job check that a ±-weighted multiset SUM is empty (r15, guide
-    §1.2): ``parts`` is [(df, weight), ...] over identical columns; true
-    iff every row group's net weight is 0. Generalizes
-    :func:`_multiset_equal` (the two-frame ±1 case) to replay identities
-    like ``base ⊎ inserts ∖ deletes == target`` — which the r14 form
-    computed as an ``exceptAll`` join feeding a second multiset-equality
-    job. The signed form is one union + one aggregation, and STRICTER:
-    ``exceptAll`` clamps at zero, so a phantom delete of a non-existent
-    row could cancel invisibly there but nets negative here."""
-    cols = parts[0][0].columns
-    tagged = None
-    for df, w in parts:
-        piece = df.select(*cols, F.lit(int(w)).alias("_w"))
-        tagged = piece if tagged is None else tagged.unionByName(piece)
-    return (
-        tagged.groupBy(*cols)
-        .agg(F.sum("_w").alias("_n"))
-        .filter(F.col("_n") != 0)
-        .limit(1)
-        .count()
-        == 0
-    )
-
-
-def _staged_minmax(path: str, col: str, version: int | None = None):
-    """(min, max) of ``col`` over the staged table, answered
-    METADATA-ONLY from the manifest's footer-harvested per-directory
-    stats (r15, guide §1.2/§6): every staging site whose later steps —
-    but not the staging writes themselves — need the column bounds was
-    paying a full aggregate scan job over the source table for a number
-    the freshly-written footers already hold exactly. Raises when a
-    non-empty directory lacks stats for the column (never silently
-    wrong); empty directories contribute nothing by definition."""
-    from ..sources.versioned import _read_manifest, vt_head
-
-    m = _read_manifest(
-        path, version if version is not None else vt_head(path)
-    )
-    rows = m.get("file_rows") or {}
-    los, his = [], []
-    for d in m["dirs"]:
-        st = (m.get("stats") or {}).get(d, {}).get(col)
-        if st is None:
-            if rows.get(d) and sum(rows[d].values()) == 0:
-                continue
-            raise ValueError(
-                f"no footer stats for {col!r} in {d} at {path}"
-            )
-        los.append(st[0])
-        his.append(st[1])
-    if not los:
-        raise ValueError(f"no directory stats for {col!r} at {path}")
-    return min(los), max(his)
-
-
 def _pair_memo_key(sf_dir: str, k: int, threshold: float):
     import os
 
@@ -2425,249 +2346,6 @@ def _ann_topk_ivfpq_sql() -> str:
 LLM_QUERIES["ann_topk_ivfpq"] = FnWorkload(_ann_topk_ivfpq, _ann_topk_ivfpq_sql())
 
 
-def _events_upsert_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned-table MERGE with TIME TRAVEL, EXECUTED
-    (sources/versioned.py — the transaction-log table format): commit
-    per-user totals over half the events as version 1, MERGE in the
-    recomputed combined totals for users touched by the other half
-    (classic CDC backfill), then read BOTH snapshots — version 1 by
-    time travel, the head after the merge — and join them per user.
-
-    Every step is deterministic (the halves split on event_id parity),
-    so both snapshots are fully value-oracled: v1 = the even-half
-    aggregation, v2 = the all-events aggregation (merged users carry
-    combined totals; untouched users' v1 rows — all-even users — were
-    already complete). Commits are atomic manifest creates; the v1
-    reader resolves its snapshot unaffected by the later merge."""
-    from ..sources.versioned import vt_merge, vt_read, vt_write
-
-    ev = load_table(spark, sf_dir, "events")
-
-    def totals(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,12)")).alias("s"),
-        )
-
-    path = os.path.join(_scratch_dir("vtupsert", sf_dir), "totals")
-    vt_write(spark, path, totals(ev.filter(F.col("event_id") % 2 == 0)))
-    touched = ev.filter(F.col("event_id") % 2 == 1).select("user_id").distinct()
-    vt_merge(
-        spark, path, totals(ev.join(touched, "user_id", "semi")), ["user_id"]
-    )
-    v1 = vt_read(spark, path, version=1).select(
-        "user_id",
-        F.col("n").alias("n_v1"),
-        F.round(F.col("s"), 6).cast("double").alias("sum_v1"),
-    )
-    head = vt_read(spark, path).select(
-        "user_id",
-        F.col("n").alias("n_v2"),
-        F.round(F.col("s"), 6).cast("double").alias("sum_v2"),
-    )
-    return head.join(v1, "user_id", "left")
-
-
-_EVENTS_UPSERT_TT_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-v1 AS (
-  SELECT user_id, count(*) AS n_v1,
-         CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-           AS sum_v1
-  FROM ev WHERE event_id % 2 = 0 GROUP BY 1
-),
-v2 AS (
-  SELECT user_id, count(*) AS n_v2,
-         CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-           AS sum_v2
-  FROM ev GROUP BY 1
-)
-SELECT v2.user_id, v2.n_v2, v2.sum_v2, v1.n_v1, v1.sum_v1
-FROM v2 LEFT JOIN v1 USING (user_id)
-""".strip()
-
-
-LLM_QUERIES["events_upsert_time_travel"] = FnWorkload(
-    _events_upsert_time_travel, _EVENTS_UPSERT_TT_SQL
-)
-
-
-def _events_vt_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CHANGE DATA FEED over the versioned table, EXECUTED
-    (sources/versioned.py vt_read_changes — Delta CDF): commit per-user
-    totals over the even-half events as version 1, MERGE the recomputed
-    combined totals for users touched by the odd half with
-    ``change_feed=True`` (version 2 records row-level pre/post-images in
-    a ``c_*`` change directory), then read the feed across the whole
-    history and aggregate it by (commit, change type).
-
-    Fully value-oracled because every change row is derivable from the
-    events table alone: v1 inserts = even-half totals; v2 pre-images =
-    v1 rows of touched users that HAD even events, post-images = their
-    combined totals, inserts = totals of touched users with no even
-    events. The replay identity (state ⊎ inserts ∪ postimages ∖ deletes
-    ∪ preimages = next snapshot) is pinned in tests/test_versioned.py."""
-    from ..sources.versioned import vt_merge, vt_read_changes, vt_write
-
-    ev = load_table(spark, sf_dir, "events")
-
-    def totals(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,12)")).alias("s"),
-        )
-
-    path = os.path.join(_scratch_dir("vtchanges", sf_dir), "totals")
-    vt_write(spark, path, totals(ev.filter(F.col("event_id") % 2 == 0)))
-    touched = ev.filter(F.col("event_id") % 2 == 1).select("user_id").distinct()
-    vt_merge(
-        spark,
-        path,
-        totals(ev.join(touched, "user_id", "semi")),
-        ["user_id"],
-        change_feed=True,
-    )
-    cf = vt_read_changes(spark, path, 0, 2)
-    return cf.groupBy(
-        F.col("_commit_version").alias("commit_version"),
-        F.col("_change_type").alias("change_type"),
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("n").cast("long").alias("sum_n"),
-        F.round(F.sum("s"), 6).cast("double").alias("sum_s"),
-    )
-
-
-_EVENTS_VT_CHANGES_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-even AS (
-  SELECT user_id, count(*) AS n,
-         sum(CAST(value AS DECIMAL(38,12))) AS s
-  FROM ev WHERE event_id % 2 = 0 GROUP BY 1
-),
-allu AS (
-  SELECT user_id, count(*) AS n,
-         sum(CAST(value AS DECIMAL(38,12))) AS s
-  FROM ev GROUP BY 1
-),
-touched AS (SELECT DISTINCT user_id FROM ev WHERE event_id % 2 = 1),
-changes AS (
-  SELECT 1 AS commit_version, 'insert' AS change_type, n, s FROM even
-  UNION ALL
-  SELECT 2, 'update_preimage', e.n, e.s
-  FROM even e JOIN touched t USING (user_id)
-  UNION ALL
-  SELECT 2, 'update_postimage', a.n, a.s
-  FROM allu a JOIN touched t USING (user_id)
-  WHERE a.user_id IN (SELECT user_id FROM even)
-  UNION ALL
-  SELECT 2, 'insert', a.n, a.s
-  FROM allu a JOIN touched t USING (user_id)
-  WHERE a.user_id NOT IN (SELECT user_id FROM even)
-)
-SELECT commit_version, change_type, count(*) AS n_rows,
-       CAST(sum(n) AS BIGINT) AS sum_n,
-       CAST(round(sum(s), 6) AS DOUBLE) AS sum_s
-FROM changes GROUP BY 1, 2
-""".strip()
-
-
-LLM_QUERIES["events_vt_change_feed"] = FnWorkload(
-    _events_vt_change_feed, _EVENTS_VT_CHANGES_SQL
-)
-
-
-def _events_vt_skip_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned-table DATA SKIPPING, EXECUTED (sources/versioned.py r6):
-    commit the low half of events (by event_id) as version 1, APPEND the
-    high half as version 2 — the head manifest now lists two immutable
-    directories with per-directory event_id min/max harvested from the
-    parquet footers — then read with a predicate selective to the high
-    half. The manifest stats prune the low directory BEFORE file
-    listing; ``dirs_scanned``/``dirs_total`` pin that 1-of-2 pruning in
-    the value oracle, and the aggregate over the pruned read must equal
-    the plain filtered aggregate (which is what the SQL mirror runs) —
-    pruning is invisible to results by construction.
-
-    Split (mid) and probe points derive from min/max(event_id) with
-    floor division, deterministic in both engines.
-
-    Scratch hygiene (r6 advisor finding): the staged table lives in ONE
-    per-process scratch dir keyed by sf_dir — reruns (bench min-of-2,
-    repeated correctness passes) wipe and rebuild it instead of leaking
-    a fresh mkdtemp per invocation — and an atexit hook removes it when
-    the process ends. The dir cannot be deleted eagerly because the
-    returned DataFrame reads it lazily at the caller's collect."""
-    from ..sources.versioned import (
-        _read_manifest,
-        _stats_may_match,
-        vt_read,
-        vt_versions,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    bounds = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]  # two bounded scalars (drive the deterministic split)
-    mid = (bounds["lo"] + bounds["hi"]) // 2
-    probe = mid + (bounds["hi"] - mid) // 2
-
-    path = os.path.join(_scratch_dir("vtskip", sf_dir), "ev")
-    vt_write(spark, path, ev.filter(F.col("event_id") <= mid))
-    vt_write(spark, path, ev.filter(F.col("event_id") > mid), mode="append")
-
-    manifest = _read_manifest(path, vt_versions(path)[-1])
-    stats = manifest.get("stats", {})
-    kept = [
-        d
-        for d in manifest["dirs"]
-        if _stats_may_match(stats.get(d, {}).get("event_id"), ">", probe)
-    ]
-    out = (
-        vt_read(spark, path, predicate=("event_id", ">", probe))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-    )
-    return out.select(
-        "event_type",
-        "n",
-        "sum_value",
-        F.lit(len(kept)).cast("long").alias("dirs_scanned"),
-        F.lit(len(manifest["dirs"])).cast("long").alias("dirs_total"),
-    )
-
-
-_EVENTS_VT_SKIP_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT CAST((min(event_id) + max(event_id)) // 2 AS BIGINT) AS mid,
-         max(event_id) AS hi
-  FROM ev
-),
-p AS (SELECT mid + (hi - mid) // 2 AS probe FROM b)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       CAST(1 AS BIGINT) AS dirs_scanned,
-       CAST(2 AS BIGINT) AS dirs_total
-FROM ev, p WHERE event_id > probe
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_skip_read"] = FnWorkload(
-    _events_vt_skip_read, _EVENTS_VT_SKIP_SQL
-)
-
-
 def _docs_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix: the n-gram language detector
     (functions/text.py detect_language) scored against the corpus's
@@ -2855,662 +2533,6 @@ WHERE rank <= 3
 
 LLM_QUERIES["events_stream_topk_trending"] = FnWorkload(
     _events_stream_topk_trending, _EVENTS_STREAM_TOPK_SQL
-)
-
-
-def _events_vt_optimize_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """vt_optimize → FILE-level data skipping, EXECUTED
-    (sources/versioned.py r7): stage events as two PARITY-interleaved
-    commits (every directory spans the full event_id range, so
-    directory-level stats can prune NOTHING — exactly the layout that
-    defeats r6's dir-granular skipping), then OPTIMIZE range-clustered
-    on event_id into 8 files with disjoint tight per-file footer ranges,
-    and read back with a predicate selective to the top eighth. The
-    pinned booleans assert the mechanism: dir pruning kept everything
-    before optimize, file pruning discarded most files after — while
-    the aggregate equals the plain filtered aggregate the SQL mirror
-    computes (pruning is invisible to results by construction; range
-    boundaries come from Spark's reservoir sampling, so the exact kept-
-    file COUNT is layout-dependent and only the inequalities are
-    contract)."""
-    from ..sources.versioned import (
-        vt_optimize,
-        vt_read,
-        vt_scan_plan,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtopt", sf_dir), "ev")
-    vt_write(spark, path, ev.filter(F.col("event_id") % 2 == 0))
-    vt_write(
-        spark, path, ev.filter(F.col("event_id") % 2 == 1), mode="append"
-    )
-    # metadata-only bounds from the staged footers (r15, guide §1.2 —
-    # was a full aggregate scan job over the source table)
-    lo, hi = _staged_minmax(path, "event_id")
-    probe = lo + ((hi - lo) * 7) // 8
-    pre = vt_scan_plan(path, predicate=("event_id", ">", probe))
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    post = vt_scan_plan(path, predicate=("event_id", ">", probe))
-    out = (
-        vt_read(spark, path, predicate=("event_id", ">", probe))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-    )
-    return out.select(
-        "event_type",
-        "n",
-        "sum_value",
-        F.lit(pre["dirs_kept"] == pre["dirs_total"]).alias(
-            "dir_pruning_was_blind"
-        ),
-        F.lit(
-            0 < post["files_kept"] < post["files_total"]
-        ).alias("file_pruning_effective"),
-    )
-
-
-_EVENTS_VT_OPTIMIZE_SQL = """
-WITH b AS (
-  SELECT min(event_id) + ((max(event_id) - min(event_id)) * 7) // 8
-           AS probe
-  FROM events
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS dir_pruning_was_blind,
-       TRUE AS file_pruning_effective
-FROM events, b
-WHERE event_id > probe
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_optimize_skip"] = FnWorkload(
-    _events_vt_optimize_skip, _EVENTS_VT_OPTIMIZE_SQL
-)
-
-
-def _events_vt_zorder_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTI-COLUMN Z-ORDER data skipping, EXECUTED (sources/
-    versioned.py _zorder_column — Delta OPTIMIZE ZORDER): stage events
-    as a versioned table, OPTIMIZE on the interleaved-bit z-curve over
-    (user_id, event_id), then probe the top eighth of EACH cluster
-    column. Lexicographic range clustering can only prune on its first
-    column; the z-curve bounds every coordinate per file, so BOTH
-    probes must keep strictly fewer than all files — those two pinned
-    booleans are the mechanism contract, while the returned aggregate
-    (filtered on the SECOND column, the one lexicographic clustering
-    cannot skip on) equals the plain filtered aggregate the SQL mirror
-    computes: pruning is invisible to results by construction."""
-    from ..sources.versioned import (
-        vt_optimize,
-        vt_read,
-        vt_scan_plan,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtzorder", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2 —
-    # was a four-scalar aggregate scan job over the source table)
-    elo, ehi = _staged_minmax(path, "event_id")
-    ulo, uhi = _staged_minmax(path, "user_id")
-    probe_e = elo + ((ehi - elo) * 7) // 8
-    probe_u = ulo + ((uhi - ulo) * 7) // 8
-    vt_optimize(
-        spark, path, ["user_id", "event_id"], n_partitions=8,
-        method="zorder",
-    )
-    plan_u = vt_scan_plan(path, predicate=("user_id", ">", probe_u))
-    plan_e = vt_scan_plan(path, predicate=("event_id", ">", probe_e))
-    out = (
-        vt_read(spark, path, predicate=("event_id", ">", probe_e))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-    )
-    return out.select(
-        "event_type",
-        "n",
-        "sum_value",
-        F.lit(
-            0 < plan_u["files_kept"] < plan_u["files_total"]
-        ).alias("first_col_prunes"),
-        F.lit(
-            0 < plan_e["files_kept"] < plan_e["files_total"]
-        ).alias("second_col_prunes"),
-    )
-
-
-_EVENTS_VT_ZORDER_SQL = """
-WITH b AS (
-  SELECT min(event_id) + ((max(event_id) - min(event_id)) * 7) // 8
-           AS probe
-  FROM events
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS first_col_prunes,
-       TRUE AS second_col_prunes
-FROM events, b
-WHERE event_id > probe
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_zorder_skip"] = FnWorkload(
-    _events_vt_zorder_skip, _EVENTS_VT_ZORDER_SQL
-)
-
-
-def _events_vt_rule_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RULE-predicate-driven data skipping, EXECUTED (r9): the engine's
-    two flagship surfaces COMPOSED. Stage events as a versioned table,
-    OPTIMIZE range-clustered on event_id, then evaluate a reference-
-    style RULE — GreaterThan on event_id AND In on event_type — via
-    ``vt_read(rule=...)``: the rule's skip-eligible conjuncts
-    (operators/predicates.py rule_skip_conjuncts) prune files by footer
-    stats BEFORE listing, and the FULL compiled predicate filters the
-    survivors, so the aggregate equals the plain filtered aggregate the
-    SQL mirror computes. Pinned booleans assert the mechanism: file
-    pruning kept a strict nonempty subset (no schema-only fallback) —
-    at 100 TB this is the difference between scanning a partition and
-    scanning the table."""
-    from ..operators.predicates import rule_skip_conjuncts
-    from ..plans.model import RuleDefinition
-    from ..sources.versioned import (
-        vt_optimize,
-        vt_read,
-        vt_scan_plan,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtrule", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    probe = lo + ((hi - lo) * 3) // 4
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-
-    rule = RuleDefinition.from_dict(
-        {
-            "Conditions": {
-                "LogicalOperator": "AND",
-                "Conditions": [
-                    {
-                        "Property": "event_id",
-                        "Operator": "GreaterThan",
-                        "Value": probe,
-                    },
-                    {
-                        "Property": "event_type",
-                        "Operator": "In",
-                        "Value": ["click", "purchase", "view"],
-                    },
-                ],
-            }
-        }
-    )
-    # the same conjuncts vt_read(rule=) derives internally, surfaced here
-    # so the pinned booleans describe the actual scan
-    schema = vt_read(spark, path).schema
-    plan = vt_scan_plan(path, predicate=rule_skip_conjuncts(rule, schema))
-    out = (
-        vt_read(spark, path, rule=rule)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-    )
-    return out.select(
-        "event_type",
-        "n",
-        "sum_value",
-        F.lit(0 < plan["files_kept"] < plan["files_total"]).alias(
-            "file_pruning_effective"
-        ),
-        F.lit("schema_only_fallback" not in plan).alias(
-            "no_schema_fallback"
-        ),
-    )
-
-
-_EVENTS_VT_RULE_SKIP_SQL = """
-WITH b AS (
-  SELECT min(event_id) + ((max(event_id) - min(event_id)) * 3) // 4
-           AS probe
-  FROM events
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS file_pruning_effective,
-       TRUE AS no_schema_fallback
-FROM events, b
-WHERE event_id > probe
-  AND event_type IN ('click', 'purchase', 'view')
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_rule_skip"] = FnWorkload(
-    _events_vt_rule_skip, _EVENTS_VT_RULE_SKIP_SQL
-)
-
-
-def _events_vt_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned-table SCHEMA EVOLUTION, EXECUTED (r9): commit the low
-    half of events, then APPEND the high half WIDENED with a new
-    ``bucket`` column via ``merge_schema=True`` — the manifest records
-    the evolved logical schema, and the head read reconciles
-    pre-evolution rows to typed nulls (Delta's mergeSchema contract).
-    The aggregate counts/sums the evolved column, so nulls-for-old-rows
-    is exactly what the SQL mirror's CASE computes; the pinned boolean
-    asserts the audit log recorded the column-count change."""
-    from ..sources.versioned import vt_history, vt_read, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    bounds = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    mid = (bounds["lo"] + bounds["hi"]) // 2
-
-    path = os.path.join(_scratch_dir("vtschema", sf_dir), "ev")
-    vt_write(spark, path, ev.filter(F.col("event_id") <= mid))
-    evolved = ev.filter(F.col("event_id") > mid).withColumn(
-        "bucket", F.col("event_id") % 10
-    )
-    vt_write(spark, path, evolved, mode="append", merge_schema=True)
-
-    hist = {h["version"]: h.get("n_cols") for h in vt_history(path)}
-    out = (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-            F.count("bucket").alias("n_bucketed"),
-            F.sum("bucket").alias("sum_bucket"),
-        )
-    )
-    return out.select(
-        "event_type",
-        "n",
-        "sum_value",
-        "n_bucketed",
-        "sum_bucket",
-        F.lit(hist == {1: 3, 2: 4}).alias("schema_evolved"),
-    )
-
-
-_EVENTS_VT_SCHEMA_EVOLUTION_SQL = """
-WITH b AS (
-  SELECT CAST((min(event_id) + max(event_id)) // 2 AS BIGINT) AS mid
-  FROM events
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       count(CASE WHEN event_id > mid THEN 1 END) AS n_bucketed,
-       CAST(sum(CASE WHEN event_id > mid THEN event_id % 10 END)
-            AS BIGINT) AS sum_bucket,
-       TRUE AS schema_evolved
-FROM events, b
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_schema_evolution"] = FnWorkload(
-    _events_vt_schema_evolution, _EVENTS_VT_SCHEMA_EVOLUTION_SQL
-)
-
-
-def _events_vt_incremental_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """INCREMENTAL continuous-aggregate maintenance over the versioned
-    table (sources/versioned.py vt_read_delta, r7): commit the first
-    half of events, materialize the per-type rollup, APPEND the second
-    half, then refresh the rollup by aggregating ONLY the delta rows
-    (the dirs added between versions) and combining partials — never
-    rescanning the v1 snapshot. Works because count/decimal-sum are
-    associative partial aggregates, so incremental == full-recompute
-    EXACTLY — which is precisely what the SQL mirror checks by
-    computing the rollup over the whole events table. The scale story:
-    a 100-TB hypertable's hourly rollup refresh touches only the new
-    files, Timescale's continuous-aggregate mechanism on Delta-style
-    logs."""
-    from ..sources.versioned import vt_read, vt_read_delta, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    bounds = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    mid = (bounds["lo"] + bounds["hi"]) // 2
-
-    path = os.path.join(_scratch_dir("vtroll", sf_dir), "ev")
-    v1 = vt_write(spark, path, ev.filter(F.col("event_id") <= mid))
-    base = (
-        vt_read(spark, path, v1)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("s"),
-        )
-    )
-    v2 = vt_write(
-        spark, path, ev.filter(F.col("event_id") > mid), mode="append"
-    )
-    delta = (
-        vt_read_delta(spark, path, v1, v2)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("v").alias("s"),
-        )
-    )
-    return (
-        base.unionByName(delta)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.round(F.sum("s"), 6).cast("double").alias("sum_value"),
-        )
-    )
-
-
-_EVENTS_VT_ROLLUP_SQL = """
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value
-FROM events
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_incremental_rollup"] = FnWorkload(
-    _events_vt_incremental_rollup, _EVENTS_VT_ROLLUP_SQL
-)
-
-
-def _events_vt_cdf_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental rollup maintenance ACROSS A MERGE via the change
-    data feed (sources/versioned.py vt_read_changes) — the case
-    vt_read_delta cannot handle (events_vt_incremental_rollup is its
-    append-only sibling). Commit per-user totals over the even-half
-    events, materialize a global rollup from that snapshot, MERGE in
-    combined totals for odd-touched users with ``change_feed=True``,
-    then refresh the rollup from ONLY the change rows: each change
-    contributes with sign +1 (insert/update_postimage) or −1
-    (delete/update_preimage), so refresh cost is O(|changes|), never
-    O(|table|). count/sum are signed-associative, so the maintained
-    state equals a full recompute EXACTLY — which is what the SQL
-    mirror checks by aggregating the raw events table directly."""
-    from ..sources.versioned import vt_merge, vt_read, vt_read_changes, vt_write
-
-    ev = load_table(spark, sf_dir, "events")
-
-    def totals(df: DataFrame) -> DataFrame:
-        return df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,12)")).alias("s"),
-        )
-
-    path = os.path.join(_scratch_dir("vtcdfroll", sf_dir), "totals")
-    v1 = vt_write(spark, path, totals(ev.filter(F.col("event_id") % 2 == 0)))
-    base = vt_read(spark, path, v1).agg(
-        F.count(F.lit(1)).alias("u"),
-        F.sum("n").alias("tn"),
-        F.sum("s").alias("ts"),
-    )
-    touched = ev.filter(F.col("event_id") % 2 == 1).select("user_id").distinct()
-    v2 = vt_merge(
-        spark,
-        path,
-        totals(ev.join(touched, "user_id", "semi")),
-        ["user_id"],
-        change_feed=True,
-    )
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    delta = vt_read_changes(spark, path, v1, v2).agg(
-        F.coalesce(F.sum(sign), F.lit(0)).alias("du"),
-        F.coalesce(F.sum(sign * F.col("n")), F.lit(0)).alias("dtn"),
-        F.coalesce(
-            F.sum(F.col("s") * sign), F.lit(0).cast("decimal(38,12)")
-        ).alias("dts"),
-    )
-    return base.crossJoin(F.broadcast(delta)).select(
-        (F.col("u") + F.col("du")).cast("long").alias("n_users"),
-        (F.col("tn") + F.col("dtn")).cast("long").alias("total_events"),
-        F.round(F.col("ts") + F.col("dts"), 6)
-        .cast("double")
-        .alias("total_value"),
-    )
-
-
-_EVENTS_VT_CDF_ROLLUP_SQL = """
-SELECT count(DISTINCT user_id) AS n_users,
-       count(*) AS total_events,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS total_value
-FROM events
-""".strip()
-
-
-LLM_QUERIES["events_vt_cdf_rollup"] = FnWorkload(
-    _events_vt_cdf_rollup, _EVENTS_VT_CDF_ROLLUP_SQL
-)
-
-
-def _dedup_vt_incremental_index(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Incremental near-dup INDEX maintenance, end-to-end (functions/
-    dedup.py minhash_lsh_pairs_delta × sources/versioned.py, r7): the
-    production daily job of a 100-TB training-data pipeline — dedup the
-    new crawl against the accumulated corpus without re-shingling it.
-
-    Staged for real: the corpus lives in a versioned table (v1 = the
-    pre-existing 3/4 of documents, v2 = APPEND of the doc_id%4==0 "new
-    crawl"); a SECOND versioned table holds the MinHash signature index,
-    maintained in lockstep — v1 signatures computed once and committed,
-    then the delta run reads ONLY vt_read_delta(docs), signs just those,
-    probes them against the persisted base signatures via LSH banding,
-    exact-verifies the bounded candidate set, and commits the delta
-    signatures back (the index table's head now covers the whole
-    corpus, pinned by ``index_in_sync``). Incremental cost: |delta|
-    shingling + banding probe + candidate verification — the existing
-    corpus text is touched only for candidate re-shingles.
-
-    Oracle: the exact jaccard pair list restricted to pairs touching a
-    new doc (same recall≈1-at-0.7 argument as dedup_minhash_lsh,
-    checked by the value oracle itself)."""
-    from ..sources.versioned import (
-        vt_head,
-        vt_read,
-        vt_read_delta,
-        vt_write,
-    )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    scratch = _scratch_dir("vtmhidx", sf_dir)
-    docs_path = os.path.join(scratch, "docs")
-    sigs_path = os.path.join(scratch, "sigs")
-
-    is_new = F.col("doc_id") % 4 == 0
-    v1 = vt_write(spark, docs_path, docs.filter(~is_new))
-    base_sigs = D.minhash_signatures(vt_read(spark, docs_path, v1))
-    vt_write(spark, sigs_path, base_sigs)
-
-    v2 = vt_write(spark, docs_path, docs.filter(is_new), mode="append")
-    delta_docs = vt_read_delta(spark, docs_path, v1, v2)
-    # sign the delta ONCE: the same persisted frame feeds the LSH probe
-    # and the index-table commit
-    sig_delta = D.minhash_signatures(delta_docs).persist()
-    pairs = D.minhash_lsh_pairs_delta(
-        vt_read(spark, docs_path, v2),
-        vt_read(spark, sigs_path),
-        delta_docs,
-        k=5,
-        threshold=0.7,
-        delta_sigs=sig_delta,
-    )
-    vt_write(spark, sigs_path, sig_delta, mode="append")
-    sig_delta.unpersist()
-    index_rows = vt_read(spark, sigs_path, vt_head(sigs_path)).count()
-    # signature rows cover every doc with ≥1 shingle — i.e. normalized
-    # length ≥ k, the exact membership gate of doc_hash_sets — so the
-    # sync pin is ONE cheap column scan, never a corpus re-shingle
-    from ..functions.text import normalize_text
-
-    corpus_rows = (
-        vt_read(spark, docs_path)
-        .filter(F.length(normalize_text(F.col("text"))) >= 5)
-        .count()
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        "jaccard",
-        F.lit(index_rows == corpus_rows).alias("index_in_sync"),
-    )
-
-
-def _dedup_vt_incremental_index_sql() -> str:
-    inner = D.ngram_jaccard_pairs_sql("documents", k=5, threshold=0.7)
-    return f"""
-SELECT id_a, id_b, jaccard, TRUE AS index_in_sync
-FROM ({inner})
-WHERE id_a % 4 = 0 OR id_b % 4 = 0
-""".strip()
-
-
-LLM_QUERIES["dedup_vt_incremental_index"] = FnWorkload(
-    _dedup_vt_incremental_index, _dedup_vt_incremental_index_sql()
-)
-
-
-def _docs_stream_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING near-dup flagging, EXECUTED (streaming/minhash.py, r9):
-    the documents corpus arrives as micro-batches (staged as parquet
-    files of three arrival slices, maxFilesPerTrigger=1 — the flagged
-    set is identical under ANY batch decomposition, see the
-    streaming/minhash.py completeness note); each batch is
-    signed once, LSH-probed against the persisted signature index,
-    exact-verified, and the pairs/docs/signature versioned tables
-    advanced under per-table txn markers (replay-idempotent). A pair is
-    flagged by exactly the batch where its LATER document arrives, so
-    the final flagged set equals the one-shot batch miner's pair list —
-    which is what the value oracle (exact jaccard ≥ 0.7, the standard
-    recall≈1 equivalence of the dedup_minhash_lsh oracle) checks. The
-    sync pin asserts the index head covers every signable document."""
-    from ..functions.text import normalize_text
-    from ..sources.versioned import vt_count, vt_read
-    from ..streaming.minhash import stream_minhash_index
-
-    import glob as _glob
-    import shutil as _shutil
-
-    scratch = _scratch_dir("stmhidx", sf_dir)
-    src = os.path.join(scratch, "src")
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    # three arrival slices, one file each → three micro-batches. Staged
-    # in ONE job (hive partitionBy on the slice key, leaves flattened
-    # into the source dir) instead of three filtered corpus scans — the
-    # r12 verdict flagged the 3× staging as part of this query's fixed
-    # cost; the slice files are byte-identical either way.
-    staging = os.path.join(scratch, "staging")
-    (
-        docs.withColumn("_slice", F.col("doc_id") % 3)
-        .repartition(3, "_slice")
-        .write.partitionBy("_slice")
-        .parquet(staging)
-    )
-    os.makedirs(src, exist_ok=True)
-    for i in range(3):
-        leaf = sorted(
-            _glob.glob(os.path.join(staging, f"_slice={i}", "*.parquet"))
-        )
-        for j, fp in enumerate(leaf):
-            _shutil.move(fp, os.path.join(src, f"slice{i}_{j}.parquet"))
-    _shutil.rmtree(staging, ignore_errors=True)
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    docs_path = os.path.join(scratch, "docs")
-    sigs_path = os.path.join(scratch, "sigs")
-    pairs_path = os.path.join(scratch, "pairs")
-    stream_minhash_index(
-        stream,
-        docs_path,
-        sigs_path,
-        pairs_path,
-        os.path.join(scratch, "ckpt"),
-        k=5,
-        threshold=0.7,
-    )
-    # metadata-only count (r15, guide §1.2): the sync pin needs the
-    # index's row COUNT, which the manifest's footer row counts answer
-    # exactly — the r14 form ran a full scan job over the sigs table
-    index_rows = vt_count(spark, sigs_path)
-    corpus_rows = docs.filter(
-        F.length(normalize_text(F.col("text"))) >= 5
-    ).count()
-    return vt_read(spark, pairs_path).select(
-        "id_a",
-        "id_b",
-        "jaccard",
-        F.lit(index_rows == corpus_rows).alias("index_in_sync"),
-    )
-
-
-def _docs_stream_minhash_index_sql() -> str:
-    inner = D.ngram_jaccard_pairs_sql("documents", k=5, threshold=0.7)
-    return f"""
-SELECT id_a, id_b, jaccard, TRUE AS index_in_sync
-FROM ({inner})
-""".strip()
-
-
-LLM_QUERIES["docs_stream_minhash_index"] = FnWorkload(
-    _docs_stream_minhash_index, _docs_stream_minhash_index_sql()
 )
 
 
@@ -3799,255 +2821,6 @@ LLM_QUERIES["docs_lm_perplexity"] = FnWorkload(
 )
 
 
-def _events_vt_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned-table BLOOM-FILTER data skipping, EXECUTED
-    (sources/versioned.py r9): stage events hash-partitioned on a
-    high-cardinality string key whose per-file MIN/MAX ranges all overlap
-    (hash order is alphabet-free), so range stats keep every file — then
-    probe one key's equality. Only the per-file Bloom filters harvested at
-    ``vt_write(bloom_cols=...)`` can prune here, and ``skip_effective``
-    pins in the value oracle that they DID (files_kept < files_total; the
-    probe key lives in exactly one hash partition, and sibling blooms are
-    far from saturation at every test SF — 15/150/1500 users into 8
-    files). The aggregate over the pruned read must equal the plain
-    filtered aggregate, which is what the SQL mirror computes — pruning
-    is invisible to results by construction."""
-    from ..sources.versioned import vt_read, vt_scan_plan, vt_write
-
-    raw = load_table(spark, sf_dir, "events")
-    ev = raw.select(
-        "event_id",
-        F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("ukey"),
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    probe = "u" + str(raw.agg(F.min("user_id")).collect()[0][0])
-    path = os.path.join(_scratch_dir("vtbloom", sf_dir), "ev")
-    vt_write(spark, path, ev.repartition(8, "ukey"), bloom_cols=["ukey"])
-    plan = vt_scan_plan(path, predicate=("ukey", "=", probe))
-    out = (
-        vt_read(spark, path, predicate=("ukey", "=", probe))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-    )
-    return out.select(
-        "event_type",
-        "n",
-        "sum_value",
-        F.lit(plan["files_kept"] < plan["files_total"]).alias(
-            "skip_effective"
-        ),
-    )
-
-
-_EVENTS_VT_BLOOM_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-p AS (SELECT 'u' || CAST(min(user_id) AS VARCHAR) AS probe FROM ev)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS skip_effective
-FROM ev, p WHERE 'u' || CAST(user_id AS VARCHAR) = probe
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_bloom_skip"] = FnWorkload(
-    _events_vt_bloom_skip, _EVENTS_VT_BLOOM_SQL
-)
-
-
-def _events_vt_cdc_subscription(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC SUBSCRIPTION, EXECUTED (streaming/cdc.py r9): the "stream FROM
-    the table" direction. A source versioned table receives three commits
-    (write evens → append odds → keyed MERGE doubling every
-    event_id%10==3 row's value, with change_feed=True); after EACH commit
-    a consumer pumps the change feed into a per-event_type rollup sink,
-    its cursor riding the sink's SetTransaction map so apply+advance is
-    one atomic commit. The final sink must equal a full recompute of the
-    source's final snapshot — count/sum under signed increments are
-    exactly associative — which is what the SQL mirror computes straight
-    from the raw events table. ``versions_applied`` pins that the cursor
-    really advanced through all three source versions."""
-    from ..sources.versioned import vt_merge, vt_read, vt_write
-    from ..streaming.cdc import (
-        apply_rollup_increment,
-        pump_until_current,
-        subscription_cursor,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    base = _scratch_dir("vtcdcsub", sf_dir)
-    src = os.path.join(base, "src")
-    sink = os.path.join(base, "sink")
-    app = "rollup_sub"
-    apply = apply_rollup_increment(
-        spark, sink, key_cols=["event_type"], sum_cols={"s": "v"}
-    )
-
-    vt_write(spark, src, ev.filter(F.col("event_id") % 2 == 0))
-    pump_until_current(spark, src, sink, app, apply)
-    vt_write(
-        spark, src, ev.filter(F.col("event_id") % 2 == 1), mode="append"
-    )
-    pump_until_current(spark, src, sink, app, apply)
-    vt_merge(
-        spark,
-        src,
-        ev.filter(F.col("event_id") % 10 == 3).withColumn(
-            "v", F.col("v") * 2
-        ),
-        ["event_id"],
-        change_feed=True,
-    )
-    pump_until_current(spark, src, sink, app, apply)
-
-    cursor = subscription_cursor(sink, app)
-    return vt_read(spark, sink).select(
-        "event_type",
-        "n",
-        F.round(F.col("s"), 6).cast("double").alias("sum_value"),
-        F.lit(cursor).cast("long").alias("versions_applied"),
-    )
-
-
-_EVENTS_VT_CDC_SUB_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CASE WHEN event_id % 10 = 3
-                           THEN 2 * CAST(value AS DECIMAL(38,12))
-                           ELSE CAST(value AS DECIMAL(38,12)) END), 6)
-            AS DOUBLE) AS sum_value,
-       CAST(3 AS BIGINT) AS versions_applied
-FROM ev GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_cdc_subscription"] = FnWorkload(
-    _events_vt_cdc_subscription, _EVENTS_VT_CDC_SUB_SQL
-)
-
-
-def _events_vt_meta_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only COUNT(*), EXECUTED (sources/versioned.py vt_count
-    r9): commit events in two appends, then answer the unfiltered count
-    from the manifest's per-file footer row counts alone — Delta's
-    "optimized metadata query"; at 100 TB this is a driver-side dict sum
-    vs a full scan. The filtered count goes through the PRUNED scan
-    (stats + blooms). Both must equal the oracle's plain counts — the
-    metadata path is exact by parquet's footer contract, not an
-    estimate."""
-    from ..sources.versioned import vt_count, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type"
-    )
-    bounds = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    mid = (bounds["lo"] + bounds["hi"]) // 2
-    path = os.path.join(_scratch_dir("vtmetacount", sf_dir), "ev")
-    vt_write(spark, path, ev.filter(F.col("event_id") <= mid))
-    vt_write(
-        spark, path, ev.filter(F.col("event_id") > mid), mode="append"
-    )
-    n_total = vt_count(spark, path)
-    n_high = vt_count(spark, path, predicate=("event_id", ">", mid))
-    return spark.range(1).select(
-        F.lit(n_total).cast("long").alias("n_total"),
-        F.lit(n_high).cast("long").alias("n_high"),
-    )
-
-
-_EVENTS_VT_META_COUNT_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT CAST((min(event_id) + max(event_id)) // 2 AS BIGINT) AS mid
-  FROM ev
-)
-SELECT (SELECT count(*) FROM ev) AS n_total,
-       (SELECT count(*) FROM ev, b WHERE event_id > mid) AS n_high
-""".strip()
-
-
-LLM_QUERIES["events_vt_meta_count"] = FnWorkload(
-    _events_vt_meta_count, _EVENTS_VT_META_COUNT_SQL
-)
-
-
-def _events_vt_checked_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Table-property CHECK constraints, EXECUTED (sources/versioned.py
-    r9 — Delta's constraint semantics): create an events table with
-    recorded row-level constraints, append a POISONED batch (nulled
-    values) that the table itself must reject atomically, then append the
-    clean remainder. The final per-type aggregate proves the poisoned
-    commit left no trace, and ``rejected_commits`` pins that the reject
-    actually fired (a constraints implementation that silently passed
-    everything would hash-match the aggregate but not this flag)."""
-    from ..sources.versioned import ConstraintViolation, vt_read, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    specs = [
-        {"name": "v_not_null", "kind": "not_null", "col": "v"},
-        {"name": "id_nonneg", "kind": "range", "col": "event_id", "lo": 0},
-    ]
-    path = os.path.join(_scratch_dir("vtchecked", sf_dir), "ev")
-    vt_write(
-        spark, path, ev.filter(F.col("event_id") % 2 == 0),
-        constraints=specs,
-    )
-    rejected = 0
-    try:
-        vt_write(
-            spark,
-            path,
-            ev.filter(F.col("event_id") % 2 == 1).withColumn(
-                "v", F.lit(None).cast("decimal(38,12)")
-            ),
-            mode="append",
-        )
-    except ConstraintViolation:
-        rejected = 1
-    vt_write(
-        spark, path, ev.filter(F.col("event_id") % 2 == 1), mode="append"
-    )
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .withColumn("rejected_commits", F.lit(rejected).cast("long"))
-    )
-
-
-_EVENTS_VT_CHECKED_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       CAST(1 AS BIGINT) AS rejected_commits
-FROM ev GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_checked_ingest"] = FnWorkload(
-    _events_vt_checked_ingest, _EVENTS_VT_CHECKED_SQL
-)
-
-
 def _docs_hashed_embedding_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4080,220 +2853,6 @@ def _docs_hashed_embedding_neardup_sql() -> str:
 
 LLM_QUERIES["docs_hashed_embedding_neardup"] = FnWorkload(
     _docs_hashed_embedding_neardup, _docs_hashed_embedding_neardup_sql()
-)
-
-
-def _join_vt_stats_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-based join planning from manifest statistics, EXECUTED
-    (sources/versioned.py vt_analyze / vt_table_stats / vt_join r9; the
-    reference has no joins or optimizer — SURVEY.md §2.5/§4): stage
-    events as a fact vt and the per-type dimension as a second vt,
-    ANALYZE the fact table's join key (HLL NDV + exact nulls + exact
-    most-common-value count, one pass), then let the advisor pick the
-    join strategy from metadata alone — broadcast here, because the dim
-    manifest reports kilobytes. Three cross-checks ride the oracle hash:
-    the decision itself (a literal column — a wrong strategy choice
-    mismatches), the ANALYZE row count (exact, from the manifest's
-    footer counts), and the ANALYZE most-common-value count (the skew
-    detector's input) recomputed by the oracle as max per-type count."""
-    from ..sources.versioned import (
-        vt_analyze,
-        vt_join,
-        vt_table_stats,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    base = _scratch_dir("vtstatsjoin", sf_dir)
-    facts = os.path.join(base, "facts")
-    dim = os.path.join(base, "dim")
-    vt_write(spark, facts, ev)
-    vt_write(
-        spark,
-        dim,
-        ev.select("event_type")
-        .distinct()
-        .withColumn("label", F.upper(F.col("event_type"))),
-    )
-    vt_analyze(spark, facts, columns=["event_type"])
-    stats = vt_table_stats(facts)
-    a = stats["analyze"]
-    decision: dict = {}
-    joined = vt_join(
-        spark, facts, dim, ["event_type"], decision_out=decision
-    )
-    return joined.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("value").cast("decimal(38,12)")), 6)
-        .cast("double")
-        .alias("sum_value"),
-        F.lit(decision["strategy"]).alias("strategy"),
-        F.lit(int(a["rows"])).cast("long").alias("analyzed_rows"),
-        F.lit(int(a["columns"]["event_type"]["mcv_count"]))
-        .cast("long")
-        .alias("mcv_count"),
-    )
-
-
-_JOIN_VT_STATS_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-dim AS (SELECT DISTINCT event_type, upper(event_type) AS label FROM ev),
-mcv AS (
-  SELECT max(c) AS m
-  FROM (SELECT count(*) AS c FROM ev GROUP BY event_type)
-)
-SELECT d.label, count(*) AS n,
-       CAST(round(sum(CAST(e.value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       'broadcast' AS strategy,
-       (SELECT count(*) FROM ev) AS analyzed_rows,
-       (SELECT m FROM mcv) AS mcv_count
-FROM ev e JOIN dim d USING (event_type)
-GROUP BY d.label
-""".strip()
-
-
-LLM_QUERIES["join_vt_stats_advisor"] = FnWorkload(
-    _join_vt_stats_advisor, _JOIN_VT_STATS_SQL
-)
-
-
-def _docs_vt_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained inverted index over the change data feed,
-    EXECUTED (streaming/cdc.py apply_index_increment r9): stage the
-    document corpus into a versioned table in three commits — half the
-    docs, the other half appended, then a keyed MERGE that rewrites every
-    doc_id % 10 == 3 document with two extra tokens (change_feed=True) —
-    pumping the CDC subscription to quiescence after each. The sink is a
-    per-token (df, tf) index maintained purely by SIGNED DELTAS over the
-    exploded token stream: each pump costs O(|changed docs| ×
-    tokens/doc), never a corpus rescan — the incremental-view-maintenance
-    contract, over a fan-out (explode) projection where an update's
-    pre-image must cancel its post-image token-by-token. The oracle
-    recomputes the index from the FINAL corpus state from scratch; a
-    sign error, a lost pre-image, or a double-applied pump all
-    hash-mismatch. ``versions_applied`` pins that the cursor really
-    advanced through all three source commits."""
-    from ..sources.versioned import vt_merge, vt_read, vt_write
-    from ..streaming.cdc import (
-        apply_index_increment,
-        pump_until_current,
-        subscription_cursor,
-    )
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    base = _scratch_dir("vtindexcdc", sf_dir)
-    src = os.path.join(base, "docs")
-    sink = os.path.join(base, "index")
-    app = "inverted-index-maintainer"
-    apply = apply_index_increment(spark, sink)
-
-    vt_write(spark, src, docs.filter(F.col("doc_id") % 2 == 0))
-    pump_until_current(spark, src, sink, app, apply)
-    vt_write(
-        spark, src, docs.filter(F.col("doc_id") % 2 == 1), mode="append"
-    )
-    pump_until_current(spark, src, sink, app, apply)
-    vt_merge(
-        spark,
-        src,
-        docs.filter(F.col("doc_id") % 10 == 3).withColumn(
-            "text", F.concat(F.col("text"), F.lit(" zz zz"))
-        ),
-        ["doc_id"],
-        change_feed=True,
-    )
-    pump_until_current(spark, src, sink, app, apply)
-
-    cursor = subscription_cursor(sink, app)
-    return (
-        vt_read(spark, sink)
-        .filter(F.col("df") > 0)
-        .select(
-            "token",
-            F.col("df").cast("long").alias("df"),
-            F.col("tf").cast("long").alias("tf"),
-            F.lit(cursor).cast("long").alias("versions_applied"),
-        )
-    )
-
-
-_DOCS_VT_INDEX_CDC_SQL = """
-WITH final AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 10 = 3 THEN text || ' zz zz' ELSE text END
-           AS text
-  FROM documents
-),
-tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM final
-)
-SELECT token, CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
-       CAST(count(*) AS BIGINT) AS tf,
-       CAST(3 AS BIGINT) AS versions_applied
-FROM tok GROUP BY token
-""".strip()
-
-
-LLM_QUERIES["docs_vt_index_cdc"] = FnWorkload(
-    _docs_vt_index_cdc, _DOCS_VT_INDEX_CDC_SQL
-)
-
-
-def _events_vt_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only maintenance advisor, EXECUTED (sources/versioned.py
-    vt_maintenance_plan r9): ingest events as four small appends (the
-    streaming small-file pattern), ask the advisor — it must flag
-    compaction and missing ANALYZE stats — then run the maintenance it
-    prescribed (vt_optimize to one file, vt_analyze) and ask again — it
-    must report clean. The advisor reads only manifests and filesystem
-    metadata (milliseconds at any scale); the decisions ride the oracle
-    hash as literals, and ``n_rows`` comes from the post-OPTIMIZE
-    metadata count, pinning that compaction lost nothing."""
-    from ..sources.versioned import (
-        vt_analyze,
-        vt_count,
-        vt_maintenance_plan,
-        vt_optimize,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    path = os.path.join(_scratch_dir("vtmaint", sf_dir), "ev")
-    for i in range(4):
-        vt_write(
-            spark,
-            path,
-            ev.filter(F.col("event_id") % 4 == i),
-            mode="append" if i else "overwrite",
-        )
-    before = vt_maintenance_plan(path)
-    vt_optimize(spark, path, ["event_id"], n_partitions=1)
-    vt_analyze(spark, path, columns=["event_type"])
-    after = vt_maintenance_plan(path, small_file_bytes=1)
-    return spark.range(1).select(
-        F.lit(int(vt_count(spark, path))).cast("long").alias("n_rows"),
-        F.lit(bool(before["compact"])).alias("before_compact"),
-        F.lit(before["analyze"]).alias("before_analyze"),
-        F.lit(bool(after["compact"])).alias("after_compact"),
-        F.lit(after["analyze"]).alias("after_analyze"),
-    )
-
-
-_EVENTS_VT_MAINT_SQL = """
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       true AS before_compact, 'missing' AS before_analyze,
-       false AS after_compact, 'fresh' AS after_analyze
-FROM events
-""".strip()
-
-
-LLM_QUERIES["events_vt_maintenance_plan"] = FnWorkload(
-    _events_vt_maintenance_plan, _EVENTS_VT_MAINT_SQL
 )
 
 
@@ -4385,123 +2944,6 @@ LLM_QUERIES["events_json_extract"] = FnWorkload(
 )
 
 
-def _events_vt_clone_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-copy table branching, EXECUTED (sources/versioned.py
-    vt_clone r9 — Delta's shallow CLONE): stage events as a source vt,
-    clone it (metadata-only: the clone's manifest references the
-    source's directories by absolute path, nothing copied), then MERGE
-    doubled values for event_id % 10 == 3 INTO THE CLONE. The clone's
-    copy-on-write merge lands in its own directory tree, so the final
-    aggregate comes from the branch while ``n_src_rows`` — the source's
-    metadata count taken AFTER the branch diverged — pins that the
-    source never observed the write. At 100 TB this is how a dev/test
-    branch of a production table costs one manifest, not a copy."""
-    from ..sources.versioned import vt_clone, vt_count, vt_merge, vt_read, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    base = _scratch_dir("vtclone", sf_dir)
-    src = os.path.join(base, "src")
-    branch = os.path.join(base, "branch")
-    vt_write(spark, src, ev)
-    vt_clone(spark, src, branch)
-    vt_merge(
-        spark,
-        branch,
-        ev.filter(F.col("event_id") % 10 == 3).withColumn(
-            "value", F.col("value") * 2
-        ),
-        ["event_id"],
-    )
-    n_src = vt_count(spark, src)
-    return (
-        vt_read(spark, branch)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(38,12)")), 6)
-            .cast("double")
-            .alias("sum_value"),
-            F.lit(int(n_src)).cast("long").alias("n_src_rows"),
-        )
-    )
-
-
-_EVENTS_VT_CLONE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CASE WHEN event_id % 10 = 3
-                           THEN 2 * CAST(value AS DECIMAL(38,12))
-                           ELSE CAST(value AS DECIMAL(38,12)) END), 6)
-            AS DOUBLE) AS sum_value,
-       (SELECT count(*) FROM ev) AS n_src_rows
-FROM ev GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_clone_branch"] = FnWorkload(
-    _events_vt_clone_branch, _EVENTS_VT_CLONE_SQL
-)
-
-
-def _events_vt_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot drift report, EXECUTED (sources/versioned.py vt_diff
-    r9): commit the low half of events, append the high half, and
-    report what moved between the two snapshots FROM MANIFESTS ALONE —
-    exact row counts from footer sums, event_id min/max movement from
-    dir-level footer stats. The oracle recomputes every reported number
-    from the raw data; a drift report that misread either manifest
-    hash-mismatches. At 100 TB this is the post-ingest sanity check
-    (row delta, key-range movement) costing two manifest reads."""
-    from ..sources.versioned import vt_diff, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type"
-    )
-    bounds = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    mid = (bounds["lo"] + bounds["hi"]) // 2
-    path = os.path.join(_scratch_dir("vtdrift", sf_dir), "ev")
-    vt_write(spark, path, ev.filter(F.col("event_id") <= mid))
-    vt_write(
-        spark, path, ev.filter(F.col("event_id") > mid), mode="append"
-    )
-    d = vt_diff(path, 1, 2)
-    mm = d["minmax"]["event_id"]
-    return spark.range(1).select(
-        F.lit(int(d["rows_old"])).cast("long").alias("rows_old"),
-        F.lit(int(d["rows_new"])).cast("long").alias("rows_new"),
-        F.lit(int(d["row_delta"])).cast("long").alias("row_delta"),
-        F.lit(int(mm["old"][1])).cast("long").alias("max_old"),
-        F.lit(int(mm["new"][1])).cast("long").alias("max_new"),
-        F.lit(bool(mm["max_moved"])).alias("max_moved"),
-        F.lit(bool(mm["min_moved"])).alias("min_moved"),
-    )
-
-
-_EVENTS_VT_DRIFT_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT CAST((min(event_id) + max(event_id)) // 2 AS BIGINT) AS mid
-  FROM ev
-)
-SELECT (SELECT count(*) FROM ev, b WHERE event_id <= mid) AS rows_old,
-       (SELECT count(*) FROM ev) AS rows_new,
-       (SELECT count(*) FROM ev, b WHERE event_id > mid) AS row_delta,
-       (SELECT max(event_id) FROM ev, b WHERE event_id <= mid)
-         AS max_old,
-       (SELECT max(event_id) FROM ev) AS max_new,
-       true AS max_moved, false AS min_moved
-""".strip()
-
-
-LLM_QUERIES["events_vt_drift_report"] = FnWorkload(
-    _events_vt_drift_report, _EVENTS_VT_DRIFT_SQL
-)
-
-
 def _events_approx_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified AQP, EXECUTED (functions/aqp.py r9): per-event-type
     sampling rates — 'error' events kept at 1/2 (the rare class whose
@@ -4541,3236 +2983,6 @@ def _events_approx_stratified_sql() -> str:
 
 LLM_QUERIES["events_approx_stratified"] = FnWorkload(
     _events_approx_stratified, _events_approx_stratified_sql()
-)
-
-
-def _events_vt_savepoint_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible dataset snapshots, EXECUTED (sources/versioned.py
-    vt_savepoint r9): commit the low half of events, capture a
-    savepoint, then let the table move on (append the high half, merge
-    doubled values). Reading THROUGH THE SAVEPOINT must replay the
-    original snapshot exactly — the aggregate below comes from the
-    pinned version while ``rows_head`` pins how far the table moved on.
-    This is how a training run records the precise corpus it consumed:
-    versions, not paths."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_merge,
-        vt_read_savepoint,
-        vt_savepoint,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    bounds = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    mid = (bounds["lo"] + bounds["hi"]) // 2
-    path = os.path.join(_scratch_dir("vtsavepoint", sf_dir), "ev")
-    vt_write(spark, path, ev.filter(F.col("event_id") <= mid))
-    sp = vt_savepoint({"events": path})
-    vt_write(
-        spark, path, ev.filter(F.col("event_id") > mid), mode="append"
-    )
-    vt_merge(
-        spark,
-        path,
-        ev.filter(F.col("event_id") % 10 == 3).withColumn(
-            "value", F.col("value") * 2
-        ),
-        ["event_id"],
-    )
-    pinned = vt_read_savepoint(spark, sp)["events"]
-    n_head = vt_count(spark, path)
-    return pinned.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("value").cast("decimal(38,12)")), 6)
-        .cast("double")
-        .alias("sum_value"),
-        F.lit(int(n_head)).cast("long").alias("rows_head"),
-    )
-
-
-_EVENTS_VT_SAVEPOINT_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT CAST((min(event_id) + max(event_id)) // 2 AS BIGINT) AS mid
-  FROM ev
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       (SELECT count(*) FROM ev) AS rows_head
-FROM ev, b WHERE event_id <= mid
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_savepoint_replay"] = FnWorkload(
-    _events_vt_savepoint_replay, _EVENTS_VT_SAVEPOINT_SQL
-)
-
-
-def _events_vt_null_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-count file skipping, EXECUTED (sources/versioned.py r9):
-    stage events with a derived ``v_opt`` that is NULL exactly for
-    'error' events, one file per event type (five appends), then read
-    through the reference's ``NotNull`` RULE operator — the scan plan
-    must prune the all-null error file on footer null counts alone, and
-    the IS NULL plan must keep ONLY it. Both plans' kept-counts ride the
-    oracle hash as literals; the aggregate comes from the rule-filtered
-    pruned read, so a pruning bug that dropped a live file would also
-    hash-mismatch the values."""
-    from ..sources.versioned import vt_read, vt_scan_plan, vt_write
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.when(F.col("event_type") == "error", F.lit(None))
-        .otherwise(F.col("value"))
-        .alias("v_opt"),
-    )
-    types = [
-        r["event_type"]
-        for r in ev.select("event_type").distinct().orderBy("event_type").collect()
-    ]
-    path = os.path.join(_scratch_dir("vtnullskip", sf_dir), "ev")
-    for i, t in enumerate(types):
-        vt_write(
-            spark,
-            path,
-            ev.filter(F.col("event_type") == t).coalesce(1),
-            mode="append" if i else "overwrite",
-        )
-    p_notnull = vt_scan_plan(path, None, ("v_opt", "notnull", None))
-    p_isnull = vt_scan_plan(path, None, ("v_opt", "isnull", None))
-    rule = {
-        "Conditions": {
-            "Conditions": [{"Property": "v_opt", "Operator": "NotNull"}]
-        }
-    }
-    return (
-        vt_read(spark, path, rule=rule)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(F.col("v_opt").cast("decimal(38,12)")), 6)
-            .cast("double")
-            .alias("sum_v"),
-            F.lit(int(p_notnull["files_kept"]))
-            .cast("long")
-            .alias("notnull_files_kept"),
-            F.lit(int(p_isnull["files_kept"]))
-            .cast("long")
-            .alias("isnull_files_kept"),
-        )
-    )
-
-
-_EVENTS_VT_NULL_SKIP_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-x AS (
-  SELECT event_type,
-         CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v_opt
-  FROM ev
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(v_opt AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_v,
-       CAST(4 AS BIGINT) AS notnull_files_kept,
-       CAST(1 AS BIGINT) AS isnull_files_kept
-FROM x WHERE v_opt IS NOT NULL
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_null_skip"] = FnWorkload(
-    _events_vt_null_skip, _EVENTS_VT_NULL_SKIP_SQL
-)
-
-
-def _events_vt_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level DELETE, EXECUTED (sources/versioned.py vt_delete r10 —
-    Delta's ``DELETE FROM … WHERE`` over a clustered table): stage
-    events as a versioned table, OPTIMIZE range-clustered on event_id
-    into 8 tight-footer files, then DELETE the bottom quarter of the id
-    range. The rewrite is FILE-GRANULAR copy-on-write: the pinned
-    booleans assert files_rewritten is neither 0 nor all of them (only
-    the files whose footer ranges intersect the predicate were read and
-    rewritten; the rest are referenced verbatim with their stats
-    carried), while the surviving aggregate equals the SQL mirror's
-    plain ``WHERE NOT (…)`` — deletion semantics, including the fact
-    that rows where the predicate is NULL survive, are the oracle's."""
-    from ..sources.versioned import (
-        vt_delete,
-        vt_history,
-        vt_read,
-        vt_optimize,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtdelete", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    cut = lo + (hi - lo) // 4
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    vt_delete(spark, path, ("event_id", "<", cut))
-    blob = vt_history(path)[0]["delete"]
-    file_granular = 0 < blob["files_rewritten"] < blob["files_total"]
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(file_granular)).alias("rewrite_was_file_granular"),
-        )
-    )
-
-
-_EVENTS_VT_DELETE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT min(event_id) + (max(event_id) - min(event_id)) // 4 AS cut
-  FROM ev
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS rewrite_was_file_granular
-FROM ev, b
-WHERE NOT (event_id < cut)
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_delete"] = FnWorkload(
-    _events_vt_delete, _EVENTS_VT_DELETE_SQL
-)
-
-
-def _events_vt_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILE-GRANULAR copy-on-write MERGE, EXECUTED (sources/versioned.py
-    vt_merge r10 — the r9 verdict's top ask): OPTIMIZE events clustered
-    on event_id into 8 files, then MERGE an update set confined to the
-    BOTTOM SIXTEENTH of the id range (values doubled) plus a disjoint
-    set of brand-new ids shifted past the max (inserts). The pinned
-    boolean asserts the mechanism: the merge rewrote SOME files but not
-    all (per-file key-range classification left the untouched files
-    referenced verbatim — Delta's MERGE contract, where a merge touching
-    a slice of the keyspace rewrites only that slice). The final
-    snapshot aggregate equals the SQL mirror built from plain CASE/UNION
-    over the raw table."""
-    from ..sources.versioned import (
-        vt_history,
-        vt_merge,
-        vt_optimize,
-        vt_read,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtmergefg", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    cut = lo + (hi - lo) // 16
-    shift = hi - lo + 1
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    low = ev.filter(F.col("event_id") <= cut)
-    updates = low.select(
-        "event_id", "event_type", (F.col("v") * 2).alias("v")
-    ).unionByName(
-        low.select(
-            (F.col("event_id") + shift).alias("event_id"),
-            F.lit("inserted").alias("event_type"),
-            F.col("v"),
-        )
-    )
-    vt_merge(spark, path, updates, ["event_id"])
-    blob = vt_history(path)[0]["merge"]
-    file_granular = 0 < blob["files_rewritten"] < blob["files_total"]
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(file_granular)).alias("rewrite_was_file_granular"),
-        )
-    )
-
-
-_EVENTS_VT_MERGE_PRUNED_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT min(event_id) AS lo,
-         min(event_id) + (max(event_id) - min(event_id)) // 16 AS cut,
-         max(event_id) - min(event_id) + 1 AS shift
-  FROM ev
-),
-merged AS (
-  SELECT event_id, event_type,
-         CASE WHEN event_id <= (SELECT cut FROM b)
-              THEN 2 * CAST(value AS DECIMAL(38,12))
-              ELSE CAST(value AS DECIMAL(38,12)) END AS v
-  FROM ev
-  UNION ALL
-  SELECT event_id + (SELECT shift FROM b) AS event_id,
-         'inserted' AS event_type,
-         CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev WHERE event_id <= (SELECT cut FROM b)
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS rewrite_was_file_granular
-FROM merged
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_merge_pruned"] = FnWorkload(
-    _events_vt_merge_pruned, _EVENTS_VT_MERGE_PRUNED_SQL
-)
-
-
-def _events_vt_merge_delete_clause(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """MERGE delete clause, EXECUTED (vt_merge(delete_where=…) r10 —
-    Delta's WHEN MATCHED DELETE, completing the insert/update/delete
-    triad in ONE commit): the update set is every 50th event row with
-    its value doubled; rows whose event_type is 'click' are TOMBSTONES
-    (delete_where) — their matched target rows are removed — while the
-    rest upsert. The SQL mirror states the end state directly: drop
-    matched clicks, double the other matched rows, keep everything
-    else. The change feed across this commit must replay to the same
-    snapshot (asserted inside via the multiset identity; the aggregate
-    is the value oracle)."""
-    from ..sources.versioned import (
-        vt_merge,
-        vt_read,
-        vt_read_changes,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtmergedel", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    updates = ev.filter(F.col("event_id") % 50 == 7).select(
-        "event_id", "event_type", (F.col("v") * 2).alias("v")
-    )
-    v = vt_merge(
-        spark,
-        path,
-        updates,
-        ["event_id"],
-        delete_where="event_type = 'click'",
-        change_feed=True,
-    )
-    # replay identity through the delete-bearing merge: v1 ⊎ (ins ∪
-    # post) ∖ (del ∪ pre) must equal v2 — computed, not assumed
-    ch = vt_read_changes(spark, path, v - 1, v)
-    plus = ch.filter(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).select("event_id", "event_type", "v")
-    minus = ch.filter(
-        F.col("_change_type").isin("delete", "update_preimage")
-    ).select("event_id", "event_type", "v")
-    # one signed fold instead of exceptAll + multiset-equal (two join
-    # jobs → one union+agg job, r15 guide §1.2; also stricter — see
-    # _signed_fold_zero on phantom deletes)
-    replay_exact = _signed_fold_zero(
-        [
-            (vt_read(spark, path, v - 1), 1),
-            (plus, 1),
-            (minus, -1),
-            (vt_read(spark, path, v), -1),
-        ]
-    )
-    return (
-        vt_read(spark, path, v)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(replay_exact)).alias("change_feed_replays_exact"),
-        )
-    )
-
-
-_EVENTS_VT_MERGE_DELETE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CASE WHEN event_id % 50 = 7
-                           THEN 2 * CAST(value AS DECIMAL(38,12))
-                           ELSE CAST(value AS DECIMAL(38,12)) END), 6)
-            AS DOUBLE) AS sum_value,
-       TRUE AS change_feed_replays_exact
-FROM ev
-WHERE NOT (event_id % 50 = 7 AND event_type = 'click')
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_merge_delete_clause"] = FnWorkload(
-    _events_vt_merge_delete_clause, _EVENTS_VT_MERGE_DELETE_SQL
-)
-
-
-def _events_vt_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXECUTABLE MAINTENANCE, EXECUTED (sources/versioned.py
-    vt_maintain r10 — the r9 verdict's "advisory-only" gap): stage
-    events as a FRAGMENTED ingest (four small appends — the streaming
-    small-file problem), then one vt_maintain call applies the
-    advisor's plan in dependency order: OPTIMIZE range-clustered on
-    event_id, ANALYZE (after the optimize, so stats describe the final
-    layout), checkpoint, vacuum. Pinned flags assert the loop CLOSED:
-    the maintenance ran the expected actions and a re-run of the
-    advisor reports nothing left to do (fresh stats, no compaction,
-    nothing to vacuum) — while the maintained table still aggregates to
-    exactly the raw table's numbers (maintenance is layout, never
-    semantics)."""
-    from ..sources.versioned import (
-        vt_maintain,
-        vt_maintenance_plan,
-        vt_read,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtmaintain", sf_dir), "ev")
-    for i in range(4):
-        vt_write(
-            spark,
-            path,
-            ev.filter(F.col("event_id") % 4 == i),
-            mode="append" if i else "overwrite",
-        )
-    report = vt_maintain(
-        spark,
-        path,
-        cluster_by=["event_id"],
-        n_partitions=2,
-        keep_last=1,
-        grace_seconds=0,
-    )
-    after = vt_maintenance_plan(path)
-    healed = (
-        "optimize:range" in report["actions"]
-        and "analyze" in report["actions"]
-        and "checkpoint" in report["actions"]
-        and not after["compact"]
-        and after["analyze"] == "fresh"
-        and not after["vacuum"]["dirs"]
-    )
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(healed)).alias("advisor_clean_after"),
-        )
-    )
-
-
-_EVENTS_VT_MAINTAIN_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS advisor_clean_after
-FROM ev GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_maintain"] = FnWorkload(
-    _events_vt_maintain, _EVENTS_VT_MAINTAIN_SQL
-)
-
-
-def _events_vt_change_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING SOURCE over the change feed, EXECUTED
-    (streaming/source.py r10 — the r9 verdict's ask #6, the
-    ``readStream``-shaped completion of the Delta-source analogy): the
-    SAME three-commit history as ``events_vt_cdc_subscription`` (write
-    evens → append odds → keyed MERGE doubling every event_id%10==3
-    row's value, change_feed=True), but consumed as a real Structured
-    Streaming query — the registered ``vt_changes`` Python data source
-    maps offsets to commit versions, plans one Arrow-read partition per
-    (commit, file), and an ``availableNow`` trigger drains it into a
-    memory sink. The signed fold of the streamed change rows
-    (+insert/postimage, −delete/preimage) must equal a full recompute
-    of the source's final snapshot — the identical value oracle the
-    call-driven subscription hash-matches, so the two consumption paths
-    are provably interchangeable. ``versions_applied`` pins that the
-    stream really advanced through all three commits."""
-    import uuid as _uuid
-
-    from ..sources.versioned import vt_merge, vt_write
-    from ..streaming.source import vt_change_stream
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    src = os.path.join(_scratch_dir("vtchgstream", sf_dir), "src")
-    vt_write(spark, src, ev.filter(F.col("event_id") % 2 == 0))
-    vt_write(
-        spark, src, ev.filter(F.col("event_id") % 2 == 1), mode="append"
-    )
-    vt_merge(
-        spark,
-        src,
-        ev.filter(F.col("event_id") % 10 == 3).withColumn(
-            "v", F.col("v") * 2
-        ),
-        ["event_id"],
-        change_feed=True,
-    )
-    qn = "vtchg_" + _uuid.uuid4().hex[:10]
-    q = (
-        vt_change_stream(spark, src)
-        .writeStream.format("memory")
-        .queryName(qn)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    changes = spark.table(qn)
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"),
-        F.lit(1),
-    ).otherwise(F.lit(-1))
-    return (
-        changes.groupBy("event_type")
-        .agg(
-            F.sum(sign).cast("long").alias("n"),
-            F.round(
-                F.sum(sign * F.col("v")), 6
-            ).cast("double").alias("sum_value"),
-            F.max("_commit_version").cast("long").alias(
-                "versions_applied"
-            ),
-        )
-        .select("event_type", "n", "sum_value", "versions_applied")
-    )
-
-
-_EVENTS_VT_CHANGE_STREAM_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CASE WHEN event_id % 10 = 3
-                           THEN 2 * CAST(value AS DECIMAL(38,12))
-                           ELSE CAST(value AS DECIMAL(38,12)) END), 6)
-            AS DOUBLE) AS sum_value,
-       CAST(3 AS BIGINT) AS versions_applied
-FROM ev GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_change_stream"] = FnWorkload(
-    _events_vt_change_stream, _EVENTS_VT_CHANGE_STREAM_SQL
-)
-
-
-def _events_vt_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level UPDATE, EXECUTED (sources/versioned.py vt_update r10 —
-    Delta's ``UPDATE … SET … WHERE``, completing the DML triad next to
-    the file-granular MERGE and DELETE): OPTIMIZE events clustered on
-    event_id, then UPDATE the bottom quarter of the id range, tripling
-    its value with an expression evaluated against the pre-update row
-    and cast back to the column's declared type. The pinned boolean
-    asserts file granularity (files_rewritten strictly between 0 and
-    files_total — untouched files referenced verbatim); the aggregate
-    equals the SQL mirror's plain CASE."""
-    from ..sources.versioned import (
-        vt_history,
-        vt_optimize,
-        vt_read,
-        vt_update,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtupdate", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    cut = lo + (hi - lo) // 4
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    vt_update(spark, path, ("event_id", "<", cut), {"v": "v * 3"})
-    blob = vt_history(path)[0]["update"]
-    file_granular = 0 < blob["files_rewritten"] < blob["files_total"]
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(file_granular)).alias("rewrite_was_file_granular"),
-        )
-    )
-
-
-_EVENTS_VT_UPDATE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-b AS (
-  SELECT min(event_id) + (max(event_id) - min(event_id)) // 4 AS cut
-  FROM ev
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CASE WHEN event_id < cut
-                           THEN 3 * CAST(value AS DECIMAL(38,12))
-                           ELSE CAST(value AS DECIMAL(38,12)) END), 6)
-            AS DOUBLE) AS sum_value,
-       TRUE AS rewrite_was_file_granular
-FROM ev, b
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_update"] = FnWorkload(
-    _events_vt_update, _EVENTS_VT_UPDATE_SQL
-)
-
-
-# rule-driven DELETE: the rule document below is THE single source of
-# truth — compiled by the engine for the Spark delete AND transpiled by
-# plans/sqlgen.py into the DuckDB mirror's WHERE body at import time
-_RULE_DELETE_DOC = {
-    "Name": "retention-drop-high-value-clicks",
-    "Conditions": {
-        "LogicalOperator": "AND",
-        "Conditions": [
-            {"Property": "event_type", "Operator": "Contains", "Value": "ick"},
-            {"Property": "v", "Operator": "GreaterThan", "Value": 35},
-        ],
-    },
-}
-
-
-def _rule_delete_sql_body() -> str:
-    from pyspark.sql.types import (
-        DecimalType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..plans.model import RuleDefinition
-    from ..plans.sqlgen import SqlGenerator
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("v", DecimalType(38, 12)),
-        ]
-    )
-    rule = RuleDefinition.from_dict(_RULE_DELETE_DOC)
-    return SqlGenerator(schema).group_sql(rule.conditions)
-
-
-def _events_rule_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RULE-DRIVEN DELETE, EXECUTED (vt_delete(rule=…) r10): the
-    engine's flagship surface — a JSON rule document — drives lakehouse
-    retention directly. The staged events table is OPTIMIZE-clustered
-    on the value column, so the rule's skip-eligible GreaterThan
-    conjunct prunes the low-value files while its Contains conjunct
-    (not skip-expressible) still filters exactly on the surviving scan;
-    the deletion is also reconstructed from the rule recorded in the
-    manifest and its row count pinned against a direct recount. ONE
-    rule document is the source of truth for both engines: the Spark
-    path compiles it (operators/predicates.py), the DuckDB mirror
-    transpiles it (plans/sqlgen.py) into the WHERE body — deletion
-    semantics (predicate NULL keeps the row) wrapped identically on
-    both sides."""
-    from ..sources.versioned import (
-        vt_delete,
-        vt_history,
-        vt_optimize,
-        vt_read,
-        vt_read_changes,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtruledel", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    vt_optimize(spark, path, ["v"], n_partitions=8)
-    v = vt_delete(spark, path, rule=_RULE_DELETE_DOC)
-    blob = vt_history(path)[0]["delete"]
-    file_granular = 0 < blob["files_rewritten"] < blob["files_total"]
-    # CDC reconstruction from the recorded rule must name exactly the
-    # rows the snapshots lost — computed, not assumed
-    n_deleted = vt_read_changes(spark, path, v - 1, v).count()
-    n_before = vt_read(spark, path, v - 1).count()
-    n_after = vt_read(spark, path, v).count()
-    cdc_exact = n_deleted == n_before - n_after
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(file_granular)).alias("rewrite_was_file_granular"),
-            F.lit(bool(cdc_exact)).alias("cdc_reconstruction_exact"),
-        )
-    )
-
-
-_EVENTS_RULE_DELETE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS rewrite_was_file_granular,
-       TRUE AS cdc_reconstruction_exact
-FROM t
-WHERE NOT COALESCE({_rule_delete_sql_body()}, FALSE)
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_rule_delete"] = FnWorkload(
-    _events_rule_delete, _EVENTS_RULE_DELETE_SQL
-)
-
-
-def _events_vt_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE-ON-READ DELETE via deletion vectors, EXECUTED
-    (sources/versioned.py vt_delete(mode="dv") r11 — Delta's deletion
-    vectors / Iceberg positional deletes): OPTIMIZE events into 8
-    clustered files, then delete a handful of rows (the minimum
-    event_id's ties — well under 0.1%). The commit rewrites ZERO data
-    files: it records the matched positions in a sidecar and every
-    reader drops them at scan time. Pinned INSIDE the oracle hash:
-    ``merge_on_read`` (blob says dv=True with files_rewritten=0 and a
-    non-empty vector), ``time_travel_intact`` (the pre-DV snapshot
-    still counts every physical row), ``cdc_exact`` (the change feed
-    names exactly the matched rows). The surviving aggregate equals the
-    SQL mirror's plain ``WHERE NOT (…)``."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_delete,
-        vt_history,
-        vt_optimize,
-        vt_read,
-        vt_read_changes,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtdeletedv", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo = _staged_minmax(path, "event_id")[0]
-    pre_v = vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    n_before = vt_count(spark, path)
-    v = vt_delete(spark, path, ("event_id", "<=", lo), mode="dv")
-    hist = vt_history(path)[0]
-    blob = hist["delete"]
-    merge_on_read = (
-        blob.get("dv") is True
-        and blob["files_rewritten"] == 0
-        and blob["rows_matched"] > 0
-        and (hist.get("dv") or {}).get("rows") == blob["rows_matched"]
-    )
-    time_travel_intact = vt_count(spark, path, pre_v) == n_before
-    cdc_exact = (
-        vt_read_changes(spark, path, v - 1, v).count()
-        == blob["rows_matched"]
-        == n_before - vt_count(spark, path)
-    )
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(merge_on_read)).alias("merge_on_read"),
-            F.lit(bool(time_travel_intact)).alias("time_travel_intact"),
-            F.lit(bool(cdc_exact)).alias("cdc_exact"),
-        )
-    )
-
-
-_EVENTS_VT_DELETE_DV_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (SELECT min(event_id) AS lo FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS merge_on_read,
-       TRUE AS time_travel_intact,
-       TRUE AS cdc_exact
-FROM t, b
-WHERE NOT (event_id <= lo)
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_delete_dv"] = FnWorkload(
-    _events_vt_delete_dv, _EVENTS_VT_DELETE_DV_SQL
-)
-
-
-def _events_vt_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE-ON-READ UPDATE via deletion vectors, EXECUTED
-    (vt_update(mode="dv") r11): the matched rows' positions are DV'd
-    out of their files and the post-image rows are appended as a fresh
-    directory — zero rewrites of existing files. Pins:
-    ``merge_on_read`` (dv=True, files_rewritten=0),
-    ``count_preserved`` (UPDATE never changes cardinality — the
-    metadata count subtracts the vector and adds the appended rows).
-    The aggregate mirrors SQL's CASE-expression update semantics,
-    including the engine's cast-back to the declared decimal type."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_history,
-        vt_optimize,
-        vt_read,
-        vt_update,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtupdatedv", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    hi = _staged_minmax(path, "event_id")[1]
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    n_before = vt_count(spark, path)
-    vt_update(
-        spark, path, ("event_id", ">=", hi), {"v": "v + 7"}, mode="dv"
-    )
-    blob = vt_history(path)[0]["update"]
-    merge_on_read = (
-        blob.get("dv") is True
-        and blob["files_rewritten"] == 0
-        and blob["rows_matched"] > 0
-    )
-    count_preserved = vt_count(spark, path) == n_before
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(merge_on_read)).alias("merge_on_read"),
-            F.lit(bool(count_preserved)).alias("count_preserved"),
-        )
-    )
-
-
-_EVENTS_VT_UPDATE_DV_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (SELECT max(event_id) AS hi FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CASE WHEN event_id >= hi
-                           THEN CAST(v + 7 AS DECIMAL(38,12))
-                           ELSE v END), 6) AS DOUBLE) AS sum_value,
-       TRUE AS merge_on_read,
-       TRUE AS count_preserved
-FROM t, b
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_update_dv"] = FnWorkload(
-    _events_vt_update_dv, _EVENTS_VT_UPDATE_DV_SQL
-)
-
-
-_RULE_UPDATE_DOC = {
-    "Name": "tag-low-value-k-events",
-    "Conditions": {
-        "LogicalOperator": "AND",
-        "Conditions": [
-            {"Property": "event_type", "Operator": "EndsWith", "Value": "k"},
-            {"Property": "v", "Operator": "LessThanOrEqual", "Value": 20},
-        ],
-    },
-}
-
-
-def _rule_update_sql_body() -> str:
-    from pyspark.sql.types import (
-        DecimalType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..plans.model import RuleDefinition
-    from ..plans.sqlgen import SqlGenerator
-
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("v", DecimalType(38, 12)),
-        ]
-    )
-    rule = RuleDefinition.from_dict(_RULE_UPDATE_DOC)
-    return SqlGenerator(schema).group_sql(rule.conditions)
-
-
-def _events_rule_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RULE-DRIVEN UPDATE, EXECUTED (vt_update(rule=…) r11 — the r10
-    verdict's ask #3, completing the rule-documents-drive-DML triad
-    next to vt_read(rule=) and vt_delete(rule=)): ONE JSON rule decides
-    which rows update — its EndsWith conjunct is outside the skip
-    grammar, so the full compiled predicate filters the pruned scan —
-    and the assignment REWRITES THE GROUPING COLUMN, so the oracle's
-    group space itself depends on the rule firing row-for-row
-    identically in both engines (the SQL mirror transpiles the same
-    document into a CASE expression). ``cdc_exact`` pins the manifest's
-    recorded rule+assignments recipe: the change feed reconstructs
-    exactly 2 images per row the rule matched on the previous
-    snapshot."""
-    from ..sources.versioned import (
-        vt_history,
-        vt_read,
-        vt_read_changes,
-        vt_update,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtruleupd", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    v = vt_update(
-        spark,
-        path,
-        rule=_RULE_UPDATE_DOC,
-        assignments={"event_type": "concat(event_type, '_adj')"},
-    )
-    blob = vt_history(path)[0]["update"]
-    recipe_recorded = (
-        blob.get("rule") is not None and blob.get("assignments") is not None
-    )
-    n_matched = vt_read(
-        spark, path, v - 1, rule=_RULE_UPDATE_DOC
-    ).count()
-    cdc_exact = (
-        n_matched > 0
-        and vt_read_changes(spark, path, v - 1, v).count()
-        == 2 * n_matched
-    )
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(recipe_recorded)).alias("recipe_recorded"),
-            F.lit(bool(cdc_exact)).alias("cdc_exact"),
-        )
-    )
-
-
-_EVENTS_RULE_UPDATE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-u AS (
-  SELECT CASE WHEN COALESCE({_rule_update_sql_body()}, FALSE)
-              THEN event_type || '_adj' ELSE event_type END AS event_type,
-         v
-  FROM t
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS recipe_recorded,
-       TRUE AS cdc_exact
-FROM u
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_rule_update"] = FnWorkload(
-    _events_rule_update, _EVENTS_RULE_UPDATE_SQL
-)
-
-
-def _events_vt_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE-ON-READ MERGE via deletion vectors, EXECUTED
-    (vt_merge(mode="dv") r11): a two-row upsert against an OPTIMIZEd
-    table DVs the matched key's current rows out of their files and
-    appends the upserts as a fresh directory — ZERO existing files
-    rewritten (vs events_vt_merge_pruned's copy-on-write which rewrites
-    the intersecting files). Pins: ``merge_on_read`` (dv=True,
-    files_rewritten=0, at least one row vectored), ``cdc_exact``
-    (always-materialized change rows replay to the post-merge
-    cardinality delta). MERGE key semantics are the oracle's: EVERY
-    current row holding the matched key is replaced by the single
-    upsert row, nulls never key-match."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_history,
-        vt_merge,
-        vt_optimize,
-        vt_read,
-        vt_read_changes,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtmergedv", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    n_before = vt_count(spark, path)
-    ups = spark.createDataFrame(
-        [(lo, "upd", 1.5), (hi + 1, "new", 2.5)],
-        "event_id long, event_type string, v double",
-    ).withColumn("v", F.col("v").cast("decimal(38,12)"))
-    v = vt_merge(spark, path, ups, ["event_id"], mode="dv")
-    blob = vt_history(path)[0]["merge"]
-    merge_on_read = (
-        blob.get("dv") is True
-        and blob["files_rewritten"] == 0
-        and blob["rows_matched"] > 0
-    )
-    # fold identity: inserts+post − pre == cardinality delta
-    ch = vt_read_changes(spark, path, v - 1, v)
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), 1
-    ).otherwise(-1)
-    net = ch.agg(F.sum(sign)).collect()[0][0]
-    cdc_exact = net == vt_count(spark, path) - n_before
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(merge_on_read)).alias("merge_on_read"),
-            F.lit(bool(cdc_exact)).alias("cdc_exact"),
-        )
-    )
-
-
-_EVENTS_VT_MERGE_DV_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (
-  SELECT min(event_id) AS lo, max(event_id) AS hi FROM t
-),
-kept AS (
-  SELECT t.* FROM t, b
-  WHERE t.event_id IS NULL OR t.event_id <> b.lo
-),
-ups AS (
-  SELECT lo AS event_id, 'upd' AS event_type,
-         CAST(1.5 AS DECIMAL(38,12)) AS v FROM b
-  UNION ALL
-  SELECT hi + 1, 'new', CAST(2.5 AS DECIMAL(38,12)) FROM b
-),
-merged AS (
-  SELECT event_id, event_type, v FROM kept
-  UNION ALL
-  SELECT event_id, event_type, v FROM ups
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS merge_on_read,
-       TRUE AS cdc_exact
-FROM merged
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_merge_dv"] = FnWorkload(
-    _events_vt_merge_dv, _EVENTS_VT_MERGE_DV_SQL
-)
-
-
-def _events_vt_compact_incremental(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """INCREMENTAL small-file compaction, EXECUTED (vt_compact r11 —
-    Delta's OPTIMIZE bin-packing, file-granular): the staged table is
-    one healthy clustered file plus a tail of four tiny appends (the
-    streaming small-file problem); vt_compact packs ONLY the tail —
-    the healthy file is referenced verbatim, stats carried — which is
-    the maintenance shape that matters at 100 TB (pay O(small bytes),
-    never the table). Pins INSIDE the oracle hash:
-    ``packed_only_small`` (files_compacted == the 4 tiny files, the
-    big file's reference and stats byte-identical) and
-    ``layout_only`` (the change feed sees ZERO rows across the compact
-    commit). The aggregate equals the plain mirror — compaction must
-    never change results."""
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_compact,
-        vt_optimize,
-        vt_read,
-        vt_read_changes,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtcompact", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    hi = _staged_minmax(path, "event_id")[1]
-    vt_optimize(spark, path, ["event_id"], n_partitions=1)
-    big = _read_manifest(path, 2)
-    [big_dir] = big["dirs"]
-    big_sz = os.path.getsize(
-        os.path.join(path, big_dir, big["files"][big_dir][0])
-    )
-    tail = [
-        (hi + 1, "compact_a", 1.5),
-        (hi + 2, "compact_b", 2.5),
-        (hi + 3, "compact_a", 3.5),
-        (hi + 4, "compact_b", 4.5),
-    ]
-    for row in tail:
-        vt_write(
-            spark,
-            path,
-            spark.createDataFrame(
-                [row], "event_id long, event_type string, v double"
-            ).withColumn("v", F.col("v").cast("decimal(38,12)")),
-            mode="append",
-        )
-    v = vt_compact(spark, path, small_file_bytes=big_sz)
-    m = _read_manifest(path, v)
-    blob = m["compact"]
-    packed_only_small = (
-        blob["files_compacted"] == 4
-        and blob["files_total"] == 5
-        and m["files"][big_dir] == big["files"][big_dir]
-        and m["file_stats"][big_dir] == big["file_stats"][big_dir]
-    )
-    layout_only = vt_read_changes(spark, path, v - 1, v).count() == 0
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(packed_only_small)).alias("packed_only_small"),
-            F.lit(bool(layout_only)).alias("layout_only"),
-        )
-    )
-
-
-_EVENTS_VT_COMPACT_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (SELECT max(event_id) AS hi FROM t),
-tail AS (
-  SELECT hi + 1 AS event_id, 'compact_a' AS event_type,
-         CAST(1.5 AS DECIMAL(38,12)) AS v FROM b
-  UNION ALL SELECT hi + 2, 'compact_b', CAST(2.5 AS DECIMAL(38,12)) FROM b
-  UNION ALL SELECT hi + 3, 'compact_a', CAST(3.5 AS DECIMAL(38,12)) FROM b
-  UNION ALL SELECT hi + 4, 'compact_b', CAST(4.5 AS DECIMAL(38,12)) FROM b
-),
-full_t AS (
-  SELECT event_id, event_type, v FROM t
-  UNION ALL
-  SELECT event_id, event_type, v FROM tail
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS packed_only_small,
-       TRUE AS layout_only
-FROM full_t
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_compact_incremental"] = FnWorkload(
-    _events_vt_compact_incremental, _EVENTS_VT_COMPACT_SQL
-)
-
-
-def _events_vt_reorg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TARGETED deletion-vector purge, EXECUTED (vt_reorg r12 — Delta's
-    ``REORG TABLE … APPLY (PURGE)``, Iceberg's rewrite_position_delete_
-    files): OPTIMIZE events into 8 range-clustered files, DV-delete the
-    bottom ~5% of the event_id range (positions land in the FIRST
-    cluster only), then vt_reorg. The reorg rewrites EXACTLY the
-    vectored file(s) — every healthy file is referenced verbatim with
-    stats carried — clearing the table's DV debt WITHOUT the
-    full-snapshot vt_optimize that used to be merge-on-read's only
-    exit. At 100 TB this is the difference between rewriting a dozen
-    dirty 1 GB files and rewriting the table. Pinned INSIDE the oracle
-    hash: ``targeted`` (reorg audit blob: files_rewritten ==
-    dv_files_purged, strictly fewer than files_total, dv_rows_purged ==
-    the delete's matched rows), ``dv_cleared`` (the head carries zero
-    vectors afterwards and the logical count is unchanged by the
-    purge), ``layout_only`` (the change feed sees ZERO rows across the
-    reorg commit), ``time_travel_intact`` (the pre-delete snapshot
-    still counts every physical row). The surviving aggregate equals
-    the SQL mirror's plain ``WHERE NOT (…)``."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_delete,
-        vt_history,
-        vt_optimize,
-        vt_read,
-        vt_read_changes,
-        vt_reorg,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtreorg", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    cut = lo + (hi - lo) // 20
-    pre_v = vt_optimize(spark, path, ["event_id"], n_partitions=8)
-    n_before = vt_count(spark, path)
-    vt_delete(spark, path, ("event_id", "<=", cut), mode="dv")
-    matched = vt_history(path)[0]["delete"]["rows_matched"]
-    v = vt_reorg(spark, path, bloom_cols=["event_type"])
-    hist = vt_history(path)[0]
-    blob = hist["reorg"]
-    targeted = (
-        blob["files_rewritten"] == blob["dv_files_purged"]
-        and 0 < blob["files_rewritten"] < blob["files_total"]
-        and blob["dv_rows_purged"] == matched > 0
-    )
-    dv_cleared = (
-        "dv" not in hist
-        and vt_count(spark, path) == n_before - matched
-    )
-    layout_only = vt_read_changes(spark, path, v - 1, v).count() == 0
-    time_travel_intact = vt_count(spark, path, pre_v) == n_before
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(targeted)).alias("targeted"),
-            F.lit(bool(dv_cleared)).alias("dv_cleared"),
-            F.lit(bool(layout_only)).alias("layout_only"),
-            F.lit(bool(time_travel_intact)).alias("time_travel_intact"),
-        )
-    )
-
-
-_EVENTS_VT_REORG_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (
-  SELECT min(event_id) + (max(event_id) - min(event_id)) // 20 AS cut
-  FROM t
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS targeted,
-       TRUE AS dv_cleared,
-       TRUE AS layout_only,
-       TRUE AS time_travel_intact
-FROM t, b
-WHERE NOT (event_id <= cut)
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_reorg"] = FnWorkload(
-    _events_vt_reorg, _EVENTS_VT_REORG_SQL
-)
-
-
-def _events_vt_dv_consolidate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """DELETION-VECTOR SIDECAR CONSOLIDATION at checkpoint, EXECUTED
-    (vt_checkpoint(consolidate_dv=True) r12 — Delta rewrites DV
-    descriptors into each checkpoint so scan planning never replays the
-    commit log): stage an OPTIMIZEd events table, take FIVE separate
-    single-row DV deletes (five commits → five immutable sidecars →
-    five driver-side opens per scan plan), then checkpoint with
-    consolidation. Every live vector folds into ONE sidecar via a
-    metadata-only commit, so scan planning opens O(1) sidecar files no
-    matter how many DV commits accumulated — the 100 TB posture for a
-    table taking steady GDPR point-deletes. Pinned INSIDE the oracle
-    hash: ``consolidated`` (head dv entries reference exactly ONE
-    sidecar, down from five, with the audit blob recording the fold),
-    ``vectors_intact`` (hidden-row total and logical count unchanged by
-    the fold), ``layout_only`` (the change feed sees ZERO rows across
-    the consolidation commit). The aggregate equals the SQL mirror's
-    ``NOT IN`` over the five deleted ids.
-
-    Staging note: the table is built as five appends sliced by
-    ``event_id % 5`` so each point-delete of ``lo + k`` (k = 0..4,
-    dense ids → distinct residues) is GUARANTEED to vector a file in a
-    distinct directory — five commits, five sidecars, deterministically
-    (same-file re-deletes would merge into one sidecar and make the
-    fold a no-op)."""
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_count,
-        vt_delete,
-        vt_head,
-        vt_history,
-        vt_read,
-        vt_read_changes,
-        vt_checkpoint,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtdvconsol", sf_dir), "ev")
-    for k in range(5):
-        vt_write(
-            spark,
-            path,
-            ev.filter(F.col("event_id") % 5 == k).coalesce(1),
-            mode="append" if k else "overwrite",
-        )
-    # metadata-only bounds across the five staged dirs (r15, guide §1.2)
-    lo = _staged_minmax(path, "event_id")[0]
-    n_before = vt_count(spark, path)
-    matched = 0
-    for i in range(5):
-        vt_delete(spark, path, ("event_id", "=", lo + i), mode="dv")
-        matched += vt_history(path)[0]["delete"]["rows_matched"]
-
-    def _dv_state(m: dict) -> tuple[int, int]:
-        dv = m.get("dv") or {}
-        refs = {e["ref"] for fmap in dv.values() for e in fmap.values()}
-        rows = sum(e["count"] for fmap in dv.values() for e in fmap.values())
-        return len(refs), rows
-
-    refs_before, rows_before = _dv_state(_read_manifest(path, vt_head(path)))
-    v = vt_checkpoint(spark, path, consolidate_dv=True)
-    head_m = _read_manifest(path, v)
-    refs_after, rows_after = _dv_state(head_m)
-    hist = vt_history(path)[0]
-    consolidated = (
-        refs_before == 5
-        and refs_after == 1
-        and hist.get("dv_consolidate", {}).get("refs_before") == 5
-    )
-    vectors_intact = (
-        rows_after == rows_before == matched
-        and vt_count(spark, path) == n_before - matched
-    )
-    layout_only = vt_read_changes(spark, path, v - 1, v).count() == 0
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(consolidated)).alias("consolidated"),
-            F.lit(bool(vectors_intact)).alias("vectors_intact"),
-            F.lit(bool(layout_only)).alias("layout_only"),
-        )
-    )
-
-
-_EVENTS_VT_DV_CONSOLIDATE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (SELECT min(event_id) AS lo FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS consolidated,
-       TRUE AS vectors_intact,
-       TRUE AS layout_only
-FROM t, b
-WHERE event_id NOT IN (lo, lo + 1, lo + 2, lo + 3, lo + 4)
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_dv_consolidate"] = FnWorkload(
-    _events_vt_dv_consolidate, _EVENTS_VT_DV_CONSOLIDATE_SQL
-)
-
-
-def _events_vt_column_mapping(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """COLUMN MAPPING end-to-end, EXECUTED (vt_rename_column /
-    vt_drop_column / vt_add_column r12 — Delta's ``columnMapping.mode =
-    name``, Iceberg's field IDs): OPTIMIZE events into 6 range-clustered
-    files, RENAME ``event_id``→``eid`` and ``v``→``amount`` (two
-    metadata-only commits — the data directories of the head are
-    referenced VERBATIM, zero bytes moved on a 100 TB table), then run
-    the whole read/DML surface through the NEW names: a stats-pruned
-    scan plan over ``eid`` (footer stats stay keyed by the stable
-    PHYSICAL name; the planner translates), a file-granular DELETE of
-    the bottom ~5% of the renamed key, DROP ``event_type`` and re-ADD
-    it — the re-added logical name maps to a FRESH physical name, so
-    the dropped column's on-disk bytes can never resurrect (every row
-    reads NULL). Pinned INSIDE the oracle hash: ``metadata_only`` (both
-    rename manifests reference the optimize commit's dirs unchanged),
-    ``pruned`` (the renamed-key plan keeps strictly fewer files than
-    the snapshot holds), ``time_travel_old_names`` (the pre-rename
-    version still serves ``event_id``/``v``), ``protocol_gated`` (the
-    mapped head demands reader/writer protocol 3 — mapping-blind
-    engines refuse rather than serve stale names), ``no_resurrection``
-    (the re-added column is all-NULL). The surviving aggregate equals
-    the SQL mirror's plain ``WHERE NOT (event_id <= cut)`` — renames
-    never change values, only labels."""
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_add_column,
-        vt_count,
-        vt_delete,
-        vt_drop_column,
-        vt_optimize,
-        vt_read,
-        vt_rename_column,
-        vt_scan_plan,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtcolmap", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    # metadata-only bounds from the staged footers (r15, guide §1.2)
-    lo, hi = _staged_minmax(path, "event_id")
-    cut = lo + (hi - lo) // 20
-    opt_v = vt_optimize(spark, path, ["event_id"], n_partitions=6)
-    opt_dirs = _read_manifest(path, opt_v)["dirs"]
-    r1 = vt_rename_column(path, "event_id", "eid")
-    r2 = vt_rename_column(path, "v", "amount")
-    metadata_only = (
-        _read_manifest(path, r1)["dirs"] == opt_dirs
-        and _read_manifest(path, r2)["dirs"] == opt_dirs
-    )
-    plan = vt_scan_plan(path, None, ("eid", "<=", cut))
-    pruned = 0 < plan["files_kept"] < plan["files_total"]
-    old = vt_read(spark, path, version=opt_v)
-    time_travel_old_names = old.columns == ["event_id", "event_type", "v"]
-    proto = _read_manifest(path, r2).get("protocol") or {}
-    protocol_gated = (
-        proto.get("min_reader") == 3 and proto.get("min_writer") == 3
-    )
-    n_before = vt_count(spark, path)
-    vt_delete(spark, path, ("eid", "<=", cut))
-    vt_drop_column(path, "event_type")
-    vt_add_column(path, "event_type", "string")
-    snap = vt_read(spark, path)
-    no_resurrection = (
-        snap.filter(F.col("event_type").isNotNull()).count() == 0
-        and vt_count(spark, path) < n_before
-    )
-    return (
-        snap.groupBy((F.col("eid") % 7).cast("long").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("amount"), 6).cast("double").alias("sum_amount"),
-        )
-        .select(
-            "bucket",
-            "n",
-            "sum_amount",
-            F.lit(bool(metadata_only)).alias("metadata_only"),
-            F.lit(bool(pruned)).alias("pruned"),
-            F.lit(bool(time_travel_old_names)).alias(
-                "time_travel_old_names"
-            ),
-            F.lit(bool(protocol_gated)).alias("protocol_gated"),
-            F.lit(bool(no_resurrection)).alias("no_resurrection"),
-        )
-    )
-
-
-_EVENTS_VT_COLUMN_MAPPING_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (
-  SELECT min(event_id) + (max(event_id) - min(event_id)) // 20 AS cut
-  FROM t
-)
-SELECT CAST(event_id % 7 AS BIGINT) AS bucket, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_amount,
-       TRUE AS metadata_only,
-       TRUE AS pruned,
-       TRUE AS time_travel_old_names,
-       TRUE AS protocol_gated,
-       TRUE AS no_resurrection
-FROM t, b
-WHERE NOT (event_id <= cut)
-GROUP BY bucket
-""".strip()
-
-
-LLM_QUERIES["events_vt_column_mapping"] = FnWorkload(
-    _events_vt_column_mapping, _EVENTS_VT_COLUMN_MAPPING_SQL
-)
-
-
-def _events_vt_widen_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TYPE WIDENING end-to-end, EXECUTED (vt_widen_column r12 —
-    Delta's ``typeWidening`` table feature): stage events with an INT
-    code column and a FLOAT measure, widen both declarations
-    (``int``→``bigint``, ``float``→``double``) as METADATA-ONLY commits
-    — the staged directory is referenced verbatim; the explicit-schema
-    read lets Spark's vectorized parquet reader upcast the narrow
-    files at scan, the mechanism measured in this container — then
-    append a row carrying values only the WIDE types can hold
-    (``2^40`` overflows int; the narrow files and the wide append read
-    back in ONE scan). Pinned INSIDE the oracle hash: ``metadata_only``
-    (both widen manifests reference the stage commit's dirs unchanged),
-    ``widened`` (the head serves bigint/double), ``time_travel_narrow``
-    (the pre-widen version still serves int/float — each manifest owns
-    its schema), ``wide_row_landed`` (the 2^40 row is present and
-    metadata MIN/MAX sees it). Aggregates avoid float-order
-    nondeterminism: integer SUM over the widened code column, MIN/MAX
-    over the measure — all order-independent, bit-exact against the
-    DuckDB mirror (IEEE float→double widening is exact in both
-    engines)."""
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_minmax,
-        vt_read,
-        vt_widen_column,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        (F.col("event_id") % 1000).cast("int").alias("code"),
-        F.col("value").cast("float").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtwiden", sf_dir), "ev")
-    v1 = vt_write(spark, path, ev)
-    stage_dirs = _read_manifest(path, v1)["dirs"]
-    w1 = vt_widen_column(path, "code", "bigint")
-    w2 = vt_widen_column(path, "v", "double")
-    metadata_only = (
-        _read_manifest(path, w1)["dirs"] == stage_dirs
-        and _read_manifest(path, w2)["dirs"] == stage_dirs
-    )
-    wide = spark.createDataFrame(
-        [(2**40, 1.5e10)], "code bigint, v double"
-    )
-    vt_write(spark, path, wide, mode="append")
-    snap = vt_read(spark, path)
-    widened = dict(snap.dtypes) == {"code": "bigint", "v": "double"}
-    narrow = dict(vt_read(spark, path, version=v1).dtypes)
-    time_travel_narrow = narrow == {"code": "int", "v": "float"}
-    wide_row_landed = (
-        snap.filter(F.col("code") == 2**40).count() == 1
-        and vt_minmax(spark, path, "code")[1] == 2**40
-    )
-    return (
-        snap.groupBy((F.col("code") % 7).cast("long").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("code").alias("sum_code"),
-            F.round(F.min("v"), 6).cast("double").alias("min_v"),
-            F.round(F.max("v"), 6).cast("double").alias("max_v"),
-        )
-        .select(
-            "bucket",
-            "n",
-            "sum_code",
-            "min_v",
-            "max_v",
-            F.lit(bool(metadata_only)).alias("metadata_only"),
-            F.lit(bool(widened)).alias("widened"),
-            F.lit(bool(time_travel_narrow)).alias("time_travel_narrow"),
-            F.lit(bool(wide_row_landed)).alias("wide_row_landed"),
-        )
-    )
-
-
-_EVENTS_VT_WIDEN_TYPES_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT CAST(event_id % 1000 AS INTEGER) AS code,
-         CAST(value AS REAL) AS v
-  FROM ev
-),
-w AS (
-  SELECT CAST(code AS BIGINT) AS code, CAST(v AS DOUBLE) AS v FROM t
-  UNION ALL
-  SELECT CAST(1099511627776 AS BIGINT), CAST(1.5e10 AS DOUBLE)
-)
-SELECT CAST(code % 7 AS BIGINT) AS bucket, count(*) AS n,
-       CAST(sum(code) AS BIGINT) AS sum_code,
-       CAST(round(min(v), 6) AS DOUBLE) AS min_v,
-       CAST(round(max(v), 6) AS DOUBLE) AS max_v,
-       TRUE AS metadata_only,
-       TRUE AS widened,
-       TRUE AS time_travel_narrow,
-       TRUE AS wide_row_landed
-FROM w
-GROUP BY bucket
-""".strip()
-
-
-LLM_QUERIES["events_vt_widen_types"] = FnWorkload(
-    _events_vt_widen_types, _EVENTS_VT_WIDEN_TYPES_SQL
-)
-
-
-def _events_vt_generated_identity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """GENERATED + IDENTITY columns, EXECUTED (r12 — Delta's GENERATED
-    ALWAYS AS (expr) / AS IDENTITY): stage the low half of events with a
-    generated measure (``gross = v + v``, computed by the ENGINE from
-    the recorded table property — the writer never supplies it) and an
-    identity key assigned without a global shuffle, then append the high
-    half (property inherited, ids continue above the recorded high
-    watermark). Pinned INSIDE the oracle hash: ``ids_unique`` (distinct
-    ids == rows — assignment is collision-free across both appends),
-    ``ids_monotone`` (the manifest high watermark strictly advanced and
-    every id ≥ start), ``explicit_id_refused`` (a write supplying the
-    identity column raises — GENERATED ALWAYS), ``generated_validated``
-    (a write supplying an INCONSISTENT generated value raises, nothing
-    committed). The surviving aggregate exposes only deterministic
-    columns (ids are partition-order-dependent by design, Delta's gap
-    contract) and equals the SQL mirror recomputing the generation
-    expression from base data."""
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_count,
-        vt_read,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    b = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    cut = b["lo"] + (b["hi"] - b["lo"]) // 2
-    path = os.path.join(_scratch_dir("vtgenid", sf_dir), "ev")
-    lo_half = ev.filter(F.col("event_id") <= cut).select("event_type", "v")
-    hi_half = ev.filter(F.col("event_id") > cut).select("event_type", "v")
-    v1 = vt_write(
-        spark,
-        path,
-        lo_half,
-        generated={"gross": "v + v"},
-        identity={"rid": {"start": 1, "step": 1}},
-    )
-    hw1 = _read_manifest(path, v1)["identity"]["rid"]["high_water"]
-    v2 = vt_write(spark, path, hi_half, mode="append")
-    hw2 = _read_manifest(path, v2)["identity"]["rid"]["high_water"]
-    snap = vt_read(spark, path)
-    n_total = vt_count(spark, path)
-    idrow = snap.agg(
-        F.countDistinct("rid").alias("d"), F.min("rid").alias("lo")
-    ).collect()[0]
-    ids_unique = idrow["d"] == n_total
-    ids_monotone = hw2 > hw1 and idrow["lo"] >= 1
-    try:
-        vt_write(
-            spark,
-            path,
-            snap.limit(1).select("rid", "event_type", "v"),
-            mode="append",
-        )
-        explicit_id_refused = False
-    except ValueError:
-        explicit_id_refused = True
-    try:
-        bad = snap.limit(1).select(
-            "event_type", "v", F.col("v").alias("gross")
-        )
-        vt_write(spark, path, bad, mode="append")
-        generated_validated = False
-    except ValueError:
-        generated_validated = (
-            vt_count(spark, path) == n_total  # nothing committed
-        )
-    return (
-        snap.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("gross"), 6).cast("double").alias("sum_gross"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_gross",
-            F.lit(bool(ids_unique)).alias("ids_unique"),
-            F.lit(bool(ids_monotone)).alias("ids_monotone"),
-            F.lit(bool(explicit_id_refused)).alias("explicit_id_refused"),
-            F.lit(bool(generated_validated)).alias("generated_validated"),
-        )
-    )
-
-
-_EVENTS_VT_GENERATED_IDENTITY_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v + v), 6) AS DOUBLE) AS sum_gross,
-       TRUE AS ids_unique,
-       TRUE AS ids_monotone,
-       TRUE AS explicit_id_refused,
-       TRUE AS generated_validated
-FROM t
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_generated_identity"] = FnWorkload(
-    _events_vt_generated_identity, _EVENTS_VT_GENERATED_IDENTITY_SQL
-)
-
-
-def _events_vt_delete_filedrop(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """METADATA-ONLY whole-file DELETE, EXECUTED (vt_delete rewrite
-    mode's stats-proved fast path, r12 — Delta drops a file from the
-    log when its stats prove every row matches the predicate): events
-    staged as EIGHT single-file appends over disjoint event_id octiles
-    (exact proof boundaries by construction), then a retention-style
-    delete of the bottom three octiles WITHOUT change_feed. The commit
-    reads and writes ZERO data bytes: the three interior files'
-    min/max + exact null-count footers prove every logical row matches,
-    so their references simply leave the manifest (the predicate is
-    recorded, so the streaming source still replays the deletions
-    exactly). At 100 TB this is the difference between a date-retention
-    delete costing a manifest write and costing a multi-terabyte scan.
-    Pinned INSIDE the oracle hash: ``pure_metadata`` (files_rewritten
-    == 0, files_dropped == 3, rows_dropped == the exact octile row
-    count), ``time_travel_intact`` (the pre-delete snapshot still
-    counts every row). The surviving aggregate equals the SQL mirror's
-    plain ``WHERE NOT (…)``."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_delete,
-        vt_history,
-        vt_read,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    b = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    lo, hi = b["lo"], b["hi"]
-    bounds = [lo + (hi - lo + 1) * k // 8 for k in range(9)]
-    path = os.path.join(_scratch_dir("vtfiledrop", sf_dir), "ev")
-    for k in range(8):
-        vt_write(
-            spark,
-            path,
-            ev.filter(
-                (F.col("event_id") >= bounds[k])
-                & (F.col("event_id") < bounds[k + 1])
-            ).coalesce(1),
-            mode="append" if k else "overwrite",
-        )
-    n_before = vt_count(spark, path)
-    cut = bounds[3]
-    v = vt_delete(spark, path, ("event_id", "<", cut))
-    blob = vt_history(path)[0]["delete"]
-    n_after = vt_count(spark, path)
-    pure_metadata = (
-        blob["files_rewritten"] == 0
-        and blob["files_dropped"] == 3
-        and blob["rows_dropped"] == n_before - n_after > 0
-    )
-    time_travel_intact = vt_count(spark, path, v - 1) == n_before
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(pure_metadata)).alias("pure_metadata"),
-            F.lit(bool(time_travel_intact)).alias("time_travel_intact"),
-        )
-    )
-
-
-_EVENTS_VT_DELETE_FILEDROP_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (
-  SELECT min(event_id) + (max(event_id) - min(event_id) + 1) * 3 // 8
-           AS cut
-  FROM t
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS pure_metadata,
-       TRUE AS time_travel_intact
-FROM t, b
-WHERE NOT (event_id < cut)
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_delete_filedrop"] = FnWorkload(
-    _events_vt_delete_filedrop, _EVENTS_VT_DELETE_FILEDROP_SQL
-)
-
-
-def _events_vt_optimize_where(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """PREDICATE-SCOPED OPTIMIZE, EXECUTED (vt_optimize(where=...) r12 —
-    Delta's ``OPTIMIZE … WHERE``, the per-partition-of-the-keyspace
-    maintenance the whole-snapshot rewrite is not): events staged as
-    eight single-file octile appends with a deletion vector planted in
-    the first octile, then a scoped recluster of the bottom three
-    octiles. The commit rewrites EXACTLY the three in-scope files into
-    one range-clustered file — the five out-of-scope files are
-    referenced verbatim, file lists byte-identical — and the rewrite
-    materializes the in-scope vector while leaving no phantom rows. At
-    100 TB this is "recluster yesterday's ingest": pay yesterday's
-    bytes, never the table. Pinned INSIDE the oracle hash: ``scoped``
-    (audit blob: scope="where", files_rewritten == 3 < files_total ==
-    8, recorded predicate), ``verbatim_out_of_scope`` (all five
-    untouched file references carried unchanged),
-    ``dv_materialized`` (the head carries zero vectors afterwards and
-    the vectored row stays deleted). The aggregate equals the SQL
-    mirror's ``WHERE NOT (deleted row)``."""
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_delete,
-        vt_head,
-        vt_history,
-        vt_optimize,
-        vt_read,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    b = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    lo, hi = b["lo"], b["hi"]
-    bounds = [lo + (hi - lo + 1) * k // 8 for k in range(9)]
-    path = os.path.join(_scratch_dir("vtoptwhere", sf_dir), "ev")
-    for k in range(8):
-        vt_write(
-            spark,
-            path,
-            ev.filter(
-                (F.col("event_id") >= bounds[k])
-                & (F.col("event_id") < bounds[k + 1])
-            ).coalesce(1),
-            mode="append" if k else "overwrite",
-        )
-    vt_delete(spark, path, ("event_id", "=", lo), mode="dv")
-    before = _read_manifest(path, vt_head(path))
-    cut = bounds[3]
-    v = vt_optimize(
-        spark, path, ["event_id"], n_partitions=1,
-        where=("event_id", "<", cut),
-    )
-    blob = vt_history(path)[0]["optimize"]
-    m = _read_manifest(path, v)
-    scoped = (
-        blob["scope"] == "where"
-        and blob["files_rewritten"] == 3
-        and blob["files_total"] == 8
-        and blob["predicate"] == [["event_id", "<", cut]]
-    )
-    kept = [d for d in before["dirs"] if d in m["dirs"]]
-    verbatim_out_of_scope = len(kept) == 5 and all(
-        m["files"][d] == before["files"][d] for d in kept
-    )
-    dv_materialized = not m.get("dv")
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(scoped)).alias("scoped"),
-            F.lit(bool(verbatim_out_of_scope)).alias(
-                "verbatim_out_of_scope"
-            ),
-            F.lit(bool(dv_materialized)).alias("dv_materialized"),
-        )
-    )
-
-
-_EVENTS_VT_OPTIMIZE_WHERE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-b AS (SELECT min(event_id) AS lo FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS scoped,
-       TRUE AS verbatim_out_of_scope,
-       TRUE AS dv_materialized
-FROM t, b
-WHERE event_id <> lo
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_optimize_where"] = FnWorkload(
-    _events_vt_optimize_where, _EVENTS_VT_OPTIMIZE_WHERE_SQL
-)
-
-
-def _events_vt_convert(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CONVERT TO vt, EXECUTED (``vt_convert``, r14 — Delta's CONVERT
-    TO DELTA, the adoption path): the testdata's own
-    ``events.parquet`` becomes a versioned table WITHOUT a byte of
-    data read or rewritten — files hard-linked into the table's
-    immutable directory, footer stats/row counts harvested driver-side
-    with pyarrow, one creation commit.
-
-    Pinned INSIDE the oracle hash: ``zero_copy`` (every table file
-    shares its source file's INODE — the link, not a copy, and the
-    source is untouched), ``metadata_count_exact`` (``vt_count``
-    answers from harvested footers, no scan, and equals the row
-    count), ``stats_prune_works`` (an impossible range plans ZERO
-    files — the harvested stats drive skipping immediately). The
-    aggregate reads the converted table through the format reader."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_convert,
-        vt_count,
-        vt_scan_plan,
-    )
-
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    path = os.path.join(_scratch_dir("vtconv", sf_dir), "ev")
-    v = vt_convert(spark, src, path)
-    m = _read_manifest(path, v)
-    d = m["dirs"][0]
-    zero_copy = all(
-        os.stat(os.path.join(path, d, f)).st_ino
-        == os.stat(src).st_ino
-        for f in m["files"][d]
-    )
-    n = vt_count(spark, path)
-    plan = vt_scan_plan(
-        path, predicate=("event_id", "<", -1)
-    )
-    stats_prune_works = plan["files_kept"] == 0
-    vt_register(spark)
-    fmt = (
-        spark.read.format("vt").option("path", path).load()
-    )
-    metadata_count_exact = n == fmt.count()
-    return (
-        fmt.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(38,12)")), 6
-            ).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(zero_copy)).alias("zero_copy"),
-            F.lit(bool(metadata_count_exact)).alias(
-                "metadata_count_exact"
-            ),
-            F.lit(bool(stats_prune_works)).alias("stats_prune_works"),
-        )
-    )
-
-
-_EVENTS_VT_CONVERT_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS zero_copy,
-       TRUE AS metadata_count_exact,
-       TRUE AS stats_prune_works
-FROM ev
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_convert"] = FnWorkload(
-    _events_vt_convert, _EVENTS_VT_CONVERT_SQL
-)
-
-
-def _events_vt_generated_partition_prune(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """GENERATED-COLUMN PARTITION PRUNING, EXECUTED
-    (``_augment_generated_conjuncts``, r14 — Delta's derived partition
-    predicates): events staged partitioned by a GENERATED
-    ``day = date_format(ts, 'yyyy-MM-dd')`` column, then scanned with
-    a predicate on **ts alone** — the recognized monotone transform
-    lets the planner imply ``day >= f(lo) AND day <= f(hi)`` and prune
-    whole day directories the ts predicate never mentions.
-
-    Pinned INSIDE the oracle hash: ``derived_pruning_exact`` — the
-    plan keeps EXACTLY the directories whose recorded day falls inside
-    the implied day window (computed independently from the manifest's
-    partition values) and prunes every other one. The aggregate
-    (per-day counts and value sums over the ts range) equals the SQL
-    mirror's plain WHERE on ts."""
-    import datetime as _dt
-
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_head,
-        vt_scan_plan,
-        vt_write,
-    )
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 5 == 3)
-        .select(
-            "event_id",
-            "ts",
-            F.col("value").cast("decimal(38,12)").alias("v"),
-        )
-    )
-    path = os.path.join(_scratch_dir("vtgenpart", sf_dir), "ev")
-    vt_write(
-        spark,
-        path,
-        ev,
-        generated={"day": "date_format(ts, 'yyyy-MM-dd')"},
-        partition_by=["day"],
-    )
-    t0 = ev.select(F.min("ts")).first()[0]
-    lo = t0 + _dt.timedelta(days=3, hours=6)
-    hi = t0 + _dt.timedelta(days=6, hours=18)
-    plan = vt_scan_plan(
-        path, predicate=[("ts", ">=", lo), ("ts", "<", hi)]
-    )
-    m = _read_manifest(path, vt_head(path))
-    d_lo, d_hi = lo.strftime("%Y-%m-%d"), hi.strftime("%Y-%m-%d")
-    expected_kept = sum(
-        1
-        for pv in (m.get("partitions") or {}).values()
-        if d_lo <= pv["day"] <= d_hi
-    )
-    total_dirs = len(m["dirs"])
-    derived_pruning_exact = (
-        plan["dirs_kept"] == expected_kept
-        and plan.get("partition_pruned", 0)
-        == total_dirs - expected_kept
-        and 0 < expected_kept < total_dirs
-    )
-    from ..sources.versioned import vt_read
-
-    return (
-        vt_read(spark, path)
-        .filter((F.col("ts") >= F.lit(lo)) & (F.col("ts") < F.lit(hi)))
-        .groupBy("day")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "day",
-            "n",
-            "sum_value",
-            F.lit(bool(derived_pruning_exact)).alias(
-                "derived_pruning_exact"
-            ),
-        )
-    )
-
-
-_EVENTS_VT_GENERATED_PARTITION_PRUNE_SQL = f"""
-WITH ev AS (
-  SELECT * FROM ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-  WHERE event_id % 5 = 3
-),
-b AS (
-  SELECT min(ts) + INTERVAL 3 DAY + INTERVAL 6 HOUR AS lo,
-         min(ts) + INTERVAL 6 DAY + INTERVAL 18 HOUR AS hi
-  FROM ev
-)
-SELECT strftime(ts, '%Y-%m-%d') AS day,
-       count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS derived_pruning_exact
-FROM ev, b
-WHERE ts >= b.lo AND ts < b.hi
-GROUP BY day
-""".strip()
-
-
-LLM_QUERIES["events_vt_generated_partition_prune"] = FnWorkload(
-    _events_vt_generated_partition_prune,
-    _EVENTS_VT_GENERATED_PARTITION_PRUNE_SQL,
-)
-
-
-def _events_vt_partitioned(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """HIVE-STYLE PARTITION COLUMNS, EXECUTED (vt_write(partition_by=…)
-    r13 — Delta's ``PARTITIONED BY`` re-expressed in the flat-directory
-    manifest model, see the partitioning comment in
-    sources/versioned.py): events land as ONE immutable directory per
-    ``event_type`` per commit (overwrite of the even event_ids, append
-    of the odd ones — the append INHERITS the recorded partitioning),
-    with the per-dir partition values recorded in the manifest like
-    Delta's add-file metadata. Then the 100 TB admin surface, all
-    pinned INSIDE the oracle hash:
-
-    * ``pruned_exact`` — a scan with an ``event_type`` equality keeps
-      exactly that type's directories; every other dir is eliminated by
-      the recorded value (EXACT, not min/max may-match), counted by the
-      plan's ``partition_pruned``;
-    * ``drop_partition_metadata_only`` — deleting one whole type
-      rewrites ZERO files and reads zero bytes: both of its directories
-      (one per staging commit) leave the manifest on the partition-value
-      proof alone (``dirs_dropped == 2``, ``files_rewritten == 0``), the
-      ``DROP PARTITION``-shaped retention path;
-    * ``rows_accounted`` — the audit blob's ``rows_dropped`` equals the
-      dropped type's exact row count (footer sums, no scan);
-    * ``time_travel_intact`` — the pre-delete snapshot still serves
-      every row.
-
-    The surviving aggregate equals the SQL mirror's plain
-    ``WHERE event_type <> dropped``."""
-    from ..sources.versioned import (
-        vt_count,
-        vt_delete,
-        vt_history,
-        vt_read,
-        vt_scan_plan,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtpart", sf_dir), "ev")
-    vt_write(
-        spark,
-        path,
-        ev.filter(F.col("event_id") % 2 == 0),
-        partition_by=["event_type"],
-    )
-    vt_write(
-        spark,
-        path,
-        ev.filter(F.col("event_id") % 2 == 1),
-        mode="append",
-    )
-    types = sorted(
-        r["event_type"]
-        for r in ev.select("event_type").distinct().collect()
-    )
-    dropped, probe = types[0], types[-1]
-    n_before = vt_count(spark, path)
-    plan = vt_scan_plan(path, predicate=("event_type", "=", probe))
-    pruned_exact = (
-        plan.get("partition_pruned", 0) == 2 * (len(types) - 1)
-        and plan["dirs_kept"] == 2
-    )
-    v = vt_delete(spark, path, ("event_type", "=", dropped))
-    blob = vt_history(path)[0]["delete"]
-    n_after = vt_count(spark, path)
-    drop_partition_metadata_only = (
-        blob["files_rewritten"] == 0 and blob.get("dirs_dropped") == 2
-    )
-    rows_accounted = (
-        blob["rows_dropped"] == n_before - n_after
-        and blob["rows_dropped"] > 0
-    )
-    time_travel_intact = vt_count(spark, path, v - 1) == n_before
-    # PARTITION-SPEC EVOLUTION leg (r14, verdict ask #6): clear the
-    # spec METADATA-ONLY (vt_set_partition_spec — Iceberg's lazy
-    # migration; future appends land unsplit) — the commit references
-    # the same dirs, and an event_type scan over the now-mixed-spec
-    # table still prunes the OLD dirs exactly on their own recorded
-    # values.
-    from ..sources.versioned import _read_manifest, vt_set_partition_spec
-
-    dirs_before_spec = _read_manifest(path, v)["dirs"]
-    sv = vt_set_partition_spec(path, [])
-    sm = _read_manifest(path, sv)
-    keep_type = (
-        vt_read(spark, path)
-        .agg(F.max("event_type").alias("m"))
-        .collect()[0]["m"]
-    )
-    post_plan = vt_scan_plan(
-        path, predicate=("event_type", "=", keep_type)
-    )
-    spec_evolved_metadata_only = (
-        sm["dirs"] == dirs_before_spec
-        and "partition_by" not in sm
-        and post_plan["partition_pruned"]
-        == len(sm["dirs"]) - post_plan["dirs_kept"]
-        and post_plan["partition_pruned"] > 0
-    )
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(pruned_exact)).alias("pruned_exact"),
-            F.lit(bool(drop_partition_metadata_only)).alias(
-                "drop_partition_metadata_only"
-            ),
-            F.lit(bool(rows_accounted)).alias("rows_accounted"),
-            F.lit(bool(time_travel_intact)).alias("time_travel_intact"),
-            F.lit(bool(spec_evolved_metadata_only)).alias(
-                "spec_evolved_metadata_only"
-            ),
-        )
-    )
-
-
-_EVENTS_VT_PARTITIONED_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-d AS (SELECT min(event_type) AS dropped FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS pruned_exact,
-       TRUE AS drop_partition_metadata_only,
-       TRUE AS rows_accounted,
-       TRUE AS time_travel_intact,
-       TRUE AS spec_evolved_metadata_only
-FROM t, d
-WHERE event_type <> dropped
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_partitioned"] = FnWorkload(
-    _events_vt_partitioned, _EVENTS_VT_PARTITIONED_SQL
-)
-
-
-def _events_vt_format_read(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BATCH PYTHON DATASOURCE READ, EXECUTED (spark.read.format("vt"),
-    r13 — the DataFrameReader half of the table format, next to the
-    streaming vt_changes source): events staged as a PARTITIONED table
-    (partition_by=event_type) that then takes a merge-on-read DV delete
-    and a column RENAME — the three features a format-blind reader
-    would corrupt (resurrected rows, physical names, unsplit scans) —
-    and is read back through ``spark.read.format("vt")`` as full-scan
-    aggregates (the dv_applied probe rides the parity aggregate since
-    r14; the pushFilters → manifest-pruning path is covered end to end
-    by tests/test_batch_datasource.py's
-    ``test_pushdown_prunes_partitions`` value assertion).
-
-    Pinned INSIDE the oracle hash: ``format_equals_native`` (the format
-    read and vt_read agree on count and sum over the whole table),
-    ``time_travel_option`` (versionAsOf=1 serves the pre-delete count),
-    ``dv_applied`` (the deleted row is absent from the format read).
-    The returned aggregate runs entirely through the format path."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import (
-        vt_count,
-        vt_delete,
-        vt_read,
-        vt_rename_column,
-        vt_write,
-    )
-
-    vt_register(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtformat", sf_dir), "ev")
-    vt_write(spark, path, ev, partition_by=["event_type"])
-    # metadata-only bounds (r15, guide §1.2): the staged footers hold
-    # min(event_id) exactly — no aggregate scan job
-    victim = _staged_minmax(path, "event_id")[0]
-    vt_delete(spark, path, ("event_id", "=", victim), mode="dv")
-    vt_rename_column(path, "v", "amount")
-    fmt = spark.read.format("vt").option("path", path).load()
-    native = vt_read(spark, path)
-    # the dv_applied probe rides the SAME format-scan aggregate as the
-    # count/sum parity (was a second full Python-datasource scan job
-    # just to count rows matching the deleted key)
-    a = fmt.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("amount").alias("s"),
-        F.sum(
-            F.when(F.col("event_id") == victim, 1).otherwise(0)
-        ).alias("victim_rows"),
-    ).collect()[0]
-    b = native.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("amount").alias("s")
-    ).collect()[0]
-    format_equals_native = a["n"] == b["n"] and a["s"] == b["s"]
-    pre = (
-        spark.read.format("vt")
-        .option("path", path)
-        .option("versionAsOf", "1")
-        .load()
-        .count()
-    )
-    time_travel_option = pre == vt_count(spark, path, 1) == a["n"] + 1
-    dv_applied = a["victim_rows"] == 0
-    return (
-        fmt.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("amount"), 6).cast("double").alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(format_equals_native)).alias(
-                "format_equals_native"
-            ),
-            F.lit(bool(time_travel_option)).alias("time_travel_option"),
-            F.lit(bool(dv_applied)).alias("dv_applied"),
-        )
-    )
-
-
-_EVENTS_VT_FORMAT_READ_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-d AS (SELECT min(event_id) AS victim FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS format_equals_native,
-       TRUE AS time_travel_option,
-       TRUE AS dv_applied
-FROM t, d
-WHERE event_id <> victim
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_format_read"] = FnWorkload(
-    _events_vt_format_read, _EVENTS_VT_FORMAT_READ_SQL
-)
-
-
-def _events_vt_format_write(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BATCH PYTHON DATASOURCE WRITE INTO A PARTITIONED BLOOM TABLE,
-    EXECUTED (df.write.format("vt"), r14 — verdict ask #1: the writer
-    half no longer blocks on partition_by/bloom_cols): events staged as
-    a partitioned table (partition_by=event_type, bloom_cols=event_id)
-    holding the event_id % 5 != 0 slice, then the % 5 == 0 remainder is
-    APPENDED through ``df.write.format("vt")`` — the external-writer
-    path. Tasks split their Arrow stream one staged file per partition
-    value and the commit groups them one immutable dir per value, so
-    the no-mixed-files invariant survives writes that never touch this
-    package's vt_write.
-
-    Pinned INSIDE the oracle hash: ``all_dirs_valued`` (every dir of
-    the post-append snapshot carries exact partition values — nothing
-    mixed), ``blooms_harvested`` (the gateway-free Arrow harvest
-    recorded event_id blooms for every appended file),
-    ``count_parity`` (metadata-only COUNT equals the input row count),
-    ``drop_partition_metadata_only`` (dropping the smallest event_type
-    AFTER the format append rewrites zero files and accounts its rows
-    exactly). The returned aggregate reads the post-drop snapshot."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_count,
-        vt_delete,
-        vt_history,
-        vt_read,
-        vt_write,
-    )
-
-    vt_register(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtfmtwrite", sf_dir), "ev")
-    vt_write(
-        spark,
-        path,
-        ev.filter(F.col("event_id") % 5 != 0),
-        partition_by=["event_type"],
-        bloom_cols=["event_id"],
-    )
-    m1 = _read_manifest(path, 1)
-    ev.filter(F.col("event_id") % 5 == 0).write.format("vt").mode(
-        "append"
-    ).option("path", path).save()
-    m2 = _read_manifest(path, 2)
-    new_dirs = sorted(set(m2["dirs"]) - set(m1["dirs"]))
-    all_dirs_valued = (
-        set(m2["dirs"]) == set(m2.get("partitions", {}))
-        and len(new_dirs) > 0
-    )
-    blooms_harvested = all(
-        "event_id" in fb
-        for d in new_dirs
-        for fb in m2.get("blooms", {}).get(d, {}).get(
-            "files", {}
-        ).values()
-    ) and all(d in m2.get("blooms", {}) for d in new_dirs)
-    # one aggregation job yields both driver scalars (was a count job
-    # plus a separate min job over the same source scan)
-    row0 = ev.agg(
-        F.count(F.lit(1)).alias("n"), F.min("event_type").alias("lo")
-    ).collect()[0]
-    n_total = row0["n"]
-    count_parity = vt_count(spark, path) == n_total
-    dropped = row0["lo"]
-    vt_delete(spark, path, ("event_type", "=", dropped))
-    blob = vt_history(path)[0]["delete"]
-    drop_partition_metadata_only = (
-        blob["files_rewritten"] == 0
-        and blob["dirs_dropped"] == 2
-        and blob["rows_dropped"] == n_total - vt_count(spark, path)
-    )
-    return (
-        vt_read(spark, path)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(all_dirs_valued)).alias("all_dirs_valued"),
-            F.lit(bool(blooms_harvested)).alias("blooms_harvested"),
-            F.lit(bool(count_parity)).alias("count_parity"),
-            F.lit(bool(drop_partition_metadata_only)).alias(
-                "drop_partition_metadata_only"
-            ),
-        )
-    )
-
-
-_EVENTS_VT_FORMAT_WRITE_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_type, CAST(value AS DECIMAL(38,12)) AS v
-  FROM ev
-),
-d AS (SELECT min(event_type) AS dropped FROM t)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(v), 6) AS DOUBLE) AS sum_value,
-       TRUE AS all_dirs_valued,
-       TRUE AS blooms_harvested,
-       TRUE AS count_parity,
-       TRUE AS drop_partition_metadata_only
-FROM t, d
-WHERE event_type <> dropped
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_format_write"] = FnWorkload(
-    _events_vt_format_write, _EVENTS_VT_FORMAT_WRITE_SQL
-)
-
-
-def _events_vt_format_changefeed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """BATCH CHANGE-DATA-FEED THROUGH THE FORMAT READER, EXECUTED
-    (``spark.read.format("vt").option("readChangeFeed", "true")``, r14
-    — verdict ask #3: Delta's batch-CDF option on the Python data
-    source): events staged as a vt table, then a merge-on-read DV
-    DELETE, a column RENAME (mapping), and a change-feed UPDATE — and
-    the whole history is read back as one batch DataFrame with
-    ``startingVersion=1``. The reader plans the range through the SAME
-    per-(commit, file) planner as the ``vt_changes`` streaming source
-    and reconciles to the ENDING version's schema, so the renamed
-    column's data flows under its final name with pre/post images
-    intact.
-
-    Pinned INSIDE the oracle hash: ``batch_equals_package`` (the format
-    CDF equals vt_read_changes over the full range, both directions of
-    exceptAll empty) and ``sub_range_scoped`` (an explicit
-    startingVersion/endingVersion window returns exactly that window's
-    commits). The returned aggregate is computed from the format CDF
-    frame."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import (
-        vt_delete,
-        vt_read_changes,
-        vt_rename_column,
-        vt_update,
-        vt_versions,
-        vt_write,
-    )
-
-    vt_register(spark)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.col("value").cast("decimal(38,12)").alias("v"),
-    )
-    path = os.path.join(_scratch_dir("vtfmtcdf", sf_dir), "ev")
-    vt_write(spark, path, ev)                                    # v1
-    lims = ev.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    vt_delete(spark, path, ("event_id", "=", lims["lo"]), mode="dv")
-    vt_rename_column(path, "v", "amount")                        # v3
-    vt_update(                                                   # v4
-        spark,
-        path,
-        ("event_id", "=", lims["hi"]),
-        {"amount": "amount + 1"},
-        change_feed=True,
-    )
-    head = vt_versions(path)[-1]
-    fmt = (
-        spark.read.format("vt")
-        .option("path", path)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", "1")
-        .load()
-    )
-    native = vt_read_changes(spark, path, 0, head)
-    batch_equals_package = _multiset_equal(fmt, native)
-    window = (
-        spark.read.format("vt")
-        .option("path", path)
-        .option("readChangeFeed", "true")
-        .option("startingVersion", "2")
-        .option("endingVersion", "2")
-        .load()
-    )
-    # one job for both facets of the pin (was distinct-collect + count)
-    wrow = window.agg(
-        F.collect_set("_change_type").alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    sub_range_scoped = set(wrow["s"]) == {"delete"} and wrow["n"] == 1
-    return (
-        fmt.groupBy("_change_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("amount"), 6).cast("double").alias(
-                "sum_amount"
-            ),
-        )
-        .select(
-            "_change_type",
-            "n",
-            "sum_amount",
-            F.lit(bool(batch_equals_package)).alias(
-                "batch_equals_package"
-            ),
-            F.lit(bool(sub_range_scoped)).alias("sub_range_scoped"),
-        )
-    )
-
-
-_EVENTS_VT_FORMAT_CHANGEFEED_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_id, CAST(value AS DECIMAL(38,12)) AS amount FROM ev
-),
-lim AS (SELECT min(event_id) AS lo, max(event_id) AS hi FROM t),
-changes AS (
-  SELECT 'insert' AS _change_type, amount FROM t
-  UNION ALL
-  SELECT 'delete', amount FROM t, lim WHERE event_id = lo
-  UNION ALL
-  SELECT 'update_preimage', amount FROM t, lim WHERE event_id = hi
-  UNION ALL
-  SELECT 'update_postimage', amount + 1 FROM t, lim
-  WHERE event_id = hi
-)
-SELECT _change_type, count(*) AS n,
-       CAST(round(sum(amount), 6) AS DOUBLE) AS sum_amount,
-       TRUE AS batch_equals_package,
-       TRUE AS sub_range_scoped
-FROM changes
-GROUP BY _change_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_format_changefeed"] = FnWorkload(
-    _events_vt_format_changefeed, _EVENTS_VT_FORMAT_CHANGEFEED_SQL
-)
-
-
-def _events_stream_format_sink(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """STREAMING WRITE THROUGH THE FORMAT SINK, EXECUTED
-    (``df.writeStream.format("vt")``, r14 — verdict ask #2: the
-    streaming half of the batch writer, completing the source/sink
-    matrix): events staged as a vt source table in two commits, its
-    ``vt_changes`` stream piped through the format sink with
-    ``trigger(availableNow)`` — every micro-batch appends via the
-    exactly-once txn guard ``(checkpoint identity, batchId)``, so
-    Spark's at-least-once replay is idempotent without foreachBatch
-    boilerplate.
-
-    Pinned INSIDE the oracle hash: ``exactly_once_restart`` (an idle
-    restart of the same checkpoint commits NOTHING — zero-row batches
-    skip, replayed batches no-op), ``foreachbatch_parity`` (the sink's
-    row set equals the foreachBatch + vt_write pattern's on a second
-    table, both exceptAll directions empty — the sink is a drop-in for
-    the pattern test_partitioned.py pins), ``txn_markers_recorded``
-    (the sink's commits carry the stream's txn app markers). The
-    returned aggregate reads the format-sink table."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import vt_read, vt_versions, vt_write
-    from ..sources.versioned import _read_manifest
-    from ..streaming.source import vt_change_stream
-
-    vt_register(spark)
-    base = _scratch_dir("vtfmtsink", sf_dir)
-    src = os.path.join(base, "src")
-    dst = os.path.join(base, "dst")
-    fb = os.path.join(base, "fb")
-    # a 1/5 slice: every pinned invariant (exactly-once restart,
-    # foreachBatch parity, txn markers) is volume-independent
-    # machinery; the slice keeps the bench cost at the machinery
-    # floor instead of scaling exceptAll parity joins with SF
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 5 == 1)
-        .select(
-            "event_id",
-            "event_type",
-            F.col("value").cast("decimal(38,12)").alias("v"),
-        )
-    )
-    vt_write(spark, src, ev.filter(F.col("event_id") % 10 == 1))
-    vt_write(
-        spark,
-        src,
-        ev.filter(F.col("event_id") % 10 == 6),
-        mode="append",
-    )
-
-    def run_sink() -> None:
-        q = (
-            vt_change_stream(spark, src)
-            .select("event_id", "event_type", "v")
-            .writeStream.format("vt")
-            .option("path", dst)
-            .option("checkpointLocation", os.path.join(base, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def for_each(bdf, _bid) -> None:
-        if bdf.isEmpty():
-            return
-        vt_write(
-            spark,
-            fb,
-            bdf,
-            mode="append" if vt_versions(fb) else "overwrite",
-        )
-
-    def _sink_leg() -> bool:
-        run_sink()
-        head = vt_versions(dst)[-1]
-        run_sink()  # idle restart: all batches already marked/empty
-        return vt_versions(dst)[-1] == head
-
-    def _fb_leg() -> None:
-        q = (
-            vt_change_stream(spark, src)
-            .select("event_id", "event_type", "v")
-            .writeStream.foreachBatch(for_each)
-            .option("checkpointLocation", os.path.join(base, "ckfb"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # the foreachBatch comparison stream is INDEPENDENT of both sink
-    # runs (same source table, disjoint sink/checkpoint), and each
-    # stream pays the Python-streaming-source runner's fixed startup —
-    # overlap it with the sink+restart pair from a second driver thread
-    # (r15, guide §2.6). exactly_once_restart still compares the head
-    # after run 1 vs run 2 exactly as the sequential r14 form did.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..util import spark_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_sink = pool.submit(spark_thread_target(spark, _sink_leg))
-        f_fb = pool.submit(spark_thread_target(spark, _fb_leg))
-        exactly_once_restart = f_sink.result()
-        f_fb.result()
-    sink_df = vt_read(spark, dst)
-    fb_df = vt_read(spark, fb)
-    foreachbatch_parity = _multiset_equal(sink_df, fb_df)
-    m = _read_manifest(dst, vt_versions(dst)[-1])
-    txn_markers_recorded = any(
-        app.startswith("vtstream:") for app in m.get("txns", {})
-    )
-    return (
-        sink_df.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(exactly_once_restart)).alias(
-                "exactly_once_restart"
-            ),
-            F.lit(bool(foreachbatch_parity)).alias(
-                "foreachbatch_parity"
-            ),
-            F.lit(bool(txn_markers_recorded)).alias(
-                "txn_markers_recorded"
-            ),
-        )
-    )
-
-
-_EVENTS_STREAM_FORMAT_SINK_SQL = f"""
-WITH ev AS (
-  SELECT * FROM ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-  WHERE event_id % 5 = 1
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS exactly_once_restart,
-       TRUE AS foreachbatch_parity,
-       TRUE AS txn_markers_recorded
-FROM ev
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_stream_format_sink"] = FnWorkload(
-    _events_stream_format_sink, _EVENTS_STREAM_FORMAT_SINK_SQL
-)
-
-
-def _events_vt_format_stream_read(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """STREAMING READ THROUGH THE FORMAT, EXECUTED
-    (``spark.readStream.format("vt")``, r14 — the read half that
-    completes the format's batch/stream × read/write matrix): events
-    staged as a vt table in two commits, streamed with NO
-    ``startingVersion`` — Delta's default source contract, an initial
-    snapshot of the table at query start, then appends — through a
-    checkpointed ``availableNow`` query into a parquet sink.
-
-    Pinned INSIDE the oracle hash: ``snapshot_matches_table`` (the
-    first run's output equals ``vt_read``, both exceptAll directions
-    empty), ``incremental_exact`` (a checkpoint restart after a third
-    append delivers EXACTLY that slice — no snapshot re-emit, no
-    misses), ``skip_change_ok`` (a delete commit is skipped wholesale
-    under ``option("skipChangeCommits", "true")``, leaving the
-    append-stream output untouched), ``cdf_parity`` (the same format
-    with ``option("readChangeFeed", "true")`` from version 0 emits the
-    byte-identical row set as the batch ``vt_read_changes`` API). The
-    returned aggregate reads the STREAMED output."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import (
-        vt_delete,
-        vt_read,
-        vt_read_changes,
-        vt_versions,
-        vt_write,
-    )
-
-    vt_register(spark)
-    base = _scratch_dir("vtfmtstream", sf_dir)
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ck = os.path.join(base, "ck")
-    # a 1/5 slice (see _events_stream_format_sink): the pinned
-    # invariants are machinery, not volume
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 5 == 0)
-        .select(
-            "event_id",
-            "event_type",
-            F.col("value").cast("decimal(38,12)").alias("v"),
-        )
-    )
-    vt_write(spark, src, ev.filter(F.col("event_id") % 15 == 5))
-    vt_write(
-        spark,
-        src,
-        ev.filter(F.col("event_id") % 15 == 10),
-        mode="append",
-    )
-
-    def run_stream(**opts) -> None:
-        reader = spark.readStream.format("vt").option("path", src)
-        for k, val in opts.items():
-            reader = reader.option(k, val)
-        q = (
-            reader.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_stream()
-    got = spark.read.parquet(out)
-    tbl = vt_read(spark, src)
-    snapshot_matches_table = _multiset_equal(got, tbl)
-    third = ev.filter(F.col("event_id") % 15 == 0)
-    vt_write(spark, src, third, mode="append")
-    run_stream()
-    got = spark.read.parquet(out)
-    incremental_exact = _multiset_equal(got, ev)
-    victim = third.select(F.min("event_id")).first()[0]
-    vt_delete(spark, src, ("event_id", "=", victim))
-
-    # The skip-commits re-run and the CDF stream are INDEPENDENT past
-    # this point (both only read src, one writes out/ck, the other a
-    # memory sink), and each pays the Python-streaming-source runner's
-    # fixed startup — overlap them from two driver threads (r15, guide
-    # §2.6; measured ~1.6 s of per-stream machinery hidden). Every pin
-    # is computed from the same post-stream states as the sequential
-    # r14 form.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..sources.versioned import vt_count
-
-    def _skip_leg() -> bool:
-        run_stream(skipChangeCommits="true")
-        # ev.count() == vt_count(src) + 1 after the single-row delete —
-        # the manifest's footer row counts answer it metadata-only
-        # (guide §1.2: the r14 form ran a second full scan job)
-        return spark.read.parquet(out).count() == vt_count(spark, src) + 1
-
-    def _cdf_leg() -> str:
-        cdf = (
-            spark.readStream.format("vt")
-            .option("path", src)
-            .option("readChangeFeed", "true")
-            .option("startingVersion", "0")
-            .load()
-        )
-        qn = f"vtfmtcdf_{os.getpid()}_{len(vt_versions(src))}"
-        q = (
-            cdf.writeStream.format("memory")
-            .queryName(qn)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return qn
-
-    from ..util import spark_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_skip = pool.submit(spark_thread_target(spark, _skip_leg))
-        f_cdf = pool.submit(spark_thread_target(spark, _cdf_leg))
-        skip_change_ok = f_skip.result()
-        qn = f_cdf.result()
-    streamed = spark.table(qn)
-    batch = vt_read_changes(spark, src, 0, vt_versions(src)[-1])
-    cdf_parity = _multiset_equal(streamed, batch)
-    return (
-        spark.read.parquet(out)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(snapshot_matches_table)).alias(
-                "snapshot_matches_table"
-            ),
-            F.lit(bool(incremental_exact)).alias("incremental_exact"),
-            F.lit(bool(skip_change_ok)).alias("skip_change_ok"),
-            F.lit(bool(cdf_parity)).alias("cdf_parity"),
-        )
-    )
-
-
-_EVENTS_VT_FORMAT_STREAM_READ_SQL = f"""
-WITH ev AS (
-  SELECT * FROM ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-  WHERE event_id % 5 = 0
-)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS snapshot_matches_table,
-       TRUE AS incremental_exact,
-       TRUE AS skip_change_ok,
-       TRUE AS cdf_parity
-FROM ev
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_format_stream_read"] = FnWorkload(
-    _events_vt_format_stream_read, _EVENTS_VT_FORMAT_STREAM_READ_SQL
-)
-
-
-def _events_vt_replace_where(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SELECTIVE OVERWRITE, EXECUTED (``vt_replace_where`` +
-    ``option("replaceWhere", …)``, r14 — Delta's replaceWhere, the
-    canonical 100 TB partition-backfill idiom): events staged as a vt
-    table PARTITIONED BY event_type, then ONE type's partition is
-    backfilled — the same rows with their value doubled — in a single
-    atomic commit: drop the old partition directory METADATA-ONLY
-    (the recorded partition values prove the predicate; zero files
-    read) and land the recomputed rows as a fresh valued directory.
-    No reader ever sees the two-commit delete-then-append gap.
-
-    Pinned INSIDE the oracle hash: ``backfill_metadata_only``
-    (``files_rewritten == 0`` and a whole directory dropped),
-    ``containment_refused`` (a frame holding a row OUTSIDE the
-    predicate region raises before anything commits — Delta's
-    containment contract — and the head is unchanged),
-    ``cdc_exact`` (``vt_read_changes`` over the commit emits exactly
-    delete(old partition) + insert(new partition)), ``format_parity``
-    (the same backfill through ``df.write.format("vt")
-    .option("replaceWhere", "event_type = '…'")`` on a second staged
-    table yields the byte-identical snapshot, both exceptAll
-    directions empty). The returned aggregate reads the backfilled
-    table."""
-    from ..sources.datasource import vt_register
-    from ..sources.versioned import (
-        _read_manifest,
-        vt_head,
-        vt_read,
-        vt_read_changes,
-        vt_replace_where,
-        vt_write,
-    )
-
-    base = _scratch_dir("vtreplw", sf_dir)
-    src = os.path.join(base, "src")
-    fmt = os.path.join(base, "fmt")
-    # a 1/5 slice (see _events_stream_format_sink): the pinned
-    # invariants are commit-shape machinery, not volume
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 5 == 2)
-        .select(
-            "event_id",
-            "event_type",
-            F.col("value").cast("decimal(38,12)").alias("v"),
-        )
-    )
-    vt_write(spark, src, ev, partition_by=["event_type"])
-    vt_write(spark, fmt, ev, partition_by=["event_type"])
-    target = ev.select(F.min("event_type")).first()[0]
-    refill = ev.filter(F.col("event_type") == target).withColumn(
-        "v", (F.col("v") * 2).cast("decimal(38,12)")
-    )
-    n_old = refill.count()
-    v = vt_replace_where(
-        spark, src, refill, ("event_type", "=", target)
-    )
-    blob = _read_manifest(src, v)["replace_where"]
-    backfill_metadata_only = (
-        blob["files_rewritten"] == 0 and blob.get("dirs_dropped", 0) >= 1
-    )
-    head_before = vt_head(src)
-    try:
-        vt_replace_where(
-            spark,
-            src,
-            ev.limit(1).withColumn(
-                "event_type", F.lit(target + "_stray")
-            ),
-            ("event_type", "=", target),
-        )
-        containment_refused = False
-    except ValueError:
-        containment_refused = vt_head(src) == head_before
-    ch = vt_read_changes(spark, src, v - 1, v)
-    counts = {
-        r["_change_type"]: r["n"]
-        for r in ch.groupBy("_change_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    cdc_exact = counts == {"delete": n_old, "insert": n_old}
-    vt_register(spark)
-    (
-        refill.write.format("vt")
-        .option("path", fmt)
-        .option("replaceWhere", f"event_type = '{target}'")
-        .mode("overwrite")
-        .save()
-    )
-    a, b = vt_read(spark, src), vt_read(spark, fmt)
-    format_parity = _multiset_equal(a, b)
-    return (
-        a.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("v"), 6).cast("double").alias("sum_value"),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(backfill_metadata_only)).alias(
-                "backfill_metadata_only"
-            ),
-            F.lit(bool(containment_refused)).alias(
-                "containment_refused"
-            ),
-            F.lit(bool(cdc_exact)).alias("cdc_exact"),
-            F.lit(bool(format_parity)).alias("format_parity"),
-        )
-    )
-
-
-_EVENTS_VT_REPLACE_WHERE_SQL = f"""
-WITH ev AS (
-  SELECT * FROM ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")})
-  WHERE event_id % 5 = 2
-),
-m AS (SELECT min(event_type) AS t FROM ev)
-SELECT event_type, count(*) AS n,
-       CAST(round(sum(CAST(value AS DECIMAL(38,12))
-                      * CASE WHEN event_type = (SELECT t FROM m)
-                             THEN 2 ELSE 1 END), 6) AS DOUBLE)
-         AS sum_value,
-       TRUE AS backfill_metadata_only,
-       TRUE AS containment_refused,
-       TRUE AS cdc_exact,
-       TRUE AS format_parity
-FROM ev
-GROUP BY event_type
-""".strip()
-
-
-LLM_QUERIES["events_vt_replace_where"] = FnWorkload(
-    _events_vt_replace_where, _EVENTS_VT_REPLACE_WHERE_SQL
 )
 
 
@@ -7867,202 +3079,4 @@ WHERE {where}
 
 LLM_QUERIES["rule_nested_property"] = FnWorkload(
     _rule_nested_property, _rule_nested_property_sql()
-)
-
-
-def _events_vt_nested_widen(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """NESTED TYPE WIDENING, EXECUTED (vt_widen_column("payload.cents"),
-    r13 — Delta's typeWidening covers nested fields; the r12 surface was
-    top-level only): events staged with a STRUCT column whose ``cents``
-    child is INT, widened to BIGINT metadata-only, then appended with a
-    batch carrying the wide type natively AND one still carrying the
-    narrow type (store-assignment upcasts it at write, recursing into
-    the struct). Pinned INSIDE the oracle hash: ``metadata_only`` (the
-    widen commit references the same dirs), ``upcast_served`` (the
-    declared nested type is bigint and a value only representable wide
-    round-trips), ``narrow_append_ok`` (the post-widen narrow append
-    landed). The aggregate groups by the struct's tag child through the
-    DOTTED rule-property path — both r13 nested surfaces in one
-    oracle."""
-    from ..sources.versioned import (
-        vt_read,
-        vt_widen_column,
-        vt_write,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.struct(
-            F.col("event_type").alias("tag"),
-            F.floor(F.col("value") * 100).cast("int").alias("cents"),
-        ).alias("payload"),
-    )
-    path = os.path.join(_scratch_dir("vtnestw", sf_dir), "ev")
-    vt_write(spark, path, ev)
-    from ..sources.versioned import _read_manifest, vt_versions
-
-    dirs_before = _read_manifest(path, 1)["dirs"]
-    v = vt_widen_column(path, "payload.cents", "bigint")
-    metadata_only = _read_manifest(path, v)["dirs"] == dirs_before
-    big = 3_000_000_000  # not representable as int32
-    wide_row = spark.createDataFrame(
-        [(10**9, ("wide", big))],
-        "event_id long, payload struct<tag string, cents long>",
-    )
-    vt_write(spark, path, wide_row, mode="append")
-    narrow_row = spark.createDataFrame(
-        [(10**9 + 1, ("narrow", 7))],
-        "event_id long, payload struct<tag string, cents int>",
-    )
-    vt_write(spark, path, narrow_row, mode="append")
-    out = vt_read(spark, path)
-    # the declared-type half of upcast_served is plan metadata (no job);
-    # the row probes fold into ONE aggregate over the final head below
-    # (r15, guide §1.2 — the r14 form ran three separate scan jobs, the
-    # regression the r14 verdict flagged as events_vt_nested_widen's
-    # 1.6× slowdown). Row-level equivalence: the later commits (rename/
-    # add/drop are metadata-only; the bonus append's row matches none of
-    # these predicates) leave every probed count identical at the final
-    # head, so each pin still verifies exactly what it verified at the
-    # commit that established it.
-    upcast_declared = (
-        out.schema["payload"].dataType["cents"].dataType.simpleString()
-        == "bigint"
-    )
-    assert vt_versions(path)[-1] >= 4
-    # NESTED RENAME leg (r14, verdict ask #4): the widened leaf renames
-    # metadata-only — full dotted mapping entry, zero data movement —
-    # and the final aggregate SUMS THROUGH THE RENAMED LEAF, so the
-    # rename sits inside the oracle's value hash, not just a boolean.
-    from ..sources.versioned import vt_rename_column
-
-    dirs_pre_rename = _read_manifest(path, vt_versions(path)[-1])[
-        "dirs"
-    ]
-    rv = vt_rename_column(path, "payload.cents", "amount_cents")
-    rm = _read_manifest(path, rv)
-    rename_metadata_only = (
-        rm["dirs"] == dirs_pre_rename
-        and rm["column_mapping"]["payload.amount_cents"]
-        == "payload.cents"
-    )
-    out = vt_read(spark, path)
-    renamed_leaf_served = out.schema["payload"].dataType.fieldNames() == [
-        "tag", "amount_cents"
-    ]
-    # NESTED ADD/DROP leg (r14): vt_add_column / vt_drop_column with
-    # dotted paths complete the nested-mapping DDL. ADD is metadata-only
-    # (same dirs, fresh physical leaf); a populated leaf DROPped and
-    # re-ADDed serves NULL, never the old bytes (no-resurrection), and
-    # the re-add's physical name differs from the dropped one's.
-    from ..sources.versioned import vt_add_column, vt_drop_column
-
-    dirs_pre_add = rm["dirs"]
-    av = vt_add_column(path, "payload.bonus", "bigint")
-    am = _read_manifest(path, av)
-    add_metadata_only = (
-        am["dirs"] == dirs_pre_add
-        and am["column_mapping"]["payload.bonus"] != "payload.bonus"
-    )
-    phys_first = am["column_mapping"]["payload.bonus"]
-    vt_write(
-        spark,
-        path,
-        spark.createDataFrame(
-            [(10**9 + 2, ("bonus", 7, 42))],
-            "event_id long, payload struct<tag string,"
-            " amount_cents long, bonus long>",
-        ),
-        mode="append",
-    )
-    vt_drop_column(path, "payload.bonus")
-    vt_add_column(path, "payload.bonus", "bigint")
-    fm = _read_manifest(path, vt_versions(path)[-1])
-    probe = (
-        vt_read(spark, path)
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("payload.amount_cents") == big, 1
-                ).otherwise(0)
-            ).alias("n_big"),
-            F.sum(
-                F.when(F.col("event_id") == 10**9 + 1, 1).otherwise(0)
-            ).alias("n_narrow"),
-            F.sum(
-                F.when(F.col("event_id") == 10**9 + 2, 1).otherwise(0)
-            ).alias("n_bonus_row"),
-            F.max(
-                F.when(
-                    F.col("event_id") == 10**9 + 2,
-                    F.col("payload.bonus"),
-                )
-            ).alias("bonus"),
-            F.max(
-                F.when(
-                    F.col("event_id") == 10**9 + 2,
-                    F.col("payload.amount_cents"),
-                )
-            ).alias("bonus_cents"),
-        )
-        .collect()[0]
-    )
-    upcast_served = upcast_declared and probe["n_big"] == 1
-    narrow_append_ok = probe["n_narrow"] == 1
-    no_resurrection = (
-        probe["n_bonus_row"] == 1
-        and probe["bonus"] is None
-        and probe["bonus_cents"] == 7
-        and fm["column_mapping"]["payload.bonus"] != phys_first
-    )
-    return (
-        out.filter(F.col("event_id") < 10**9)
-        .groupBy(F.col("payload.tag").alias("tag"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("payload.amount_cents")).alias("sum_cents"),
-        )
-        .select(
-            "tag",
-            "n",
-            "sum_cents",
-            F.lit(bool(metadata_only)).alias("metadata_only"),
-            F.lit(bool(upcast_served)).alias("upcast_served"),
-            F.lit(bool(narrow_append_ok)).alias("narrow_append_ok"),
-            F.lit(bool(rename_metadata_only)).alias(
-                "rename_metadata_only"
-            ),
-            F.lit(bool(renamed_leaf_served)).alias(
-                "renamed_leaf_served"
-            ),
-            F.lit(bool(add_metadata_only)).alias("add_metadata_only"),
-            F.lit(bool(no_resurrection)).alias("no_resurrection"),
-        )
-    )
-
-
-_EVENTS_VT_NESTED_WIDEN_SQL = f"""
-WITH ev AS ({_EVENTS_ORACLE_SOURCE.removesuffix(" AS events")}),
-t AS (
-  SELECT event_type AS tag,
-         CAST(CAST(floor(value * 100) AS INTEGER) AS BIGINT) AS cents
-  FROM ev
-)
-SELECT tag, count(*) AS n, CAST(sum(cents) AS BIGINT) AS sum_cents,
-       TRUE AS metadata_only,
-       TRUE AS upcast_served,
-       TRUE AS narrow_append_ok,
-       TRUE AS rename_metadata_only,
-       TRUE AS renamed_leaf_served,
-       TRUE AS add_metadata_only,
-       TRUE AS no_resurrection
-FROM t
-GROUP BY tag
-""".strip()
-
-
-LLM_QUERIES["events_vt_nested_widen"] = FnWorkload(
-    _events_vt_nested_widen, _EVENTS_VT_NESTED_WIDEN_SQL
 )
