@@ -684,3 +684,25 @@ class TestDeletionVectorPlan:
         plan = _physical(vt_read(spark, path))
         assert plan.count("BroadcastHashJoin") == 1
         assert "Union" in plan
+
+
+class TestSpreadFanOut:
+    """``spread`` sizes its round-robin fan-out from the optimizer's byte
+    estimate (floor 4); ``spread_pinned`` keeps the fixed fan-out of
+    cluster parallelism that the code-frozen calibration probe
+    assumes."""
+
+    def test_tiny_frame_spreads_to_the_floor(self, spark):
+        from dynamicqueryengine_spark.util import spread
+
+        plan = _physical(spread(spark.range(0, 10, 1, 1), multiplier=4))
+        assert "RoundRobinPartitioning(4)" in plan
+
+    def test_pinned_spreads_to_parallelism(self, spark):
+        from dynamicqueryengine_spark.util import spread_pinned
+
+        n = spark.sparkContext.defaultParallelism * 4
+        plan = _physical(
+            spread_pinned(spark.range(0, 10, 1, 1), multiplier=4)
+        )
+        assert f"RoundRobinPartitioning({n})" in plan

@@ -3,6 +3,7 @@ checked against batch DISTINCT twins, plus the watermarked variant."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dynamicqueryengine_spark.streaming.dedup import (
@@ -142,14 +143,40 @@ class TestStreamMinhashIndex:
         assert after == before  # no new versions, no new rows anywhere
         assert os.path.exists(paths["pairs"])
 
+    @pytest.fixture(scope="class")
+    def clean_run(self, spark, tmp_path_factory):
+        """Paths of a clean two-batch run and its flagged pair set."""
+        from dynamicqueryengine_spark.sources.registry import load_table
+        from dynamicqueryengine_spark.sources.versioned import vt_read
+
+        docs = load_table(spark, SF_DIR, "documents").select(
+            "doc_id", "text"
+        )
+        clean = self._run_batches(
+            spark, tmp_path_factory.mktemp("clean"), docs,
+            [F.col("doc_id") % 2 == i for i in range(2)],
+        )
+        want = {
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in vt_read(spark, clean["pairs"]).collect()
+        }
+        return clean, want
+
+    @pytest.mark.parametrize(
+        "landed",
+        [(), ("pairs",), ("docs",), ("sigs",), ("pairs", "docs"),
+         ("pairs", "sigs"), ("docs", "sigs")],
+        ids=lambda landed: "+".join(landed) or "none",
+    )
     def test_partially_committed_batch_replays_exactly(
-        self, spark, tmp_path
+        self, spark, tmp_path, clean_run, landed
     ):
-        """r15 (concurrent appends): a crash that committed SIGS and DOCS
-        but not PAIRS replays to the exact clean-run pair set — the probe
-        is insensitive to its own signatures being in the base, the
-        verifier skips the doc union when the docs append landed, and the
-        already-committed appends no-op via their markers."""
+        """r15 (concurrent appends): a crash after any proper subset of
+        batch 1's three appends (pairs, docs, sigs) landed replays to the
+        exact clean-run pair set — the probe is insensitive to its own
+        signatures being in the base, the verifier skips the doc union
+        when the docs append landed, and the already-committed appends
+        no-op via their markers."""
         import os
 
         from dynamicqueryengine_spark.functions import dedup as D
@@ -157,6 +184,7 @@ class TestStreamMinhashIndex:
         from dynamicqueryengine_spark.sources.versioned import (
             vt_head,
             vt_read,
+            vt_read_delta,
             vt_write,
         )
         from dynamicqueryengine_spark.streaming import minhash as mh
@@ -164,30 +192,26 @@ class TestStreamMinhashIndex:
         docs = load_table(spark, SF_DIR, "documents").select(
             "doc_id", "text"
         )
-        clean = self._run_batches(
-            spark, os.path.join(str(tmp_path), "clean"), docs,
-            [F.col("doc_id") % 2 == i for i in range(2)],
-        )
-        want = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in vt_read(spark, clean["pairs"]).collect()
-        }
+        clean, want = clean_run
 
-        # crashed run: batch 0 completes; batch 1's SIGS and DOCS land
-        # (their txn markers committed) but the PAIRS append is lost
+        # crashed run: batch 0 completes; of batch 1's appends only the
+        # ``landed`` ones commit (with their txn markers)
         paths = self._run_batches(
             spark, os.path.join(str(tmp_path), "crash"), docs,
             [F.col("doc_id") % 2 == 0],
         )
         b1 = docs.filter(F.col("doc_id") % 2 == 1)
-        vt_write(
-            spark, paths["docs"], b1, mode="append",
-            txn=(mh._APP_DOCS, 1),
-        )
-        vt_write(
-            spark, paths["sigs"], D.minhash_signatures(b1),
-            mode="append", txn=(mh._APP_SIGS, 1),
-        )
+        h = vt_head(clean["pairs"])
+        appends = {
+            "pairs": (
+                vt_read_delta(spark, clean["pairs"], h - 1, h), mh._APP_PAIRS
+            ),
+            "docs": (b1, mh._APP_DOCS),
+            "sigs": (D.minhash_signatures(b1), mh._APP_SIGS),
+        }
+        for name in landed:
+            df, app = appends[name]
+            vt_write(spark, paths[name], df, mode="append", txn=(app, 1))
         heads = {n: vt_head(p) for n, p in paths.items()}
 
         mh.minhash_index_batch(  # at-least-once replay of batch 1
@@ -199,7 +223,6 @@ class TestStreamMinhashIndex:
             for r in vt_read(spark, paths["pairs"]).collect()
         }
         assert got == want and got
-        # the already-committed appends were no-ops: only pairs advanced
-        assert vt_head(paths["docs"]) == heads["docs"]
-        assert vt_head(paths["sigs"]) == heads["sigs"]
-        assert vt_head(paths["pairs"]) == heads["pairs"] + 1
+        # the already-committed appends were no-ops; the rest advanced
+        for name, p in paths.items():
+            assert vt_head(p) == heads[name] + (name not in landed), name
