@@ -3151,24 +3151,11 @@ def _events_vt_format_read(
     )
     time_travel_option = pre == vt_count(spark, path, 1) == a["n"] + 1
     dv_applied = a["victim_rows"] == 0
-    return (
-        fmt.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("amount"), 6).cast("double").alias(
-                "sum_value"
-            ),
-        )
-        .select(
-            "event_type",
-            "n",
-            "sum_value",
-            F.lit(bool(format_equals_native)).alias(
-                "format_equals_native"
-            ),
-            F.lit(bool(time_travel_option)).alias("time_travel_option"),
-            F.lit(bool(dv_applied)).alias("dv_applied"),
-        )
+    return _report(
+        fmt.withColumnRenamed("amount", "v"),
+        format_equals_native=format_equals_native,
+        time_travel_option=time_travel_option,
+        dv_applied=dv_applied,
     )
 
 
