@@ -96,7 +96,7 @@ def _stage(
     """``(path, frame)``: a fresh scratch table path ``name`` under the
     per-invocation scratch dir of ``tag``, and the events staging
     projection — ``event_id``, ``event_type`` and ``value`` cast to
-    ``decimal(38,12)`` as ``v``. Lazy: nothing is written or read."""
+    ``decimal(38,12)`` as ``v``. Starts no Spark job."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -109,7 +109,7 @@ def _report(frame: DataFrame, *cols, **pins) -> DataFrame:
     """The per-``event_type`` report of a staged frame: row count ``n``
     and ``sum_value`` (the sum of ``v`` rounded to 6 places, as double),
     then ``cols`` and each keyword pin as a boolean literal column, in
-    argument order. Lazy: the caller's action runs it."""
+    argument order. Starts no Spark job; the caller's action runs it."""
     return (
         frame.groupBy("event_type")
         .agg(
