@@ -14,9 +14,15 @@ Two layers:
   the facade is deliberately thin — all real work is the engine pipeline).
 
 Inline-payload scale note: this path exists for reference parity and
-small interactive calls. Large datasets should flow through the table
-registry (Parquet scans with pushdown), not the request body — same as the
-reference, whose in-memory list was its only option (SURVEY.md §1.1).
+small interactive calls. ``inline_table`` ships the rows to the JVM as one
+Arrow table that Spark keeps in the plan as a ``LocalRelation``, so a
+filter-only rule answers without a Spark job (Catalyst even evaluates the
+filter at plan time); grouped rules and multi-rule unions still run the
+jobs of their shuffle. Above ``spark.sql.execution.arrow.localRelationThreshold``
+(48 MiB by default) Spark holds the rows in an RDD instead. Large datasets
+should flow through the table registry (Parquet scans with pushdown), not
+the request body — same as the reference, whose in-memory list was its only
+option (SURVEY.md §1.1).
 """
 
 from __future__ import annotations
@@ -79,10 +85,14 @@ def explain_request(
     type_name: str = "User",
 ) -> dict[str, Any]:
     """Explain ``{Rule, Users}`` WITHOUT executing it: compile the rule
-    against the inline rows and return Catalyst's optimized + physical
-    plans — the introspection surface a rule author uses to confirm the
-    predicate folded/pushed the way SCALE.md promises (the engine analog
-    of ``EXPLAIN``). Same 400 {Error} envelope as evaluate."""
+    against the inline rows and return Catalyst's analyzed, optimized and
+    physical plans — the introspection surface a rule author uses to
+    confirm the predicate compiled and folded/pushed the way SCALE.md
+    promises (the engine analog of ``EXPLAIN``). Over inline rows the
+    optimizer evaluates a filter at plan time (``ConvertToLocalRelation``),
+    so the compiled predicate shows in ``analyzed_plan`` while the optimized
+    plan is the resulting ``LocalRelation``. Same 400 {Error} envelope as
+    evaluate."""
     try:
         rows = _ci_get(payload, "Users", "Rows")
         if not rows:
@@ -100,6 +110,7 @@ def explain_request(
         qe = out._jdf.queryExecution()
         return {
             "status": 200,
+            "analyzed_plan": qe.analyzed().toString(),
             "optimized_plan": qe.optimizedPlan().toString(),
             "physical_plan": qe.executedPlan().toString(),
         }
@@ -114,7 +125,10 @@ API_DESCRIPTION: dict[str, Any] = {
     "service": "dynamicqueryengine_spark",
     "endpoints": {
         "POST /rules/evaluate": "evaluate {Rule|Rules, Users} -> rows | 400 {Error}",
-        "POST /rules/explain": "compile {Rule, Users}; return Catalyst plans, no execution",
+        "POST /rules/explain": (
+            "compile {Rule, Users}; return Catalyst plans "
+            "(analyzed_plan, optimized_plan, physical_plan), no execution"
+        ),
         "GET /rules/describe": "this document",
     },
     "operators": [

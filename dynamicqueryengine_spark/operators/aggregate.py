@@ -42,13 +42,21 @@ from .predicates import _COERCE_DECIMAL, resolve_field
 COUNT_COLUMN = "count"
 
 
-def _ordering_column(field: StructField) -> F.Column:
+def _sql_name(columns: Sequence[str], name: str) -> str:
+    """``name`` as a SQL column reference: a top-level column is one
+    backtick-quoted identifier, a dotted path into a struct (the form
+    ``resolve_field`` returns) one per segment; backticks are doubled."""
+    parts = [name] if name in columns else name.split(".")
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
+def _ordering_sql(columns: Sequence[str], field: StructField) -> str:
     """Aggregate-ordering key; string columns order numerically
     (AggregationEngine.cs:75-87)."""
-    col = F.col(field.name)
+    ref = _sql_name(columns, field.name)
     if isinstance(field.dataType, StringType):
-        return col.try_cast(_COERCE_DECIMAL)
-    return col
+        return f"try_cast({ref} AS {_COERCE_DECIMAL.simpleString()})"
+    return ref
 
 
 def _resolve_keys(
@@ -105,12 +113,17 @@ def _arg_extreme(
     """
     out_cols = df.columns
     tie_cols = [c for c in out_cols if c != agg_field.name]
-    order_cols = [_ordering_column(agg_field)] + [F.col(c) for c in tie_cols]
+
+    def q(name: str) -> str:
+        return _sql_name(out_cols, name)
 
     if use_window:
+        order_cols = [F.expr(_ordering_sql(out_cols, agg_field))] + [
+            F.col(q(c)) for c in tie_cols
+        ]
         ordering = [c.desc() if descending else c.asc() for c in order_cols]
         w = (
-            Window.partitionBy(*[F.col(k) for k in keys])
+            Window.partitionBy(*[F.col(q(k)) for k in keys])
             if keys
             else Window.partitionBy(F.lit(1))
         )
@@ -124,24 +137,26 @@ def _arg_extreme(
     # measurably faster than `min_by(struct, struct)` (~1.6× at sf0.1) with
     # identical null semantics (struct comparison = ASC NULLS FIRST per
     # field; for max, that is DESC NULLS LAST — both matching the oracle).
+    # The aggregate is one SQL expression and the payload projection one
+    # selectExpr: built from Columns, every reference costs a dozen or more
+    # py4j round-trips.
     if isinstance(agg_field.dataType, StringType):
         # ordering leads with the decimal cast; raw columns ride as payload
-        fields = [c.alias(f"_o{i}") for i, c in enumerate(order_cols)] + [
-            F.col(c).alias(f"_p{i}") for i, c in enumerate(out_cols)
+        order = [_ordering_sql(out_cols, agg_field)] + [q(c) for c in tie_cols]
+        fields = [(f"_o{i}", e) for i, e in enumerate(order)] + [
+            (f"_p{i}", q(c)) for i, c in enumerate(out_cols)
         ]
         payload = {c: f"_p{i}" for i, c in enumerate(out_cols)}
     else:
         # ordering fields ARE the payload (agg column first, ties after)
         ordered_names = [agg_field.name] + tie_cols
-        fields = [F.col(c).alias(f"_o{i}") for i, c in enumerate(ordered_names)]
+        fields = [(f"_o{i}", q(c)) for i, c in enumerate(ordered_names)]
         payload = {c: f"_o{i}" for i, c in enumerate(ordered_names)}
-    picker = F.max if descending else F.min
-    agg_expr = picker(F.struct(*fields)).alias("_row")
-    if keys:
-        grouped = df.groupBy(*keys).agg(agg_expr)
-    else:
-        # legacy "always aggregate" global group (AggregationEngine.cs:12-14)
-        grouped = df.groupBy().agg(agg_expr)
-    return grouped.select(
-        *[F.col(f"_row.{payload[c]}").alias(c) for c in out_cols]
+    picker = "max" if descending else "min"
+    struct = ", ".join(f"'{name}', {e}" for name, e in fields)
+    # legacy "always aggregate" global group when keys is empty
+    # (AggregationEngine.cs:12-14)
+    grouped = df.groupBy(*[q(k) for k in keys]).agg(
+        F.expr(f"{picker}(named_struct({struct})) AS _row")
     )
+    return grouped.selectExpr(*[f"_row.{payload[c]} AS {q(c)}" for c in out_cols])

@@ -4,8 +4,11 @@ The reference has no storage layer at all — rows arrive inline in the HTTP
 body (RuleController.cs:31-35) or as in-process collections
 (RuleDefinitionExecutor.cs:8-13). The Spark-native equivalent of "one request
 = one dataset + one rule" is "registered table + rule document", with
-``spark.createDataFrame`` covering the inline-payload path (see
-``inline_table``).
+``inline_table`` covering the inline-payload path: the rows travel to the
+JVM as one Arrow table and become a ``LocalRelation`` (rows held in the
+plan), so a request over inline rows plans and runs without a Spark job.
+Above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+default) Spark itself keeps the rows in an RDD instead.
 
 Scale notes: tables load lazily via ``spark.read.parquet`` — scans stay
 declarative so Catalyst pushes filters/column pruning into the Parquet
@@ -15,10 +18,28 @@ driver-side caching).
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 from typing import Any, Iterable, Mapping
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DataType,
+    DateType,
+    MapType,
+    NumericType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 # The driver's synthetic star schema (TESTDATA.md).
 DEFAULT_TABLES = (
@@ -105,8 +126,76 @@ def inline_table(
     schema: Any = None,
 ) -> DataFrame:
     """Inline row payloads (the reference's HTTP-body ``List<User>`` path,
-    RuleController.cs:31-35) → DataFrame."""
-    return spark.createDataFrame(list(rows), schema=schema)
+    RuleController.cs:31-35) → DataFrame over a ``LocalRelation``.
+
+    Types are those ``spark.createDataFrame(list(rows))`` would give: the
+    schema comes from the same inference (``_inferSchemaFromList``), or
+    ``schema`` (a ``StructType`` or DDL string) is used as given and every
+    row checked against it. The rows then go to the JVM as one Arrow table;
+    below ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+    them in the plan, so collecting a rule over them runs no Spark job, and
+    above it Spark falls back to an RDD on its own. Because the rows sit in
+    the plan, Catalyst's ``ConvertToLocalRelation`` evaluates a filter or
+    projection over them at plan time: the optimized plan of a filtered
+    inline table is a bare ``LocalRelation`` (the predicate shows in the
+    analyzed plan). A value Arrow cannot hold, such as an integer outside
+    64 bits, raises instead of landing as NULL.
+    """
+    rows = list(rows)
+    if schema is None:
+        struct = spark._inferSchemaFromList(rows)
+    else:
+        struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+        verify = _make_type_verifier(struct)
+        for row in rows:
+            verify(row)
+    columns = {f.name: [row.get(f.name) for row in rows] for f in struct.fields}
+    for f in struct.fields:
+        if not isinstance(f.dataType, _ARROW_AS_IS):
+            columns[f.name] = [_arrow_value(v, f.dataType) for v in columns[f.name]]
+    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, schema=struct)
+
+
+# types whose Python values Arrow stores as createDataFrame would
+_ARROW_AS_IS = (NumericType, BooleanType, BinaryType, DateType)
+
+
+def _arrow_value(value: Any, dtype: DataType) -> Any:
+    """``value`` of a ``dtype`` field, in the form Arrow stores the way
+    ``createDataFrame`` would.
+
+    * A string field also takes other atomic values (PySpark's inference
+      merges them into string); ``createDataFrame`` renders them with
+      ``str()``, booleans as ``true``/``false``.
+    * ``TimestampType.toInternal`` reads a naive datetime as host-local
+      time, and Arrow stores the wall clock of any datetime, ignoring its
+      tzinfo; so every value goes to Arrow as naive UTC.
+    * ``TimestampNTZType`` keeps the wall clock and drops any tzinfo.
+    """
+    if value is None:
+        return None
+    if isinstance(dtype, StringType):
+        if isinstance(value, str):
+            return value
+        if isinstance(value, bool):
+            return "true" if value else "false"
+        return str(value)
+    if isinstance(dtype, TimestampType):
+        return value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    if isinstance(dtype, TimestampNTZType):
+        return value.replace(tzinfo=None)
+    if isinstance(dtype, ArrayType):
+        return [_arrow_value(v, dtype.elementType) for v in value]
+    if isinstance(dtype, MapType):
+        return {
+            _arrow_value(k, dtype.keyType): _arrow_value(v, dtype.valueType)
+            for k, v in value.items()
+        }
+    if isinstance(dtype, StructType):
+        get = value.get if isinstance(value, Mapping) else dict(zip(dtype.names, value)).get
+        return {f.name: _arrow_value(get(f.name), f.dataType) for f in dtype.fields}
+    return value
 
 
 _FORMATS = ("parquet", "csv", "json", "orc")

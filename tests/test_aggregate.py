@@ -68,6 +68,49 @@ class TestArgMinMax:
         assert [r["Id"] for r in got.collect()] == ["u12"]  # RegNo 92
 
 
+
+ODD_SCHEMA = (
+    "`id` bigint, `grp.key` string, `sc``ore` string, `a b` double, "
+    "payload struct<amount: double, note: string>"
+)
+ODD_ROWS = [
+    (1, "x", "10", 1.5, (7.0, "p")),
+    (2, "x", "9", 1.5, (7.0, "q")),  # ties 1 on `a b` and payload.amount
+    (3, "y", None, None, (None, None)),
+    (4, "y", "abc", 2.5, (3.0, "r")),
+    (5, None, "10", 0.5, (1.0, "s")),
+    (6, "y", "7", 2.5, (3.0, "a")),  # ties 4 on `a b` and payload.amount
+]
+
+
+class TestArgExtremeOddNames:
+    """The single-pass path quotes names into SQL; it must pick the rows
+    its window-function reference picks whatever the column names hold."""
+
+    @pytest.fixture(scope="class")
+    def odd_df(self, spark):
+        return spark.createDataFrame(ODD_ROWS, ODD_SCHEMA)
+
+    @pytest.mark.parametrize("func", ["Min", "Max"])
+    @pytest.mark.parametrize("prop", ["sc`ore", "a b", "payload.amount", "id"])
+    @pytest.mark.parametrize("keys", [["grp.key"], ["payload.note", "a b"], []])
+    def test_matches_window_reference(self, odd_df, func, prop, keys):
+        agg = AggregationDefinition.from_dict(
+            {"AggregateProperty": prop, "AggregateFunction": func}
+        )
+        fast = apply_aggregation(odd_df, keys, agg)
+        window = apply_aggregation(odd_df, keys, agg, use_window=True)
+        assert fast.columns == window.columns == odd_df.columns
+        assert sorted(map(repr, fast.collect())) == sorted(map(repr, window.collect()))
+
+    def test_nested_property_picks_whole_row(self, odd_df):
+        agg = AggregationDefinition.from_dict(
+            {"AggregateProperty": "payload.amount", "AggregateFunction": "Max"}
+        )
+        got = {r["grp.key"]: r["id"] for r in apply_aggregation(odd_df, ["grp.key"], agg).collect()}
+        # x: amount 7.0 ties, broken by the next columns (id 2 > id 1)
+        assert got == {"x": 2, "y": 6, None: 5}
+
 class TestGroupByModes:
     def test_live_mode_uses_first_key_only(self, users_df):
         rule = agg_rule(["CompanyCode", "Title"], "Count")

@@ -71,6 +71,19 @@ class TestEvaluateRequest:
         assert res["status"] == 400
         assert "Property 'Nope' not found" in res["Error"]
 
+    def test_out_of_range_integer_gives_400(self, spark):
+        # a bigint column cannot hold 2**63: refused, not answered as NULL
+        res = evaluate_request(
+            spark,
+            {
+                "Rule": {"Conditions": {"Conditions": [
+                    {"Property": "Score", "Operator": "GreaterThan", "Value": 0}]}},
+                "Users": [{"Id": 2**63, "Score": 1}, {"Id": 1, "Score": 2}],
+            },
+        )
+        assert res["status"] == 400
+        assert "Error" in res and "rows" not in res
+
     def test_missing_rows(self, spark):
         res = evaluate_request(spark, {"Rule": {}})
         assert res["status"] == 400
@@ -143,6 +156,82 @@ class TestHttpServer:
             assert err.value.code == 400
         finally:
             server.shutdown()
+
+
+def _perfbench_users(n):
+    titles, depts = ("Manager", "Engineer", "Analyst"), ("Sales", "Support", "Legal")
+    return [
+        {
+            "Id": i, "Name": f"user{i:06d}", "Age": 18 + (i * 7) % 53,
+            "Country": ("TR", "US", "DE")[i % 3], "Department": depts[(i * 5) % 3],
+            "Title": titles[i % 3], "Salary": 20_000.0 + (i * 7919) % 180_000,
+            "IsActive": i % 10 < 7,
+        }
+        for i in range(n)
+    ]
+
+
+class TestServingBudget:
+    """The serving path's fixed costs: Spark jobs per request and py4j
+    round-trips per rule build."""
+
+    FILTER_RULE = {
+        "Conditions": {
+            "LogicalOperator": "AND",
+            "Conditions": [
+                {"Property": "Age", "Operator": "GreaterThan", "Value": 30},
+                {"Property": "IsActive", "Operator": "Equal", "Value": True},
+            ],
+        }
+    }
+    ARGMAX_RULE = {
+        "Conditions": {
+            "Conditions": [{"Property": "Age", "Operator": "GreaterThan", "Value": 25}]
+        },
+        "GroupBy": ["Department"],
+        "Aggregation": {"AggregateProperty": "Salary", "AggregateFunction": "Max"},
+    }
+
+    @pytest.mark.parametrize("n", [20, 2000])
+    def test_filter_only_request_runs_no_spark_job(self, spark, n):
+        payload = {"Rule": self.FILTER_RULE, "Users": _perfbench_users(n)}
+        evaluate_request(spark, payload)  # warm
+        store = spark.sparkContext._jsc.sc().statusStore()
+        before = store.jobsList(None).size()
+        res = evaluate_request(spark, payload)
+        assert store.jobsList(None).size() - before == 0
+        assert res["status"] == 200
+        want = [u for u in payload["Users"] if u["Age"] > 30 and u["IsActive"]]
+        assert sorted(r["Id"] for r in res["rows"]) == [u["Id"] for u in want]
+
+    def test_argmax_rule_build_py4j_calls(self, spark):
+        import threading
+
+        from dynamicqueryengine_spark import RuleDefinition, apply_rule
+        from dynamicqueryengine_spark.sources.registry import inline_table
+
+        df = inline_table(spark, _perfbench_users(200))
+        rule = RuleDefinition.from_dict(self.ARGMAX_RULE)
+        df.schema  # noqa: B018 — fetched once, as the request path does
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        me = threading.get_ident()
+        calls = []
+
+        def counting(*args, **kwargs):
+            # py4j's finalizer thread releases dead JVM proxies on its own
+            # schedule; only this thread's commands belong to the build
+            if threading.get_ident() == me:
+                calls.append(args[0])
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            out = apply_rule(df, rule)
+        finally:
+            client.send_command = send
+        assert len(calls) <= 100
+        assert out.columns == df.columns
 
 
 class TestSessionization:
@@ -299,8 +388,11 @@ class TestExplainEndpoint:
 
         out = explain_request(spark, self.PAYLOAD)
         assert out["status"] == 200
-        assert "Filter" in out["optimized_plan"]
-        assert "Age" in out["optimized_plan"]
+        # the compiled predicate shows in the analyzed plan; the optimizer
+        # evaluates it over the inline rows at plan time
+        assert "Filter" in out["analyzed_plan"]
+        assert "Age" in out["analyzed_plan"]
+        assert out["optimized_plan"].startswith("LocalRelation")
         assert "rows" not in out  # no execution, no materialized rows
 
     def test_explain_http_route(self, spark):
@@ -315,7 +407,7 @@ class TestExplainEndpoint:
             with urllib.request.urlopen(req) as resp:
                 body = json.loads(resp.read())
             assert resp.status == 200
-            assert "physical_plan" in body and "optimized_plan" in body
+            assert {"analyzed_plan", "optimized_plan", "physical_plan"} <= set(body)
         finally:
             server.shutdown()
 
