@@ -47,10 +47,11 @@ Contract (Delta's batch reader in miniature):
   exact), the same division of labor as Delta's data skipping.
 
 Scale shape: planning is manifest-metadata only on the driver; each
-input partition reads ONE parquet file (or one legacy dir) with pyarrow
-on its executor and yields Arrow RecordBatches straight into Spark's
-Arrow ingestion path. The table path must be reachable from every
-executor — the same contract as any Spark table.
+input partition reads ONE selected directory's files (the scan plan's
+``{dir: [file, …]}`` selection) with pyarrow on its executor and yields
+Arrow RecordBatches straight into Spark's Arrow ingestion path. The
+table path must be reachable from every executor — the same contract
+as any Spark table.
 
 Reference provenance: the reference engine (SURVEY.md §2) has no table
 format; this module belongs to the beyond-reference lakehouse
@@ -73,7 +74,6 @@ from pyspark.sql.datasource import (
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     IsNotNull,
     IsNull,
     LessThan,
@@ -88,82 +88,6 @@ __all__ = [
 ]
 
 BATCH_SOURCE_NAME = "vt"
-
-
-@dataclass
-class _SnapshotPartition(InputPartition):
-    """One (file-or-legacy-dir) unit of the snapshot scan. ``dv`` maps
-    file basename → logically-deleted row positions for the paths it
-    covers (pre-subset on the driver, positions inline — the
-    merge-on-read contract keeps them small)."""
-
-    path: str = ""
-    dv: dict | None = None
-
-
-def _read_snapshot_path(
-    p: str, target, colmap: dict, dv: dict | None
-):
-    """Executor-side: read one scan-plan path with pyarrow, mask DV'd
-    positions, and reconcile to the stream of ``target`` Arrow batches —
-    physical names projected back to logical, absent columns null-filled,
-    narrow files upcast (the same reconciliation _read_plan does
-    JVM-side and streaming/source.py does for the change feed)."""
-    import glob as _glob
-
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-
-    paths = (
-        sorted(_glob.glob(os.path.join(p, "*.parquet")))
-        if os.path.isdir(p)
-        else [p]
-    )
-    for fp in paths:
-        tbl = ds.dataset(fp, format="parquet").to_table()
-        dvpos = (dv or {}).get(os.path.basename(fp))
-        if dvpos:
-            import numpy as np
-
-            pos = np.asarray(dvpos, dtype=np.int64)
-            if pos.size and (
-                int(pos.max()) >= tbl.num_rows or int(pos.min()) < 0
-            ):
-                raise ValueError(
-                    f"deletion-vector position {int(pos.max())} out of "
-                    f"range for {fp} ({tbl.num_rows} rows) — corrupt or "
-                    "mismatched DV sidecar"
-                )
-            mask = np.ones(tbl.num_rows, dtype=bool)
-            mask[pos] = False
-            tbl = tbl.filter(pa.array(mask))
-        n = tbl.num_rows
-        cols = []
-        for f in target:
-            lookup = colmap.get(f.name, f.name)
-            if lookup in tbl.column_names:
-                col = tbl.column(lookup)
-                if pa.types.is_struct(f.type):
-                    # struct children match by PHYSICAL name (nested
-                    # renames), null-fill (pre-evolution arity), and
-                    # cast leaves — pyarrow's own struct cast is
-                    # strict name/arity and would refuse both
-                    from .versioned import (
-                        _arrow_reconcile_struct,
-                        _nested_rel_map,
-                    )
-
-                    col = _arrow_reconcile_struct(
-                        col, f.type, _nested_rel_map(colmap, f.name)
-                    )
-                else:
-                    col = col.cast(f.type)
-                cols.append(col)
-            else:
-                cols.append(pa.nulls(n, type=f.type))
-        out = pa.table(cols, schema=target)
-        for batch in out.to_batches():
-            yield batch
 
 
 # pushed-filter translation: Spark 4.1 Filter dataclasses → the
@@ -221,39 +145,27 @@ class _VtBatchReader(DataSourceReader):
 
     # -- planning (driver, manifest metadata only) ----------------------
     def partitions(self):
-        from .versioned import vt_scan_plan
+        from ..streaming.source import _ChangePartition
+        from .versioned import _plan_dirs, vt_scan_plan
 
         plan = vt_scan_plan(
             self._path, self._version, self._conjuncts or None
         )
-        dv = plan.get("dv") or {}
-        parts = []
-        for p in plan["paths"]:
-            if os.path.isdir(p):
-                base = os.path.basename(p.rstrip("/"))
-                sub = {
-                    k.split("/", 1)[1]: v
-                    for k, v in dv.items()
-                    if k.split("/", 1)[0] == base
-                }
-            else:
-                key = (
-                    os.path.basename(os.path.dirname(p))
-                    + "/"
-                    + os.path.basename(p)
-                )
-                poss = dv.get(key)
-                sub = {os.path.basename(p): poss} if poss else {}
-            parts.append(_SnapshotPartition(path=p, dv=sub or None))
-        return parts
+        return [
+            _ChangePartition(path=p, files=files, dv=dv)
+            for p, files, dv in _plan_dirs(plan)
+        ]
 
-    # -- reading (executor, one path per partition) ---------------------
-    def read(self, partition: _SnapshotPartition):
+    # -- reading (executor, one directory per partition) ----------------
+    def read(self, partition):
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self._schema)
-        yield from _read_snapshot_path(
-            partition.path, target, self._colmap, partition.dv,
+        from ..streaming.source import _read_change_partition
+
+        # the change feed's pyarrow reader: DV mask, then physical →
+        # logical projection, null-fill and upcast to the table schema
+        yield from _read_change_partition(
+            partition, to_arrow_schema(self._schema), self._colmap
         )
 
 
@@ -1126,11 +1038,12 @@ class _VtBatchWriter(DataSourceArrowWriter):
                         _pred_touch_fn(pconj, _bloom_col_types(prev)),
                         prove=pconj,
                     )
-                    if part["touched_paths"]:
+                    if part["touched"]:
                         raise ValueError(
                             "format('vt') replaceWhere removes "
                             "metadata-exactly only, and "
-                            f"{len(part['touched_paths'])} file(s) "
+                            f"{sum(map(len, part['touched'].values()))}"
+                            " file(s) "
                             "would need a row-level rewrite (the "
                             "predicate is not partition/stats-aligned)"
                             " — use vt_replace_where for boundary "

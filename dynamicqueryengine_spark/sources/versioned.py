@@ -653,7 +653,8 @@ def _commit(
         # a file-granular MERGE/DELETE rewrote some of the dir's files
         # and the manifest references only the untouched remainder. Every
         # reader must honor the file list for these dirs (vt_scan_plan
-        # expands them to explicit file paths even for unfiltered reads);
+        # marks them partial even for unfiltered reads, and _read_plan
+        # filters them to the listed files by file key);
         # dir-level ``stats`` for them are recomputed over the kept files
         # so vt_minmax never reports a value the snapshot no longer holds.
         manifest["partial_dirs"] = sorted(partial_dirs)
@@ -897,7 +898,6 @@ def _harvest_stats(full_dir: str) -> tuple[dict, dict, dict]:
     contract while ``=``/range predicates on decimal columns (money,
     measures — the classic skipping targets) prune files."""
     import decimal as _decimal
-    import glob as _glob
     import math as _math
 
     try:
@@ -919,7 +919,7 @@ def _harvest_stats(full_dir: str) -> tuple[dict, dict, dict]:
     dropped: set = set()
     file_stats: dict = {}
     file_rows: dict = {}
-    for fp in sorted(_glob.glob(os.path.join(full_dir, "*.parquet"))):
+    for fp in (os.path.join(full_dir, n) for n in _parquet_names(full_dir)):
         per_file: dict = {}
         file_dropped: set = set()
         per_file_nulls: dict = {}
@@ -1178,8 +1178,6 @@ def _harvest_blooms_arrow(
     other type anyway, so omitting them loses nothing (missing blooms
     always keep). ``col_types`` maps physical column name → manifest
     json type string."""
-    import glob as _glob
-
     try:
         import pyarrow.dataset as ds
     except ImportError:  # pragma: no cover - pyarrow is a hard dep
@@ -1194,7 +1192,7 @@ def _harvest_blooms_arrow(
     if not cols:
         return {}
     files: dict = {}
-    for fp in sorted(_glob.glob(os.path.join(full_dir, "*.parquet"))):
+    for fp in (os.path.join(full_dir, n) for n in _parquet_names(full_dir)):
         tbl = ds.dataset(fp, format="parquet").to_table(columns=cols)
         per: dict = {}
         for c in cols:
@@ -1257,13 +1255,7 @@ def _write_data_dir(
     full = os.path.join(path, d)
     _to_physical(df, mapping).write.mode("error").parquet(full)
     dir_stats, file_stats, file_rows = _harvest_stats(full)
-    import glob as _glob
-
-    files = sorted(
-        os.path.basename(p)
-        for p in _glob.glob(os.path.join(full, "*.parquet"))
-    )
-    return d, dir_stats, file_stats, files, file_rows
+    return d, dir_stats, file_stats, _parquet_names(full), file_rows
 
 
 # ---------------------------------------------------------- partitioning --
@@ -1618,14 +1610,7 @@ def _write_partitioned_dirs(
             dir_stats, file_stats, file_rows = _harvest_stats(
                 os.path.join(path, d)
             )
-            import glob as _glob
-
-            files = sorted(
-                os.path.basename(fp)
-                for fp in _glob.glob(
-                    os.path.join(path, d, "*.parquet")
-                )
-            )
+            files = _parquet_names(os.path.join(path, d))
             if not files:
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
                 continue
@@ -2688,9 +2673,11 @@ def vt_scan_plan(
     notnull`` — the null ops take value ``None`` and prune on the
     footers' exact null counts instead of min/max) — a
     file/dir is pruned when ANY conjunct's stats cannot match. Returns
-    ``{"paths": [...], "dirs_total", "dirs_kept", "files_total",
-    "files_kept"}`` where ``paths`` mixes whole-dir paths (dirs without
-    file stats) and individual file paths. Pruning is sound by
+    ``{"files": {dir path: [file, …]}, "partial_dirs", "dirs_total",
+    "dirs_kept", "files_total", "files_kept"}`` (see
+    :func:`_selection_plan`): the selection in the manifest's own
+    ``files`` shape, in manifest order, a directory without a file list
+    (legacy manifests) listed from disk here, once. Pruning is sound by
     construction: every skip op is null-rejecting and stats cover
     non-null values, so a pruned file/dir cannot contain a matching
     row; missing stats always keep."""
@@ -2703,43 +2690,18 @@ def vt_scan_plan(
     # membership keys off this list — a file with no harvestable stats
     # (zero-row part file) must still be scanned
     flists = manifest.get("files", {})
-    plan = {
-        "dirs_total": len(dirs),
-        "files_total": sum(len(flists.get(d, [])) for d in dirs),
-    }
-    if manifest.get("schema") is not None:
-        plan["schema"] = manifest["schema"]
-        if manifest.get("schema_heterogeneous"):
-            plan["schema_heterogeneous"] = True
-    cmap = _col_mapping(manifest)
-    if cmap:
-        # the reader projects physical parquet columns back to logical
-        # names (_read_plan); stats/blooms below are probed by PHYSICAL
-        # name — the key the footers were harvested under
-        plan["column_mapping"] = cmap
-    partial = set(manifest.get("partial_dirs", []))
-    # dirs holding deletion-vector entries are emitted file-granular so
-    # the reader can split the scan: only the DV'd FILES pay the
-    # anti-join, the dir's clean files read plainly (authoritative
-    # lists always exist for the schema'd tables DVs require)
-    dv_dirs = set(manifest.get("dv", {}))
+    files_total = sum(len(flists.get(d, [])) for d in dirs)
     conjuncts = _normalize_predicate(predicate)
     if conjuncts is None:
-        # partial dirs (file-granular MERGE/DELETE leftovers) are read by
-        # their authoritative file list even unfiltered — the dir on disk
-        # still holds the rewritten files until the dir itself expires
-        paths = []
-        for d in dirs:
-            if (d in partial or d in dv_dirs) and flists.get(d):
-                paths.extend(os.path.join(path, d, f) for f in flists[d])
-            else:
-                paths.append(os.path.join(path, d))
-        plan.update(
-            dirs_kept=len(dirs),
-            files_kept=plan["files_total"],
-            paths=paths,
+        plan = _selection_plan(
+            path, manifest, {d: _dir_files(path, manifest, d) for d in dirs}
         )
-        _attach_plan_dv(plan, path, manifest)
+        plan.update(
+            dirs_total=len(dirs),
+            dirs_kept=len(dirs),
+            files_total=files_total,
+            files_kept=files_total,
+        )
         return plan
 
     # generated-column partition pruning (r14): conjuncts on the BASE
@@ -2747,7 +2709,9 @@ def vt_scan_plan(
     # partition column — append them so filtering on ts alone prunes
     # day directories
     conjuncts = _augment_generated_conjuncts(manifest, conjuncts)
-    pconj = _map_conjuncts(conjuncts, cmap)
+    # stats/blooms are probed by PHYSICAL name — the key the footers
+    # were harvested under (_read_plan projects back to logical names)
+    pconj = _map_conjuncts(conjuncts, _col_mapping(manifest))
 
     def may_match(col_stats: dict) -> bool:
         return all(
@@ -2777,15 +2741,15 @@ def vt_scan_plan(
                 survivors.append(d)
         dirs = survivors
     kept_dirs = [d for d in dirs if may_match(stats.get(d, {}))]
-    paths: list[str] = []
+    selection: dict[str, list[str]] = {}
     files_kept = 0
     bloom_pruned = 0
     null_pruned = 0
     for d in kept_dirs:
         flist = flists.get(d)
         if not flist:
-            # legacy manifest without a file list → whole-dir read
-            paths.append(os.path.join(path, d))
+            # legacy manifest without a file list → the whole dir
+            selection[d] = _dir_files(path, manifest, d)
             continue
         per_file = fstats.get(d, {})
         dir_blooms = blooms.get(d, {}).get("files", {})
@@ -2811,82 +2775,167 @@ def vt_scan_plan(
                 continue
             kept_files.append(f)
         files_kept += len(kept_files)
-        paths.extend(os.path.join(path, d, f) for f in kept_files)
-    plan.update(dirs_kept=len(kept_dirs), files_kept=files_kept)
+        if kept_files:
+            selection[d] = kept_files
+    # all pruned → keep one dir for the schema; the filter still yields
+    # zero rows, so results never depend on pruning. The flag tells plan
+    # introspectors (skip-effectiveness pins) that ``files`` names a
+    # schema-only scan the kept-counts deliberately do NOT describe
+    # (r7 advisor: the pre-fallback counts alone misrepresented the
+    # real scan). A partial dir keeps its file-key filter here too:
+    # stale rows matching the predicate must never resurface.
+    fallback = not selection
+    if fallback:
+        d0 = manifest["dirs"][0]
+        selection = {d0: _dir_files(path, manifest, d0)}
+    # even the fallback selection carries its DV: stats/blooms describe
+    # PHYSICAL rows, so a file kept only because a deleted row matched
+    # must not leak that row through the post-scan filter
+    plan = _selection_plan(path, manifest, selection)
+    plan.update(
+        dirs_total=len(manifest["dirs"]),
+        dirs_kept=len(kept_dirs),
+        files_total=files_total,
+        files_kept=files_kept,
+    )
     if partition_pruned:
         plan["partition_pruned"] = partition_pruned
     if bloom_pruned:
         plan["bloom_pruned"] = bloom_pruned
     if null_pruned:
         plan["null_pruned"] = null_pruned
-    # all pruned → keep one dir for the schema; the filter still yields
-    # zero rows, so results never depend on pruning. The flag tells plan
-    # introspectors (skip-effectiveness pins) that ``paths`` names a
-    # schema-only scan the kept-counts deliberately do NOT describe
-    # (r7 advisor: the pre-fallback counts alone misrepresented the
-    # real scan).
-    if not paths:
-        d0 = manifest["dirs"][0]
-        if d0 in partial and flists.get(d0):
-            # a partial dir still holds rewritten (stale) files on disk:
-            # the schema probe must name a LISTED file, never the whole
-            # dir, or stale rows matching the predicate could resurface
-            paths = [os.path.join(path, d0, flists[d0][0])]
-        else:
-            paths = [os.path.join(path, d0)]
+    if fallback:
         plan["schema_only_fallback"] = True
-    plan["paths"] = paths
-    # even the fallback path needs its DV: stats/blooms describe PHYSICAL
-    # rows, so a file kept only because a deleted row matched must not
-    # leak that row through the post-scan filter
+    return plan
+
+
+def _dir_files(path: str, manifest: dict, d: str) -> list[str]:
+    """``d``'s authoritative file list, or — for a directory the
+    manifest lists no files for (legacy manifests, ``c_*`` change
+    directories) — the parquet files on disk, listed at plan time."""
+    return manifest.get("files", {}).get(d) or _parquet_names(
+        os.path.join(path, d)
+    )
+
+
+def _parquet_names(full_dir: str) -> list[str]:
+    """The parquet part files in ``full_dir``, sorted — the files a
+    Spark directory read takes (hidden and ``_``-prefixed names are
+    not data)."""
+    return sorted(
+        n
+        for n in os.listdir(full_dir)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+
+
+def _file_key(dirpath: str, fname: str) -> str:
+    """``basename(dir)/file`` — the key deletion vectors are stored
+    under and :func:`_read_plan` derives from ``_metadata.file_path``."""
+    return os.path.basename(dirpath.rstrip("/")) + "/" + fname
+
+
+def _selection_plan(path: str, manifest: dict, selection: dict) -> dict:
+    """The one read plan behind :func:`vt_scan_plan`,
+    :func:`_touched_plan` and the change feed: ``selection`` (``{dir:
+    [file, …]}`` over ``manifest``'s directories) becomes ``files``,
+    keyed by full directory path, with the snapshot's recorded schema,
+    column mapping and the selected files' deletion vectors.
+    ``partial_dirs`` names each selected directory whose directory on
+    disk holds files outside the selection — the manifest's partial
+    dirs (rewritten files stay on disk until vacuum) and every dir not
+    selected whole; :func:`_read_plan` filters those by file key."""
+    flists = manifest.get("files", {})
+    partial = set(manifest.get("partial_dirs", []))
+    plan: dict = {"files": {}, "partial_dirs": []}
+    for d, fl in selection.items():
+        full = os.path.join(path, d)
+        plan["files"][full] = fl
+        if d in partial or len(fl) < len(flists.get(d) or fl):
+            plan["partial_dirs"].append(full)
+    if manifest.get("schema") is not None:
+        plan["schema"] = manifest["schema"]
+    if manifest.get("schema_heterogeneous"):
+        plan["schema_heterogeneous"] = True
+    cmap = _col_mapping(manifest)
+    if cmap:
+        plan["column_mapping"] = cmap
     _attach_plan_dv(plan, path, manifest)
     return plan
 
 
 def _attach_plan_dv(plan: dict, path: str, manifest: dict) -> None:
-    """Subset the snapshot's deletion vectors to the plan's paths and
-    inline the positions (``{basename(dir)/file: [positions]}``) so
-    :func:`_read_plan` can drop them. Driver-side sidecar reads, bounded
-    by DV size — the merge-on-read contract keeps DVs small; large
-    accumulated deletes are OPTIMIZE's to materialize."""
+    """Subset the snapshot's deletion vectors to the plan's selected
+    files and inline the positions (``{basename(dir)/file:
+    [positions]}``) so :func:`_read_plan` can drop them. Driver-side
+    sidecar reads, bounded by DV size — the merge-on-read contract keeps
+    DVs small; large accumulated deletes are OPTIMIZE's to materialize."""
     dv_map = manifest.get("dv")
     if not dv_map:
         return
-    pathset = set(plan["paths"])
     subset: dict = {}
     for d, fmap in dv_map.items():
-        dirpath = os.path.join(path, d)
-        whole = dirpath in pathset
-        sub = {
-            fname: entry
-            for fname, entry in fmap.items()
-            if whole or os.path.join(path, d, fname) in pathset
-        }
+        selected = set(plan["files"].get(os.path.join(path, d), ()))
+        sub = {f: e for f, e in fmap.items() if f in selected}
         if sub:
             subset[d] = sub
     if subset:
         plan["dv"] = _load_dv_positions(path, subset)
 
 
+def _plan_dirs(plan: dict) -> list[tuple[str, list, dict | None]]:
+    """``(dir path, files, {file: deleted positions} or None)`` per
+    selected directory — the unit the pyarrow readers (``format('vt')``
+    scans, the ``vt_changes`` source) plan one input partition for."""
+    dv = plan.get("dv") or {}
+    out = []
+    for dp, fl in plan["files"].items():
+        sub = {
+            f: dv[_file_key(dp, f)] for f in fl if _file_key(dp, f) in dv
+        }
+        out.append((dp, fl, sub or None))
+    return out
+
+
+def _read_dirs(spark, path: str, manifest: dict, dirs: list) -> DataFrame:
+    """Read ``dirs`` of ``manifest``'s snapshot whole (every listed
+    file) through :func:`_read_plan` — the added directories of an
+    append-only delta or an insert commit."""
+    return _read_plan(
+        spark,
+        _selection_plan(
+            path, manifest, {d: _dir_files(path, manifest, d) for d in dirs}
+        ),
+    )
+
+
 def _read_plan(spark, plan: dict, keep_positions: bool = False) -> DataFrame:
-    """Read a vt_scan_plan's paths, reconciled to the snapshot's recorded
+    """Read a scan plan's ``files`` selection (:func:`_selection_plan`)
+    with each directory as ONE path — Spark lists more than 32 explicit
+    paths in an extra job — reconciled to the snapshot's recorded
     logical schema: heterogeneous layouts (merge_schema appends) union
     footers via Spark's mergeSchema, and columns absent from every kept
     file — pre-evolution data, or evolved columns pruned away with their
     files — come back as typed nulls in the recorded column order.
+
+    Directories in ``partial_dirs`` hold files outside the selection:
+    the read keeps only the selected ones with a ``_vt_file_key``
+    (``basename(dir)/file`` of ``_metadata.file_path``) ``isin`` filter,
+    which Spark applies to the listing, so an unselected file is never
+    opened. A read of whole directories gains no metadata column.
 
     When the plan carries deletion vectors (``plan["dv"]``:
     ``{basename(dir)/file: [row positions]}``), the DV'd rows are
     dropped JVM-side: each row's ``(file key, _metadata.row_index)`` is
     anti-joined against a BROADCAST frame of the deleted positions — no
     Python in the path, and the broadcast is bounded by DV size (the
-    merge-on-read contract keeps DVs small). The scan is SPLIT first:
-    paths that provably hold no vectored row read plainly (zero
-    overhead — no metadata columns, no join; only the DV'd files pay),
-    so the read tax is proportional to DV'd-file bytes, not table
-    bytes (measured: scripts/bench_dv_probe.py). ``keep_positions=True``
-    additionally exposes ``_vt_file_key``/``_vt_pos`` columns so DV
-    writers (vt_delete/vt_update mode="dv") can address matched rows."""
+    merge-on-read contract keeps DVs small). The scan is SPLIT by file
+    key first: files that hold no vectored row read plainly (no row
+    positions, no join; only the DV'd files pay), so the read tax is
+    proportional to DV'd-file bytes, not table bytes (measured:
+    scripts/bench_dv_probe.py). ``keep_positions=True`` additionally
+    exposes ``_vt_file_key``/``_vt_pos`` columns so DV writers
+    (vt_delete/vt_update mode="dv") can address matched rows."""
     reader = spark.read
     sj_read = plan.get("schema")
     if sj_read:
@@ -2916,49 +2965,55 @@ def _read_plan(spark, plan: dict, keep_positions: bool = False) -> DataFrame:
         reader = reader.schema(phys_schema)
     elif plan.get("schema_heterogeneous"):
         reader = reader.option("mergeSchema", "true")
+    files = plan["files"]
+    partial = plan.get("partial_dirs") or []
     dv = plan.get("dv")
     if dv and not keep_positions:
-        dirty: list[str] = []
-        clean: list[str] = []
-        for p in plan["paths"]:
-            base = os.path.basename(p.rstrip("/"))
-            if os.path.isdir(p):
-                hit = any(k.split("/", 1)[0] == base for k in dv)
-            else:
-                hit = (
-                    os.path.basename(os.path.dirname(p)) + "/" + base
-                ) in dv
-            (dirty if hit else clean).append(p)
-        if clean and dirty:
-            sub = dict(plan)
-            sub["paths"] = clean
-            sub.pop("dv")
-            out = _read_plan(spark, sub)
-            sub2 = dict(plan)
-            sub2["paths"] = dirty
-            return out.unionByName(_read_plan(spark, sub2))
-        if clean and not dirty:
-            # _attach_plan_dv only sets plan["dv"] for files in the
-            # plan's paths, so a non-empty vector with zero dirty paths
-            # means the key derivation diverged (path normalization,
-            # future refactor) — reading WITHOUT the filter here would
-            # silently resurrect deleted rows; fail loudly instead
-            # (ADVICE r11)
+        clean: dict = {}
+        dirty: dict = {}
+        for dp, fl in files.items():
+            for f in fl:
+                side = dirty if _file_key(dp, f) in dv else clean
+                side.setdefault(dp, []).append(f)
+        if not dirty:
+            # _attach_plan_dv only sets plan["dv"] for selected files,
+            # so a non-empty vector matching none of them means the key
+            # derivation diverged (path normalization, future refactor)
+            # — reading WITHOUT the filter here would silently resurrect
+            # deleted rows; fail loudly instead (ADVICE r11)
             raise ValueError(
-                "deletion-vector keys matched no scan path — DV filter "
-                f"would be dropped silently (dv keys={sorted(dv)}, "
-                f"paths={sorted(plan['paths'])})"
+                "deletion-vector keys matched no selected file — DV "
+                f"filter would be dropped silently (dv keys={sorted(dv)}, "
+                f"files={sorted(files)})"
             )
-        # all paths dirty: single-leg read below applies the filter
-    df = reader.parquet(*plan["paths"])
-    if dv or keep_positions:
-        parts = F.split(F.col("_metadata.file_path"), "/")
+        if clean:
+            split = [*partial, *(set(clean) & set(dirty))]
+            out = _read_plan(
+                spark,
+                {**plan, "files": clean, "partial_dirs": split, "dv": None},
+            )
+            return out.unionByName(
+                _read_plan(
+                    spark, {**plan, "files": dirty, "partial_dirs": split}
+                )
+            )
+        # every selected file is dirty: one leg applies the filter below
+    df = reader.parquet(*files)
+    if dv or keep_positions or partial:
+        # the path's last two components, evaluated per row: one
+        # substring scan, no split array
         df = df.withColumn(
             "_vt_file_key",
-            F.concat(
-                F.element_at(parts, -2), F.lit("/"), F.element_at(parts, -1)
-            ),
-        ).withColumn("_vt_pos", F.col("_metadata.row_index"))
+            F.substring_index(F.col("_metadata.file_path"), "/", -2),
+        )
+    if partial:
+        df = df.filter(
+            F.col("_vt_file_key").isin(
+                [_file_key(dp, f) for dp, fl in files.items() for f in fl]
+            )
+        )
+    if dv or keep_positions:
+        df = df.withColumn("_vt_pos", F.col("_metadata.row_index"))
     if dv:
         n_pos = sum(len(poss) for poss in dv.values())
         if n_pos <= _DV_LITERAL_MAX:
@@ -3013,7 +3068,7 @@ def _read_plan(spark, plan: dict, keep_positions: bool = False) -> DataFrame:
         if keep_positions:
             cols += [F.col("_vt_file_key"), F.col("_vt_pos")]
         df = df.select(*cols)
-    elif (dv is not None) and not keep_positions:
+    elif not keep_positions and (dv or partial):
         df = df.drop("_vt_file_key", "_vt_pos")
     return df
 
@@ -3151,19 +3206,10 @@ def vt_read_delta(
     new_dirs = [d for d in to_manifest["dirs"] if d not in old]
     # reconcile to the TO version's logical schema: pre-evolution delta
     # dirs gain typed nulls for evolved columns, same as vt_read
-    plan = {
-        "schema": to_manifest.get("schema"),
-        "schema_heterogeneous": to_manifest.get(
-            "schema_heterogeneous", False
-        ),
-    }
-    if _col_mapping(to_manifest):
-        plan["column_mapping"] = _col_mapping(to_manifest)
-    if not new_dirs:
-        plan["paths"] = [os.path.join(path, to_manifest["dirs"][0])]
-        return _read_plan(spark, plan).filter(F.lit(False))
-    plan["paths"] = [os.path.join(path, d) for d in new_dirs]
-    return _read_plan(spark, plan)
+    df = _read_dirs(
+        spark, path, to_manifest, new_dirs or to_manifest["dirs"][:1]
+    )
+    return df if new_dirs else df.filter(F.lit(False))
 
 
 def vt_read_changes(
@@ -3313,15 +3359,10 @@ def vt_read_changes(
             new_dirs = [d for d in m["dirs"] if d not in prev_dirs]
             if not new_dirs:
                 continue
-            plan = {
-                "schema": m.get("schema"),
-                "schema_heterogeneous": m.get("schema_heterogeneous", False),
-                "paths": [os.path.join(path, d) for d in new_dirs],
-            }
-            if _col_mapping(m):
-                plan["column_mapping"] = _col_mapping(m)
             frames.append(
-                reconcile(_read_plan(spark, plan), "insert", v, src=m)
+                reconcile(
+                    _read_dirs(spark, path, m, new_dirs), "insert", v, src=m
+                )
             )
         elif op in ("merge", "update"):
             change_dir = m.get("changes")
@@ -3464,20 +3505,10 @@ def vt_read_changes(
                 )
             new_dirs = blob.get("new_dirs") or []
             if new_dirs:
-                plan = {
-                    "schema": m.get("schema"),
-                    "schema_heterogeneous": m.get(
-                        "schema_heterogeneous", False
-                    ),
-                    "paths": [
-                        os.path.join(path, d) for d in new_dirs
-                    ],
-                }
-                if _col_mapping(m):
-                    plan["column_mapping"] = _col_mapping(m)
                 frames.append(
                     reconcile(
-                        _read_plan(spark, plan), "insert", v, src=m
+                        _read_dirs(spark, path, m, new_dirs),
+                        "insert", v, src=m,
                     )
                 )
         elif op in ("overwrite", "restore", "clone"):
@@ -3826,9 +3857,11 @@ def _partition_snapshot(
     path, see _file_fully_matches; conjuncts the dir's partition
     values prove need no footer evidence — `day < X AND region = 'EU'`
     on a day-partitioned table drops interior EU files on region stats
-    alone). Returns the kept manifest fragments plus the touched read
-    paths and the rewrite-shape counts the audit blob records
-    (including ``files_dropped``/``rows_dropped``/``dirs_dropped``)."""
+    alone). Returns the kept manifest fragments plus the ``touched``
+    selection (``{dir: [file, …]}``, manifest order; a directory without
+    a file list is listed from disk here) and the rewrite-shape counts
+    the audit blob records (including
+    ``files_dropped``/``rows_dropped``/``dirs_dropped``)."""
     flists = manifest.get("files", {})
     fstats = manifest.get("file_stats", {})
     blooms = manifest.get("blooms", {})
@@ -3842,7 +3875,7 @@ def _partition_snapshot(
     kept_blooms: dict = {}
     kept_frows: dict = {}
     new_partial: list[str] = []
-    touched_paths: list[str] = []
+    touched: dict[str, list[str]] = {}
     files_total = 0
     files_rewritten = 0
     files_dropped = 0
@@ -3872,7 +3905,7 @@ def _partition_snapshot(
                 dropped_names.append((d, f))
             continue
         if not flist:
-            touched_paths.append(os.path.join(path, d))
+            touched[d] = _dir_files(path, manifest, d)
             dirs_rewritten_whole += 1
             continue
         files_total += len(flist)
@@ -3911,7 +3944,7 @@ def _partition_snapshot(
                 else touch_file(dstats.get(f, {}), dbfiles.get(f, {}))
             )
             if hit:
-                touched_paths.append(os.path.join(path, d, f))
+                touched.setdefault(d, []).append(f)
                 files_rewritten += 1
             else:
                 keep.append(f)
@@ -3944,7 +3977,7 @@ def _partition_snapshot(
             if ds:
                 kept_stats[d] = ds
     return {
-        "touched_paths": touched_paths,
+        "touched": touched,
         "dirs": kept_dirs,
         "files": kept_files,
         "file_stats": kept_fstats,
@@ -4213,39 +4246,15 @@ def _pred_touch_fn(conjuncts, bloom_types):
 # (_land).
 
 
-def _touched_plan(path: str, manifest: dict, paths: list) -> dict:
-    """Read plan over ``paths`` of ``manifest``'s snapshot, reconciled to
-    its recorded schema and honoring its deletion vectors — a rewrite
-    must not resurrect (nor a new vector re-count) rows an earlier
-    merge-on-read DML already removed. A directory whose listed files
-    are all touched is read as ONE directory path, the rule
-    :func:`vt_scan_plan` reads a snapshot by (Spark lists more than 32
-    explicit paths in an extra job); partial and deletion-vector
-    directories stay file-granular, as they do there."""
-    touched = set(paths)
-    by_file = set(manifest.get("partial_dirs", [])) | set(
-        manifest.get("dv") or {}
-    )
-    whole = {
-        os.path.join(path, d)
-        for d, flist in manifest.get("files", {}).items()
-        if flist
-        and d not in by_file
-        and all(os.path.join(path, d, f) in touched for f in flist)
-    }
-    plan = {
-        "paths": list(dict.fromkeys(
-            os.path.dirname(p) if os.path.dirname(p) in whole else p
-            for p in paths
-        )),
-        "schema": manifest["schema"],
-        "schema_heterogeneous": manifest.get("schema_heterogeneous", False),
-    }
-    cmap = _col_mapping(manifest)
-    if cmap:
-        plan["column_mapping"] = cmap
-    _attach_plan_dv(plan, path, manifest)
-    return plan
+def _touched_plan(path: str, manifest: dict, touched: dict) -> dict:
+    """Read plan over the ``touched`` selection of ``manifest``'s
+    snapshot (:func:`_partition_snapshot`), through the same
+    :func:`_selection_plan` as :func:`vt_scan_plan`: each directory is
+    read as one path, a partly touched one filtered to its touched files,
+    and the snapshot's deletion vectors apply — a rewrite must not
+    resurrect (nor a new vector re-count) rows an earlier merge-on-read
+    DML already removed."""
+    return _selection_plan(path, manifest, touched)
 
 
 def _shape_blob(part: dict, manifest: dict) -> dict:
@@ -4652,7 +4661,7 @@ def _rewrite(
                 part = base = _partition_snapshot(
                     path, manifest, edit.touch, prove=edit.prove
                 )
-                if not part["touched_paths"] and not edit.inserts:
+                if not part["touched"] and not edit.inserts:
                     if not part["files_dropped"]:
                         return expected  # provably nothing matches
                     if not part["dirs"]:
@@ -4665,10 +4674,8 @@ def _rewrite(
                         # every dropped row was already hidden by a
                         # deletion vector: logically nothing changes
                         return expected
-                if part["touched_paths"]:
-                    tplan = _touched_plan(
-                        path, manifest, part["touched_paths"]
-                    )
+                if part["touched"]:
+                    tplan = _touched_plan(path, manifest, part["touched"])
                     if mode != "rewrite" and edit.dv_rows is not None:
                         matched, dv_changes, dv_new = edit.dv_rows(
                             _read_plan(spark, tplan, keep_positions=True)
@@ -4773,25 +4780,17 @@ def _rewrite(
 # output shape, committed through the DML core's _land.
 
 
-def _paths_bytes(paths: list) -> int:
-    """On-disk bytes of touched read paths: a file's size, or for a
-    directory read whole (no authoritative file list) the parquet files
-    inside it — its bytes must count toward output sizing, or a 10 GB
-    legacy dir would pack into one oversized file. Unreadable sizes
-    count 0."""
+def _paths_bytes(files: dict) -> int:
+    """On-disk bytes of a read plan's ``files`` selection — a legacy
+    directory's files were listed at plan time, so a 10 GB legacy dir
+    counts toward output sizing too. Unreadable sizes count 0."""
     total = 0
-    for p in paths:
-        try:
-            if os.path.isdir(p):
-                total += sum(
-                    os.path.getsize(os.path.join(p, n))
-                    for n in os.listdir(p)
-                    if n.endswith(".parquet")
-                )
-            else:
-                total += os.path.getsize(p)
-        except OSError:
-            continue
+    for dp, fl in files.items():
+        for f in fl:
+            try:
+                total += os.path.getsize(os.path.join(dp, f))
+            except OSError:
+                continue
     return total
 
 
@@ -4814,12 +4813,8 @@ def _repack(
        ``audit(part, nbytes)``, the verb's audit-blob fields;
     2. reads the touched files through their deletion vectors (the
        rewrite materializes them) and measures their bytes
-       (:func:`_paths_bytes`). When nothing stays referenced verbatim —
-       and on tables without a recorded schema (legacy, only the
-       whole-table OPTIMIZE selects them) — the touched set is the
-       snapshot, read through its own scan plan: a few directory paths
-       instead of one path per file (Spark lists more than 32 paths in
-       an extra job);
+       (:func:`_paths_bytes`). Tables without a recorded schema (legacy,
+       only the whole-table OPTIMIZE selects them) read the snapshot;
     3. lays the rows out with ``shape(frame, nbytes, partition_by)``;
     4. writes one directory per partition value on partitioned tables,
        else one directory (:func:`_write_layout`), and harvests their
@@ -4848,15 +4843,13 @@ def _repack(
             part = _partition_snapshot(
                 path, manifest, touch_file, touch_name=touch_name
             )
-            if not part["touched_paths"]:
+            if not part["touched"]:
                 return expected
-            nbytes = _paths_bytes(part["touched_paths"])
-        if part is None or not part["dirs"]:
-            frame = vt_read(spark, path, expected)
+            tplan = _touched_plan(path, manifest, part["touched"])
+            nbytes = _paths_bytes(tplan["files"])
+            frame = _read_plan(spark, tplan)
         else:
-            frame = _read_plan(
-                spark, _touched_plan(path, manifest, part["touched_paths"])
-            )
+            frame = vt_read(spark, path, expected)
         pby = manifest.get("partition_by") or []
         out = shape(frame, nbytes, pby)
         cmap = _col_mapping(manifest)
@@ -8004,18 +7997,11 @@ def vt_generate_manifest(
             "table schema — run vt_compact/vt_optimize to rewrite the "
             "snapshot to one physical schema first"
         )
-    flists = m.get("files", {})
-    out: list[str] = []
-    for d in m["dirs"]:
-        full = d if os.path.isabs(d) else os.path.join(path, d)
-        fl = flists.get(d)
-        if fl is None:
-            fl = sorted(
-                n
-                for n in os.listdir(full)
-                if n.endswith(".parquet")
-            )
-        out.extend(os.path.abspath(os.path.join(full, f)) for f in fl)
+    out = [
+        os.path.abspath(os.path.join(dp, f))
+        for dp, fl in vt_scan_plan(path, v)["files"].items()
+        for f in fl
+    ]
     dest_dir = out_dir or os.path.join(path, "_symlink_format_manifest")
     os.makedirs(dest_dir, exist_ok=True)
     dest = os.path.join(dest_dir, "manifest")

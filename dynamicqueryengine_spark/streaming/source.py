@@ -15,8 +15,9 @@ Offset model (Delta's streaming source in miniature):
 * ``latestOffset`` advances to the table head, capped by
   ``maxVersionsPerTrigger`` (rate limiting for backfills);
 * ``partitions(start, end)`` plans one input partition per (commit,
-  file): append commits contribute their NEW files tagged ``insert``,
-  merge/delete commits their recorded ``c_*`` change files (the
+  directory), carrying the directory's selected files: append commits
+  contribute their NEW directories tagged ``insert``, merge/delete
+  commits their recorded ``c_*`` change directory (the
   ``_change_type`` column rides in the file), a delete committed
   without ``change_feed=True`` replays as the PREVIOUS snapshot
   filtered by the predicate recorded in its manifest, and
@@ -25,8 +26,8 @@ Offset model (Delta's streaming source in miniature):
   ``analyze`` commits contribute nothing (layout/statistics only).
 
 Scale shape: planning is manifest-metadata only (no data file opened on
-the driver); each partition reads ONE parquet file with pyarrow on the
-executor and yields Arrow RecordBatches straight into Spark's Arrow
+the driver); each partition reads ONE directory's files with pyarrow
+on the executor and yields Arrow RecordBatches straight into Spark's Arrow
 ingestion path — |changes|-proportional work per micro-batch, zero
 state store. The table path must be on storage every executor can reach
 (the same contract as any Spark table).
@@ -81,11 +82,12 @@ CHANGE_SOURCE_NAME = "vt_changes"
 
 @dataclass
 class _ChangePartition(InputPartition):
-    """One (commit, file-or-dir) unit of change output. ``change_type``
-    None means the file itself carries a ``_change_type`` column (a
-    recorded ``c_*`` change file); otherwise every row gets the literal.
+    """One (commit, directory) unit of change output: the directory
+    ``path`` and the ``files`` in it to read. ``change_type`` None
+    means the files carry a ``_change_type`` column (a recorded ``c_*``
+    change directory); otherwise every row gets the literal.
     ``predicate`` (delete replay) filters the file's rows to the ones
-    the delete removed. ``dv`` maps file basename → deleted row
+    the delete removed. ``dv`` maps file name → deleted row
     positions (the replayed snapshot's deletion vectors): those rows
     are logically absent from the snapshot, so they are dropped BEFORE
     any tagging or predicate filtering. Column-mapped tables are
@@ -95,31 +97,11 @@ class _ChangePartition(InputPartition):
     pre-translated to physical names)."""
 
     path: str = ""
+    files: list | None = None
     version: int = 0
     change_type: str | None = None
     predicate: list | None = None
     dv: dict | None = None
-
-
-def _dv_for_path(p: str, loaded: dict) -> dict | None:
-    """Subset a snapshot's loaded DV positions (``{basename(dir)/file:
-    [positions]}``) to one scan-plan path — a whole directory or a
-    single file — keyed by file basename for the executor-side mask."""
-    if os.path.isdir(p):
-        base = os.path.basename(p.rstrip("/"))
-        sub = {
-            k.split("/", 1)[1]: v
-            for k, v in loaded.items()
-            if k.split("/", 1)[0] == base
-        }
-        return sub or None
-    key = (
-        os.path.basename(os.path.dirname(p))
-        + "/"
-        + os.path.basename(p)
-    )
-    poss = loaded.get(key)
-    return {os.path.basename(p): poss} if poss else None
 
 
 def _pa_filter(predicate: list):
@@ -315,7 +297,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
     def _plan_changes(self, lo: int, hi: int):
         return _plan_change_partitions(self._path, lo, hi)
 
-    # -- reading (executor, one file per partition) ------------------------
+    # -- reading (executor, one directory per partition) -------------------
     def read(self, partition: _ChangePartition):
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -334,46 +316,49 @@ def _plan_change_partitions(
     path: str, lo: int, hi: int
 ) -> "list[_ChangePartition]":
     """Plan the row-level change output of every commit in ``(lo, hi]``
-    as one ``_ChangePartition`` per (commit, file) — manifest metadata
-    only, no data file opened. Shared by the ``vt_changes`` streaming
-    source (per micro-batch offset range) and the batch reader's
-    ``readChangeFeed`` option (r13 verdict ask #3), so both surfaces
-    emit byte-identical change sets for the same version range."""
-    from ..sources.versioned import (
-        _load_dv_positions,
-        _read_manifest,
-        vt_scan_plan,
-        vt_versions,
-    )
+    as one ``_ChangePartition`` per (commit, directory) — manifest
+    metadata only, no data file opened. Shared by the ``vt_changes``
+    streaming source (per micro-batch offset range) and the batch
+    reader's ``readChangeFeed`` option (r13 verdict ask #3), so both
+    surfaces emit byte-identical change sets for the same version
+    range."""
+    from ..sources.versioned import _dir_files, _read_manifest, vt_versions
 
     versions = vt_versions(path)
     parts: list[_ChangePartition] = []
 
-    def dv_of(v: int) -> dict:
-        # the replayed snapshot's deletion vectors, loaded ONCE on
-        # the driver (sidecars are small by the merge-on-read
-        # contract) and shipped per-partition as plain positions
-        m = _read_manifest(path, v)
-        dvm = m.get("dv")
-        return _load_dv_positions(path, dvm) if dvm else {}
-
-    def colmap_of(v: int) -> dict | None:
-        return _read_manifest(path, v).get("column_mapping")
-
-    def snapshot_parts(v: int, tag: str):
-        # honors partial_dirs / authoritative file lists, and the
-        # snapshot's deletion vectors (DV'd rows are not part of the
-        # snapshot being replayed)
-        loaded = dv_of(v)
-        for p in vt_scan_plan(path, v)["paths"]:
+    def dir_parts(m: dict, dirs, v: int, tag: str | None) -> None:
+        # whole directories: an append's new dirs, a recorded c_*
+        # change dir (listed here — the manifest lists no change files)
+        for d in dirs:
             parts.append(
                 _ChangePartition(
-                    path=p,
+                    path=os.path.join(path, d),
+                    files=_dir_files(path, m, d),
                     version=v,
                     change_type=tag,
-                    dv=_dv_for_path(p, loaded),
                 )
             )
+
+    def need(v: int, what: str) -> None:
+        if v > 0 and v not in versions:
+            raise ValueError(
+                f"version {v} was vacuumed: cannot {what}"
+            )
+
+    def replay(v: int, pred: list) -> None:
+        # replay = PREVIOUS snapshot ∩ predicate; the previous
+        # snapshot's own DVs must apply first or rows an earlier
+        # merge-on-read delete removed could re-match and stream as
+        # phantom deletes
+        cm_prev = _read_manifest(path, v - 1).get("column_mapping")
+        if cm_prev:
+            # the predicate was recorded in LOGICAL names; the files
+            # hold physical ones
+            pred = [[cm_prev.get(c, c), o, val] for c, o, val in pred]
+        parts.extend(
+            _plan_snapshot_parts(path, v - 1, "delete", v, pred)
+        )
 
     for v in range(lo + 1, hi + 1):
         if v not in versions:
@@ -399,75 +384,18 @@ def _plan_change_partitions(
                 if v - 1 in versions
                 else set()
             )
-            if v - 1 > 0 and v - 1 not in versions:
-                raise ValueError(
-                    f"version {v - 1} was vacuumed: cannot "
-                    f"reconstruct changes for version {v}"
-                )
-            flists = m.get("files", {})
-            for d in m["dirs"]:
-                if d in prev:
-                    continue
-                fl = flists.get(d)
-                if fl:
-                    for f in fl:
-                        parts.append(
-                            _ChangePartition(
-                                path=os.path.join(path, d, f),
-                                version=v,
-                                change_type="insert",
-                            )
-                        )
-                else:
-                    parts.append(
-                        _ChangePartition(
-                            path=os.path.join(path, d),
-                            version=v,
-                            change_type="insert",
-                        )
-                    )
+            need(v - 1, f"reconstruct changes for version {v}")
+            new_dirs = [d for d in m["dirs"] if d not in prev]
+            dir_parts(m, new_dirs, v, "insert")
         elif op in ("merge", "delete", "update"):
             cd = m.get("changes")
             if cd is not None:
-                parts.append(
-                    _ChangePartition(
-                        path=os.path.join(path, cd),
-                        version=v,
-                        change_type=None,
-                    )
-                )
+                dir_parts(m, [cd], v, None)
             elif op == "delete" and (m.get("delete") or {}).get(
                 "predicate"
             ):
-                pred = m["delete"]["predicate"]
-                if v - 1 > 0 and v - 1 not in versions:
-                    raise ValueError(
-                        f"version {v - 1} was vacuumed: cannot "
-                        f"replay the delete at version {v}"
-                    )
-                # replay = PREVIOUS snapshot ∩ predicate; the
-                # previous snapshot's own DVs must apply first or
-                # rows an earlier merge-on-read delete removed could
-                # re-match and stream as phantom deletes
-                prev_loaded = dv_of(v - 1)
-                cm_prev = colmap_of(v - 1)
-                if cm_prev:
-                    # the predicate was recorded in LOGICAL names;
-                    # the files hold physical ones
-                    pred = [
-                        [cm_prev.get(c, c), o, val]
-                        for c, o, val in pred
-                    ]
-                for p in vt_scan_plan(path, v - 1)["paths"]:
-                    parts.append(
-                        _ChangePartition(
-                            path=p,
-                            version=v,
-                            change_type="delete",
-                            predicate=pred,
-                            dv=_dv_for_path(p, prev_loaded),
-                        )
-                    )
+                need(v - 1, f"replay the delete at version {v}")
+                replay(v, m["delete"]["predicate"])
             else:
                 raise ValueError(
                     f"version {v} is a {op} committed without "
@@ -482,101 +410,52 @@ def _plan_change_partitions(
             cd = m.get("changes")
             if cd is not None:
                 # materialized deletions (the file carries _change_type)
-                parts.append(
-                    _ChangePartition(
-                        path=os.path.join(path, cd),
-                        version=v,
-                        change_type=None,
-                    )
-                )
+                dir_parts(m, [cd], v, None)
             elif blob.get("predicate"):
-                pred = blob["predicate"]
-                if v - 1 > 0 and v - 1 not in versions:
-                    raise ValueError(
-                        f"version {v - 1} was vacuumed: cannot "
-                        f"replay the replace_where at version {v}"
-                    )
-                prev_loaded = dv_of(v - 1)
-                cm_prev = colmap_of(v - 1)
-                if cm_prev:
-                    pred = [
-                        [cm_prev.get(c, c), o, val]
-                        for c, o, val in pred
-                    ]
-                for p in vt_scan_plan(path, v - 1)["paths"]:
-                    parts.append(
-                        _ChangePartition(
-                            path=p,
-                            version=v,
-                            change_type="delete",
-                            predicate=pred,
-                            dv=_dv_for_path(p, prev_loaded),
-                        )
-                    )
+                need(v - 1, f"replay the replace_where at version {v}")
+                replay(v, blob["predicate"])
             else:  # pragma: no cover - writer always records one
                 raise ValueError(
                     f"version {v} is a replace_where with neither a "
                     "recorded predicate nor materialized changes"
                 )
-            flists = m.get("files", {})
-            for d in blob.get("new_dirs") or []:
-                fl = flists.get(d)
-                if fl:
-                    for f in fl:
-                        parts.append(
-                            _ChangePartition(
-                                path=os.path.join(path, d, f),
-                                version=v,
-                                change_type="insert",
-                            )
-                        )
-                else:
-                    parts.append(
-                        _ChangePartition(
-                            path=os.path.join(path, d),
-                            version=v,
-                            change_type="insert",
-                        )
-                    )
+            dir_parts(m, blob.get("new_dirs") or [], v, "insert")
         elif op in ("overwrite", "restore", "clone"):
             if v - 1 > 0:
-                if v - 1 not in versions:
-                    raise ValueError(
-                        f"version {v - 1} was vacuumed: cannot "
-                        f"reconstruct changes for version {v}"
-                    )
-                snapshot_parts(v - 1, "delete")
-            snapshot_parts(v, "insert")
+                need(v - 1, f"reconstruct changes for version {v}")
+                parts.extend(_plan_snapshot_parts(path, v - 1, "delete", v))
+            parts.extend(_plan_snapshot_parts(path, v))
         else:  # pragma: no cover - future ops must opt in
             raise ValueError(f"version {v}: unknown op {op!r}")
     return parts
 
 
 def _plan_snapshot_parts(
-    path: str, v: int
+    path: str,
+    v: int,
+    tag: str = "insert",
+    at: int | None = None,
+    predicate: list | None = None,
 ) -> "list[_ChangePartition]":
-    """The full snapshot at version ``v`` as ``insert``-tagged change
-    partitions — one per scan-plan path (partial_dirs / authoritative
-    file lists honored), the snapshot's deletion vectors applied. The
-    initial-snapshot batch of a no-``startingVersion`` stream (r14),
-    driver-side manifest metadata only."""
-    from ..sources.versioned import (
-        _load_dv_positions,
-        _read_manifest,
-        vt_scan_plan,
-    )
+    """The snapshot at version ``v`` as ``tag``-tagged change partitions
+    stamped with commit ``at`` (default ``v``) — one per directory of
+    its scan plan (partial_dirs / authoritative file lists honored),
+    the snapshot's deletion vectors applied, ``predicate`` (a delete
+    replay) filtering what is left. The initial-snapshot batch of a
+    no-``startingVersion`` stream (r14), the delete side of an
+    overwrite and a delete replay; driver-side manifest metadata only."""
+    from ..sources.versioned import _plan_dirs, vt_scan_plan
 
-    m = _read_manifest(path, v)
-    dvm = m.get("dv")
-    loaded = _load_dv_positions(path, dvm) if dvm else {}
     return [
         _ChangePartition(
             path=p,
-            version=v,
-            change_type="insert",
-            dv=_dv_for_path(p, loaded),
+            files=files,
+            version=v if at is None else at,
+            change_type=tag,
+            predicate=predicate,
+            dv=dv,
         )
-        for p in vt_scan_plan(path, v)["paths"]
+        for p, files, dv in _plan_dirs(vt_scan_plan(path, v))
     ]
 
 
@@ -662,27 +541,21 @@ def _read_change_partition(
     ``target``-schema Arrow batches — DV mask first, replay predicate
     second, then reconciliation to the reader's logical schema through
     ``colmap`` ({logical → physical}; identity when unmapped). Shared
-    by the streaming source and the batch ``readChangeFeed`` reader."""
-    import glob as _glob
-
+    by the streaming source and both batch ``format('vt')`` readers —
+    a snapshot scan's ``target`` is the table schema, so it gains no
+    change columns."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    paths = (
-        sorted(
-            _glob.glob(os.path.join(partition.path, "*.parquet"))
-        )
-        if os.path.isdir(partition.path)
-        else [partition.path]
-    )
-    for p in paths:
+    for fname in partition.files:
+        p = os.path.join(partition.path, fname)
         dset = ds.dataset(p, format="parquet")
         expr = (
             _pa_filter(partition.predicate)
             if partition.predicate
             else None
         )
-        dvpos = (partition.dv or {}).get(os.path.basename(p))
+        dvpos = (partition.dv or {}).get(fname)
         if dvpos:
             # deletion vectors address PHYSICAL row positions, so
             # the file is read unfiltered, DV'd rows are masked

@@ -606,6 +606,31 @@ class TestReadChangeFeed:
             for r in fmt.select("_commit_version").distinct().collect()
         } == {1, 2, 3, 5, 6}
 
+    def test_overwrite_rows_carry_the_overwrite_version(
+        self, registered, tmp_path
+    ):
+        """An overwrite's synthesized deletes belong to the overwrite
+        commit, as vt_read_changes stamps them, not to the version they
+        were deleted from."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_read_changes,
+        )
+
+        spark = registered
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 3))
+        vt_write(spark, path, _df(spark, 2), mode="overwrite")
+        fmt = (
+            spark.read.format("vt")
+            .option("path", path)
+            .option("readChangeFeed", "true")
+            .option("startingVersion", "2")
+            .load()
+        )
+        native = vt_read_changes(spark, path, 1, 2)
+        assert self._norm(fmt) == self._norm(native)
+        assert {r["_commit_version"] for r in fmt.collect()} == {2}
+
     def test_sub_range_and_defaults(self, registered, tmp_path):
         from dynamicqueryengine_spark.sources.versioned import (
             vt_read_changes,

@@ -4,10 +4,12 @@ time travel, optimistic commit, keyed merge, vacuum."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
 from dynamicqueryengine_spark.sources.versioned import (
+    vt_count,
     vt_merge,
     vt_read,
     vt_vacuum,
@@ -4399,7 +4401,7 @@ class TestAdviceFixesR12:
             vt_read(spark, path).collect()
 
     def test_read_plan_raises_on_dv_key_mismatch(self, spark, tmp_path):
-        """A non-empty DV map whose keys match no scan path must fail
+        """A non-empty DV map whose keys match no selected file must fail
         loudly, never read without the filter (silent resurrection)."""
         from dynamicqueryengine_spark.sources.versioned import (
             _read_manifest,
@@ -4408,12 +4410,13 @@ class TestAdviceFixesR12:
 
         path = str(tmp_path / "t")
         vt_write(spark, path, _df(spark, [(1, "a")]))
-        d = _read_manifest(path, 1)["dirs"][0]
+        m = _read_manifest(path, 1)
+        ((d, files),) = m["files"].items()
         plan = {
-            "paths": [os.path.join(path, d)],
-            "dv": {"d_nonexistent/part-0.parquet": [0]},
+            "files": {os.path.join(path, d): files},
+            "dv": {"d_nonexistent/" + files[0]: [0]},
         }
-        with pytest.raises(ValueError, match="matched no scan path"):
+        with pytest.raises(ValueError, match="matched no selected file"):
             _read_plan(spark, plan)
 
     def test_commit_falls_back_when_hardlinks_unsupported(
@@ -5860,3 +5863,185 @@ class TestDmlJobCount:
         assert len(jobs) == 1
         rows = vt_read(spark, path).collect()
         assert len(rows) == 4000 and {r["v"] for r in rows} == {"u"}
+
+    @staticmethod
+    def _status_jobs(spark, call):
+        """``(call(), Spark jobs it ran)``, counted by the scheduler, so
+        jobs started off the calling thread count too. (A status-store
+        size delta saturates once the store holds its last 1000 jobs.)"""
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        before = dag.numTotalJobs()
+        out = call()
+        return out, dag.numTotalJobs() - before
+
+    @staticmethod
+    def _forty_files(spark, tmp_path):
+        path = str(tmp_path / "t")
+        df = spark.range(4000).selectExpr("id", "concat('v', id) AS v")
+        vt_write(spark, path, df.repartition(40))
+        return path
+
+    def test_partial_delete_reads_directory_once(self, spark, tmp_path):
+        """A delete that rewrites most of a 40-file directory reads the
+        directory as one path filtered to its touched files: more than
+        32 explicit file paths cost Spark an extra listing job."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_delete,
+        )
+
+        path = self._forty_files(spark, tmp_path)
+        v = vt_versions(path)[-1]
+        got, jobs = self._status_jobs(
+            spark, lambda: vt_delete(spark, path, ("id", ">=", 100))
+        )
+        assert got == v + 1
+        blob = _read_manifest(path, v + 1)["delete"]
+        assert blob["files_rewritten"] > 32
+        assert blob["files_rewritten"] + blob.get("files_dropped", 0) == 40
+        assert jobs == 1
+        assert sorted(r["id"] for r in vt_read(spark, path).collect()) == (
+            list(range(100))
+        )
+
+    def test_file_pruned_read_runs_no_extra_job(self, spark, tmp_path):
+        """A predicate read keeping 38 of the directory's 40 files runs no
+        more jobs than the unfiltered read of the whole directory."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_scan_plan,
+        )
+
+        path = self._forty_files(spark, tmp_path)
+        m = _read_manifest(path, vt_versions(path)[-1])
+        ((d, fstats),) = m["file_stats"].items()
+        cut = sorted(s["id"][1] for s in fstats.values())[2]
+        pred = ("id", ">", cut - 1)
+        plan = vt_scan_plan(path, predicate=pred)
+        assert (plan["files_kept"], plan["files_total"]) == (38, 40)
+        want = spark.range(4000).filter(f"id >= {cut}").count()
+        for _ in range(2):  # the second pass is warm
+            n_all, jobs_all = self._status_jobs(
+                spark, lambda: vt_read(spark, path).count()
+            )
+            n_kept, jobs_kept = self._status_jobs(
+                spark, lambda: vt_read(spark, path, predicate=pred).count()
+            )
+        assert (n_all, n_kept) == (4000, want)
+        assert jobs_kept <= jobs_all
+
+
+class TestStaleFilesStayHidden:
+    """A file-granular delete leaves a PARTIAL directory: its rewritten
+    and dropped files stay on disk until vacuum, and every reader must
+    serve the manifest's file list, never the directory's contents."""
+
+    @pytest.fixture(scope="class")
+    def table(self, spark, tmp_path_factory):
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_delete,
+            vt_optimize,
+        )
+
+        path = str(tmp_path_factory.mktemp("stale") / "t")
+        vt_write(spark, path, _df(spark, [(i, f"v{i}") for i in range(40)]))
+        vt_optimize(spark, path, ["id"], n_partitions=4)
+        (d,) = _read_manifest(path, vt_versions(path)[-1])["dirs"]
+        on_disk = set(os.listdir(os.path.join(path, d)))
+        # drops the id 0-9 file whole, rewrites the id 10-19 file
+        vt_delete(spark, path, ("id", "<", 15))
+        m = _read_manifest(path, vt_versions(path)[-1])
+        assert m["partial_dirs"] == [d] and m["dirs"][0] == d
+        stale = {f for f in on_disk if f.endswith(".parquet")} - set(
+            m["files"][d]
+        )
+        assert len(stale) == 2  # still on disk: nothing was vacuumed
+        return path, d, stale
+
+    @staticmethod
+    def _changes_snapshot(spark, path):
+        from dynamicqueryengine_spark.streaming.source import (
+            VersionedChangesDataSource,
+        )
+
+        spark.dataSource.register(VersionedChangesDataSource)
+        qn = "stale_" + uuid.uuid4().hex[:8]
+        q = (
+            spark.readStream.format("vt_changes").option("path", path)
+            .load().writeStream.format("memory").queryName(qn)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+        return [
+            r["id"] for r in spark.sql(f"select id from {qn}").collect()
+        ]
+
+    @staticmethod
+    def _manifest_ids(spark, path):
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_generate_manifest,
+        )
+
+        listed = open(vt_generate_manifest(path)).read().split()
+        return [r["id"] for r in spark.read.parquet(*listed).collect()]
+
+    READERS = {
+        "vt_read": (
+            lambda s, p: [r["id"] for r in vt_read(s, p).collect()],
+            range(15, 40),
+        ),
+        "vt_read_predicate": (
+            lambda s, p: [
+                r["id"]
+                for r in vt_read(s, p, predicate=("id", "<", 30)).collect()
+            ],
+            range(15, 30),
+        ),
+        "schema_only_fallback": (
+            lambda s, p: [
+                r["id"]
+                for r in vt_read(s, p, predicate=("id", "=", 5)).collect()
+            ],
+            [],
+        ),
+        "vt_count": (
+            lambda s, p: vt_count(s, p, predicate=("id", "<", 30)),
+            15,
+        ),
+        "format_vt": (
+            lambda s, p: [
+                r["id"]
+                for r in s.read.format("vt").option("path", p).load()
+                .filter("id < 30").collect()
+            ],
+            range(15, 30),
+        ),
+        "vt_changes_snapshot": (
+            lambda s, p: TestStaleFilesStayHidden._changes_snapshot(s, p),
+            range(15, 40),
+        ),
+        "generate_manifest": (
+            lambda s, p: TestStaleFilesStayHidden._manifest_ids(s, p),
+            range(15, 40),
+        ),
+    }
+
+    @pytest.mark.parametrize("reader", sorted(READERS))
+    def test_reader_serves_listed_files_only(self, spark, table, reader):
+        from dynamicqueryengine_spark.sources.datasource import vt_register
+        from dynamicqueryengine_spark.sources.versioned import vt_scan_plan
+
+        path, d, stale = table
+        vt_register(spark)
+        read, want = self.READERS[reader]
+        got = read(spark, path)
+        if isinstance(got, list):
+            got, want = sorted(got), list(want)
+        assert got == want
+        if reader == "schema_only_fallback":
+            plan = vt_scan_plan(path, predicate=("id", "=", 5))
+            assert plan["schema_only_fallback"]
+            assert os.path.join(path, d) in plan["partial_dirs"]
+        for fl in vt_scan_plan(path)["files"].values():
+            assert not stale & set(fl)

@@ -427,17 +427,11 @@ class TestSymlinkManifest:
         listed = [
             ln for ln in open(dest).read().splitlines() if ln.strip()
         ]
-        plan_paths = set()
-        for p in vt_scan_plan(path)["paths"]:
-            if os.path.isdir(p):
-                plan_paths.update(
-                    os.path.abspath(os.path.join(p, n))
-                    for n in os.listdir(p)
-                    if n.endswith(".parquet")
-                )
-            else:
-                plan_paths.add(os.path.abspath(p))
-        assert set(listed) == plan_paths
+        assert listed == [
+            os.path.abspath(os.path.join(d, f))
+            for d, files in vt_scan_plan(path)["files"].items()
+            for f in files
+        ]
         # an external engine reading the listed files sees the snapshot
         got = spark.read.parquet(*listed)
         assert got.count() == vt_count(spark, path) == 30
