@@ -17,8 +17,9 @@ Inline-payload scale note: this path exists for reference parity and
 small interactive calls. ``inline_table`` ships the rows to the JVM as one
 Arrow table that Spark keeps in the plan as a ``LocalRelation``, so a
 filter-only rule answers without a Spark job (Catalyst even evaluates the
-filter at plan time); grouped rules and multi-rule unions still run the
-jobs of their shuffle. Above ``spark.sql.execution.arrow.localRelationThreshold``
+filter at plan time). Grouped rules and multi-rule unions read the rows as
+one partition, so their aggregate needs no shuffle and runs as one Spark
+job. Above ``spark.sql.execution.arrow.localRelationThreshold``
 (48 MiB by default) Spark holds the rows in an RDD instead. Large datasets
 should flow through the table registry (Parquet scans with pushdown), not
 the request body — same as the reference, whose in-memory list was its only
@@ -31,7 +32,7 @@ import json
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Mapping
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .operators.executor import apply_rule, execute_rules
 from .plans.model import RuleDefinition, _ci_get
@@ -50,26 +51,7 @@ def evaluate_request(
     ``{"status": 400, "Error": msg}`` — the reference's error envelope.
     """
     try:
-        rows = _ci_get(payload, "Users", "Rows")
-        if not rows:
-            raise ValueError("Request must include a non-empty 'Users' row list.")
-        df = inline_table(spark, rows)
-
-        params = _ci_get(payload, "ExternalParams", "Params")
-        rules_raw = _ci_get(payload, "Rules")
-        if rules_raw:
-            rules = [RuleDefinition.from_dict(r) for r in rules_raw]
-            out = execute_rules(df, rules, external_params=params)
-        else:
-            rule_raw = _ci_get(payload, "Rule")
-            if rule_raw is None:
-                raise ValueError("Request must include 'Rule' or 'Rules'.")
-            out = apply_rule(
-                df,
-                RuleDefinition.from_dict(rule_raw),
-                external_params=params,
-                type_name=type_name,
-            )
+        out = _request_frame(spark, payload, type_name)
         return {
             "status": 200,
             "rows": [row.asDict(recursive=True) for row in out.collect()],
@@ -78,36 +60,23 @@ def evaluate_request(
         return {"status": 400, "Error": str(exc)}
 
 
-
 def explain_request(
     spark: SparkSession,
     payload: Mapping[str, Any],
     type_name: str = "User",
 ) -> dict[str, Any]:
-    """Explain ``{Rule, Users}`` WITHOUT executing it: compile the rule
-    against the inline rows and return Catalyst's analyzed, optimized and
-    physical plans — the introspection surface a rule author uses to
-    confirm the predicate compiled and folded/pushed the way SCALE.md
-    promises (the engine analog of ``EXPLAIN``). Over inline rows the
-    optimizer evaluates a filter at plan time (``ConvertToLocalRelation``),
-    so the compiled predicate shows in ``analyzed_plan`` while the optimized
-    plan is the resulting ``LocalRelation``. Same 400 {Error} envelope as
+    """Explain ``{Rule|Rules, Users}`` WITHOUT executing it: build the
+    frame :func:`evaluate_request` would collect and return Catalyst's
+    analyzed, optimized and physical plans — the introspection surface a
+    rule author uses to confirm the predicate compiled and folded/pushed
+    the way SCALE.md promises (the engine analog of ``EXPLAIN``). Over
+    inline rows the optimizer evaluates a filter at plan time
+    (``ConvertToLocalRelation``), so the compiled predicate shows in
+    ``analyzed_plan`` while the optimized plan of a filter-only rule is
+    the resulting ``LocalRelation``. Same 400 {Error} envelope as
     evaluate."""
     try:
-        rows = _ci_get(payload, "Users", "Rows")
-        if not rows:
-            raise ValueError("Request must include a non-empty 'Users' row list.")
-        df = inline_table(spark, rows)
-        rule_raw = _ci_get(payload, "Rule")
-        if rule_raw is None:
-            raise ValueError("Request must include 'Rule'.")
-        out = apply_rule(
-            df,
-            RuleDefinition.from_dict(rule_raw),
-            external_params=_ci_get(payload, "ExternalParams", "Params"),
-            type_name=type_name,
-        )
-        qe = out._jdf.queryExecution()
+        qe = _request_frame(spark, payload, type_name)._jdf.queryExecution()
         return {
             "status": 200,
             "analyzed_plan": qe.analyzed().toString(),
@@ -118,6 +87,34 @@ def explain_request(
         return {"status": 400, "Error": str(exc)}
 
 
+def _request_frame(
+    spark: SparkSession, payload: Mapping[str, Any], type_name: str
+) -> DataFrame:
+    """The result frame of a request: its rule or ``Rules`` batch over its
+    inline rows. A request that aggregates (a ``Rules`` union, or a rule
+    whose ``GroupBy`` and ``Aggregation`` pass ``apply_rule``'s gate)
+    reads the rows as one partition, so its aggregate needs no
+    ``Exchange`` and runs as one Spark job instead of two; the filter
+    still folds into the rows at plan time. A filter-only request keeps
+    the bare ``LocalRelation``, which answers without a job."""
+    rows = _ci_get(payload, "Users", "Rows")
+    if not rows:
+        raise ValueError("Request must include a non-empty 'Users' row list.")
+    df = inline_table(spark, rows)
+    params = _ci_get(payload, "ExternalParams", "Params")
+    rules_raw = _ci_get(payload, "Rules")
+    if rules_raw:
+        rules = [RuleDefinition.from_dict(r) for r in rules_raw]
+        return execute_rules(df.coalesce(1), rules, external_params=params)
+    rule_raw = _ci_get(payload, "Rule")
+    if rule_raw is None:
+        raise ValueError("Request must include 'Rule' or 'Rules'.")
+    rule = RuleDefinition.from_dict(rule_raw)
+    if rule.group_by and rule.aggregation is not None:
+        df = df.coalesce(1)
+    return apply_rule(df, rule, external_params=params, type_name=type_name)
+
+
 # Self-description payload — the engine's analog of the reference's
 # Swagger/OpenAPI exposure (Program.cs:9-17): machine-readable inventory
 # of endpoints, the 27 predicate operators, and the aggregation surface.
@@ -126,7 +123,7 @@ API_DESCRIPTION: dict[str, Any] = {
     "endpoints": {
         "POST /rules/evaluate": "evaluate {Rule|Rules, Users} -> rows | 400 {Error}",
         "POST /rules/explain": (
-            "compile {Rule, Users}; return Catalyst plans "
+            "compile {Rule|Rules, Users}; return Catalyst plans "
             "(analyzed_plan, optimized_plan, physical_plan), no execution"
         ),
         "GET /rules/describe": "this document",

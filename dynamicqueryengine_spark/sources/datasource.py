@@ -47,8 +47,9 @@ Contract (Delta's batch reader in miniature):
   exact), the same division of labor as Delta's data skipping.
 
 Scale shape: planning is manifest-metadata only on the driver; each
-input partition reads ONE selected directory's files (the scan plan's
-``{dir: [file, …]}`` selection) with pyarrow on its executor and yields
+input partition reads a run of ONE selected directory's files (the
+scan plan's ``{dir: [file, …]}`` selection, packed by on-disk size the
+way Spark packs file splits) with pyarrow on its executor and yields
 Arrow RecordBatches straight into Spark's Arrow ingestion path. The
 table path must be reachable from every executor — the same contract
 as any Spark table.
@@ -156,7 +157,7 @@ class _VtBatchReader(DataSourceReader):
             for p, files, dv in _plan_dirs(plan)
         ]
 
-    # -- reading (executor, one directory per partition) ----------------
+    # -- reading (executor, one directory's files per partition) --------
     def read(self, partition):
         from pyspark.sql.pandas.types import to_arrow_schema
 

@@ -129,21 +129,23 @@ def inline_table(
     RuleController.cs:31-35) → DataFrame over a ``LocalRelation``.
 
     Types are those ``spark.createDataFrame(list(rows))`` would give: the
-    schema comes from the same inference (``_inferSchemaFromList``), or
+    schema comes from the same inference (``_inferSchemaFromList``), run
+    on one row per row shape (:func:`_shape_representatives`), or
     ``schema`` (a ``StructType`` or DDL string) is used as given and every
     row checked against it. The rows then go to the JVM as one Arrow table;
     below ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
-    them in the plan, so collecting a rule over them runs no Spark job, and
-    above it Spark falls back to an RDD on its own. Because the rows sit in
-    the plan, Catalyst's ``ConvertToLocalRelation`` evaluates a filter or
-    projection over them at plan time: the optimized plan of a filtered
-    inline table is a bare ``LocalRelation`` (the predicate shows in the
-    analyzed plan). A value Arrow cannot hold, such as an integer outside
-    64 bits, raises instead of landing as NULL.
+    them in the plan, so collecting a filter or projection over them runs
+    no Spark job (an aggregate runs one over a single partition, see
+    ``api.py``), and above it Spark falls back to an RDD on its own.
+    Because the rows sit in the plan, Catalyst's ``ConvertToLocalRelation``
+    evaluates a filter or projection over them at plan time: the optimized
+    plan of a filtered inline table is a bare ``LocalRelation`` (the
+    predicate shows in the analyzed plan). A value Arrow cannot hold, such
+    as an integer outside 64 bits, raises instead of landing as NULL.
     """
     rows = list(rows)
     if schema is None:
-        struct = spark._inferSchemaFromList(rows)
+        struct = spark._inferSchemaFromList(_shape_representatives(rows))
     else:
         struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
         verify = _make_type_verifier(struct)
@@ -155,6 +157,34 @@ def inline_table(
             columns[f.name] = [_arrow_value(v, f.dataType) for v in columns[f.name]]
     table = pa.Table.from_pydict(columns, schema=to_arrow_schema(struct))
     return spark.createDataFrame(table, schema=struct)
+
+
+# value types PySpark infers from ``type(v)`` alone (``_infer_type``)
+_SCALAR_TYPES = frozenset((type(None), bool, int, float, str))
+
+
+def _shape_representatives(rows: list) -> list:
+    """``rows`` without every dict row whose shape, the ``(key,
+    type(value))`` pairs of its scalar values, an earlier row already
+    has. PySpark infers such a row's struct from that shape alone, and
+    ``_merge_type`` returns a merged schema unchanged when it merges a
+    shape the schema has already absorbed, so inferring over the result
+    gives the schema, field order and first ``CANNOT_MERGE_TYPE`` error
+    of inferring over ``rows``. Every other row (nested, datetime or
+    Decimal values, subclasses such as ``IntEnum``, non-dict mappings)
+    is kept."""
+    seen = set()
+    out = []
+    for row in rows:
+        if type(row) is dict:
+            types = tuple(map(type, row.values()))
+            if _SCALAR_TYPES.issuperset(types):
+                shape = (tuple(row), types)
+                if shape in seen:
+                    continue
+                seen.add(shape)
+        out.append(row)
+    return out
 
 
 # types whose Python values Arrow stores as createDataFrame would

@@ -2883,17 +2883,38 @@ def _attach_plan_dv(plan: dict, path: str, manifest: dict) -> None:
         plan["dv"] = _load_dv_positions(path, subset)
 
 
+# Spark's defaults for spark.sql.files.maxPartitionBytes and
+# spark.sql.files.openCostInBytes: _plan_dirs runs in the Python data
+# source planner, which has no session to read the confs from
+_SPLIT_BYTES = 128 * 1024 * 1024
+_OPEN_COST_BYTES = 4 * 1024 * 1024
+
+
 def _plan_dirs(plan: dict) -> list[tuple[str, list, dict | None]]:
-    """``(dir path, files, {file: deleted positions} or None)`` per
-    selected directory — the unit the pyarrow readers (``format('vt')``
-    scans, the ``vt_changes`` source) plan one input partition for."""
+    """``(dir path, files, {file: deleted positions} or None)`` per input
+    partition of the pyarrow readers (``format('vt')`` scans, the
+    ``vt_changes`` source): each selected directory's files in manifest
+    order, packed the way Spark packs file splits — a file weighs its
+    on-disk size plus ``_OPEN_COST_BYTES``, and a partition closes before
+    a file would take it past ``_SPLIT_BYTES``."""
     dv = plan.get("dv") or {}
     out = []
     for dp, fl in plan["files"].items():
-        sub = {
-            f: dv[_file_key(dp, f)] for f in fl if _file_key(dp, f) in dv
-        }
-        out.append((dp, fl, sub or None))
+        chunks, weight = [[]], 0
+        for f in fl:
+            size = os.path.getsize(os.path.join(dp, f))
+            if chunks[-1] and weight + size > _SPLIT_BYTES:
+                chunks.append([])
+                weight = 0
+            chunks[-1].append(f)
+            weight += size + _OPEN_COST_BYTES
+        for chunk in chunks:
+            sub = {
+                f: dv[_file_key(dp, f)]
+                for f in chunk
+                if _file_key(dp, f) in dv
+            }
+            out.append((dp, chunk, sub or None))
     return out
 
 

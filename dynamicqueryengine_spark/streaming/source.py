@@ -297,7 +297,7 @@ class _ChangesStreamReader(DataSourceStreamReader):
     def _plan_changes(self, lo: int, hi: int):
         return _plan_change_partitions(self._path, lo, hi)
 
-    # -- reading (executor, one directory per partition) -------------------
+    # -- reading (executor, one directory's files per partition) -----------
     def read(self, partition: _ChangePartition):
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -438,8 +438,9 @@ def _plan_snapshot_parts(
     predicate: list | None = None,
 ) -> "list[_ChangePartition]":
     """The snapshot at version ``v`` as ``tag``-tagged change partitions
-    stamped with commit ``at`` (default ``v``) — one per directory of
-    its scan plan (partial_dirs / authoritative file lists honored),
+    stamped with commit ``at`` (default ``v``) — the input partitions
+    :func:`_plan_dirs` packs from the directories of its scan plan
+    (partial_dirs / authoritative file lists honored),
     the snapshot's deletion vectors applied, ``predicate`` (a delete
     replay) filtering what is left. The initial-snapshot batch of a
     no-``startingVersion`` stream (r14), the delete side of an

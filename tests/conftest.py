@@ -172,3 +172,17 @@ def _norm(v):
     if isinstance(v, datetime.datetime):
         return v.replace(tzinfo=None).isoformat()
     return v
+
+
+def _perfbench_users(n):
+    """``n`` inline ``Users`` rows shaped like perfbench's rule_serve payload."""
+    titles, depts = ("Manager", "Engineer", "Analyst"), ("Sales", "Support", "Legal")
+    return [
+        {
+            "Id": i, "Name": f"user{i:06d}", "Age": 18 + (i * 7) % 53,
+            "Country": ("TR", "US", "DE")[i % 3], "Department": depts[(i * 5) % 3],
+            "Title": titles[i % 3], "Salary": 20_000.0 + (i * 7919) % 180_000,
+            "IsActive": i % 10 < 7,
+        }
+        for i in range(n)
+    ]

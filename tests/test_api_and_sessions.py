@@ -11,7 +11,7 @@ import pytest
 from dynamicqueryengine_spark.api import evaluate_request, serve
 from dynamicqueryengine_spark.functions.sessions import session_stats
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, _perfbench_users
 
 USERS_PAYLOAD = [
     {"Id": "u1", "Title": "Engineer", "Score": 10},
@@ -158,19 +158,6 @@ class TestHttpServer:
             server.shutdown()
 
 
-def _perfbench_users(n):
-    titles, depts = ("Manager", "Engineer", "Analyst"), ("Sales", "Support", "Legal")
-    return [
-        {
-            "Id": i, "Name": f"user{i:06d}", "Age": 18 + (i * 7) % 53,
-            "Country": ("TR", "US", "DE")[i % 3], "Department": depts[(i * 5) % 3],
-            "Title": titles[i % 3], "Salary": 20_000.0 + (i * 7919) % 180_000,
-            "IsActive": i % 10 < 7,
-        }
-        for i in range(n)
-    ]
-
-
 class TestServingBudget:
     """The serving path's fixed costs: Spark jobs per request and py4j
     round-trips per rule build."""
@@ -192,17 +179,68 @@ class TestServingBudget:
         "Aggregation": {"AggregateProperty": "Salary", "AggregateFunction": "Max"},
     }
 
+    COUNT_RULE = {
+        "Conditions": {
+            "Conditions": [{"Property": "IsActive", "Operator": "Equal", "Value": True}]
+        },
+        "GroupBy": ["Country"],
+        "Aggregation": {"AggregateFunction": "Count"},
+    }
+    UNION_RULES = [
+        {"Conditions": {"Conditions": [
+            {"Property": "Age", "Operator": "LessThan", "Value": 30}]}},
+        {"Conditions": {"Conditions": [
+            {"Property": "Country", "Operator": "Equal", "Value": "US"},
+            {"Property": "Salary", "Operator": "GreaterThan", "Value": 90_000}]}},
+        {"Conditions": {"Conditions": [
+            {"Property": "Title", "Operator": "Equal", "Value": "Manager"}]}},
+    ]
+
+    @staticmethod
+    def _jobs(spark, call):
+        """``(call(), Spark jobs it ran)``, counted by the scheduler: a
+        status-store size delta saturates once the store holds its last
+        1000 jobs."""
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        before = dag.numTotalJobs()
+        out = call()
+        return out, dag.numTotalJobs() - before
+
     @pytest.mark.parametrize("n", [20, 2000])
     def test_filter_only_request_runs_no_spark_job(self, spark, n):
         payload = {"Rule": self.FILTER_RULE, "Users": _perfbench_users(n)}
         evaluate_request(spark, payload)  # warm
-        store = spark.sparkContext._jsc.sc().statusStore()
-        before = store.jobsList(None).size()
-        res = evaluate_request(spark, payload)
-        assert store.jobsList(None).size() - before == 0
+        res, jobs = self._jobs(spark, lambda: evaluate_request(spark, payload))
+        assert jobs == 0
         assert res["status"] == 200
         want = [u for u in payload["Users"] if u["Age"] > 30 and u["IsActive"]]
         assert sorted(r["Id"] for r in res["rows"]) == [u["Id"] for u in want]
+
+    @pytest.mark.parametrize("n", [20, 2000])
+    @pytest.mark.parametrize("shape", ["argmax", "count", "union"])
+    def test_aggregate_request_runs_one_spark_job(self, spark, shape, n):
+        """An aggregating request reads its rows as one partition: its
+        aggregate needs no shuffle, so it runs one job, and its rows are
+        those of the rule over the plain inline table."""
+        from dynamicqueryengine_spark import apply_rule, execute_rules
+        from dynamicqueryengine_spark.sources.registry import inline_table
+
+        users = _perfbench_users(n)
+        rule = {"argmax": self.ARGMAX_RULE, "count": self.COUNT_RULE}.get(shape)
+        payload = {"Users": users, **({"Rule": rule} if rule else {"Rules": self.UNION_RULES})}
+        evaluate_request(spark, payload)  # warm
+        res, jobs = self._jobs(spark, lambda: evaluate_request(spark, payload))
+        assert res["status"] == 200
+        assert jobs == 1
+        df = inline_table(spark, users)
+        want = apply_rule(df, rule) if rule else execute_rules(df, self.UNION_RULES)
+        rows = [r.asDict(recursive=True) for r in want.collect()]
+        assert len(res["rows"]) == len(rows) > 0
+
+        def key(r):
+            return json.dumps(r, sort_keys=True)
+
+        assert sorted(res["rows"], key=key) == sorted(rows, key=key)
 
     def test_argmax_rule_build_py4j_calls(self, spark):
         import threading
@@ -410,6 +448,20 @@ class TestExplainEndpoint:
             assert {"analyzed_plan", "optimized_plan", "physical_plan"} <= set(body)
         finally:
             server.shutdown()
+
+    def test_explain_shows_the_plan_evaluate_runs(self, spark):
+        """An aggregating request's plan reads one partition and has no
+        shuffle; a filter-only one stays a bare ``LocalRelation``."""
+        from dynamicqueryengine_spark.api import explain_request
+
+        users = _perfbench_users(20)
+        out = explain_request(spark, {"Rule": TestServingBudget.ARGMAX_RULE, "Users": users})
+        assert out["status"] == 200
+        assert "Coalesce 1" in out["physical_plan"]
+        assert "Exchange" not in out["physical_plan"]
+        out = explain_request(spark, {"Rule": TestServingBudget.FILTER_RULE, "Users": users})
+        assert out["optimized_plan"].startswith("LocalRelation")
+        assert "Coalesce" not in out["physical_plan"]
 
     def test_explain_bad_rule_gives_400(self, spark):
         from dynamicqueryengine_spark.api import explain_request

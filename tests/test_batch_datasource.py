@@ -174,6 +174,45 @@ class TestBatchRead:
         )
         assert got == [i for i in range(30) if i % 3 == 1]
 
+    def test_pruned_directory_read_plans_several_partitions(
+        self, registered, tmp_path
+    ):
+        """A pushed filter keeping 38 of a directory's 40 small files
+        packs them into input partitions the way Spark packs file
+        splits (32 files of about 4 MiB open cost each per partition),
+        not into one partition, and reads the same rows."""
+        from pyspark.sql.datasource import GreaterThanOrEqual
+
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_scan_plan,
+        )
+
+        spark = registered
+        path = str(tmp_path / "t")
+        df = spark.range(4000).selectExpr("id", "concat('v', id) AS v")
+        vt_write(spark, path, df.repartition(40))
+        ((_, fstats),) = _read_manifest(path, 1)["file_stats"].items()
+        cut = sorted(s["id"][1] for s in fstats.values())[2]
+        plan = vt_scan_plan(path, predicate=("id", ">=", cut))
+        assert (plan["files_kept"], plan["files_total"]) == (38, 40)
+        schema = spark.read.format("vt").option("path", path).load().schema
+        probe = _VtBatchPushdownReader(schema, path, 1)
+        probe.pushFilters([GreaterThanOrEqual(("id",), cut)])
+        parts = probe.partitions()
+        assert [len(p.files) for p in parts] == [32, 6]
+        assert sorted(f for p in parts for f in p.files) == sorted(
+            next(iter(plan["files"].values()))
+        )
+        out = (
+            spark.read.format("vt").option("path", path).load()
+            .filter(F.col("id") >= cut)
+        )
+        assert out.rdd.getNumPartitions() == 2
+        assert _by_id(out) == _by_id(
+            vt_read(spark, path, predicate=("id", ">=", cut))
+        )
+
     def test_reads_without_pushdown_conf(self, registered, tmp_path):
         spark = registered
         path = str(tmp_path / "t")

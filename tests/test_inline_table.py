@@ -1,7 +1,8 @@
 """Parity of ``inline_table`` (Arrow → ``LocalRelation``) with
 ``spark.createDataFrame(list(rows))``, the RDD-backed route it replaces:
 same schema, same collected rows, same timestamp instants, and a plan
-whose rows live in the plan itself."""
+whose rows live in the plan itself. Its schema inference, run on one row
+per row shape, must equal ``spark._inferSchemaFromList`` over every row."""
 
 from __future__ import annotations
 
@@ -10,11 +11,13 @@ import time
 from decimal import Decimal
 
 import pytest
-from pyspark.errors import PySparkTypeError
+from pyspark.errors import PySparkTypeError, PySparkValueError
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from dynamicqueryengine_spark.sources.registry import inline_table
+
+from .conftest import _perfbench_users
 
 
 def _plan_node(df) -> str:
@@ -164,3 +167,94 @@ def test_explicit_schema_rejects_bad_rows(spark, row):
     with pytest.raises(Exception):
         inline_table(spark, [row], schema=SCHEMA)
 
+
+
+def assert_inference_parity(spark, rows):
+    """``inline_table``'s schema and rows against inference over every row."""
+    got = inline_table(spark, rows)
+    assert got.schema == spark._inferSchemaFromList(rows)
+    assert got.collect() == spark.createDataFrame(rows).collect()
+    return got
+
+
+@pytest.fixture
+def inferred_rows(monkeypatch):
+    """Every row PySpark's ``_infer_schema`` is called on, in order."""
+    import pyspark.sql.session as session
+
+    calls = []
+    infer = session._infer_schema
+
+    def counting(row, *args, **kwargs):
+        calls.append(row)
+        return infer(row, *args, **kwargs)
+
+    monkeypatch.setattr(session, "_infer_schema", counting)
+    return calls
+
+
+class TestInferencePerShape:
+    def test_int_column_merges_to_string_on_a_later_row(self, spark):
+        rows = [{"a": i, "b": f"s{i}"} for i in range(50)]
+        rows.insert(30, {"a": "x", "b": "y"})
+        got = assert_inference_parity(spark, rows)
+        assert got.schema["a"].dataType == StringType()
+
+    def test_int_then_float_refuses_alike(self, spark):
+        rows = [{"x": i} for i in range(10)] + [{"x": 2.5}, {"x": 3}]
+        with pytest.raises(PySparkTypeError, match="CANNOT_MERGE_TYPE") as want:
+            spark._inferSchemaFromList(rows)
+        with pytest.raises(PySparkTypeError, match="CANNOT_MERGE_TYPE") as got:
+            inline_table(spark, rows)
+        assert str(got.value) == str(want.value)
+
+    def test_ragged_rows_append_later_keys_in_order(self, spark):
+        rows = [{"b": 1}] * 5 + [{"b": 2, "z": "z"}, {"b": 3}, {"a": True, "b": 4}]
+        rows += [{"b": 5, "z": "w"}, {"c": 1.5}]
+        got = assert_inference_parity(spark, rows)
+        assert got.schema.names == ["b", "z", "a", "c"]
+
+    def test_same_keys_in_another_insertion_order(self, spark):
+        rows = [{"a": 1, "b": "x"}, {"b": "y", "a": 2}, {"a": 3, "b": "z"}, {"b": None, "a": 4}]
+        assert_inference_parity(spark, rows)
+
+    def test_all_null_column_cannot_be_typed(self, spark):
+        rows = [{"a": i, "n": None} for i in range(10)]
+        with pytest.raises(PySparkValueError, match="CANNOT_DETERMINE_TYPE"):
+            spark._inferSchemaFromList(rows)
+        with pytest.raises(PySparkValueError, match="CANNOT_DETERMINE_TYPE"):
+            inline_table(spark, rows)
+
+    def test_perfbench_payload(self, spark):
+        assert_inference_parity(spark, _perfbench_users(2000))
+
+    def test_rows_of_one_shape_are_inferred_once(self, spark, inferred_rows):
+        rows = _perfbench_users(2000)
+        rows[7] = {**rows[7], "Age": None}
+        inline_table(spark, rows)
+        assert inferred_rows == [rows[0], rows[7]]
+
+    def test_other_values_are_inferred_per_row(self, spark, inferred_rows):
+        rows = [
+            {"l": [1], "d": Decimal("1.5"), "t": dt.date(2024, 1, 2)},
+            {"l": [2], "d": Decimal("2.5"), "t": dt.date(2024, 1, 3)},
+        ]
+        assert_inference_parity(spark, rows)
+        assert inferred_rows[:2] == rows
+
+    def test_shape_keeps_exact_types_and_plain_dicts(self):
+        import enum
+        from collections import OrderedDict
+
+        from dynamicqueryengine_spark.sources.registry import _shape_representatives
+
+        class Level(enum.IntEnum):
+            LOW = 1
+
+        rows = [
+            {"a": 1}, {"a": True}, {"a": 2}, {"a": Level.LOW}, {"a": Level.LOW},
+            OrderedDict(a=3), OrderedDict(a=3), {"a": False},
+        ]
+        # 1 == True, so compare the kept rows by identity
+        kept = [id(r) for r in _shape_representatives(rows)]
+        assert kept == [id(rows[i]) for i in (0, 1, 3, 4, 5, 6)]
