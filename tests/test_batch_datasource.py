@@ -966,3 +966,136 @@ class TestMergeSchemaOption:
         out = vt_read(spark, dst)
         assert out.columns == ["id", "g", "x", "note"]
         assert out.filter("note = 'tag'").count() == 1
+
+
+class TestFormatWriterLostRace:
+    """The format writer's append/overwrite commit through a lost race.
+    Spark runs ``commit`` in a driver-side Python worker, so these tests
+    drive it in-process: stage a parquet file with pyarrow, build the
+    task's commit message and call ``_materialize_and_commit``. A
+    one-shot hook on ``versioned._commit`` lands the racing commit just
+    before the writer's own attempt."""
+
+    @staticmethod
+    def _staged(spark, path, ids, overwrite=False, stream_app=None):
+        import os as _os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from dynamicqueryengine_spark.sources.datasource import (
+            _VtBatchWriter,
+            _VtStreamWriter,
+            _VtWriteMessage,
+        )
+
+        schema = _df(spark, 1).schema
+        staged = _os.path.join(path, ".fmtstage_race")
+        _os.makedirs(staged, exist_ok=True)
+        tbl = pa.table(
+            {
+                "id": list(ids),
+                "g": [f"g{i % 3}" for i in ids],
+                "x": [float(i) for i in ids],
+            },
+            schema=to_arrow_schema(schema),
+        )
+        pq.write_table(tbl, _os.path.join(staged, "part-race.parquet"))
+        if stream_app is None:
+            w = _VtBatchWriter(path, staged, overwrite, schema)
+        else:
+            w = _VtStreamWriter(path, staged, schema, [], [], stream_app)
+        msgs = [_VtWriteMessage(entries=(("part-race.parquet", "", len(ids)),))]
+        return w, msgs
+
+    @staticmethod
+    def _race(monkeypatch, winner):
+        import dynamicqueryengine_spark.sources.versioned as V
+
+        real = V._commit
+        fired = []
+
+        def hook(*a, **k):
+            # one-shot even where a caller bound the hook to a local name
+            if not fired:
+                fired.append(True)
+                monkeypatch.setattr(V, "_commit", real)
+                winner()
+            return real(*a, **k)
+
+        monkeypatch.setattr(V, "_commit", hook)
+
+    @staticmethod
+    def _unreferenced(path):
+        import os as _os
+
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_versions,
+        )
+
+        referenced = {
+            d for v in vt_versions(path) for d in _read_manifest(path, v)["dirs"]
+        }
+        on_disk = {n for n in _os.listdir(path) if n.startswith("d_")}
+        return on_disk - referenced
+
+    def test_append_vs_append_retries_and_lands(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from dynamicqueryengine_spark.sources.versioned import vt_versions
+
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 4))
+        w, msgs = self._staged(spark, path, [200, 201])
+        self._race(
+            monkeypatch,
+            lambda: vt_write(
+                spark, path, _df(spark, 1).selectExpr(
+                    "100L AS id", "g", "x"
+                ), mode="append",
+            ),
+        )
+        w._materialize_and_commit(msgs, "append")
+        assert vt_versions(path) == [1, 2, 3]
+        ids = sorted(r["id"] for r in vt_read(spark, path).collect())
+        assert ids == [0, 1, 2, 3, 100, 200, 201]
+        assert not self._unreferenced(path)
+
+    def test_append_vs_delete_raises_and_cleans(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from dynamicqueryengine_spark.sources.versioned import vt_versions
+
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 4))
+        w, msgs = self._staged(spark, path, [200])
+        self._race(
+            monkeypatch, lambda: vt_delete(spark, path, ("id", "=", 1))
+        )
+        with pytest.raises(FileExistsError):
+            w._materialize_and_commit(msgs, "append")
+        assert vt_versions(path) == [1, 2]
+        assert sorted(r["id"] for r in vt_read(spark, path).collect()) == [
+            0, 2, 3,
+        ]
+        assert not self._unreferenced(path)
+
+    def test_overwrite_vs_append_raises_and_cleans(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from dynamicqueryengine_spark.sources.versioned import vt_versions
+
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 4))
+        w, msgs = self._staged(spark, path, [200], overwrite=True)
+        self._race(
+            monkeypatch,
+            lambda: vt_write(spark, path, _df(spark, 6), mode="append"),
+        )
+        with pytest.raises(FileExistsError):
+            w._materialize_and_commit(msgs, "overwrite")
+        assert vt_versions(path) == [1, 2]
+        assert vt_read(spark, path).count() == 10
+        assert not self._unreferenced(path)
