@@ -80,9 +80,6 @@ _NUMERIC_OPS = frozenset(
     {"greaterthan", "greaterthanorequal", "lessthan", "lessthanorequal"}
 )
 
-_MISSING = object()
-
-
 def resolve_field(schema: StructType, prop: str, type_name: str = "Row") -> StructField:
     """Case-insensitive column resolution (BindingFlags.IgnoreCase,
     IQueryableRuleEvaluator.cs:125). DOTTED properties walk into struct
@@ -325,9 +322,7 @@ class PredicateCompiler:
 
         # --- value-carrying comparisons & string methods ---
         value = cond.value
-        if value is None and op != "dynamicequal":
-            value = self._resolve_external(cond)
-        if op == "dynamicequal":
+        if value is None or op == "dynamicequal":
             value = self._require_param(cond, cond.operator)
 
         if op in ("equal", "dynamicequal"):
@@ -426,9 +421,6 @@ class PredicateCompiler:
             return lowered[cond.property.lower()]
         raise missing_external_param(cond.property, op)
 
-    def _resolve_external(self, cond: Condition) -> Any:
-        return self._require_param(cond, cond.operator)
-
 
 def compile_predicate(
     group: ConditionGroup | None,
@@ -455,11 +447,14 @@ _SKIP_RANGE_OPS = {
 }
 
 
-def _skip_param(params: Mapping[str, Any], prop: str) -> Any:
+def _skip_param(params: Mapping[str, Any], prop: str) -> tuple[bool, Any]:
+    """``(present, value)`` of the external param keyed by ``prop``:
+    the exact key first, else a case-insensitive match (None when
+    absent)."""
     if prop in params:
-        return params[prop]
+        return True, params[prop]
     lowered = {str(k).lower(): v for k, v in params.items()}
-    return lowered.get(prop.lower())
+    return prop.lower() in lowered, lowered.get(prop.lower())
 
 
 def _skip_conjunct(
@@ -496,7 +491,7 @@ def _skip_conjunct(
     if op == "in":
         values = cond.value
         if values is None:
-            values = _skip_param(params, cond.property)
+            values = _skip_param(params, cond.property)[1]
         if not isinstance(values, (list, tuple)) or not values:
             return None
         coerced = []
@@ -516,12 +511,9 @@ def _skip_conjunct(
         # against a value the compiled filter never tests (r9 advice:
         # silently-wrong results). Resolve only from params; a missing
         # param is the real compile's error, not a prunable fact.
-        present = cond.property in params or cond.property.lower() in {
-            str(k).lower() for k in params
-        }
+        present, value = _skip_param(params, cond.property)
         if not present:
             return None
-        value = _skip_param(params, cond.property)
         if value is None:
             # explicitly-null param compiles to isNull — prunable on
             # the footers' exact null counts
@@ -529,17 +521,14 @@ def _skip_conjunct(
     else:
         value = cond.value
         if value is None:
-            value = _skip_param(params, cond.property)
-        if value is None:
-            present = cond.property in params or cond.property.lower() in {
-                str(k).lower() for k in params
-            }
-            if op == "equal" and present:
+            present, value = _skip_param(params, cond.property)
+            if value is None:
                 # Equal with an explicitly-null param compiles to isNull
                 # — prunable on exact null counts (r9). A MISSING param
                 # is the real compile's error, not a prunable fact
-                return (field.name, "isnull", None)
-            return None
+                if op == "equal" and present:
+                    return (field.name, "isnull", None)
+                return None
     if op in _SKIP_RANGE_OPS:
         if isinstance(dtype, StringType):
             # reference semantics compare string columns NUMERICALLY

@@ -693,9 +693,10 @@ class _VtBatchWriter(DataSourceArrowWriter):
     metadata-only — or one file total on an unpartitioned table); the
     driver-side ``commit`` turns the staged files into immutable
     ``d_*`` dirs (one per partition value across all tasks), harvests
-    footer stats and blooms, and runs the same optimistic
-    append/overwrite commit loop as ``vt_write`` (append-vs-append
-    races retry, non-commuting losers raise). ``abort`` removes the
+    footer stats and blooms, and commits them through
+    ``versioned._land_blind``, the append/overwrite commit ``vt_write``
+    runs (append-vs-append races retry after ``_check_writable`` passes
+    the new head, non-commuting losers raise). ``abort`` removes the
     staging — the version slot was never claimed, so a failed job
     leaves the table byte-identical."""
 
@@ -712,7 +713,7 @@ class _VtBatchWriter(DataSourceArrowWriter):
         self._bloom_cols = list(bloom_cols or [])
         # parsed replaceWhere conjuncts (r14): tasks enforce row
         # containment, commit swaps the predicate's region
-        # metadata-exactly (see _materialize_and_commit)
+        # metadata-exactly (see _replace_region)
         self._replace_where = (
             [tuple(c) for c in replace_where] if replace_where else None
         )
@@ -834,7 +835,8 @@ class _VtBatchWriter(DataSourceArrowWriter):
         self, messages, mode: str, txn=None, keep_staging: bool = False
     ):
         """Turn the tasks' staged files into committed ``d_*`` dirs and
-        run the optimistic commit loop. ``txn`` = ``(app, version)``
+        commit them through ``versioned._land_blind`` (a replaceWhere
+        overwrite through ``_land``). ``txn`` = ``(app, version)``
         marks the commit with the exactly-once transaction guard (the
         streaming sink's batchId replay protection); a replayed txn is
         a clean no-op — the materialized dirs are removed and the table
@@ -845,10 +847,9 @@ class _VtBatchWriter(DataSourceArrowWriter):
         import uuid as _uuid
 
         from .versioned import (
-            TxnReplayed,
-            _commit,
             _harvest_blooms_arrow,
             _harvest_stats,
+            _land_blind,
             _read_manifest,
             vt_last_txn,
             vt_versions,
@@ -879,7 +880,7 @@ class _VtBatchWriter(DataSourceArrowWriter):
         if txn is not None and entries:
             # exactly-once fast path: a restarted stream replaying an
             # already-committed batchId skips materialization entirely
-            # (the in-commit guard below remains the authoritative
+            # (the in-commit guard remains the authoritative
             # cross-process check — r13 multiprocess stress)
             last = vt_last_txn(self._path, txn[0])
             if last is not None and txn[1] <= last:
@@ -897,16 +898,14 @@ class _VtBatchWriter(DataSourceArrowWriter):
         by_pjson: dict = {}
         for fname, pjson, _rows in entries:
             by_pjson.setdefault(pjson, []).append(fname)
-        new_dirs: list = []
-        new_partitions: dict = {}
-        all_files: dict = {}
+        # (dir, files, partition values or None) per materialized dir
+        made: list = []
         if not by_pjson:
             # zero-row job: commit one empty dir so an overwrite can
             # record an empty snapshot (vt_write's empty-frame shape)
             d = f"d_{_uuid.uuid4().hex[:12]}"
             os.rename(self._staged, os.path.join(self._path, d))
-            new_dirs.append(d)
-            all_files[d] = []
+            made.append((d, [], None))
         else:
             for pjson in sorted(by_pjson):
                 d = f"d_{_uuid.uuid4().hex[:12]}"
@@ -916,10 +915,13 @@ class _VtBatchWriter(DataSourceArrowWriter):
                         os.path.join(self._staged, fname),
                         os.path.join(self._path, d, fname),
                     )
-                new_dirs.append(d)
-                all_files[d] = sorted(by_pjson[pjson])
-                if pjson:
-                    new_partitions[d] = json.loads(pjson)
+                made.append(
+                    (
+                        d,
+                        sorted(by_pjson[pjson]),
+                        json.loads(pjson) if pjson else None,
+                    )
+                )
             if keep_staging:
                 # now-empty staging stays for the next micro-batch
                 os.makedirs(self._staged, exist_ok=True)
@@ -927,226 +929,106 @@ class _VtBatchWriter(DataSourceArrowWriter):
                 shutil.rmtree(self._staged, ignore_errors=True)
         try:
             schema_json = json.loads(self._schema_json)
-            new_stats: dict = {}
-            new_fstats: dict = {}
-            new_frows: dict = {}
-            new_blooms: dict = {}
             jtypes = {
                 f["name"]: f["type"]
                 for f in schema_json.get("fields", [])
                 if isinstance(f.get("type"), str)
             }
-            for d in new_dirs:
+            written: list = []
+            blooms: dict = {}
+            for d, files, pvals in made:
                 full = os.path.join(self._path, d)
                 stats, fstats, frows = _harvest_stats(full)
-                if stats:
-                    new_stats[d] = stats
-                if fstats:
-                    new_fstats[d] = fstats
-                if frows:
-                    new_frows[d] = frows
-                if self._bloom_cols and all_files[d]:
+                written.append((d, stats, fstats, files, frows, pvals))
+                if self._bloom_cols and files:
                     b = _harvest_blooms_arrow(
                         full, self._bloom_cols, jtypes
                     )
                     if b:
-                        new_blooms[d] = b
-            for _ in range(5):
-                head = vt_versions(self._path)
-                expected = head[-1] if head else 0
-                prev = (
-                    _read_manifest(self._path, expected)
-                    if expected
-                    else None
-                )
+                        blooms[d] = b
+            versions = vt_versions(self._path)
+            expected = versions[-1] if versions else 0
+            head = _read_manifest(self._path, expected) if expected else None
+
+            def check(manifest) -> None:
                 _check_writable(
-                    prev, schema_json, mode, self._path,
+                    manifest, schema_json, mode, self._path,
                     staged_pby=self._pby,
                     merge_schema=self._merge_schema,
                 )
-                commit_schema = schema_json
-                commit_hetero = (
-                    bool(prev.get("schema_heterogeneous"))
-                    if mode == "append" and prev is not None
-                    else False
+
+            check(head)
+            if self._replace_where is not None:
+                self._replace_region(head, expected, written, blooms)
+            else:
+                _land_blind(
+                    self._path, mode, expected, head, written, blooms,
+                    schema_json, merge_schema=self._merge_schema,
+                    txn=txn, check=check,
                 )
-                if (
-                    mode == "append"
-                    and prev is not None
-                    and prev.get("schema") is not None
-                ):
-                    # mergeSchema evolution (r14): add nullable
-                    # columns, widen along the safe lattice, tolerate
-                    # narrower/missing incoming (readers reconcile);
-                    # without the option this is an exact-match
-                    # identity pass (_check_writable already refused
-                    # any difference)
-                    from .versioned import _evolve_schema
-
-                    commit_schema, changed = _evolve_schema(
-                        prev["schema"], schema_json,
-                        self._merge_schema,
-                    )
-                    commit_hetero = changed or commit_hetero
-                dirs = list(new_dirs)
-                all_stats = dict(new_stats)
-                all_fstats = dict(new_fstats)
-                files_map = dict(all_files)
-                all_frows = dict(new_frows)
-                all_blooms = dict(new_blooms)
-                partitions = dict(new_partitions)
-                partial = None
-                if self._replace_where is not None:
-                    # selective overwrite (r14, Delta's replaceWhere):
-                    # new snapshot = (previous MINUS the predicate's
-                    # region) + the staged dirs, ONE commit. The format
-                    # writer's contract is METADATA-EXACT removal only
-                    # — whole partition dirs the recorded values prove,
-                    # whole files the stats prove; a predicate whose
-                    # boundary files would need a row-level rewrite
-                    # refuses with a vt_replace_where pointer (the
-                    # driver-side commit hook must not launch rewrite
-                    # jobs). Partition-aligned backfills — the idiom
-                    # replaceWhere exists for — always satisfy it.
-                    # Classification, audit shape and the successor
-                    # commit are the DML rewrite core's (versioned.py).
-                    from .versioned import (
-                        _bloom_col_types,
-                        _col_mapping,
-                        _land,
-                        _map_conjuncts,
-                        _partition_snapshot,
-                        _pred_touch_fn,
-                        _shape_blob,
-                    )
-
-                    if prev is None:
-                        raise ValueError(
-                            "replaceWhere requires an existing table "
-                            f"at {self._path}"
-                        )
-                    if prev.get("schema") != schema_json:
-                        raise ValueError(
-                            "replaceWhere requires the table's exact "
-                            "schema — schema evolution is "
-                            "vt_write(merge_schema=True)'s"
-                        )
-                    pconj = _map_conjuncts(
-                        self._replace_where, _col_mapping(prev)
-                    )
-                    part = _partition_snapshot(
-                        self._path, prev,
-                        _pred_touch_fn(pconj, _bloom_col_types(prev)),
-                        prove=pconj,
-                    )
-                    if part["touched"]:
-                        raise ValueError(
-                            "format('vt') replaceWhere removes "
-                            "metadata-exactly only, and "
-                            f"{sum(map(len, part['touched'].values()))}"
-                            " file(s) "
-                            "would need a row-level rewrite (the "
-                            "predicate is not partition/stats-aligned)"
-                            " — use vt_replace_where for boundary "
-                            "rewrites"
-                        )
-                    # derived from the head it read: a lost race is
-                    # non-commuting — FileExistsError surfaces
-                    _land(
-                        self._path,
-                        "replace_where",
-                        expected,
-                        prev,
-                        part,
-                        [
-                            (
-                                d, new_stats.get(d), new_fstats.get(d),
-                                all_files[d], new_frows.get(d),
-                                new_partitions.get(d),
-                            )
-                            for d in new_dirs
-                        ],
-                        new_blooms,
-                        None,
-                        {
-                            **_shape_blob(part, prev),
-                            "new_dirs": list(new_dirs),
-                            "predicate": [
-                                list(c) for c in self._replace_where
-                            ],
-                        },
-                    )
-                    return
-                if mode == "append" and prev is not None:
-                    dirs = prev["dirs"] + dirs
-                    all_stats = {**prev.get("stats", {}), **all_stats}
-                    all_fstats = {
-                        **prev.get("file_stats", {}), **all_fstats
-                    }
-                    files_map = {**prev.get("files", {}), **files_map}
-                    all_frows = {**prev.get("file_rows", {}), **all_frows}
-                    all_blooms = {**prev.get("blooms", {}), **all_blooms}
-                    partitions = {
-                        **prev.get("partitions", {}), **partitions
-                    }
-                    partial = prev.get("partial_dirs")
-                try:
-                    _commit(
-                        self._path,
-                        dirs,
-                        mode,
-                        expected,
-                        all_stats,
-                        txn=(
-                            {"app": txn[0], "version": int(txn[1])}
-                            if txn
-                            else None
-                        ),
-                        file_stats=all_fstats or None,
-                        files=files_map,
-                        schema=commit_schema,
-                        heterogeneous=commit_hetero,
-                        blooms=all_blooms or None,
-                        file_rows=all_frows or None,
-                        partial_dirs=partial,
-                        partitions=(
-                            partitions if mode == "overwrite" else (
-                                partitions or None
-                            )
-                        ),
-                    )
-                    return
-                except TxnReplayed:
-                    # a concurrent replica of this producer committed
-                    # the same batch first — exactly-once means no-op;
-                    # remove the dirs this attempt materialized
-                    for d in new_dirs:
-                        shutil.rmtree(
-                            os.path.join(self._path, d),
-                            ignore_errors=True,
-                        )
-                    return
-                except FileExistsError:
-                    new_head = vt_versions(self._path)[-1]
-                    intervening = [
-                        _read_manifest(self._path, v).get("op")
-                        for v in vt_versions(self._path)
-                        if expected < v <= new_head
-                    ]
-                    if mode != "append" or any(
-                        op != "append" for op in intervening
-                    ):
-                        raise
-                    continue  # append-vs-append commutes: retry
-            raise RuntimeError(
-                f"format('vt') write at {self._path} lost 5 commit races"
-            )
         except BaseException:
-            for d in new_dirs:
+            for d, *_ in made:
                 shutil.rmtree(
                     os.path.join(self._path, d), ignore_errors=True
                 )
             raise
+
+    def _replace_region(self, head, expected, written, blooms) -> None:
+        """Selective overwrite (r14, Delta's replaceWhere): the new
+        snapshot is ``head`` MINUS the predicate's region plus the
+        ``written`` dirs, in ONE commit. The format writer's contract
+        is METADATA-EXACT removal only — whole partition dirs the
+        recorded values prove, whole files the stats prove; a predicate
+        whose boundary files would need a row-level rewrite refuses
+        with a vt_replace_where pointer (the driver-side commit hook
+        must not launch rewrite jobs). Partition-aligned backfills —
+        the idiom replaceWhere exists for — always satisfy it.
+        Classification, audit shape and the successor commit are the
+        DML rewrite core's (versioned.py); derived from the head it
+        read, a lost race is non-commuting and FileExistsError
+        surfaces."""
+        from .versioned import (
+            _bloom_col_types,
+            _col_mapping,
+            _land,
+            _map_conjuncts,
+            _partition_snapshot,
+            _pred_touch_fn,
+            _shape_blob,
+        )
+
+        if head is None:
+            raise ValueError(
+                f"replaceWhere requires an existing table at {self._path}"
+            )
+        if head.get("schema") != json.loads(self._schema_json):
+            raise ValueError(
+                "replaceWhere requires the table's exact schema — schema "
+                "evolution is vt_write(merge_schema=True)'s"
+            )
+        pconj = _map_conjuncts(self._replace_where, _col_mapping(head))
+        part = _partition_snapshot(
+            self._path, head,
+            _pred_touch_fn(pconj, _bloom_col_types(head)),
+            prove=pconj,
+        )
+        if part["touched"]:
+            raise ValueError(
+                "format('vt') replaceWhere removes metadata-exactly only, "
+                f"and {sum(map(len, part['touched'].values()))} file(s) "
+                "would need a row-level rewrite (the predicate is not "
+                "partition/stats-aligned) — use vt_replace_where for "
+                "boundary rewrites"
+            )
+        _land(
+            self._path, "replace_where", expected, head, part, written,
+            blooms, None,
+            {
+                **_shape_blob(part, head),
+                "new_dirs": [w[0] for w in written],
+                "predicate": [list(c) for c in self._replace_where],
+            },
+        )
 
     def abort(self, messages):
         import shutil

@@ -1924,7 +1924,9 @@ def vt_write(
     targeted) surfaces as FileExistsError, as does any race against an
     ``overwrite``: blind writes must not silently clobber a state they
     did not read. This is Delta's conflict matrix in miniature
-    (blind AppendOnly vs snapshot-rewriting transactions).
+    (blind AppendOnly vs snapshot-rewriting transactions). The commit
+    and its retries are :func:`_land_blind`'s, shared with the
+    ``format('vt')`` batch writer and stream sink.
 
     Schema: every commit records the snapshot's logical schema in the
     manifest. An append whose schema differs from the table's raises
@@ -2136,19 +2138,12 @@ def vt_write(
         eff_pby = list(recorded_pby)
     if eff_pby:
         _validate_partition_by(df, eff_pby)
-    incoming_schema = json.loads(df.schema.json())
     # written: [(dir, dir_stats, file_stats, files, file_rows,
     # partition_values_or_None)] — one entry for plain writes, one per
     # partition value tuple for partitioned writes (still ONE Spark job)
     written = _write_layout(df, path, eff_pby, write_mapping)
-    new_dirs = [w[0] for w in written]
-
-    def _discard_written() -> None:
-        for d in new_dirs:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
     new_blooms_by_dir = _dir_blooms(
-        spark, path, new_dirs, eff_bloom_cols, write_mapping
+        spark, path, [w[0] for w in written], eff_bloom_cols, write_mapping
     )
     # advance each identity column's high watermark to the EXTREME id
     # actually written (footer stats when they cover the new dir, a
@@ -2195,151 +2190,77 @@ def vt_write(
         commit_identity: dict | None = {}  # explicit clear
     else:
         commit_identity = new_identity
-    commit_generated = dict(generated) if generated is not None else None
-    new_partitions = {
-        d: pvals for d, _, _, _, _, pvals in written if pvals is not None
-    }
-    commit_pby = (
-        list(partition_by) if partition_by is not None else None
-    )
-    for _ in range(max_retries):
-        dirs = list(new_dirs)
-        stats = {d: s for d, s, *_ in written if s}
-        fstats = {d: fs for d, _, fs, *_ in written if fs}
-        files = {d: fl for d, _, _, fl, *_ in written}
-        blooms = dict(new_blooms_by_dir)
-        frows = {d: fr for d, _, _, _, fr, _ in written if fr}
-        partitions = dict(new_partitions)
-        schema = incoming_schema
-        hetero = False
-        partial_dirs = None
-        if mode == "append" and expected:
-            prev = _read_manifest(path, expected)
-            dirs = prev["dirs"] + dirs
-            stats = {**prev.get("stats", {}), **stats}
-            fstats = {**prev.get("file_stats", {}), **fstats}
-            files = {**prev.get("files", {}), **files}
-            blooms = {**prev.get("blooms", {}), **blooms}
-            frows = {**prev.get("file_rows", {}), **frows}
-            partitions = {**prev.get("partitions", {}), **partitions}
-            # a file-granular MERGE/DELETE/UPDATE may have left prior
-            # dirs PARTIAL (authoritative subset file lists); an append
-            # must carry the marker or readers would scan the whole dir
-            # and resurrect rewritten-away rows (caught by the
-            # model-based history test)
-            partial_dirs = prev.get("partial_dirs")
-            base = prev.get("schema")
-            if base is not None:
-                try:
-                    schema, changed = _evolve_schema(
-                        base, incoming_schema, merge_schema
-                    )
-                except ValueError:
-                    _discard_written()
-                    raise
-                hetero = changed or prev.get("schema_heterogeneous", False)
-            else:
-                schema = None  # legacy table without a recorded schema
-        try:
-            return _commit(
-                path, dirs, mode, expected, stats,
-                txn={"app": txn[0], "version": int(txn[1])} if txn else None,
-                file_stats=fstats, files=files,
-                schema=schema, heterogeneous=hetero, blooms=blooms,
-                file_rows=frows, constraints=constraints,
-                partial_dirs=partial_dirs,
-                bloom_cols_prop=(
-                    list(bloom_cols) if bloom_cols is not None else None
-                ),
-                column_mapping=commit_mapping,
-                generated=commit_generated,
-                identity=commit_identity,
-                # explicit map: an overwrite passes its (possibly empty)
-                # new entries, clearing the replaced dirs'; an append
-                # passed the merged prev+new map above
-                partitions=partitions,
-                partition_by=commit_pby,
+
+    def recheck(new_head: dict) -> None:
+        # a retry over a head that advanced by appends only
+        nonlocal effective_constraints
+        if eff_identity:
+            # the assigned ids derive from the head's high watermark: a
+            # racing commit may have advanced it, so a blind retry could
+            # commit DUPLICATE ids — surface the conflict; the caller's
+            # retry re-reads the new head and reassigns
+            raise FileExistsError(
+                f"identity values at {path} were assigned from a head "
+                "a racing append advanced — rerun the write"
             )
-        except TxnReplayed:
-            # the entry guard raced a concurrent replica of this txn —
-            # the in-commit guard is the authoritative one (r13
-            # multiprocess stress): exactly-once means no-op
-            _discard_written()
-            return vt_versions(path)[-1]
-        except FileExistsError:
-            new_head = vt_versions(path)[-1]
-            if eff_identity:
-                # the assigned ids derive from the head's high
-                # watermark: a racing commit may have advanced it, so a
-                # blind retry could commit DUPLICATE ids — surface the
-                # conflict; the caller's retry re-reads the new head
-                # and reassigns
-                _discard_written()
-                raise
-            if txn is not None:
-                last = vt_last_txn(path, txn[0])
-                if last is not None and txn[1] <= last:
-                    # the racing commit WAS this txn (another replay of
-                    # the same at-least-once producer) — no-op
-                    _discard_written()
-                    return new_head
-            intervening_ops = [
-                _read_manifest(path, v).get("op")
-                for v in vt_versions(path)
-                if expected < v <= new_head
-            ]
-            if mode != "append" or any(
-                op != "append" for op in intervening_ops
-            ):
-                # lost to a non-commuting commit: our data directory will
-                # never be referenced — remove it now (as vt_merge does)
-                # instead of leaving an orphan for a later vacuum to find
-                _discard_written()
-                raise
-            new_head_mapping = _col_mapping(_read_manifest(path, new_head))
-            if base_mapping is not None and new_head_mapping != base_mapping:
-                # a racing append EVOLVED the mapping (its merge_schema
-                # added a column): our explicit map would drop their
-                # entry and orphan their column's data — concurrent
-                # schema evolution does not commute (Delta raises the
-                # same conflict)
-                _discard_written()
-                raise
-            if base_mapping is None and new_head_mapping and any(
-                new_head_mapping.get(c, c) != c for c in df.columns
-            ):
-                # a racing DDL CREATED a mapping (first rename, or
-                # vt_add_column minting a fresh physical name) that
-                # redirects a column this attempt already wrote under
-                # its LOGICAL name — committing would carry their map
-                # over our identity-named file, so the column's values
-                # would read back as NULLs (orphaned bytes). Surface
-                # the conflict; the caller's retry re-writes under the
-                # new head's physical names.
-                _discard_written()
-                raise
-            if constraints is None:
-                # the racing append may have ADDED/tightened table CHECK
-                # constraints (a later commit's constraint set governs
-                # every commit after it) — re-read the new head's set and
-                # re-validate our rows before re-committing (r9 advice:
-                # enforcing once against the pre-race head lets violating
-                # rows through). A violation cleans up our orphan dir.
-                new_constraints = _read_manifest(path, new_head).get(
-                    "constraints", []
+        new_mapping = _col_mapping(new_head)
+        if base_mapping is not None and new_mapping != base_mapping:
+            # a racing append EVOLVED the mapping (its merge_schema
+            # added a column): our explicit map would drop their entry
+            # and orphan their column's data — concurrent schema
+            # evolution does not commute (Delta raises the same
+            # conflict)
+            raise FileExistsError(
+                f"a racing append changed the column mapping at {path}"
+            )
+        if base_mapping is None and new_mapping and any(
+            new_mapping.get(c, c) != c for c in df.columns
+        ):
+            # a racing DDL CREATED a mapping (first rename, or
+            # vt_add_column minting a fresh physical name) that
+            # redirects a column this attempt already wrote under its
+            # LOGICAL name — committing would carry their map over our
+            # identity-named file, so the column's values would read
+            # back as NULLs (orphaned bytes). Surface the conflict; the
+            # caller's retry re-writes under the new head's physical
+            # names.
+            raise FileExistsError(
+                f"a racing commit mapped columns this write wrote at "
+                f"{path} under their logical names"
+            )
+        if constraints is None:
+            # the racing append may have ADDED/tightened table CHECK
+            # constraints (a later commit's constraint set governs every
+            # commit after it) — re-validate our rows against the new
+            # head's set before re-committing (r9 advice: enforcing once
+            # against the pre-race head lets violating rows through)
+            new_constraints = new_head.get("constraints", [])
+            if new_constraints != effective_constraints:
+                effective_constraints = new_constraints
+                _enforce_constraints(
+                    df, effective_constraints, recorded=True
                 )
-                if new_constraints != effective_constraints:
-                    effective_constraints = new_constraints
-                    try:
-                        _enforce_constraints(
-                            df, effective_constraints, recorded=True
-                        )
-                    except ConstraintViolation:
-                        _discard_written()
-                        raise
-            expected = new_head  # append-vs-append commutes: retry on top
-    _discard_written()
-    raise RuntimeError(f"append at {path} lost {max_retries} commit races")
+
+    return _land_blind(
+        path, mode, expected, head_manifest, written, new_blooms_by_dir,
+        json.loads(df.schema.json()),
+        merge_schema=merge_schema,
+        txn=txn,
+        check=recheck,
+        max_retries=max_retries,
+        identity=commit_identity,
+        props={
+            "constraints": constraints,
+            "bloom_cols_prop": (
+                list(bloom_cols) if bloom_cols is not None else None
+            ),
+            "column_mapping": commit_mapping,
+            "generated": dict(generated) if generated is not None else None,
+            "partition_by": (
+                list(partition_by) if partition_by is not None else None
+            ),
+        },
+    )
 
 
 # predicate ops supported by data skipping. The comparison ops are ALL
@@ -4383,20 +4304,27 @@ def _land(
     txn: tuple | None = None,
     identity: dict | None = None,
     key: str | None = None,
+    hetero: bool = False,
+    props: dict | None = None,
+    keep_written: bool = False,
 ) -> int:
     """Commit the successor of ``manifest`` at ``expected + 1``: the
     ``base`` fragments (the kept side of a :func:`_partition_snapshot`
-    split, the whole manifest when every file stays referenced, or
-    None for a first/legacy commit) plus the ``written`` directories
-    ``[(dir, stats, file_stats, files, file_rows, partition_values),
-    …]`` with their ``blooms`` ``{dir: bloom}``. ``schema`` is only
-    consulted when ``manifest`` records none. The audit ``blob`` is
-    recorded under ``key`` (default ``op``). The written rows carry the
-    head's logical schema, so ``schema_heterogeneous`` survives only
-    while ``base`` keeps a head directory referenced. On a lost race
-    (FileExistsError, TxnReplayed) everything the attempt staged — the
-    written and change directories and the deletion-vector sidecar —
-    is removed before the error propagates."""
+    split, the whole manifest when every file stays referenced or an
+    append lands on it, or None for a first/legacy commit or an
+    overwrite) plus the ``written`` directories ``[(dir, stats,
+    file_stats, files, file_rows, partition_values), …]`` with their
+    ``blooms`` ``{dir: bloom}``. Without a ``schema`` the successor
+    records ``manifest``'s: the written rows carry the head's logical
+    schema, so ``schema_heterogeneous`` survives only while ``base``
+    keeps a head directory referenced. A given ``schema`` is recorded
+    with ``hetero`` as its flag. The audit ``blob`` is recorded under
+    ``key`` (default ``op``); ``props`` are table-property arguments of
+    :func:`_commit`. On a lost race (FileExistsError, TxnReplayed)
+    everything the attempt staged — the written and change directories
+    and the deletion-vector sidecar — is removed before the error
+    propagates, except the written directories under ``keep_written``
+    (:func:`_land_blind` retries with them)."""
     base = base or {}
     dirs = list(base.get("dirs", []))
     stats = dict(base.get("stats") or {})
@@ -4419,8 +4347,11 @@ def _land(
             partitions[d] = pvals
         if blooms.get(d):
             all_blooms[d] = blooms[d]
-    hetero = False
-    if manifest is not None and manifest.get("schema") is not None:
+    if (
+        schema is None
+        and manifest is not None
+        and manifest.get("schema") is not None
+    ):
         schema = manifest["schema"]
         hetero = manifest.get("schema_heterogeneous", False) and bool(
             base.get("dirs")
@@ -4445,9 +4376,11 @@ def _land(
             dv=dv,
             identity=identity,
             partitions=partitions or None,
+            **(props or {}),
         )
     except (FileExistsError, TxnReplayed):
-        for d in [w[0] for w in written] + [change_dir]:
+        staged = [] if keep_written else [w[0] for w in written]
+        for d in staged + [change_dir]:
             if d is not None:
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
         if sidecar is not None:
@@ -4455,6 +4388,99 @@ def _land(
                 os.unlink(os.path.join(_dv_dir(path), sidecar))
             except OSError:
                 pass
+        raise
+
+
+def _land_blind(
+    path: str,
+    mode: str,
+    expected: int,
+    head: dict | None,
+    written: list,
+    blooms: dict,
+    schema: dict,
+    merge_schema: bool = False,
+    txn: tuple | None = None,
+    check: Callable | None = None,
+    max_retries: int = 5,
+    identity: dict | None = None,
+    props: dict | None = None,
+) -> int:
+    """The one append/overwrite commit, behind vt_write, the
+    ``format('vt')`` batch writer and its stream sink: lands the
+    ``written`` directories (:func:`_land` tuples, with their
+    ``blooms``) on ``head``, the manifest at ``expected`` (None before
+    the first commit). An overwrite's successor holds only the written
+    directories and records the incoming ``schema``. An append's keeps
+    every ``head`` directory and records ``head``'s schema evolved by
+    the incoming one (:func:`_evolve_schema` under ``merge_schema``;
+    heterogeneous when it changed or ``head`` already was), or none on a
+    legacy head that records none. ``identity`` and the table-property
+    ``props`` go to :func:`_commit` as given.
+
+    Races follow Delta's conflict rule. An append that lost only to
+    appends re-reads the head, passes it to ``check`` (which raises to
+    refuse the retry) and retries with the directories it already
+    wrote; any other lost race raises FileExistsError. A race lost to a
+    replica of the same ``txn`` (or a TxnReplayed commit) is a no-op
+    that returns the head. Every way out but a commit removes the
+    written directories."""
+
+    def discard() -> None:
+        for d, *_ in written:
+            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+
+    try:
+        for _ in range(max_retries):
+            base = head if mode == "append" else None
+            commit_schema, hetero = schema, False
+            if base is not None:
+                commit_schema = base.get("schema")
+                if commit_schema is not None:
+                    commit_schema, changed = _evolve_schema(
+                        commit_schema, schema, merge_schema
+                    )
+                    hetero = changed or base.get(
+                        "schema_heterogeneous", False
+                    )
+            try:
+                return _land(
+                    path, mode, expected, head, base, written, blooms,
+                    None, None, schema=commit_schema, hetero=hetero,
+                    txn=txn, identity=identity, props=props,
+                    keep_written=True,
+                )
+            except TxnReplayed:
+                # the entry guard raced a concurrent replica of this txn
+                # — the in-commit guard is the authoritative one (r13
+                # multiprocess stress): exactly-once means no-op
+                discard()
+                return vt_versions(path)[-1]
+            except FileExistsError:
+                versions = vt_versions(path)
+                new_head = versions[-1]
+                if txn is not None:
+                    last = vt_last_txn(path, txn[0])
+                    if last is not None and txn[1] <= last:
+                        # the racing commit WAS this txn (another replay
+                        # of the same at-least-once producer) — no-op
+                        discard()
+                        return new_head
+                if mode != "append" or any(
+                    _read_manifest(path, v).get("op") != "append"
+                    for v in versions
+                    if expected < v <= new_head
+                ):
+                    raise  # lost to a non-commuting commit
+                expected = new_head
+                head = _read_manifest(path, new_head)
+                if check is not None:
+                    check(head)
+        raise RuntimeError(
+            f"append at {path} lost {max_retries} commit races"
+        )
+    except BaseException:
+        discard()
         raise
 
 

@@ -2,7 +2,10 @@
 """Round-15 optimization harness: time a SUBSET of declared queries with
 bench.py's exact protocol (scrub + .count(), min over passes), count the
 Spark JOBS each query runs (the §1.2 job-count audit the r14 verdict asks
-to repeat), and/or dump `.explain("formatted")` to plans/r15/. Usage::
+to repeat), and/or dump `.explain("formatted")` to plans/r15/. Jobs are
+counted by the DAG scheduler (``numTotalJobs`` before and after the
+query), so the jobs streaming queries run on their own threads count
+too; a job-group count misses them. Usage::
 
     python scripts/profile_r15.py q1 q2 ...            # time (3 passes)
     PROFILE_PASSES=5 python scripts/profile_r15.py q1
@@ -53,7 +56,7 @@ def main() -> None:
         gc.collect()
         spark.sparkContext._jvm.System.gc()
 
-    tracker = spark.sparkContext.statusTracker()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     if plans_tag:
         here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -75,20 +78,15 @@ def main() -> None:
     for p in range(passes):
         for name in names:
             scrub()
-            group = f"profile_{name}_{p}"
-            spark.sparkContext.setJobGroup(group, f"profile:{name}")
+            before = dag.numTotalJobs()
             start = time.perf_counter()
             try:
                 queries[name](spark, sf_dir).count()
                 per[name].append(round(time.perf_counter() - start, 4))
-                jobs[name] = len(tracker.getJobIdsForGroup(group))
+                jobs[name] = dag.numTotalJobs() - before
             except Exception as exc:
                 print(f"{name} FAILED: {exc}", file=sys.stderr)
                 per[name].append(-1.0)
-            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-            spark.sparkContext.setLocalProperty(
-                "spark.job.description", None
-            )
     out = {
         n: {"min": min(v), "runs": v, "jobs": jobs.get(n)}
         for n, v in per.items()

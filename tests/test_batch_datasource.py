@@ -1099,3 +1099,71 @@ class TestFormatWriterLostRace:
         assert vt_versions(path) == [1, 2]
         assert vt_read(spark, path).count() == 10
         assert not self._unreferenced(path)
+
+    def test_sink_replay_after_race_is_a_noop(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A replica commits the same ``(app, batchId)`` and a vt_delete
+        lands on top before this attempt commits: the race is lost to a
+        non-append, yet the batch is already in the table, so the sink
+        returns as vt_write does instead of raising."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_last_txn,
+            vt_versions,
+        )
+
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 4))
+        w, msgs = self._staged(spark, path, [200, 201], stream_app="sink")
+
+        def replica_then_delete():
+            vt_write(
+                spark, path,
+                _df(spark, 202).where("id >= 200"),
+                mode="append", txn=("sink", 7),
+            )
+            vt_delete(spark, path, ("id", "=", 1))
+
+        self._race(monkeypatch, replica_then_delete)
+        w.commit(msgs, 7)
+        assert vt_versions(path) == [1, 2, 3]
+        assert vt_last_txn(path, "sink") == 7
+        ids = sorted(r["id"] for r in vt_read(spark, path).collect())
+        assert ids == [0, 2, 3, 200, 201]
+        assert not self._unreferenced(path)
+
+
+class TestLegacyHeadAppend:
+    @pytest.mark.parametrize("writer", ["vt_write", "format"])
+    def test_append_on_legacy_head_records_no_schema(
+        self, registered, tmp_path, writer
+    ):
+        """A head that records no ``schema`` (written before manifests
+        carried one) stays schema-less through an append from either
+        writer: the appended rows' schema says nothing about the legacy
+        directories."""
+        import json as _json
+
+        from dynamicqueryengine_spark.sources.versioned import (
+            _manifest_path,
+            _read_manifest,
+        )
+
+        spark = registered
+        path = str(tmp_path / "t")
+        vt_write(spark, path, _df(spark, 3))
+        mpath = _manifest_path(path, 1)
+        with open(mpath) as f:
+            m = _json.load(f)
+        del m["schema"]
+        with open(mpath, "w") as f:
+            _json.dump(m, f)
+        more = _df(spark, 5).where("id >= 3")
+        if writer == "vt_write":
+            vt_write(spark, path, more, mode="append")
+        else:
+            more.write.format("vt").mode("append").option("path", path).save()
+        assert "schema" not in _read_manifest(path, 2)
+        assert sorted(r["id"] for r in vt_read(spark, path).collect()) == [
+            0, 1, 2, 3, 4,
+        ]
