@@ -4399,9 +4399,9 @@ def _land_blind(
     written: list,
     blooms: dict,
     schema: dict,
+    check: Callable,
     merge_schema: bool = False,
     txn: tuple | None = None,
-    check: Callable | None = None,
     max_retries: int = 5,
     identity: dict | None = None,
     props: dict | None = None,
@@ -4474,8 +4474,7 @@ def _land_blind(
                     raise  # lost to a non-commuting commit
                 expected = new_head
                 head = _read_manifest(path, new_head)
-                if check is not None:
-                    check(head)
+                check(head)
         raise RuntimeError(
             f"append at {path} lost {max_retries} commit races"
         )
