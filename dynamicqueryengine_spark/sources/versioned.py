@@ -1116,8 +1116,8 @@ def _harvest_blooms(
     the written files hold physical names, so the harvest reads — and
     keys its entries by — each column's physical name, matching the
     physical-keyed probe in vt_scan_plan."""
-    df = spark.read.parquet(full_dir)
-    have = set(df.columns)
+    df, schema = _read_written(spark, full_dir)
+    have = set(schema.names)
     cols = [_phys(mapping, c) for c in bloom_cols]
     cols = [c for c in cols if c in have]
     if not cols:
@@ -2165,9 +2165,9 @@ def vt_write(
                     uncovered.append(d)
             if uncovered:
                 row0 = (
-                    spark.read.parquet(
-                        *[os.path.join(path, d) for d in uncovered]
-                    )
+                    _read_written(
+                        spark, *[os.path.join(path, d) for d in uncovered]
+                    )[0]
                     .agg(
                         (
                             F.max(pcol) if istep > 0 else F.min(pcol)
@@ -2750,6 +2750,67 @@ def _parquet_names(full_dir: str) -> list[str]:
     )
 
 
+def _footer_schema(full_dir: str):
+    """The ``StructType`` Spark wrote into the footer of ``full_dir``'s
+    first part file (the ``org.apache.spark.sql.parquet.row.metadata``
+    key), made nullable the way a file read makes it: what a bare
+    ``spark.read.parquet(full_dir)`` infers — Spark's non-merging
+    inference reads this same footer, but in a job (50-130 ms).
+    Directories the format wrote hold one write's files, so the first
+    file speaks for all. ``None`` when the directory holds no part file
+    or its file was not written by Spark: the caller infers then."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    names = _parquet_names(full_dir)
+    if not names:
+        return None
+    meta = pq.read_schema(os.path.join(full_dir, names[0])).metadata or {}
+    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if raw is None else StructType.fromJson(
+        _nullable_type(json.loads(raw))
+    )
+
+
+def _nullable_type(t):
+    """A Spark type's json with every field, element and value nullable
+    (Scala's ``asNullable``, which PySpark lacks)."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {
+            **t,
+            "fields": [
+                {**f, "nullable": True, "type": _nullable_type(f["type"])}
+                for f in t["fields"]
+            ],
+        }
+    if t["type"] == "array":
+        return {
+            **t, "containsNull": True,
+            "elementType": _nullable_type(t["elementType"]),
+        }
+    if t["type"] == "map":
+        return {
+            **t, "valueContainsNull": True,
+            "keyType": _nullable_type(t["keyType"]),
+            "valueType": _nullable_type(t["valueType"]),
+        }
+    return t
+
+
+def _read_written(spark, *full_dirs: str) -> tuple:
+    """``(frame, its schema)`` of directories one write of the format
+    produced, read with the first one's footer schema
+    (:func:`_footer_schema`): no schema-inference job, and the schema
+    costs no JVM call. Inferred when the footer holds none."""
+    schema = _footer_schema(full_dirs[0])
+    if schema is None:
+        df = spark.read.parquet(*full_dirs)
+        return df, df.schema
+    return spark.read.schema(schema).parquet(*full_dirs), schema
+
+
 def _file_key(dirpath: str, fname: str) -> str:
     """``basename(dir)/file`` — the key deletion vectors are stored
     under and :func:`_read_plan` derives from ``_metadata.file_path``."""
@@ -2879,8 +2940,8 @@ def _read_plan(spark, plan: dict, keep_positions: bool = False) -> DataFrame:
     exposes ``_vt_file_key``/``_vt_pos`` columns so DV writers
     (vt_delete/vt_update mode="dv") can address matched rows."""
     reader = spark.read
-    sj_read = plan.get("schema")
-    if sj_read:
+    sj = plan.get("schema")
+    if sj:
         # Schema'd tables read with an EXPLICIT physical schema (the
         # logical types over the physical names) instead of footer
         # inference: kills the footer-merge job on heterogeneous
@@ -2891,17 +2952,18 @@ def _read_plan(spark, plan: dict, keep_positions: bool = False) -> DataFrame:
         # promotions Delta's typeWidening feature leans on).
         from pyspark.sql.types import StructField, StructType
 
-        cm_read = plan.get("column_mapping") or {}
+        target = StructType.fromJson(sj)
+        cmap = plan.get("column_mapping") or {}
         phys_schema = StructType(
             [
                 StructField(
-                    cm_read.get(f.name, f.name),
+                    cmap.get(f.name, f.name),
                     _rename_struct_leaves(
-                        f.dataType, _nested_rel_map(cm_read, f.name)
+                        f.dataType, _nested_rel_map(cmap, f.name)
                     ),
                     True,
                 )
-                for f in StructType.fromJson(sj_read).fields
+                for f in target.fields
             ]
         )
         reader = reader.schema(phys_schema)
@@ -2984,35 +3046,58 @@ def _read_plan(spark, plan: dict, keep_positions: bool = False) -> DataFrame:
                 & (F.col("_vt_pos") == F.col("_vt_dv_pos")),
                 "left_anti",
             )
-    sj = plan.get("schema")
     if sj:
-        from pyspark.sql.types import StructType
-
-        target = StructType.fromJson(sj)
-        cmap = plan.get("column_mapping") or {}
-        have = set(df.columns)
         # mapped tables: parquet holds PHYSICAL names — project each
         # back to its logical name (a rename is just this alias; a
         # NESTED rename additionally casts the struct back to its
         # logically-named type — positional, a pure leaf relabel since
-        # the explicit read schema already upcast the types); a
-        # physical column present in no scanned file (metadata-only ADD
-        # COLUMN, pre-evolution dirs) reconciles to typed nulls
-        def back(f):
-            phys = cmap.get(f.name, f.name)
-            if phys not in have:
-                return F.lit(None).cast(f.dataType).alias(f.name)
-            if _nested_rel_map(cmap, f.name):
-                return F.col(phys).cast(f.dataType).alias(f.name)
-            return F.col(phys).alias(f.name)
-
-        cols = [back(f) for f in target.fields]
+        # the explicit read schema already upcast the types). The read
+        # schema holds every column: a file without one reads nulls.
+        cols = [
+            (
+                f.name,
+                F.col(p.name).cast(f.dataType)
+                if _nested_rel_map(cmap, f.name)
+                else _ident(p.name),
+            )
+            for f, p in zip(target.fields, phys_schema.fields)
+        ]
         if keep_positions:
-            cols += [F.col("_vt_file_key"), F.col("_vt_pos")]
-        df = df.select(*cols)
+            cols += [("_vt_file_key", "_vt_file_key"), ("_vt_pos", "_vt_pos")]
+        df = _project(df, cols)
     elif not keep_positions and (dv or partial):
         df = df.drop("_vt_file_key", "_vt_pos")
     return df
+
+
+def _ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _project(df: DataFrame, cols: list) -> DataFrame:
+    """``df`` projected to ``cols``, ``(name, source)`` pairs in output
+    order, by ONE ``selectExpr``: a ``str`` source is SQL over ``df``'s
+    columns (a quoted column, a literal), aliased to ``name`` unless it
+    is that column already; a ``Column`` source (a typed null, a nested
+    cast) is first bound under a scratch name by one ``withColumns``.
+    A ``selectExpr`` item costs one py4j round-trip, a
+    ``F.col(...).alias(...)`` about 25."""
+    bound = {
+        f"_vt_col{i}": src
+        for i, (_, src) in enumerate(cols)
+        if not isinstance(src, str)
+    }
+    if bound:
+        df = df.withColumns(bound)
+    exprs = []
+    for i, (name, src) in enumerate(cols):
+        if not isinstance(src, str):
+            src = f"_vt_col{i}"
+        exprs.append(
+            src if src in (name, _ident(name)) else f"{src} AS {_ident(name)}"
+        )
+    return df.selectExpr(*exprs)
 
 
 def _conjunct_column(col: str, op: str, value) -> "F.Column":
@@ -3089,10 +3174,9 @@ def vt_read(
             schema = StructType.fromJson(manifest["schema"])
         else:
             # legacy table: schema from the snapshot's own footers
-            # (cheap: footer-only read)
-            schema = spark.read.parquet(
-                os.path.join(path, manifest["dirs"][0])
-            ).schema
+            schema = _read_written(
+                spark, os.path.join(path, manifest["dirs"][0])
+            )[1]
         conjuncts = rule_skip_conjuncts(rule, schema, external_params)
         plan = vt_scan_plan(path, v, conjuncts or None)
         df = _read_plan(spark, plan)
@@ -3208,20 +3292,28 @@ def vt_read_changes(
     to_mapping = _col_mapping(to_manifest) or {}
 
     def reconcile(
-        df: DataFrame, change_type, version: int, src="physical"
+        df: DataFrame, change_type, version: int, src="physical",
+        columns=None,
     ) -> DataFrame:
         """Project a change frame to the TO version's logical schema.
         Columns are matched by PHYSICAL identity — a rename inside the
         range is just a label change, so the renamed column's data keeps
         flowing under the TO version's name. ``src`` names the frame's
         column vocabulary: a manifest dict (or None) for LOGICAL frames
-        of that version (vt_read/_read_plan outputs), the sentinel
-        ``"physical"`` for raw ``c_*`` change-directory reads."""
+        of that version (vt_read/_read_plan outputs, which hold exactly
+        its recorded columns), the sentinel ``"physical"`` for raw
+        ``c_*`` change-directory reads, whose ``columns`` the caller
+        passes. ``df.schema`` is fetched only for a nested rename (or a
+        legacy frame)."""
         ct = (
-            F.lit(change_type)
+            f"'{change_type}'"
             if isinstance(change_type, str)
-            else F.col("_change_type")
+            else "_change_type"
         )
+        if src != "physical" and (src or {}).get("schema") is not None:
+            columns = [f["name"] for f in src["schema"]["fields"]]
+        if columns is None:
+            columns = df.columns
         if target is not None:
             if src == "physical":
                 phys_to_src = None  # frame columns ARE physical names
@@ -3229,8 +3321,7 @@ def vt_read_changes(
                 phys_to_src = {
                     p: l for l, p in (_col_mapping(src) or {}).items()
                 }
-            have = set(df.columns)
-            frame_types = {x.name: x.dataType for x in df.schema.fields}
+            have = set(columns)
             cols = []
             for f in target.fields:
                 phys = to_mapping.get(f.name, f.name)
@@ -3240,29 +3331,33 @@ def vt_read_changes(
                     else phys_to_src.get(phys, phys)
                 )
                 if lookup not in have:
-                    cols.append(
-                        F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-                elif (
-                    _nested_rel_map(to_mapping, f.name)
-                    and frame_types.get(lookup) != f.dataType
+                    cols.append((f.name, F.lit(None).cast(f.dataType)))
+                elif _nested_rel_map(to_mapping, f.name) and (
+                    df.schema[lookup].dataType != f.dataType
                 ):
                     # a nested rename inside the range: the frame's
                     # struct carries the emitting era's (physical)
                     # leaf names — positional cast relabels them to
                     # the TO version's (types already agree)
-                    cols.append(
-                        F.col(lookup).cast(f.dataType).alias(f.name)
-                    )
+                    cols.append((f.name, F.col(lookup).cast(f.dataType)))
                 else:
-                    cols.append(F.col(lookup).alias(f.name))
+                    cols.append((f.name, _ident(lookup)))
         else:
-            cols = [F.col(c) for c in df.columns if c != "_change_type"]
-        return df.select(
-            *cols,
-            ct.alias("_change_type"),
-            F.lit(version).cast("int").alias("_commit_version"),
+            cols = [(c, _ident(c)) for c in columns if c != "_change_type"]
+        return _project(
+            df,
+            [
+                *cols,
+                ("_change_type", ct),
+                ("_commit_version", f"CAST({int(version)} AS INT)"),
+            ],
         )
+
+    def recorded(change_dir: str, version: int) -> DataFrame:
+        """A commit's ``c_*`` change directory, read with its footer
+        schema and reconciled."""
+        cf, schema = _read_written(spark, os.path.join(path, change_dir))
+        return reconcile(cf, None, version, columns=schema.names)
 
     def need_prev(v: int) -> None:
         if v - 1 > 0 and v - 1 not in versions:
@@ -3310,8 +3405,7 @@ def vt_read_changes(
             change_dir = m.get("changes")
             blob = m.get("update") or {}
             if change_dir is not None:
-                cf = spark.read.parquet(os.path.join(path, change_dir))
-                frames.append(reconcile(cf, None, v))
+                frames.append(recorded(change_dir, v))
             elif (
                 op == "update"
                 and blob.get("assignments")
@@ -3367,8 +3461,7 @@ def vt_read_changes(
             change_dir = m.get("changes")
             blob = m.get("delete") or {}
             if change_dir is not None:
-                cf = spark.read.parquet(os.path.join(path, change_dir))
-                frames.append(reconcile(cf, None, v))
+                frames.append(recorded(change_dir, v))
             elif blob.get("predicate") is not None:
                 # reconstruct: previous snapshot ∩ recorded predicate —
                 # exact while the previous version is retained
@@ -3422,10 +3515,7 @@ def vt_read_changes(
             blob = m.get("replace_where") or {}
             change_dir = m.get("changes")
             if change_dir is not None:
-                cf = spark.read.parquet(
-                    os.path.join(path, change_dir)
-                )
-                frames.append(reconcile(cf, None, v))
+                frames.append(recorded(change_dir, v))
             elif blob.get("predicate") is not None:
                 need_prev(v)
                 cond = None
@@ -4555,9 +4645,9 @@ class _Region:
             if manifest.get("schema") is not None:
                 schema = StructType.fromJson(manifest["schema"])
             else:  # legacy table: the first directory's footer schema
-                schema = spark.read.parquet(
-                    os.path.join(path, manifest["dirs"][0])
-                ).schema
+                schema = _read_written(
+                    spark, os.path.join(path, manifest["dirs"][0])
+                )[1]
             skip = rule_skip_conjuncts(self.rule, schema, self.params) or []
             exact = rule_exact_conjuncts(self.rule, schema, self.params)
             cond = compile_predicate(self.rule.conditions, schema, self.params)

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, functions as F
+
+_log = logging.getLogger(__name__)
 
 
 # Size-adaptive fan-out (r15, guide §2: derive partitioning from input
@@ -31,8 +35,9 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
     ``min(parallelism, max(4, bytes / _SPREAD_TARGET_BYTES))``. At 100 TB
     the byte term dominates and this is exactly the old
     repartition-to-parallelism; when the estimate is unavailable the old
-    behavior is the fallback. :func:`spread_pinned` keeps the pre-r15
-    fixed fan-out for the code-frozen calibration-probe path."""
+    behavior is the fallback, logged at DEBUG on this module's logger.
+    :func:`spread_pinned` keeps the pre-r15 fixed fan-out for the
+    code-frozen calibration-probe path."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism * multiplier
     try:
         size = int(
@@ -41,8 +46,12 @@ def spread(df: DataFrame, multiplier: int = 1) -> DataFrame:
         target = min(
             parallelism, max(4, -(-size // _SPREAD_TARGET_BYTES))
         )
-    except Exception:  # estimate unavailable — old fixed fan-out
+    except Exception as exc:  # estimate unavailable — old fixed fan-out
         target = parallelism
+        _log.debug(
+            "spread: size estimate unavailable (%s); fan-out %d",
+            type(exc).__name__, target,
+        )
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

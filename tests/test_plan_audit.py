@@ -717,6 +717,38 @@ class TestSpreadFanOut:
         plan = _physical(spread(spark.range(0, 10, 1, 1), multiplier=4))
         assert "RoundRobinPartitioning(4)" in plan
 
+    def test_estimate_fallback_is_logged(self, spark, caplog, monkeypatch):
+        """Without a size estimate ``spread`` falls back to full fan-out
+        and says so in one DEBUG record; the package adds no handler."""
+        import logging
+
+        from dynamicqueryengine_spark.util import spread
+
+        class NoEstimate:
+            def __init__(self, jdf):
+                self._jdf = jdf
+
+            def queryExecution(self):
+                raise RuntimeError("no estimate")
+
+            def __getattr__(self, name):
+                return getattr(self._jdf, name)
+
+        name = "dynamicqueryengine_spark.util"
+        n = spark.sparkContext.defaultParallelism * 4
+        with caplog.at_level(logging.DEBUG, logger=name):
+            spread(spark.range(0, 10, 1, 1), multiplier=4)
+            assert not [r for r in caplog.records if r.name == name]
+            df = spark.range(0, 10, 1, 1)
+            monkeypatch.setattr(df, "_jdf", NoEstimate(df._jdf))
+            plan = _physical(spread(df, multiplier=4))
+        assert f"RoundRobinPartitioning({n})" in plan
+        (rec,) = [r for r in caplog.records if r.name == name]
+        assert rec.levelno == logging.DEBUG
+        assert "RuntimeError" in rec.getMessage()
+        assert f"fan-out {n}" in rec.getMessage()
+        assert logging.getLogger(name).handlers == []
+
     def test_pinned_spreads_to_parallelism(self, spark):
         from dynamicqueryengine_spark.util import spread_pinned
 

@@ -5783,6 +5783,16 @@ class TestDmlJobCount:
         "optimize_where": 3, "reorg": 2, "compact": 2, "optimize": 3,
     }
 
+    @staticmethod
+    def _four_hundred(spark, tmp_path):
+        from dynamicqueryengine_spark.sources.versioned import vt_optimize
+
+        path = str(tmp_path / "t")
+        df = spark.range(400).selectExpr("id", "concat('v', id) AS v")
+        vt_write(spark, path, df)
+        vt_optimize(spark, path, ["id"], n_partitions=4)
+        return path
+
     def test_change_feed_dml_job_counts(self, spark, tmp_path):
         from dynamicqueryengine_spark.sources.versioned import (
             vt_compact,
@@ -5792,10 +5802,7 @@ class TestDmlJobCount:
             vt_update,
         )
 
-        path = str(tmp_path / "t")
-        df = spark.range(400).selectExpr("id", "concat('v', id) AS v")
-        vt_write(spark, path, df)
-        vt_optimize(spark, path, ["id"], n_partitions=4)
+        path = self._four_hundred(spark, tmp_path)
         ups = _df(spark, [(i, f"m{i}") for i in range(0, 20)] + [(1000, "n")])
         calls = {
             "merge": lambda: vt_merge(
@@ -5873,6 +5880,67 @@ class TestDmlJobCount:
         before = dag.numTotalJobs()
         out = call()
         return out, dag.numTotalJobs() - before
+
+    def test_change_feed_read_runs_one_job(self, spark, tmp_path):
+        """Building the change feed over an append, a merge, a delete and
+        an update runs no Spark job: each change directory is read with
+        the schema in its footer, not inferred by a job. Collecting it
+        runs one."""
+        from collections import Counter
+
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_delete,
+            vt_read_changes,
+            vt_update,
+        )
+
+        path = self._four_hundred(spark, tmp_path)
+        v0 = vt_versions(path)[-1]
+        vt_write(spark, path, _df(spark, [(1000, "a")]), mode="append")
+        ups = _df(spark, [(i, f"m{i}") for i in range(0, 20)] + [(1001, "n")])
+        vt_merge(spark, path, ups, ["id"], change_feed=True)
+        vt_delete(spark, path, ("id", "<", 5), change_feed=True)
+        vt_update(
+            spark, path, ("id", "=", 7), {"v": "'u'"}, change_feed=True
+        )
+        head = vt_versions(path)[-1]
+        assert head == v0 + 4
+        feed, built = self._status_jobs(
+            spark, lambda: vt_read_changes(spark, path, v0, head)
+        )
+        rows, ran = self._status_jobs(spark, feed.collect)
+        assert (built, ran) == (0, 1)
+        assert Counter(r["_change_type"] for r in rows) == {
+            "insert": 2, "update_preimage": 21, "update_postimage": 21,
+            "delete": 5,
+        }
+        assert {
+            (r["id"], r["v"], r["_commit_version"])
+            for r in rows
+            if r["_change_type"] == "update_postimage"
+        } >= {(7, "m7", v0 + 2), (7, "u", v0 + 4)}
+
+    def test_bloom_append_reads_back_without_inference(self, spark, tmp_path):
+        """An append to a table with bloom columns harvests its blooms
+        from a read-back of the new directory that uses the footer
+        schema, so it runs no inference job: three jobs, four when the
+        read-back inferred its schema."""
+        path = str(tmp_path / "t")
+        vt_write(
+            spark, path, _df(spark, [(i, f"v{i}") for i in range(40)]),
+            bloom_cols=["v"],
+        )
+        v = vt_versions(path)[-1]
+        got, jobs = self._status_jobs(
+            spark,
+            lambda: vt_write(
+                spark, path, _df(spark, [(40, "v40"), (41, "v41")]),
+                mode="append", bloom_cols=["v"],
+            ),
+        )
+        assert got == v + 1
+        assert jobs == 3
+        assert vt_read(spark, path, predicate=("v", "=", "v41")).count() == 1
 
     @staticmethod
     def _forty_files(spark, tmp_path):
@@ -6045,3 +6113,153 @@ class TestStaleFilesStayHidden:
             assert os.path.join(path, d) in plan["partial_dirs"]
         for fl in vt_scan_plan(path)["files"].values():
             assert not stale & set(fl)
+
+
+class TestFooterSchemaParity:
+    """Every directory the format writes is read with the schema Spark
+    put in its footer (``_footer_schema``) instead of an inference job.
+    On the change directories of tables whose history renames, nests,
+    widens or carries every non-trivial column type, that schema is the
+    one inference returns, and the change feed read with it equals the
+    change feed read by inference."""
+
+    @staticmethod
+    def _mapped_rename(spark, path):
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_delete,
+            vt_rename_column,
+            vt_update,
+        )
+
+        vt_write(
+            spark, path,
+            spark.createDataFrame(
+                [(i, f"u{i % 3}", float(i)) for i in range(8)],
+                "id long, user string, val double",
+            ),
+        )
+        vt_delete(spark, path, ("val", "=", 3.0), change_feed=True)
+        vt_rename_column(path, "val", "amount")
+        vt_update(
+            spark, path, ("amount", "=", 2.0), {"amount": "amount * 10"},
+            change_feed=True,
+        )
+
+    @staticmethod
+    def _nested_rename(spark, path):
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_rename_column,
+        )
+
+        schema = "id long, payload struct<v:int, w:string>"
+        vt_write(
+            spark, path,
+            spark.createDataFrame(
+                [(1, (10, "a")), (2, (20, "b")), (3, (30, "c"))], schema
+            ),
+        )
+        vt_merge(
+            spark, path,
+            spark.createDataFrame([(2, (21, "B")), (4, (40, "d"))], schema),
+            ["id"], change_feed=True,
+        )
+        vt_rename_column(path, "payload.v", "val")
+        vt_merge(
+            spark, path,
+            spark.createDataFrame(
+                [(3, (31, "C"))], "id long, payload struct<val:int, w:string>"
+            ),
+            ["id"], change_feed=True,
+        )
+
+    @staticmethod
+    def _widened(spark, path):
+        from dynamicqueryengine_spark.sources.versioned import (
+            vt_delete,
+            vt_widen_column,
+        )
+
+        vt_write(
+            spark, path,
+            spark.createDataFrame(
+                [(i, f"v{i}") for i in range(6)], "id int, v string"
+            ),
+        )
+        vt_delete(spark, path, ("id", "<", 2), change_feed=True)
+        vt_widen_column(path, "id", "bigint")
+        vt_merge(
+            spark, path,
+            spark.createDataFrame(
+                [(3, "m3"), (2**40, "big")], "id bigint, v string"
+            ),
+            ["id"], change_feed=True,
+        )
+
+    @staticmethod
+    def _typed(spark, path):
+        import datetime as dt
+        from decimal import Decimal
+
+        schema = (
+            "id long, ts timestamp, d date, dec decimal(10,2), "
+            "bin binary, arr array<int>, m map<string,int>"
+        )
+
+        def row(i, cents=25):
+            return (
+                i, dt.datetime(2024, 1, 1, 12, i), dt.date(2024, 2, i + 1),
+                Decimal(f"{i}.{cents}"), bytes([i, 255 - i]), [i, None],
+                {"k": i},
+            )
+
+        vt_write(spark, path, spark.createDataFrame(
+            [row(i) for i in range(5)], schema
+        ))
+        vt_merge(
+            spark, path,
+            spark.createDataFrame([row(2, cents=75), row(9)], schema),
+            ["id"], change_feed=True,
+        )
+
+    @staticmethod
+    def _zero_rows(spark, path):
+        vt_write(spark, path, _df(spark, [(1, "a"), (3, "c")]))
+        vt_merge(
+            spark, path, _df(spark, []), ["id"], change_feed=True
+        )
+
+    @pytest.mark.parametrize(
+        "table",
+        ["_mapped_rename", "_nested_rename", "_widened", "_typed",
+         "_zero_rows"],
+    )
+    def test_footer_schema_matches_inference(
+        self, spark, tmp_path, monkeypatch, table
+    ):
+        from dynamicqueryengine_spark.sources import versioned
+        from dynamicqueryengine_spark.sources.versioned import (
+            _footer_schema,
+            vt_read_changes,
+        )
+
+        path = str(tmp_path / "t")
+        getattr(self, table)(spark, path)
+        change_dirs = [
+            os.path.join(path, d)
+            for d in sorted(os.listdir(path))
+            if d.startswith("c_")
+        ]
+        assert change_dirs
+        for d in change_dirs:
+            assert _footer_schema(d) == spark.read.parquet(d).schema, d
+        head = vt_versions(path)[-1]
+
+        def feed():
+            df = vt_read_changes(spark, path, 0, head)
+            return df.schema.json(), sorted(map(repr, df.collect()))
+
+        got = feed()
+        monkeypatch.setattr(versioned, "_footer_schema", lambda d: None)
+        assert got == feed()
+        if table == "_zero_rows":
+            assert [r for r in got[1] if "'insert'" not in r] == []
