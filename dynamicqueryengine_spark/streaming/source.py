@@ -548,6 +548,8 @@ def _read_change_partition(
     import pyarrow as pa
     import pyarrow.dataset as ds
 
+    if partition is None:
+        return  # a batch scan planned no partition: Spark reads one None
     for fname in partition.files:
         p = os.path.join(partition.path, fname)
         dset = ds.dataset(p, format="parquet")
