@@ -175,8 +175,11 @@ def serve(
             if route not in ("/rules/evaluate", "/rules/explain"):
                 self.send_error(404)
                 return
-            length = int(self.headers.get("Content-Length", 0))
             try:
+                raw = self.headers.get("Content-Length", "0")
+                if not raw.strip().isdigit():  # a negative one reads to EOF
+                    raise ValueError(f"invalid Content-Length {raw!r}")
+                length = int(raw)
                 payload = json.loads(self.rfile.read(length) or b"{}")
                 handler = (
                     explain_request
@@ -186,6 +189,8 @@ def serve(
                 result = handler(spark, payload)
             except json.JSONDecodeError as exc:
                 result = {"status": 400, "Error": f"Invalid JSON: {exc}"}
+            except ValueError as exc:  # the Content-Length, or the encoding
+                result = {"status": 400, "Error": f"Bad request: {exc}"}
             body = dict(result)
             status = body.pop("status")
             data = json.dumps(body.get("rows", body), default=str).encode()

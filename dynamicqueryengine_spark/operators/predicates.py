@@ -595,28 +595,10 @@ def rule_exact_conjuncts(
     grammar with pyarrow, but not the full operator set — an exact
     conjunction makes a rule delete stream-replayable without
     materializing change rows."""
-    group = _resolve_group(rule_or_group)
-    params = dict(external_params or {})
-    out: list[tuple] = []
-
-    def walk(g: ConditionGroup | None) -> bool:
-        if g is None or g.is_empty():
-            # empty group compiles to lit(True): zero conjuncts cannot
-            # express "keep everything" in the delete grammar
-            return False
-        if g.negate:
-            return False
-        n_children = len(g.conditions) + len(g.groups)
-        if g.logical_operator.strip().upper() == "OR" and n_children > 1:
-            return False
-        for c in g.conditions:
-            t = _skip_conjunct(c, schema, params, type_name)
-            if t is None:
-                return False
-            out.append(t)
-        return all(walk(sub) for sub in g.groups)
-
-    return out if (walk(group) and out) else None
+    conjuncts, exact = _rule_conjuncts(
+        rule_or_group, schema, external_params, type_name
+    )
+    return conjuncts if exact else None
 
 
 def rule_skip_conjuncts(
@@ -637,26 +619,45 @@ def rule_skip_conjuncts(
     the rule accepts satisfies all returned conjuncts, so files pruned
     on them cannot contain matching rows — the compiled predicate still
     runs in full on whatever survives."""
-    # Accept a RuleDefinition (walk its root group), a bare ConditionGroup,
-    # or a raw rule/group dict — the duck-typed getattr('conditions') broke
-    # for ConditionGroup (its .conditions is a leaf LIST, not a group) and
-    # for dicts (r9 advice).
-    group = _resolve_group(rule_or_group)
+    conjuncts, _ = _rule_conjuncts(
+        rule_or_group, schema, external_params, type_name
+    )
+    return conjuncts
+
+
+def _rule_conjuncts(
+    rule_or_group,
+    schema: StructType,
+    external_params: Mapping[str, Any] | None = None,
+    type_name: str = "Row",
+) -> tuple[list[tuple], bool]:
+    """One walk behind :func:`rule_skip_conjuncts` and
+    :func:`rule_exact_conjuncts`: ``(conjuncts, exact)``, the required
+    skip-eligible conjuncts and whether they render the whole rule. A
+    subtree that makes no single child required (empty, negated, an OR
+    of several) and a leaf :func:`_skip_conjunct` cannot translate are
+    dropped from the conjuncts and make the rule inexact (an empty group
+    compiles to TRUE, which no conjunction expresses)."""
     params = dict(external_params or {})
     out: list[tuple] = []
+    exact = True
 
     def walk(g: ConditionGroup | None) -> None:
-        if g is None or g.is_empty() or g.negate:
-            return
-        n_children = len(g.conditions) + len(g.groups)
-        if g.logical_operator.strip().upper() == "OR" and n_children > 1:
+        nonlocal exact
+        if g is None or g.is_empty() or g.negate or (
+            g.logical_operator.strip().upper() == "OR"
+            and len(g.conditions) + len(g.groups) > 1
+        ):
+            exact = False
             return
         for c in g.conditions:
             t = _skip_conjunct(c, schema, params, type_name)
-            if t is not None:
+            if t is None:
+                exact = False
+            else:
                 out.append(t)
         for sub in g.groups:
             walk(sub)
 
-    walk(group)
-    return out
+    walk(_resolve_group(rule_or_group))
+    return out, exact and bool(out)

@@ -3155,43 +3155,13 @@ def vt_read(
         if version is not None:
             raise ValueError("pass version= or timestamp=, not both")
         version = vt_version_at(path, timestamp)
-    if rule is not None:
-        if predicate is not None:
-            raise ValueError("pass predicate= or rule=, not both")
-        from ..operators.predicates import (
-            compile_predicate,
-            rule_skip_conjuncts,
-        )
-        from ..plans.model import RuleDefinition
-
-        if isinstance(rule, dict):
-            rule = RuleDefinition.from_dict(rule)
-        v = _resolve_version(path, version)
-        manifest = _read_manifest(path, v)
-        if manifest.get("schema") is not None:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(manifest["schema"])
-        else:
-            # legacy table: schema from the snapshot's own footers
-            schema = _read_written(
-                spark, os.path.join(path, manifest["dirs"][0])
-            )[1]
-        conjuncts = rule_skip_conjuncts(rule, schema, external_params)
-        plan = vt_scan_plan(path, v, conjuncts or None)
-        df = _read_plan(spark, plan)
-        return df.filter(
-            compile_predicate(
-                rule.conditions, schema, external_params, strict_compat
-            )
-        )
-    plan = vt_scan_plan(path, version, predicate)
-    df = _read_plan(spark, plan)
-    conjuncts = _normalize_predicate(predicate)
-    if conjuncts is not None:
-        for col, op, value in conjuncts:
-            df = df.filter(_conjunct_column(col, op, value))
-    return df
+    if rule is None and not predicate:
+        return _read_plan(spark, vt_scan_plan(path, version))
+    region = _Region("vt_read", predicate, rule, external_params)
+    v = _resolve_version(path, version)
+    manifest = _read_manifest(path, v) if rule is not None else None
+    skip, _, cond = region.conditions(spark, path, manifest, strict_compat)
+    return _read_plan(spark, vt_scan_plan(path, v, skip or None)).filter(cond)
 
 
 def vt_read_delta(
@@ -3218,11 +3188,7 @@ def vt_read_delta(
         # they add no rows, so they cannot invalidate an
         # added-files-only delta (every frame reconciles to the TO
         # version's schema below, by stable physical identity)
-        if op not in (
-            "append", "analyze",
-            "rename_column", "drop_column", "add_column",
-            "widen_column", "set_partition_spec",
-        ):
+        if op != "append" and op not in _METADATA_OPS:
             raise ValueError(
                 f"version {v} is op={op!r}: delta reads require "
                 "append-only history in the range"
@@ -3236,6 +3202,151 @@ def vt_read_delta(
         spark, path, to_manifest, new_dirs or to_manifest["dirs"][:1]
     )
     return df if new_dirs else df.filter(F.lit(False))
+
+
+# How each commit op enters the change feed (:func:`_change_plan`); the
+# other readers of the log classify ops by these sets too.
+_METADATA_OPS = frozenset({
+    "analyze", "rename_column", "drop_column", "add_column",
+    "widen_column", "set_partition_spec",
+})  # same directories: no row added, kept or removed
+_NO_ROW_OPS = _METADATA_OPS | {"optimize"}  # layout or metadata only
+_SNAPSHOT_OPS = frozenset({"overwrite", "restore", "clone"})
+_CHANGE_OPS = _SNAPSHOT_OPS | {"merge", "delete", "update", "replace_where"}
+
+
+@dataclass(frozen=True)
+class _ChangeStep:
+    """One unit of commit ``version``'s change output: the directories
+    ``dirs`` of ``manifest`` with every row tagged ``tag`` (``tag`` None:
+    a recorded ``c_*`` change directory, whose rows carry their
+    ``_change_type``), or, when ``snapshot`` is set, the table at that
+    version (``manifest`` is its manifest) tagged ``tag``, narrowed to
+    the recorded region (``predicate``, else ``rule`` with ``params``)
+    and rewritten by the update ``assignments`` when given."""
+
+    op: str
+    version: int
+    manifest: dict
+    tag: str | None = "insert"
+    dirs: tuple = ()
+    snapshot: int | None = None
+    predicate: list | None = None
+    rule: dict | None = None
+    params: dict | None = None
+    assignments: dict | None = None
+
+
+def _unrecorded(version: int, op: str) -> ValueError:
+    return ValueError(
+        f"version {version} is a {op} committed without "
+        "change_feed=True: its row-level changes were not recorded"
+    )
+
+
+def _change_plan(path: str, lo: int, hi: int) -> list[_ChangeStep]:
+    """The change output of every commit in ``(lo, hi]`` as
+    :class:`_ChangeStep` s, from manifests alone (no Spark job). This is
+    where each op's change-feed semantics live: :func:`vt_read_changes`
+    maps the steps to Spark frames, the pyarrow readers (the
+    ``vt_changes`` stream and ``readChangeFeed``) to input partitions.
+
+    * ``append``: its new directories as inserts;
+    * ``merge`` / ``delete`` / ``update`` / ``replace_where``: the
+      recorded change directory; without one, a replay of the previous
+      snapshot: the recorded region as deletes (a delete or
+      replace_where: the predicate; a delete: else its rule), or an
+      update's region as pre-images plus the region with its
+      assignments as post-images. ``replace_where`` adds its
+      ``new_dirs`` as inserts;
+    * ``overwrite`` / ``restore`` / ``clone``: the previous snapshot as
+      deletes (none at creation), then the new one as inserts;
+    * ``optimize``, ``analyze`` and the schema ops: nothing.
+
+    Raises when a version the plan reads was vacuumed, or a commit's
+    changes were neither recorded nor replayable."""
+    versions = vt_versions(path)
+
+    def prev(v: int) -> dict | None:
+        if v - 1 <= 0:
+            return None
+        if v - 1 not in versions:
+            raise ValueError(
+                f"version {v - 1} was vacuumed: cannot reconstruct "
+                f"changes for version {v}"
+            )
+        return _read_manifest(path, v - 1)
+
+    steps: list[_ChangeStep] = []
+    for v in range(lo + 1, hi + 1):
+        if v not in versions:
+            raise ValueError(
+                f"version {v} was vacuumed: the change-feed range "
+                f"({lo}, {hi}] is no longer reconstructable"
+            )
+        m = _read_manifest(path, v)
+        op = m.get("op")
+        if op in _NO_ROW_OPS:
+            # a consumer pumping over these must see zero rows (an
+            # ANALYZE that raised here once wedged every subscription)
+            continue
+        if op == "append":
+            old = set((prev(v) or {"dirs": ()})["dirs"])
+            new = tuple(d for d in m["dirs"] if d not in old)
+            if new:
+                steps.append(_ChangeStep(op, v, m, dirs=new))
+        elif op in _SNAPSHOT_OPS:
+            p = prev(v)
+            if p is not None:
+                steps.append(_ChangeStep(op, v, p, "delete", snapshot=v - 1))
+            steps.append(_ChangeStep(op, v, m, snapshot=v))
+        elif op in _CHANGE_OPS:
+            blob = m.get(op) or {}
+            if blob.get("predicate") is not None:
+                region = {"predicate": blob["predicate"]}
+            else:
+                region = {
+                    "rule": blob.get("rule"),
+                    "params": blob.get("external_params") or None,
+                }
+            if m.get("changes") is not None:
+                steps.append(
+                    _ChangeStep(op, v, m, tag=None, dirs=(m["changes"],))
+                )
+            elif op == "update" and blob.get("assignments") and (
+                blob.get("predicate") or blob.get("rule")
+            ):
+                p = prev(v)
+                steps += [
+                    _ChangeStep(
+                        op, v, p, tag, snapshot=v - 1,
+                        assignments=assignments, **region,
+                    )
+                    for tag, assignments in (
+                        ("update_preimage", None),
+                        ("update_postimage", blob["assignments"]),
+                    )
+                ]
+            elif op in ("delete", "replace_where") and (
+                blob.get("predicate") is not None
+                or op == "delete" and blob.get("rule") is not None
+            ):
+                steps.append(
+                    _ChangeStep(
+                        op, v, prev(v), "delete", snapshot=v - 1, **region
+                    )
+                )
+            else:
+                raise _unrecorded(v, op)
+            # not an append-diff: replace_where's rewritten survivor
+            # dirs are new on disk but hold logically unchanged rows
+            if op == "replace_where" and blob.get("new_dirs"):
+                steps.append(
+                    _ChangeStep(op, v, m, dirs=tuple(blob["new_dirs"]))
+                )
+        else:  # pragma: no cover - future ops must opt in explicitly
+            raise ValueError(f"version {v}: unknown op {op!r}")
+    return steps
 
 
 def vt_read_changes(
@@ -3252,21 +3363,16 @@ def vt_read_changes(
         next_state = state ⊎ (insert ∪ update_postimage)
                            ∖ (delete ∪ update_preimage)
 
-    Per-op sourcing:
-
-    * ``append`` — the added directories, tagged ``insert`` (no extra
-      storage; same file arithmetic as vt_read_delta);
-    * ``merge`` — the commit's recorded ``c_*`` change directory
-      (requires the merge was committed with ``change_feed=True``;
-      raises otherwise, because pre-images are unrecoverable after the
-      fact once the prior version is vacuumed);
-    * ``overwrite`` / ``restore`` — synthesized coarsely as
-      delete-all(previous snapshot) + insert-all(new snapshot): correct
-      for the replay identity above, at snapshot granularity (the same
-      choice Delta documents for non-CDC-capable rewrites);
-    * ``optimize`` / ``analyze`` — no logical change, contribute
-      nothing (layout rewrite / statistics only);
-    * ``clone`` — the table's creation snapshot: insert-all.
+    Which rows each commit contributes is :func:`_change_plan`'s
+    decision, the same plan the ``vt_changes`` stream and the
+    ``readChangeFeed`` reader read: an append's added directories; a
+    merge, delete or update's recorded ``c_*`` change directory, else a
+    replay of the previous snapshot by the recorded region (and update
+    assignments); an overwrite, restore or clone as
+    delete-all(previous) + insert-all(new), correct for the replay
+    identity above at snapshot granularity (the choice Delta documents
+    for non-CDC-capable rewrites); optimize, analyze and the schema
+    ops nothing.
 
     ``from_version=0`` reads from table creation. Raises if a needed
     previous snapshot was vacuumed away. Results are reconciled to the
@@ -3353,215 +3459,36 @@ def vt_read_changes(
             ],
         )
 
-    def recorded(change_dir: str, version: int) -> DataFrame:
-        """A commit's ``c_*`` change directory, read with its footer
-        schema and reconciled."""
-        cf, schema = _read_written(spark, os.path.join(path, change_dir))
-        return reconcile(cf, None, version, columns=schema.names)
-
-    def need_prev(v: int) -> None:
-        if v - 1 > 0 and v - 1 not in versions:
-            raise ValueError(
-                f"version {v - 1} was vacuumed: cannot reconstruct "
-                f"changes for version {v}"
+    def frame(step: _ChangeStep) -> DataFrame:
+        if step.snapshot is None and step.tag is None:
+            # a recorded c_* change dir: physical columns, row tags
+            cf, schema = _read_written(
+                spark, os.path.join(path, step.dirs[0])
             )
-
-    frames: list[DataFrame] = []
-    for v in range(from_version + 1, to_version + 1):
-        if v not in versions:
-            raise ValueError(
-                f"version {v} was vacuumed: the change-feed range "
-                f"({from_version}, {to_version}] is no longer "
-                "reconstructable"
+            return reconcile(cf, None, step.version, columns=schema.names)
+        if step.snapshot is None:
+            df = _read_dirs(spark, path, step.manifest, list(step.dirs))
+            return reconcile(df, step.tag, step.version, src=step.manifest)
+        # the recorded region, if any, prunes and filters like any read
+        df = vt_read(
+            spark, path, step.snapshot, predicate=step.predicate,
+            rule=step.rule, external_params=step.params,
+        )
+        if step.assignments:
+            exprs = {c: F.expr(e) for c, e in step.assignments.items()}
+            df = df.select(
+                *[
+                    exprs[f.name].cast(f.dataType).alias(f.name)
+                    if f.name in exprs
+                    else F.col(f.name)
+                    for f in df.schema.fields
+                ]
             )
-        m = _read_manifest(path, v)
-        op = m.get("op")
-        if op in (
-            "optimize", "analyze",
-            "rename_column", "drop_column", "add_column",
-            "widen_column", "set_partition_spec",
-        ):
-            # no logical ROW change: optimize rewrites layout, analyze
-            # records statistics, and the schema ops relabel/project
-            # columns (reconcile below already serves every frame in the
-            # TO version's schema) — a consumer pumping over any of
-            # these must see zero change rows (r9: an ANALYZE on a CDC
-            # source used to raise here and wedge every subscription)
-            continue
-        if op == "append":
-            need_prev(v)
-            prev_dirs = (
-                set(_read_manifest(path, v - 1)["dirs"]) if v - 1 else set()
-            )
-            new_dirs = [d for d in m["dirs"] if d not in prev_dirs]
-            if not new_dirs:
-                continue
-            frames.append(
-                reconcile(
-                    _read_dirs(spark, path, m, new_dirs), "insert", v, src=m
-                )
-            )
-        elif op in ("merge", "update"):
-            change_dir = m.get("changes")
-            blob = m.get("update") or {}
-            if change_dir is not None:
-                frames.append(recorded(change_dir, v))
-            elif (
-                op == "update"
-                and blob.get("assignments")
-                and (blob.get("predicate") or blob.get("rule"))
-            ):
-                # reconstruct from the previous snapshot + the recorded
-                # predicate-or-rule and assignment expressions — exact
-                # while the previous version is retained
-                need_prev(v)
-                prev_df = vt_read(spark, path, v - 1)
-                if blob.get("predicate"):
-                    cond = None
-                    for col, uop, value in blob["predicate"]:
-                        c = _conjunct_column(col, uop, value)
-                        cond = c if cond is None else (cond & c)
-                else:
-                    from ..operators.predicates import compile_predicate
-                    from ..plans.model import RuleDefinition
+        return reconcile(df, step.tag, step.version, src=step.manifest)
 
-                    cond = compile_predicate(
-                        RuleDefinition.from_dict(blob["rule"]).conditions,
-                        prev_df.schema,
-                        blob.get("external_params") or None,
-                    )
-                matched = prev_df.filter(
-                    F.coalesce(cond, F.lit(False))
-                )
-                exprs = {
-                    c: F.expr(e) for c, e in blob["assignments"].items()
-                }
-                post = matched.select(
-                    *[
-                        exprs[f.name].cast(f.dataType).alias(f.name)
-                        if f.name in exprs
-                        else F.col(f.name)
-                        for f in matched.schema.fields
-                    ]
-                )
-                m_prev = _read_manifest(path, v - 1)
-                frames.append(
-                    reconcile(matched, "update_preimage", v, src=m_prev)
-                )
-                frames.append(
-                    reconcile(post, "update_postimage", v, src=m_prev)
-                )
-            else:
-                raise ValueError(
-                    f"version {v} is a {op} committed without "
-                    "change_feed=True: its row-level changes were not "
-                    "recorded"
-                )
-        elif op == "delete":
-            change_dir = m.get("changes")
-            blob = m.get("delete") or {}
-            if change_dir is not None:
-                frames.append(recorded(change_dir, v))
-            elif blob.get("predicate") is not None:
-                # reconstruct: previous snapshot ∩ recorded predicate —
-                # exact while the previous version is retained
-                need_prev(v)
-                cond = None
-                for col, dop, value in blob["predicate"]:
-                    c = _conjunct_column(col, dop, value)
-                    cond = c if cond is None else (cond & c)
-                frames.append(
-                    reconcile(
-                        vt_read(spark, path, v - 1).filter(cond),
-                        "delete",
-                        v,
-                        src=_read_manifest(path, v - 1),
-                    )
-                )
-            elif blob.get("rule") is not None:
-                # rule-driven delete: recompile the recorded rule over
-                # the previous snapshot
-                from ..operators.predicates import compile_predicate
-                from ..plans.model import RuleDefinition
-
-                need_prev(v)
-                prev_df = vt_read(spark, path, v - 1)
-                rcond = compile_predicate(
-                    RuleDefinition.from_dict(blob["rule"]).conditions,
-                    prev_df.schema,
-                    blob.get("external_params") or None,
-                )
-                frames.append(
-                    reconcile(
-                        prev_df.filter(
-                            F.coalesce(rcond, F.lit(False))
-                        ),
-                        "delete",
-                        v,
-                        src=_read_manifest(path, v - 1),
-                    )
-                )
-            else:
-                raise ValueError(
-                    f"version {v} is a delete committed without "
-                    "change_feed=True and without a replayable "
-                    "predicate: its deletions were not recorded"
-                )
-        elif op == "replace_where":
-            # selective overwrite (r14): delete(previous ∩ predicate)
-            # + insert(the commit's recorded new data dirs) — NOT an
-            # append-diff (rewritten survivor dirs are new physically
-            # but their rows are unchanged logically)
-            blob = m.get("replace_where") or {}
-            change_dir = m.get("changes")
-            if change_dir is not None:
-                frames.append(recorded(change_dir, v))
-            elif blob.get("predicate") is not None:
-                need_prev(v)
-                cond = None
-                for col, dop, value in blob["predicate"]:
-                    c = _conjunct_column(col, dop, value)
-                    cond = c if cond is None else (cond & c)
-                frames.append(
-                    reconcile(
-                        vt_read(spark, path, v - 1).filter(cond),
-                        "delete",
-                        v,
-                        src=_read_manifest(path, v - 1),
-                    )
-                )
-            else:  # pragma: no cover - writer always records one
-                raise ValueError(
-                    f"version {v} is a replace_where with neither a "
-                    "recorded predicate nor materialized changes"
-                )
-            new_dirs = blob.get("new_dirs") or []
-            if new_dirs:
-                frames.append(
-                    reconcile(
-                        _read_dirs(spark, path, m, new_dirs),
-                        "insert", v, src=m,
-                    )
-                )
-        elif op in ("overwrite", "restore", "clone"):
-            # clone = the table's creation snapshot (v-1 is 0, so this
-            # is insert-all, same as any initial write)
-            if v - 1 > 0:
-                need_prev(v)
-                frames.append(
-                    reconcile(
-                        vt_read(spark, path, v - 1),
-                        "delete",
-                        v,
-                        src=_read_manifest(path, v - 1),
-                    )
-                )
-            frames.append(
-                reconcile(vt_read(spark, path, v), "insert", v, src=m)
-            )
-        else:  # pragma: no cover - future ops must opt in explicitly
-            raise ValueError(f"version {v}: unknown op {op!r}")
-
+    frames = [
+        frame(step) for step in _change_plan(path, from_version, to_version)
+    ]
     if not frames:
         empty_v = to_version or versions[0]
         empty = vt_read(spark, path, empty_v).filter(F.lit(False))
@@ -4617,40 +4544,48 @@ class _Region:
             if self.conjuncts is None:
                 raise ValueError(f"{verb} requires a predicate or a rule")
 
+    def conditions(
+        self, spark, path: str, manifest: dict | None,
+        strict_compat: bool = True,
+    ) -> tuple:
+        """``(skip, exact, cond)`` against one manifest: the REQUIRED
+        skip-eligible conjuncts (pruning on them is sound for any rule),
+        the exact conjunction (None when the region is not one) and the
+        row condition, NULL where SQL leaves it unknown. A rule compiles
+        against the manifest's schema (a legacy table's: its first
+        directory's footer); a predicate needs no manifest."""
+        if self.rule is None:
+            cond = None
+            for col, op, value in self.conjuncts:
+                c = _conjunct_column(col, op, value)
+                cond = c if cond is None else (cond & c)
+            return self.conjuncts, self.conjuncts, cond
+        from pyspark.sql.types import StructType
+
+        from ..operators.predicates import _rule_conjuncts, compile_predicate
+
+        if manifest.get("schema") is not None:
+            schema = StructType.fromJson(manifest["schema"])
+        else:
+            schema = _read_written(
+                spark, os.path.join(path, manifest["dirs"][0])
+            )[1]
+        skip, exact = _rule_conjuncts(self.rule, schema, self.params)
+        cond = compile_predicate(
+            self.rule.conditions, schema, self.params, strict_compat
+        )
+        return skip, (skip if exact else None), cond
+
     def resolve(self, spark, path: str, manifest: dict) -> tuple:
         """``(touch, prove, cond, recorded)`` against one head: the
-        per-file classifier (the REQUIRED skip-eligible conjuncts, so
-        pruning is sound for any rule), the physical-keyed EXACT
-        conjunction that may prove whole files/dirs match (None when
-        the region is not one), the row condition (NULL counts as no
-        match — SQL DML semantics) and the exact conjunction as
+        per-file classifier on the skip conjuncts, the physical-keyed
+        exact conjunction that may prove whole files/dirs match (None
+        when the region is not one), the row condition (NULL counts as
+        no match — SQL DML semantics) and the exact conjunction as
         manifest JSON (None when not recordable). The recorded JSON
         stays LOGICAL; only file stats and blooms are physical-keyed
         on a column-mapped table."""
-        if self.rule is None:
-            skip = exact = self.conjuncts
-            cond = None
-            for col, op, value in skip:
-                c = _conjunct_column(col, op, value)
-                cond = c if cond is None else (cond & c)
-        else:
-            from pyspark.sql.types import StructType
-
-            from ..operators.predicates import (
-                compile_predicate,
-                rule_exact_conjuncts,
-                rule_skip_conjuncts,
-            )
-
-            if manifest.get("schema") is not None:
-                schema = StructType.fromJson(manifest["schema"])
-            else:  # legacy table: the first directory's footer schema
-                schema = _read_written(
-                    spark, os.path.join(path, manifest["dirs"][0])
-                )[1]
-            skip = rule_skip_conjuncts(self.rule, schema, self.params) or []
-            exact = rule_exact_conjuncts(self.rule, schema, self.params)
-            cond = compile_predicate(self.rule.conditions, schema, self.params)
+        skip, exact, cond = self.conditions(spark, path, manifest)
         cmap = _col_mapping(manifest)
         touch = _pred_touch_fn(
             _map_conjuncts(skip, cmap), _bloom_col_types(manifest)

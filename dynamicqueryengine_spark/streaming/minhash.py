@@ -23,8 +23,9 @@ appends (pairs, docs, signatures) carries a ``txn=(app, batch_id)``
 SetTransaction marker committed atomically with its manifest, so a
 crash between any two appends replays as per-table no-ops — the same
 guard ``events_stream_upsert_totals`` pins for the upsert sink. The
-three appends are INDEPENDENT and run concurrently (r15, guide §2.6 —
-the r14 form ordered the signature commit last and serialized it):
+three appends are INDEPENDENT, so their order carries no correctness
+weight; they run one after the other (running them on three threads
+measured no gain beyond the run-to-run spread):
 
 * a batch is skipped wholesale only when ALL THREE markers cover it;
   any partially-committed batch re-runs, and each table's own marker
@@ -38,10 +39,9 @@ the r14 form ordered the signature commit last and serialized it):
   already landed, so replayed candidates are never re-shingled against
   duplicated document rows.
 
-A permanently-failing append leaves its own table behind while the
-other two advance — visible in the markers, converged by the next
-successful replay; the r14 sequential form could not produce that
-state but paid a full serial commit chain for it.
+A permanently-failing append stops the batch with the appends before
+it landed and the ones after it not — visible in the markers,
+converged by the next successful replay.
 
 Flagged-set completeness: a pair (a, b) is emitted by exactly one
 batch — the one where the LATER document arrives (both-in-one-batch
@@ -122,34 +122,14 @@ def minhash_index_batch(
     # all three appends land on INDEPENDENT tables: each is individually
     # replay-idempotent via its own txn marker, and the skip gate above
     # requires all three markers, so no inter-append ordering is needed
-    # for exactly-once (module docstring's replay argument). Run the
-    # three write jobs concurrently so each job's tasks back-fill
-    # executors another job's tail frees (guide §2.6) — the r14 form
-    # serialized the signature commit behind the other two.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..util import spark_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(
-                spark_thread_target(spark, vt_write),
-                spark, pairs_path, pairs, mode="append",
-                txn=(_APP_PAIRS, batch_id),
-            ),
-            pool.submit(
-                spark_thread_target(spark, vt_write),
-                spark, docs_path, batch, mode="append",
-                txn=(_APP_DOCS, batch_id),
-            ),
-            pool.submit(
-                spark_thread_target(spark, vt_write),
-                spark, sigs_path, sig_delta, mode="append",
-                txn=(_APP_SIGS, batch_id),
-            ),
-        ]
-        for f in futures:
-            f.result()
+    # for exactly-once (module docstring's replay argument)
+    vt_write(
+        spark, pairs_path, pairs, mode="append", txn=(_APP_PAIRS, batch_id)
+    )
+    vt_write(spark, docs_path, batch, mode="append", txn=(_APP_DOCS, batch_id))
+    vt_write(
+        spark, sigs_path, sig_delta, mode="append", txn=(_APP_SIGS, batch_id)
+    )
     sig_delta.unpersist()
     D.release_internal_caches()  # per-batch miner caches must not outlive
 

@@ -15,15 +15,15 @@ Offset model (Delta's streaming source in miniature):
 * ``latestOffset`` advances to the table head, capped by
   ``maxVersionsPerTrigger`` (rate limiting for backfills);
 * ``partitions(start, end)`` plans one input partition per (commit,
-  directory), carrying the directory's selected files: append commits
-  contribute their NEW directories tagged ``insert``, merge/delete
-  commits their recorded ``c_*`` change directory (the
-  ``_change_type`` column rides in the file), a delete committed
-  without ``change_feed=True`` replays as the PREVIOUS snapshot
-  filtered by the predicate recorded in its manifest, and
-  overwrite/restore/clone synthesize delete-all(previous) +
-  insert-all(new) exactly like ``vt_read_changes``. ``optimize`` /
-  ``analyze`` commits contribute nothing (layout/statistics only).
+  directory), carrying the directory's selected files, from the
+  change-feed plan ``vt_read_changes`` reads too
+  (``sources/versioned.py::_change_plan``, where each op's change rows
+  are decided): an append's new directories as inserts, a recorded
+  ``c_*`` change directory (the ``_change_type`` column rides in the
+  file), a delete replayed as the PREVIOUS snapshot filtered by its
+  recorded predicate, an overwrite/restore/clone as delete-all +
+  insert-all. Replays by rule or with update assignments are
+  ``vt_read_changes``-only: pyarrow evaluates the skip grammar alone.
 
 Scale shape: planning is manifest-metadata only (no data file opened on
 the driver); each partition reads ONE directory's files with pyarrow
@@ -86,7 +86,8 @@ class _ChangePartition(InputPartition):
     ``path`` and the ``files`` in it to read. ``change_type`` None
     means the files carry a ``_change_type`` column (a recorded ``c_*``
     change directory); otherwise every row gets the literal.
-    ``predicate`` (delete replay) filters the file's rows to the ones
+    ``predicate`` (a delete replay of the change-feed plan, see
+    ``versioned._change_plan``) filters the file's rows to the ones
     the delete removed. ``dv`` maps file name → deleted row
     positions (the replayed snapshot's deletion vectors): those rows
     are logically absent from the snapshot, so they are dropped BEFORE
@@ -315,118 +316,48 @@ class _ChangesStreamReader(DataSourceStreamReader):
 def _plan_change_partitions(
     path: str, lo: int, hi: int
 ) -> "list[_ChangePartition]":
-    """Plan the row-level change output of every commit in ``(lo, hi]``
-    as one ``_ChangePartition`` per (commit, directory) — manifest
+    """The change-feed plan of ``(lo, hi]`` (``versioned._change_plan``,
+    the plan ``vt_read_changes`` reads) as input partitions — manifest
     metadata only, no data file opened. Shared by the ``vt_changes``
     streaming source (per micro-batch offset range) and the batch
-    reader's ``readChangeFeed`` option (r13 verdict ask #3), so both
-    surfaces emit byte-identical change sets for the same version
-    range."""
-    from ..sources.versioned import _dir_files, _read_manifest, vt_versions
+    reader's ``readChangeFeed`` option. pyarrow evaluates only the skip
+    grammar, so a replay by rule or with update assignments raises
+    here: only ``vt_read_changes`` replays those."""
+    from ..sources.versioned import (
+        _change_plan,
+        _col_mapping,
+        _dir_files,
+        _map_conjuncts,
+        _unrecorded,
+    )
 
-    versions = vt_versions(path)
     parts: list[_ChangePartition] = []
-
-    def dir_parts(m: dict, dirs, v: int, tag: str | None) -> None:
-        # whole directories: an append's new dirs, a recorded c_*
-        # change dir (listed here — the manifest lists no change files)
-        for d in dirs:
-            parts.append(
+    for step in _change_plan(path, lo, hi):
+        if step.snapshot is None:
+            # whole directories: an append's new dirs, a recorded c_*
+            # change dir (listed here — the manifest lists no change files)
+            parts.extend(
                 _ChangePartition(
                     path=os.path.join(path, d),
-                    files=_dir_files(path, m, d),
-                    version=v,
-                    change_type=tag,
+                    files=_dir_files(path, step.manifest, d),
+                    version=step.version,
+                    change_type=step.tag,
                 )
+                for d in step.dirs
             )
-
-    def need(v: int, what: str) -> None:
-        if v > 0 and v not in versions:
-            raise ValueError(
-                f"version {v} was vacuumed: cannot {what}"
-            )
-
-    def replay(v: int, pred: list) -> None:
-        # replay = PREVIOUS snapshot ∩ predicate; the previous
-        # snapshot's own DVs must apply first or rows an earlier
-        # merge-on-read delete removed could re-match and stream as
-        # phantom deletes
-        cm_prev = _read_manifest(path, v - 1).get("column_mapping")
-        if cm_prev:
+        elif step.rule is not None or step.assignments is not None:
+            raise _unrecorded(step.version, step.op)
+        else:
             # the predicate was recorded in LOGICAL names; the files
             # hold physical ones
-            pred = [[cm_prev.get(c, c), o, val] for c, o, val in pred]
-        parts.extend(
-            _plan_snapshot_parts(path, v - 1, "delete", v, pred)
-        )
-
-    for v in range(lo + 1, hi + 1):
-        if v not in versions:
-            raise ValueError(
-                f"version {v} was vacuumed: the change-stream range "
-                f"({lo}, {hi}] is no longer reconstructable"
-            )
-        m = _read_manifest(path, v)
-        op = m.get("op")
-        if op in (
-            "optimize", "analyze",
-            "rename_column", "drop_column", "add_column",
-            "widen_column", "set_partition_spec",
-        ):
-            # no logical ROW change (the schema ops relabel/project
-            # columns; this stream's schema is fixed at query start
-            # — restart to pick up renamed/added names, the same
-            # contract as merge_schema evolution)
-            continue
-        if op == "append":
-            prev = (
-                set(_read_manifest(path, v - 1)["dirs"])
-                if v - 1 in versions
-                else set()
-            )
-            need(v - 1, f"reconstruct changes for version {v}")
-            new_dirs = [d for d in m["dirs"] if d not in prev]
-            dir_parts(m, new_dirs, v, "insert")
-        elif op in ("merge", "delete", "update"):
-            cd = m.get("changes")
-            if cd is not None:
-                dir_parts(m, [cd], v, None)
-            elif op == "delete" and (m.get("delete") or {}).get(
-                "predicate"
-            ):
-                need(v - 1, f"replay the delete at version {v}")
-                replay(v, m["delete"]["predicate"])
-            else:
-                raise ValueError(
-                    f"version {v} is a {op} committed without "
-                    "change_feed=True: its row-level changes were "
-                    "not recorded"
+            parts.extend(
+                _plan_snapshot_parts(
+                    path, step.snapshot, step.tag, step.version,
+                    _map_conjuncts(
+                        step.predicate, _col_mapping(step.manifest)
+                    ),
                 )
-        elif op == "replace_where":
-            # selective overwrite (r14): delete(previous ∩ predicate)
-            # + insert(recorded new data dirs) — never an append-diff,
-            # the rewritten survivor dirs hold logically-unchanged rows
-            blob = m.get("replace_where") or {}
-            cd = m.get("changes")
-            if cd is not None:
-                # materialized deletions (the file carries _change_type)
-                dir_parts(m, [cd], v, None)
-            elif blob.get("predicate"):
-                need(v - 1, f"replay the replace_where at version {v}")
-                replay(v, blob["predicate"])
-            else:  # pragma: no cover - writer always records one
-                raise ValueError(
-                    f"version {v} is a replace_where with neither a "
-                    "recorded predicate nor materialized changes"
-                )
-            dir_parts(m, blob.get("new_dirs") or [], v, "insert")
-        elif op in ("overwrite", "restore", "clone"):
-            if v - 1 > 0:
-                need(v - 1, f"reconstruct changes for version {v}")
-                parts.extend(_plan_snapshot_parts(path, v - 1, "delete", v))
-            parts.extend(_plan_snapshot_parts(path, v))
-        else:  # pragma: no cover - future ops must opt in
-            raise ValueError(f"version {v}: unknown op {op!r}")
+            )
     return parts
 
 
@@ -490,7 +421,11 @@ class _TableStreamReader(_ChangesStreamReader):
         super().__init__(schema, options)
 
     def _plan_changes(self, lo: int, hi: int):
-        from ..sources.versioned import _read_manifest, vt_versions
+        from ..sources.versioned import (
+            _CHANGE_OPS,
+            _read_manifest,
+            vt_versions,
+        )
 
         versions = vt_versions(self._path)
         parts: list[_ChangePartition] = []
@@ -505,20 +440,10 @@ class _TableStreamReader(_ChangesStreamReader):
             # tripping the change-planner's own requirements (e.g. a
             # delete committed without change_feed has no recorded
             # row-level changes — irrelevant when the commit is being
-            # skipped wholesale)
+            # skipped wholesale). The creation commit (an overwrite or
+            # clone at v1) deletes nothing: the plan serves it as inserts
             op = _read_manifest(self._path, v).get("op")
-            if v == 1 and op in ("overwrite", "clone"):
-                # the CREATION commit deletes nothing (no predecessor)
-                # — an append-shaped stream serves it as inserts; the
-                # change planner below already yields insert-only
-                # partitions for v=1
-                parts_v = _plan_change_partitions(self._path, 0, 1)
-                parts.extend(parts_v)
-                continue
-            if op in (
-                "merge", "delete", "update",
-                "overwrite", "restore", "clone", "replace_where",
-            ):
+            if op in _CHANGE_OPS and v > 1:
                 if self._skip_change:
                     continue
                 raise ValueError(

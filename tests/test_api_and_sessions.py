@@ -157,6 +157,28 @@ class TestHttpServer:
         finally:
             server.shutdown()
 
+    @pytest.mark.parametrize("length", ["abc", "-5"])
+    def test_malformed_content_length_gives_400(self, spark, length):
+        """A Content-Length that is not a length is answered 400 {Error},
+        not dropped with the connection (non-numeric) or read to EOF
+        (negative)."""
+        import http.client
+
+        server = serve(spark, port=0)
+        try:
+            conn = http.client.HTTPConnection(
+                "127.0.0.1", server.server_address[1], timeout=60
+            )
+            conn.putrequest("POST", "/rules/evaluate")
+            conn.putheader("Content-Length", length)
+            conn.endheaders(b"{}")
+            resp = conn.getresponse()
+            assert resp.status == 400
+            assert "Content-Length" in json.loads(resp.read())["Error"]
+            conn.close()
+        finally:
+            server.shutdown()
+
 
 class TestServingBudget:
     """The serving path's fixed costs: Spark jobs per request and py4j
