@@ -140,10 +140,14 @@ def main() -> None:
         for production sessions, but inside the timing protocol it would
         let the memo-fed graph/dedup queries skip the mining work they
         semantically perform — every timed query must pay its own cost."""
+        from dynamicqueryengine_spark.functions.dedup import (
+            release_internal_caches,
+        )
         from dynamicqueryengine_spark.workloads import llm as _llm
 
         _llm._PAIR_MEMO.clear()
         spark.catalog.clearCache()
+        release_internal_caches()
         gc.collect()
         spark.sparkContext._jvm.System.gc()
 

@@ -568,35 +568,98 @@ _LINK_UNSUPPORTED_ERRNOS = frozenset(
 _AUTO_CHECKPOINT_EVERY = 10
 
 
+# Every manifest key a commit records, in manifest order, with the rule
+# that fills the keys a commit does not give (a None argument is not
+# given). "snapshot": with ``dirs=None`` (a metadata-only commit)
+# copied from the head, otherwise recorded only as given. "follow":
+# describes the FILES, so carried from the head and pruned to what the
+# successor references. "property": a TABLE PROPERTY (Delta's
+# constraint semantics), carried from the head through every commit
+# kind (append, merge, optimize, restore); an empty value clears it.
+# "commit": this commit's own record, never carried. A new manifest
+# key goes into this table and nowhere else in _commit.
+_COMMIT_KEYS = {
+    # per-version logical schema (Spark StructType json). When the
+    # referenced dirs' PHYSICAL schemas differ (merge_schema appends),
+    # ``schema_heterogeneous`` tells readers to union footers and
+    # reconcile to this schema (missing columns → typed nulls).
+    "schema": "snapshot",
+    "schema_heterogeneous": "snapshot",
+    "stats": "snapshot",
+    "file_stats": "snapshot",
+    "files": "snapshot",
+    # per-commit CHANGE directory (row-level change feed for this
+    # version); readers find it via vt_read_changes
+    "changes": "commit",
+    # per-dir per-file Bloom bit-position sets for equality skipping:
+    # {dir: {"m", "k", "files": {file: {col: [positions]}}}}
+    "blooms": "snapshot",
+    # per-dir per-file exact row counts (footer num_rows) — vt_count's
+    # metadata-only COUNT(*) path
+    "file_rows": "snapshot",
+    # table-level optimizer statistics (vt_analyze): row count, data
+    # bytes, per-column NDV / null count / most-common-value count.
+    # Recorded only on the analyze commit itself — vt_table_stats
+    # finds the latest one and reports staleness relative to later
+    # data-changing commits (Delta/Spark ANALYZE semantics: stats
+    # describe the snapshot they were computed on)
+    "analyze": "commit",
+    # shallow-clone provenance (vt_clone): {src, version} of the
+    # table this one's first manifest borrowed its directories from
+    "clone": "commit",
+    # directories whose ``files`` entry is AUTHORITATIVE AND PARTIAL:
+    # a file-granular MERGE/DELETE rewrote some of the dir's files
+    # and the manifest references only the untouched remainder. Every
+    # reader must honor the file list for these dirs (vt_scan_plan
+    # marks them partial even for unfiltered reads, and _read_plan
+    # filters them to the listed files by file key);
+    # dir-level ``stats`` for them are recomputed over the kept files
+    # so vt_minmax never reports a value the snapshot no longer holds.
+    "partial_dirs": "snapshot",
+    # op-specific audit blobs (e.g. "merge"/"delete" rewrite shape:
+    # files_total / files_rewritten), merged into the manifest —
+    # surfaced by vt_history
+    "extra": "commit",
+    "constraints": "property",
+    # the Bloom-column property is what lets every later commit keep
+    # harvesting for the same columns (see _effective_bloom_cols)
+    "bloom_cols": "property",
+    # logical → physical column names ({} clears — only restore/clone
+    # back past the mapping's creation do that)
+    "column_mapping": "property",
+    # generated-column expressions and identity-column state. The
+    # identity dict carries the high watermark, so every identity
+    # append REPLACES it explicitly with the advanced value.
+    "generated": "property",
+    "identity": "property",
+    # PARTITIONED BY records LOGICAL names; the per-dir partition
+    # VALUES are keyed by PHYSICAL column name (the key the files and
+    # stats are written under) and expire with their dir
+    "partition_by": "property",
+    "partitions": "follow",
+    # deletion vectors follow the FILES they describe: a carried or
+    # given map is pruned to files this manifest still references (a
+    # rewritten file's deletes were materialized by the rewrite)
+    "dv": "follow",
+    "txn": "commit",
+}
+_SNAPSHOT_KEYS = tuple(k for k, g in _COMMIT_KEYS.items() if g == "snapshot")
+_FOLLOW_KEYS = tuple(k for k, g in _COMMIT_KEYS.items() if g == "follow")
+_PROPERTY_KEYS = tuple(
+    k for k, g in _COMMIT_KEYS.items() if g == "property"
+)
+
+
 def _commit(
-    path: str,
-    dirs: list[str],
-    op: str,
-    expected_head: int,
-    stats: dict | None = None,
-    txn: dict | None = None,
-    file_stats: dict | None = None,
-    files: dict | None = None,
-    schema: dict | None = None,
-    heterogeneous: bool = False,
-    changes: str | None = None,
-    blooms: dict | None = None,
-    file_rows: dict | None = None,
-    constraints: list | None = None,
-    analyze: dict | None = None,
-    clone: dict | None = None,
-    partial_dirs: Sequence[str] | None = None,
-    extra: dict | None = None,
-    dv: dict | None = None,
-    bloom_cols_prop: Sequence[str] | None = None,
-    column_mapping: dict | None = None,
-    generated: dict | None = None,
-    identity: dict | None = None,
-    partitions: dict | None = None,
-    partition_by: Sequence[str] | None = None,
+    path: str, dirs: list[str] | None, op: str, expected_head: int, **keys
 ) -> int:
     """Atomically commit ``dirs`` as version ``expected_head + 1``.
     Raises FileExistsError if another writer committed first.
+    ``keys`` are manifest keys of :data:`_COMMIT_KEYS` (any other raises
+    TypeError); each key the call does not give follows its group's
+    rule. ``dirs=None`` commits on the head's snapshot: a metadata-only
+    commit names only what it changes.
+
     ``txn`` = ``{"app": str, "version": int}`` application transaction
     metadata recorded IN the manifest (Delta's txn/appId mechanism):
     because it commits atomically with the data, an at-least-once
@@ -607,75 +670,43 @@ def _commit(
     SetTransaction checkpoint-retention idea — so vt_vacuum expiring the
     manifest that first recorded a marker can never void the
     exactly-once guard: the head always knows every app's latest txn."""
+    unknown = sorted(set(keys) - set(_COMMIT_KEYS))
+    if unknown:
+        raise TypeError(f"_commit got unknown manifest key(s) {unknown}")
     os.makedirs(_log_dir(path), exist_ok=True)
     version = expected_head + 1
-    manifest = {"dirs": dirs, "op": op, "ts": time.time()}
-    if schema is not None:
-        # per-version logical schema (Spark StructType json). When the
-        # referenced dirs' PHYSICAL schemas differ (merge_schema appends),
-        # ``schema_heterogeneous`` tells readers to union footers and
-        # reconcile to this schema (missing columns → typed nulls).
-        manifest["schema"] = schema
-        if heterogeneous:
-            manifest["schema_heterogeneous"] = True
-    if stats:
-        manifest["stats"] = stats
-    if file_stats:
-        manifest["file_stats"] = file_stats
-    if files:
-        manifest["files"] = files
-    if changes is not None:
-        # per-commit CHANGE directory (row-level change feed for this
-        # version); readers find it via vt_read_changes
-        manifest["changes"] = changes
-    if blooms:
-        # per-dir per-file Bloom bit-position sets for equality skipping:
-        # {dir: {"m", "k", "files": {file: {col: [positions]}}}}
-        manifest["blooms"] = blooms
-    if file_rows:
-        # per-dir per-file exact row counts (footer num_rows) — vt_count's
-        # metadata-only COUNT(*) path
-        manifest["file_rows"] = file_rows
-    if analyze:
-        # table-level optimizer statistics (vt_analyze): row count, data
-        # bytes, per-column NDV / null count / most-common-value count.
-        # Recorded only on the analyze commit itself — vt_table_stats
-        # finds the latest one and reports staleness relative to later
-        # data-changing commits (Delta/Spark ANALYZE semantics: stats
-        # describe the snapshot they were computed on)
-        manifest["analyze"] = analyze
-    if clone:
-        # shallow-clone provenance (vt_clone): {src, version} of the
-        # table this one's first manifest borrowed its directories from
-        manifest["clone"] = clone
-    if partial_dirs:
-        # directories whose ``files`` entry is AUTHORITATIVE AND PARTIAL:
-        # a file-granular MERGE/DELETE rewrote some of the dir's files
-        # and the manifest references only the untouched remainder. Every
-        # reader must honor the file list for these dirs (vt_scan_plan
-        # marks them partial even for unfiltered reads, and _read_plan
-        # filters them to the listed files by file key);
-        # dir-level ``stats`` for them are recomputed over the kept files
-        # so vt_minmax never reports a value the snapshot no longer holds.
-        manifest["partial_dirs"] = sorted(partial_dirs)
-    if extra:
-        # op-specific audit blobs (e.g. "merge"/"delete" rewrite shape:
-        # files_total / files_rewritten) — surfaced by vt_history
-        manifest.update(extra)
-    # CHECK constraints are a TABLE PROPERTY (Delta's constraint
-    # semantics): None carries the head's recorded set forward through
-    # every commit kind (append, merge, optimize, restore); an explicit
-    # list replaces it ([] clears)
-    # ONE read of the head manifest feeds the constraints carry, the
-    # dv carry, and the txns map — at 100 TB a head manifest holds
-    # per-file stats/blooms for thousands of files, so every commit
-    # parsing it two or three times is real I/O
+    # ONE read of the head manifest feeds every carry and the txns map —
+    # at 100 TB a head manifest holds per-file stats/blooms for
+    # thousands of files, so every commit parsing it two or three times
+    # is real I/O
     prev = None
     if expected_head > 0:
         try:
             prev = _read_manifest(path, expected_head)
         except FileNotFoundError:
             prev = None
+    carried = {"follow", "property"}
+    if dirs is None:
+        dirs = prev["dirs"]
+        carried.add("snapshot")
+    manifest = {"dirs": dirs, "op": op, "ts": time.time()}
+    for key, group in _COMMIT_KEYS.items():
+        value = keys.get(key)
+        if value is None and group in carried and prev is not None:
+            value = prev.get(key)
+        if key == "partitions" and value:
+            dirset = set(dirs)
+            value = {d: v for d, v in value.items() if d in dirset}
+        elif key == "dv":
+            value = _prune_dv(value, dirs, manifest.get("files"))
+        if not value or key == "txn":
+            continue
+        if key == "extra":
+            manifest.update(value)
+        elif key in ("partial_dirs", "bloom_cols"):
+            manifest[key] = sorted(set(value))
+        else:
+            manifest[key] = value
     if prev is not None:
         # in-commit timestamp monotonicity (Delta's inCommitTimestamps):
         # wall clocks skew — a commit stamped EARLIER than its
@@ -686,67 +717,6 @@ def _commit(
         manifest["ts"] = max(
             manifest["ts"], float(prev.get("ts", 0.0))
         )
-    if constraints is None and prev is not None:
-        constraints = prev.get("constraints")
-    if constraints:
-        manifest["constraints"] = constraints
-    # Bloom columns are a TABLE PROPERTY with the same calculus:
-    # ``None`` carries the head's recorded list, an explicit list
-    # replaces it, ``[]`` clears. The property is what lets every later
-    # commit keep harvesting for the same columns (see
-    # _effective_bloom_cols).
-    if bloom_cols_prop is None and prev is not None:
-        bloom_cols_prop = prev.get("bloom_cols")
-    if bloom_cols_prop:
-        manifest["bloom_cols"] = sorted(set(bloom_cols_prop))
-    # the column mapping is a TABLE PROPERTY with the same calculus:
-    # ``None`` carries the head's map, a dict records it ({} clears —
-    # only restore/clone back past the mapping's creation do that)
-    if column_mapping is None and prev is not None:
-        column_mapping = prev.get("column_mapping")
-    if column_mapping:
-        manifest["column_mapping"] = dict(column_mapping)
-    # generated-column expressions and identity-column state: the same
-    # property calculus (None carries, dict records, {} clears). The
-    # identity dict carries the high watermark, so every identity
-    # append REPLACES it explicitly with the advanced value.
-    if generated is None and prev is not None:
-        generated = prev.get("generated")
-    if generated:
-        manifest["generated"] = dict(generated)
-    if identity is None and prev is not None:
-        identity = prev.get("identity")
-    if identity:
-        manifest["identity"] = {k: dict(v) for k, v in identity.items()}
-    # PARTITIONED BY is a TABLE PROPERTY with the usual calculus (None
-    # carries, list records, [] clears); per-dir partition VALUES follow
-    # the DIRS they describe — carried forward pruned to the dirs this
-    # manifest still references (a dropped/rewritten dir's entry expires
-    # with it), exactly like the dv map below. Values are keyed by
-    # PHYSICAL column name (the key the files/stats are written under).
-    if partition_by is None and prev is not None:
-        partition_by = prev.get("partition_by")
-    if partition_by:
-        manifest["partition_by"] = list(partition_by)
-    if partitions is None and prev is not None:
-        partitions = prev.get("partitions")
-    if partitions:
-        dirset_p = set(dirs)
-        partitions = {
-            d: vals for d, vals in partitions.items() if d in dirset_p
-        }
-        if partitions:
-            manifest["partitions"] = partitions
-    # deletion vectors follow the FILES they describe: None carries the
-    # head's map forward, pruned to files this manifest still references
-    # (a rewritten file's deletes were materialized by the rewrite); an
-    # explicit map (DV-writing commits, restore, clone) is pruned the
-    # same way for safety
-    if dv is None and prev is not None:
-        dv = prev.get("dv")
-    dv = _prune_dv(dv, dirs, files)
-    if dv:
-        manifest["dv"] = dv
     # protocol gates (Delta's min_reader_version / min_writer_version).
     # Writer side first: refuse to commit PAST a head demanding more
     # than this writer supports — a feature-blind writer would drop the
@@ -765,11 +735,11 @@ def _commit(
     # to 1, clearing constraints drops min_writer, and time travel to a
     # pre-DV version never trips the reader gate.
     proto: dict = {}
-    if dv:
+    if "dv" in manifest:
         proto["min_reader"] = 2
-    if dv or constraints:
+    if "dv" in manifest or "constraints" in manifest:
         proto["min_writer"] = 2
-    if column_mapping:
+    if "column_mapping" in manifest:
         # a mapping-blind reader would serve physical names (and
         # resurrect dropped columns); a mapping-blind writer would
         # commit logical-named files and drop the map
@@ -781,6 +751,7 @@ def _commit(
         txns = dict(prev["txns"])
     else:
         txns = _txns_at(path, expected_head) if expected_head > 0 else {}
+    txn = keys.get("txn")
     if txn:
         # exactly-once guard, enforced against the SAME predecessor the
         # commit is conditional on: verbs also check at entry (cheap
@@ -2251,7 +2222,7 @@ def vt_write(
         identity=commit_identity,
         props={
             "constraints": constraints,
-            "bloom_cols_prop": (
+            "bloom_cols": (
                 list(bloom_cols) if bloom_cols is not None else None
             ),
             "column_mapping": commit_mapping,
@@ -3539,18 +3510,9 @@ def _consolidate_dv_refs(path: str, manifest: dict, expected: int):
     try:
         return _commit(
             path,
-            manifest["dirs"],
+            None,
             "optimize",
             expected,
-            manifest.get("stats") or {},
-            None,
-            manifest.get("file_stats"),
-            manifest.get("files"),
-            schema=manifest.get("schema"),
-            heterogeneous=manifest.get("schema_heterogeneous", False),
-            blooms=manifest.get("blooms"),
-            file_rows=manifest.get("file_rows"),
-            partial_dirs=manifest.get("partial_dirs"),
             extra={
                 "dv_consolidate": {
                     "refs_before": len(refs),
@@ -3627,6 +3589,27 @@ def vt_head(path: str) -> int:
     return versions[-1]
 
 
+def _footer_rows(manifest: dict, dirs: Sequence[str]) -> int | None:
+    """Live rows of ``dirs`` from the manifest alone, or None when its
+    ``file_rows`` do not cover every referenced file. Footer counts are
+    PHYSICAL rows; deletion vectors hold exact per-file deleted-position
+    counts (positions are distinct and validated against live rows at
+    write time), so the logical count stays a manifest-only
+    subtraction."""
+    frows = manifest.get("file_rows", {})
+    flists = manifest.get("files", {})
+    dv_map = manifest.get("dv") or {}
+    total = 0
+    for d in dirs:
+        flist = flists.get(d)
+        drows = frows.get(d, {})
+        if not flist or any(f not in drows for f in flist):
+            return None
+        total += sum(drows[f] for f in flist)
+        total -= sum(e["count"] for e in dv_map.get(d, {}).values())
+    return total
+
+
 def vt_count(
     spark,
     path: str,
@@ -3667,11 +3650,7 @@ def vt_count(
                 manifest, conjuncts
             )
             pconj = _map_conjuncts(conjuncts, cmap_m)
-            frows = manifest.get("file_rows", {})
-            flists = manifest.get("files", {})
-            dv_map = manifest.get("dv") or {}
-            total = 0
-            metadata_ok = True
+            proven = []
             for d in manifest["dirs"]:
                 pv = part_vals.get(d)
                 if pv is not None and _partition_refutes(pv, pconj):
@@ -3680,39 +3659,16 @@ def vt_count(
                     # a dir that MAY match but isn't partition-proven
                     # (DML rewrite output, or conjuncts beyond the
                     # partition columns) needs row-level evidence
-                    metadata_ok = False
                     break
-                flist = flists.get(d)
-                drows = frows.get(d, {})
-                if not flist or any(f not in drows for f in flist):
-                    metadata_ok = False
-                    break
-                total += sum(drows[f] for f in flist)
-                total -= sum(
-                    e["count"] for e in dv_map.get(d, {}).values()
-                )
-            if metadata_ok:
-                return total
+                proven.append(d)
+            else:
+                total = _footer_rows(manifest, proven)
+                if total is not None:
+                    return total
     if predicate is None:
         manifest = _read_manifest(path, v)
-        frows = manifest.get("file_rows", {})
-        flists = manifest.get("files", {})
-        total = 0
-        complete = True
-        for d in manifest["dirs"]:
-            flist = flists.get(d)
-            drows = frows.get(d, {})
-            if not flist or any(f not in drows for f in flist):
-                complete = False
-                break
-            total += sum(drows[f] for f in flist)
-        if complete:
-            # footer counts are PHYSICAL rows; deletion vectors hold
-            # exact per-file deleted-position counts (positions are
-            # distinct and validated against live rows at write time),
-            # so the logical count stays a manifest-only subtraction
-            for fmap in (manifest.get("dv") or {}).values():
-                total -= sum(e["count"] for e in fmap.values())
+        total = _footer_rows(manifest, manifest["dirs"])
+        if total is not None:
             return total
         return vt_read(spark, path, v).count()
     plan = vt_scan_plan(path, v, predicate)
@@ -4379,20 +4335,20 @@ def _land(
             dirs,
             op,
             expected,
-            stats,
-            {"app": txn[0], "version": int(txn[1])} if txn else None,
-            fstats or None,
-            files,
+            stats=stats,
+            txn={"app": txn[0], "version": int(txn[1])} if txn else None,
+            file_stats=fstats,
+            files=files,
             schema=schema,
-            heterogeneous=hetero,
+            schema_heterogeneous=hetero,
             changes=change_dir,
-            blooms=all_blooms or None,
-            file_rows=frows or None,
+            blooms=all_blooms,
+            file_rows=frows,
             partial_dirs=base.get("partial_dirs"),
             extra={key or op: blob} if blob else None,
             dv=dv,
             identity=identity,
-            partitions=partitions or None,
+            partitions=partitions,
             **(props or {}),
         )
     except (FileExistsError, TxnReplayed):
@@ -5446,12 +5402,10 @@ def vt_convert(
             [d],
             "overwrite",
             0,
-            {d: stats} if stats else None,
-            None,
-            {d: fstats} if fstats else None,
-            {d: names},
+            stats={d: stats} if stats else None,
+            file_stats={d: fstats} if fstats else None,
+            files={d: names},
             schema=schema_json,
-            heterogeneous=False,
             file_rows={d: frows} if frows else None,
             extra={
                 "convert": {
@@ -5918,31 +5872,22 @@ def vt_restore(
         list(target["dirs"]),
         "restore",
         expected,
-        target.get("stats"),
-        None,
-        target.get("file_stats"),
-        target.get("files"),
-        schema=target.get("schema"),
-        heterogeneous=target.get("schema_heterogeneous", False),
-        # the restored dirs are the target's dirs verbatim — their blooms,
-        # footer row counts and deletion vectors restore with them (an
-        # empty dict clears the HEAD's DVs when the target had none:
-        # restoring past a DV delete must resurrect the rows it deleted)
-        blooms=target.get("blooms"),
-        file_rows=target.get("file_rows"),
-        partial_dirs=target.get("partial_dirs"),
-        dv=target.get("dv") or {},
+        # the restored dirs are the target's dirs verbatim — their
+        # snapshot keys, deletion vectors and partition values restore
+        # with them (an empty dict clears the HEAD's: restoring past a
+        # DV delete must resurrect the rows it deleted)
+        **{k: target.get(k) for k in _SNAPSHOT_KEYS},
+        **{k: target.get(k) or {} for k in _FOLLOW_KEYS},
         # the restored snapshot's files carry ITS physical names: the
         # mapping restores with them (explicit {} clears the head's map
         # when restoring past the mapping's creation — those files are
-        # identity-named)
-        column_mapping=target.get("column_mapping") or {},
-        generated=target.get("generated") or {},
+        # identity-named), as do the generated columns and the partition
+        # layout; constraints and bloom_cols carry from the head
+        **{
+            k: target.get(k) or {}
+            for k in ("column_mapping", "generated", "partition_by")
+        },
         identity=restore_identity,
-        # partition layout restores with the target's dirs (explicit {}
-        # / [] clear the head's when restoring past the partitioning)
-        partitions=target.get("partitions") or {},
-        partition_by=target.get("partition_by") or [],
     )
 
 
@@ -6001,13 +5946,15 @@ def _feature_references(manifest: dict, col: str) -> list[str]:
 def _schema_ddl_commit(
     path: str, op: str, mutate, max_retries: int = 5
 ) -> int:
-    """Shared retry loop for the metadata-only schema DDL verbs: read
-    the head, let ``mutate(manifest)`` produce the successor's
-    ``(schema_json, mapping, bloom_cols_prop, hetero, audit_blob)``, and
-    commit with every data directory, stat, bloom, footer count and
-    deletion vector referenced VERBATIM — zero bytes of data read or
-    written, the defining property of column mapping. Lost commit races
-    retry against the new head (the mutation re-validates there)."""
+    """Shared retry loop for the metadata-only DDL verbs (the schema DDL
+    and :func:`vt_set_partition_spec`): read the head, let
+    ``mutate(manifest)`` return the manifest keys the successor changes
+    (``None``: nothing to change, the head's version is returned), and
+    commit them on the head's snapshot — every data directory, stat,
+    bloom, footer count and deletion vector referenced VERBATIM, zero
+    bytes of data read or written, the defining property of column
+    mapping. Lost commit races retry against the new head (the mutation
+    re-validates there)."""
     for _ in range(max_retries):
         head = vt_versions(path)
         if not head:
@@ -6019,26 +5966,11 @@ def _schema_ddl_commit(
                 f"{op} requires a table with a recorded schema (legacy "
                 "tables predate the logical/physical split)"
             )
-        schema_json, mapping, bloom_prop, hetero, blob = mutate(manifest)
+        keys = mutate(manifest)
+        if keys is None:
+            return expected
         try:
-            return _commit(
-                path,
-                list(manifest["dirs"]),
-                op,
-                expected,
-                manifest.get("stats") or {},
-                None,
-                manifest.get("file_stats"),
-                manifest.get("files"),
-                schema=schema_json,
-                heterogeneous=hetero,
-                blooms=manifest.get("blooms"),
-                file_rows=manifest.get("file_rows"),
-                partial_dirs=manifest.get("partial_dirs"),
-                extra={op: blob},
-                column_mapping=mapping,
-                bloom_cols_prop=bloom_prop,
-            )
+            return _commit(path, None, op, expected, **keys)
         except FileExistsError:
             continue
     raise RuntimeError(f"{op} at {path} lost {max_retries} commit races")
@@ -6086,21 +6018,10 @@ def vt_set_partition_spec(
     pby = list(partition_by)
     from pyspark.sql.types import StructType as _SpecSt
 
-    for _ in range(max_retries):
-        head = vt_versions(path)
-        if not head:
-            raise FileNotFoundError(f"no committed versions at {path}")
-        expected = head[-1]
-        manifest = _read_manifest(path, expected)
-        sj = manifest.get("schema")
-        if sj is None:
-            raise ValueError(
-                "set_partition_spec requires a table with a recorded "
-                "schema"
-            )
+    def mutate(manifest: dict):
         types = {
             f.name: f.dataType.simpleString()
-            for f in _SpecSt.fromJson(sj).fields
+            for f in _SpecSt.fromJson(manifest["schema"]).fields
         }
         for c in pby:
             if c not in types:
@@ -6116,36 +6037,13 @@ def vt_set_partition_spec(
                 )
         old_pby = manifest.get("partition_by") or []
         if pby == old_pby:
-            return expected  # no-op: spec already in effect
-        try:
-            return _commit(
-                path,
-                list(manifest["dirs"]),
-                "set_partition_spec",
-                expected,
-                manifest.get("stats") or {},
-                None,
-                manifest.get("file_stats"),
-                manifest.get("files"),
-                schema=sj,
-                heterogeneous=manifest.get(
-                    "schema_heterogeneous", False
-                ),
-                blooms=manifest.get("blooms"),
-                file_rows=manifest.get("file_rows"),
-                partial_dirs=manifest.get("partial_dirs"),
-                extra={
-                    "set_partition_spec": {
-                        "from": old_pby, "to": pby,
-                    }
-                },
-                partition_by=pby,
-            )
-        except FileExistsError:
-            continue
-    raise RuntimeError(
-        f"set_partition_spec at {path} lost {max_retries} commit races"
-    )
+            return None  # no-op: spec already in effect
+        return {
+            "partition_by": pby,
+            "extra": {"set_partition_spec": {"from": old_pby, "to": pby}},
+        }
+
+    return _schema_ddl_commit(path, "set_partition_spec", mutate, max_retries)
 
 
 def _walk_nested_parent(manifest: dict, dotted: str):
@@ -6243,14 +6141,13 @@ def _mutate_nested_rename(manifest: dict, old: str, new: str):
         mapping[new_path + k[len(old):]] = mapping.pop(k)
     mapping[new_path] = phys
     walked[-1]["name"] = new
-    blob = {"from": old, "to": new_path, "physical": phys}
-    return (
-        schema_json,
-        mapping,
-        None,
-        manifest.get("schema_heterogeneous", False),
-        blob,
-    )
+    return {
+        "schema": schema_json,
+        "column_mapping": mapping,
+        "extra": {
+            "rename_column": {"from": old, "to": new_path, "physical": phys}
+        },
+    }
 
 
 def vt_rename_column(path: str, old: str, new: str,
@@ -6315,19 +6212,20 @@ def vt_rename_column(path: str, old: str, new: str,
         for f in schema_json["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        bloom_prop = None
+        keys = {
+            "schema": schema_json,
+            "column_mapping": mapping,
+            "extra": {
+                "rename_column": {
+                    "from": old, "to": new, "physical": mapping[new]
+                }
+            },
+        }
         if old in (manifest.get("bloom_cols") or []):
-            bloom_prop = sorted(
+            keys["bloom_cols"] = sorted(
                 ({*manifest["bloom_cols"]} - {old}) | {new}
             )
-        blob = {"from": old, "to": new, "physical": mapping[new]}
-        return (
-            schema_json,
-            mapping,
-            bloom_prop,
-            manifest.get("schema_heterogeneous", False),
-            blob,
-        )
+        return keys
 
     return _schema_ddl_commit(path, "rename_column", mutate, max_retries)
 
@@ -6390,14 +6288,11 @@ def vt_drop_column(path: str, col: str, max_retries: int = 5) -> int:
             node_list[:] = [
                 f for f in node_list if f.get("name") != leaf
             ]
-            blob = {"column": col, "physical": phys}
-            return (
-                schema_json,
-                mapping,
-                None,
-                manifest.get("schema_heterogeneous", False),
-                blob,
-            )
+            return {
+                "schema": schema_json,
+                "column_mapping": mapping,
+                "extra": {"drop_column": {"column": col, "physical": phys}},
+            }
         if col not in names:
             raise ValueError(f"no column {col!r} in {sorted(names)}")
         if len(names) == 1:
@@ -6423,18 +6318,14 @@ def vt_drop_column(path: str, col: str, max_retries: int = 5) -> int:
         schema_json["fields"] = [
             f for f in schema_json["fields"] if f["name"] != col
         ]
-        bloom_prop = None
+        keys = {
+            "schema": schema_json,
+            "column_mapping": mapping,
+            "extra": {"drop_column": {"column": col, "physical": phys}},
+        }
         if col in (manifest.get("bloom_cols") or []):
-            remaining = sorted({*manifest["bloom_cols"]} - {col})
-            bloom_prop = remaining if remaining else []
-        blob = {"column": col, "physical": phys}
-        return (
-            schema_json,
-            mapping,
-            bloom_prop,
-            manifest.get("schema_heterogeneous", False),
-            blob,
-        )
+            keys["bloom_cols"] = sorted({*manifest["bloom_cols"]} - {col})
+        return keys
 
     return _schema_ddl_commit(path, "drop_column", mutate, max_retries)
 
@@ -6490,12 +6381,7 @@ def vt_add_column(path: str, col: str, dtype,
                     "metadata": {},
                 }
             )
-            blob = {
-                "column": col,
-                "type": dt.simpleString(),
-                "physical": mapping[col],
-            }
-            return schema_json, mapping, None, True, blob
+            return added(schema_json, mapping)
         fields = manifest["schema"].get("fields", [])
         names = [f["name"] for f in fields]
         if col in names:
@@ -6511,12 +6397,21 @@ def vt_add_column(path: str, col: str, dtype,
                 "metadata": {},
             }
         )
+        return added(schema_json, mapping)
+
+    def added(schema_json: dict, mapping: dict) -> dict:
         blob = {
             "column": col,
             "type": dt.simpleString(),
             "physical": mapping[col],
         }
-        return schema_json, mapping, None, True, blob
+        return {
+            "schema": schema_json,
+            "column_mapping": mapping,
+            # pre-add files lack the physical column
+            "schema_heterogeneous": True,
+            "extra": {"add_column": blob},
+        }
 
     return _schema_ddl_commit(path, "add_column", mutate, max_retries)
 
@@ -6626,13 +6521,12 @@ def vt_widen_column(path: str, col: str, dtype,
             "from": cur.simpleString(),
             "to": dt.simpleString(),
         }
-        return (
-            schema_json,
-            _col_mapping(manifest),  # unchanged (None stays None)
-            None,
-            True,  # footers and schema now disagree: heterogeneous
-            blob,
-        )
+        return {
+            "schema": schema_json,
+            # footers and schema now disagree: heterogeneous
+            "schema_heterogeneous": True,
+            "extra": {"widen_column": blob},
+        }
 
     return _schema_ddl_commit(path, "widen_column", mutate, max_retries)
 
@@ -7361,22 +7255,7 @@ def vt_analyze(
     }
     if mcv and mcv_sample is not None and mcv_sample < 1.0:
         analyze["mcv_sample"] = mcv_sample  # MCV counts are estimates
-    return _commit(
-        path,
-        list(prev["dirs"]),
-        "analyze",
-        head,
-        prev.get("stats"),
-        None,
-        prev.get("file_stats"),
-        prev.get("files"),
-        schema=prev.get("schema"),
-        heterogeneous=prev.get("schema_heterogeneous", False),
-        blooms=prev.get("blooms"),
-        file_rows=prev.get("file_rows"),
-        partial_dirs=prev.get("partial_dirs"),
-        analyze=analyze,
-    )
+    return _commit(path, None, "analyze", head, analyze=analyze)
 
 
 def vt_table_stats(path: str) -> dict:
@@ -7879,39 +7758,27 @@ def vt_clone(spark, src_path: str, dst_path: str, deep: bool = False) -> int:
             out_f[fname] = {**entry, "ref": new_ref}
         if out_f:
             dv_remap[remap[d]] = out_f
-    version = _commit(
+    # every snapshot key, the partition values and every table property
+    # travel with the (remapped) directories: the cloned directories
+    # hold the source's physical names, so the mapping travels with them
+    # (shallow and deep alike), and identity keeps the source's high
+    # watermark (the clone's ids continue where its data ends)
+    keys = {k: m.get(k) for k in _SNAPSHOT_KEYS + _PROPERTY_KEYS}
+    for k in ("stats", "file_stats", "files", "blooms", "file_rows",
+              "partitions"):
+        keys[k] = {remap[d]: v for d, v in (m.get(k) or {}).items()}
+    keys["partial_dirs"] = [
+        remap[d] for d in m.get("partial_dirs", []) if d in remap
+    ]
+    keys["dv"] = dv_remap
+    return _commit(
         dst_path,
         [remap[d] for d in m["dirs"]],
         "clone",
         0,
-        {remap[d]: v for d, v in m.get("stats", {}).items()},
-        None,
-        {remap[d]: v for d, v in m.get("file_stats", {}).items()},
-        {remap[d]: v for d, v in m.get("files", {}).items()},
-        schema=m.get("schema"),
-        heterogeneous=m.get("schema_heterogeneous", False),
-        blooms={remap[d]: v for d, v in m.get("blooms", {}).items()},
-        file_rows={remap[d]: v for d, v in m.get("file_rows", {}).items()},
-        constraints=m.get("constraints"),
-        partial_dirs=[
-            remap[d] for d in m.get("partial_dirs", []) if d in remap
-        ],
         clone={"src": src_path, "version": src_head, "deep": deep},
-        dv=dv_remap,
-        # the cloned directories hold the source's physical names — the
-        # mapping travels with them (shallow and deep alike), as do the
-        # generated/identity properties (identity keeps the source's
-        # high watermark: the clone's ids continue where its data ends)
-        column_mapping=m.get("column_mapping") or {},
-        generated=m.get("generated") or {},
-        identity=m.get("identity") or {},
-        # partition layout travels with the (remapped) directories
-        partitions={
-            remap[d]: v for d, v in (m.get("partitions") or {}).items()
-        },
-        partition_by=m.get("partition_by") or [],
+        **keys,
     )
-    return version
 
 
 def vt_diff(path: str, v_old: int, v_new: int | None = None) -> dict:

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.dedup import _register_cache
 from ..sources.registry import load_table
 from .llm import FnWorkload
 
@@ -752,11 +751,11 @@ def _customer_ltv_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy = 100
     ps = [i / 10.0 for i in range(1, 10)]
     orders = load_table(spark, sf_dir, "orders")
-    ltv = _register_cache(orders.groupBy("o_custkey").agg(
+    ltv = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("ltv"),
-    ).persist())  # consumed by the cut aggregate, the bucket join, and
-    # the verification histogram
+    ).persist()  # consumed by the cut aggregate, the bucket join, and
+    # the verification histogram; released once the report is collected
 
     scalars = ltv.agg(
         F.count(F.lit(1)).alias("_n"),
@@ -771,12 +770,9 @@ def _customer_ltv_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.size(F.filter("_cuts", lambda c: F.col("ltv") > c)),
     )
     w = Window.orderBy(F.desc("ltv"), F.asc("o_custkey"))
-    # persisted: the disagreement audit and the decile report both read
-    # the ntile frame; without the cache the global window sort — the
-    # exact twin's whole cost — executed twice (r15, guide §5)
-    tiled = _register_cache(
-        bucketed.withColumn("decile", F.ntile(10).over(w)).persist()
-    )
+    # the decile report also sums the disagreements, so the global
+    # window sort — the exact twin's whole cost — runs once
+    tiled = bucketed.withColumn("decile", F.ntile(10).over(w))
 
     # verification: true rank interval of each cut value from the value
     # histogram (ties included: _rhi − _rlo = tie-group size)
@@ -807,34 +803,37 @@ def _customer_ltv_deciles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 1-row audit scalars: collect once, return literals (r15, guide
     # §1.2 — the r14 form crossJoined them as broadcast subtrees, each
-    # an extra job re-deriving the window). The disagreement agg doubles
-    # as the tiled cache's eager materialization.
+    # an extra job re-deriving the window)
     checks_row = checks.collect()[0]
-    ndis = tiled.agg(
-        F.sum(
-            F.when(F.col("decile") != F.col("approx_decile"), 1).otherwise(0)
-        ).alias("_ndis")
-    ).collect()[0]["_ndis"]
-    # empty input: no cut to check and no customer to disagree on — the
-    # aggregates are NULL and both guarantees hold vacuously
-    approx_ok = checks_row["approx_ok"] is not False
-    disagree_ok = (ndis or 0) <= (checks_row["_budget"] or 0)
     report = tiled.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum("n_orders").alias("n_orders"),
         F.round(F.sum("ltv"), 2).cast("double").alias("total_ltv"),
         F.round(F.min("ltv"), 2).cast("double").alias("min_ltv"),
         F.round(F.max("ltv"), 2).cast("double").alias("max_ltv"),
+        F.sum(
+            F.when(F.col("decile") != F.col("approx_decile"), 1).otherwise(0)
+        ).alias("_ndis"),
     )
-    return report.select(
+    out = report.select(
         "decile",
         "n_customers",
         "n_orders",
         "total_ltv",
         "min_ltv",
         "max_ltv",
-        F.lit(approx_ok).alias("approx_ok"),
-        F.lit(disagree_ok).alias("disagree_ok"),
+        F.lit(True).alias("approx_ok"),
+        F.lit(True).alias("disagree_ok"),
+    ).schema
+    rows = report.collect()  # at most 10 deciles
+    ltv.unpersist()
+    # empty input: no cut to check and no customer to disagree on — the
+    # aggregates are NULL and both guarantees hold vacuously
+    approx_ok = checks_row["approx_ok"] is not False
+    ndis = sum(r["_ndis"] for r in rows)
+    disagree_ok = ndis <= (checks_row["_budget"] or 0)
+    return spark.createDataFrame(
+        [(*r[:-1], approx_ok, disagree_ok) for r in rows], out
     )
 
 
@@ -1256,9 +1255,9 @@ def _customer_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame
             F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary"),
         )
         .persist()  # consumed by the cut aggregate, the bucket join,
-        # and three verification histograms
+        # and three verification histograms; released once the report
+        # is collected
     )
-    _register_cache(per_cust)
     dims = [("recency_days", True), ("frequency", False), ("monetary", False)]
 
     scalars = per_cust.agg(
@@ -1290,16 +1289,15 @@ def _customer_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     r_w = Window.orderBy(F.asc("recency_days"), F.asc("o_custkey"))
     f_w = Window.orderBy(F.desc("frequency"), F.asc("o_custkey"))
     m_w = Window.orderBy(F.desc("monetary"), F.asc("o_custkey"))
-    # persisted: the disagreement audit and the segment report both read
-    # the three-ntile frame; without the cache the three global window
-    # sorts — the exact twin's whole cost — executed TWICE (r15, guide
-    # §5; this was the r14 verdict's "approx costs 3× its exact twin")
-    scored = _register_cache(b.select(
+    # the segment report also sums the disagreements, so the three
+    # global window sorts — the exact twin's whole cost — run once (the
+    # r14 verdict's "approx costs 3× its exact twin" ran them twice)
+    scored = b.select(
         "*",
         F.ntile(K).over(r_w).alias("r"),
         F.ntile(K).over(f_w).alias("f"),
         F.ntile(K).over(m_w).alias("m"),
-    ).persist())
+    )
 
     # verification: per-dimension cut-rank intervals from value
     # histograms, ALL THREE DIMENSIONS IN ONE PASS (r15, guide §1.2):
@@ -1385,45 +1383,45 @@ def _customer_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         )
 
-    # Both audit scalars are 1-row aggregates: collect them ONCE and
+    # The audit scalars are 1-row aggregates: collect them ONCE and
     # return the booleans as literals (r15, guide §1.2) — the r14 form
     # crossJoined them as broadcast subtrees, each an extra job whose
-    # plan re-derived per_cust/scored. The disagreement agg doubles as
-    # the eager materialization of the scored cache, so the report job
-    # below reads the windows from memory instead of re-sorting.
+    # plan re-derived per_cust/scored.
     by_dim = {
         r["_dim"]: (bool(r["_ok"]), r["_budget"])
         for r in _dim_checks_all().collect()
     }
     ntile_of = {"recency_days": "r", "frequency": "f", "monetary": "m"}
-    nd = scored.agg(
-        *[
-            F.sum(
-                F.when(F.col(ntile_of[c]) != F.col(f"_aq_{c}"), 1).otherwise(0)
-            ).alias(f"_nd_{c}")
-            for c, _ in dims
-        ]
-    ).collect()[0]
-    # empty input: no dimension has a cut row and every disagreement
-    # sum is NULL — both guarantees hold vacuously
-    approx_ok = all(by_dim.get(c, (True, 0))[0] for c, _ in dims)
-    disagree_ok = all(
-        (nd[f"_nd_{c}"] or 0) <= by_dim.get(c, (True, 0))[1]
-        for c, _ in dims
-    )
-
     report = scored.groupBy(
         F.concat_ws("", "r", "f", "m").alias("segment")
     ).agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.round(F.sum("monetary"), 2).cast("double").alias("segment_value"),
+        *[
+            F.sum(
+                F.when(F.col(ntile_of[c]) != F.col(f"_aq_{c}"), 1).otherwise(0)
+            ).alias(f"_nd_{c}")
+            for c, _ in dims
+        ],
     )
-    return report.select(
+    out = report.select(
         "segment",
         "n_customers",
         "segment_value",
-        F.lit(approx_ok).alias("approx_ok"),
-        F.lit(disagree_ok).alias("disagree_ok"),
+        F.lit(True).alias("approx_ok"),
+        F.lit(True).alias("disagree_ok"),
+    ).schema
+    rows = report.collect()  # at most 125 segments
+    per_cust.unpersist()
+    # empty input: no dimension has a cut row and no customer to
+    # disagree on — both guarantees hold vacuously
+    approx_ok = all(by_dim.get(c, (True, 0))[0] for c, _ in dims)
+    disagree_ok = all(
+        sum(r[f"_nd_{c}"] for r in rows) <= by_dim.get(c, (True, 0))[1]
+        for c, _ in dims
+    )
+    return spark.createDataFrame(
+        [(*r[:3], approx_ok, disagree_ok) for r in rows], out
     )
 
 

@@ -84,6 +84,9 @@ def main(names):
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
+    from dynamicqueryengine_spark.functions.dedup import (
+        release_internal_caches,
+    )
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -200,6 +203,7 @@ def main(names):
             results[name] = {"err": str(e)[:500]}
             print(f"  {name}: ERROR {str(e)[:300]}")
         spark.catalog.clearCache()
+        release_internal_caches()
 
     print(json.dumps({"failures": failures, "n": len(results)}))
     return 1 if failures else 0

@@ -31,6 +31,17 @@ def pytest_configure(config):
     )
 
 
+def spark_jobs(spark, call):
+    """``(call(), Spark jobs it ran)``, counted by the scheduler, so jobs
+    started off the calling thread count too. (A status-store size delta
+    saturates once the store holds its last 1000 jobs, and a job group
+    misses jobs other threads start.)"""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    out = call()
+    return out, dag.numTotalJobs() - before
+
+
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
     # Managed tables (write_bucketed_table) land in the warehouse dir; the

@@ -11,7 +11,7 @@ import pytest
 from dynamicqueryengine_spark.api import evaluate_request, serve
 from dynamicqueryengine_spark.functions.sessions import session_stats
 
-from .conftest import SF_DIR, _perfbench_users
+from .conftest import SF_DIR, _perfbench_users, spark_jobs
 
 USERS_PAYLOAD = [
     {"Id": "u1", "Title": "Engineer", "Score": 10},
@@ -218,21 +218,11 @@ class TestServingBudget:
             {"Property": "Title", "Operator": "Equal", "Value": "Manager"}]}},
     ]
 
-    @staticmethod
-    def _jobs(spark, call):
-        """``(call(), Spark jobs it ran)``, counted by the scheduler: a
-        status-store size delta saturates once the store holds its last
-        1000 jobs."""
-        dag = spark.sparkContext._jsc.sc().dagScheduler()
-        before = dag.numTotalJobs()
-        out = call()
-        return out, dag.numTotalJobs() - before
-
     @pytest.mark.parametrize("n", [20, 2000])
     def test_filter_only_request_runs_no_spark_job(self, spark, n):
         payload = {"Rule": self.FILTER_RULE, "Users": _perfbench_users(n)}
         evaluate_request(spark, payload)  # warm
-        res, jobs = self._jobs(spark, lambda: evaluate_request(spark, payload))
+        res, jobs = spark_jobs(spark, lambda: evaluate_request(spark, payload))
         assert jobs == 0
         assert res["status"] == 200
         want = [u for u in payload["Users"] if u["Age"] > 30 and u["IsActive"]]
@@ -251,7 +241,7 @@ class TestServingBudget:
         rule = {"argmax": self.ARGMAX_RULE, "count": self.COUNT_RULE}.get(shape)
         payload = {"Users": users, **({"Rule": rule} if rule else {"Rules": self.UNION_RULES})}
         evaluate_request(spark, payload)  # warm
-        res, jobs = self._jobs(spark, lambda: evaluate_request(spark, payload))
+        res, jobs = spark_jobs(spark, lambda: evaluate_request(spark, payload))
         assert res["status"] == 200
         assert jobs == 1
         df = inline_table(spark, users)

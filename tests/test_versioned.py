@@ -17,6 +17,8 @@ from dynamicqueryengine_spark.sources.versioned import (
     vt_write,
 )
 
+from .conftest import spark_jobs
+
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "id long, v string")
@@ -983,8 +985,8 @@ class TestChangeFeed:
         wdir, wstats, wfstats, wfiles, _ = _write_data_dir(winner, path)
         _commit(
             path, [wdir], "overwrite", 1,
-            {wdir: wstats} if wstats else {}, None,
-            {wdir: wfstats}, {wdir: wfiles},
+            stats={wdir: wstats} if wstats else {},
+            file_stats={wdir: wfstats}, files={wdir: wfiles},
             schema=__import__("json").loads(winner.schema.json()),
         )
         v = vt_merge(
@@ -1650,6 +1652,34 @@ class TestShallowClone:
         assert vt_count(spark, dst) == 2
         h = vt_history(dst)[0]
         assert h["op"] == "clone"
+
+    @pytest.mark.parametrize("deep", [False, True])
+    def test_clone_records_every_table_property(self, spark, tmp_path, deep):
+        """The clone's first manifest records the source head's table
+        properties, ``bloom_cols`` included, so appends to the clone
+        keep harvesting Bloom filters for the same columns."""
+        from dynamicqueryengine_spark.sources.versioned import (
+            _PROPERTY_KEYS,
+            _read_manifest,
+            vt_clone,
+        )
+
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+        vt_write(
+            spark, src, _df(spark, [(1, "a"), (2, "b")]), bloom_cols=["v"],
+            constraints=[{"name": "nn", "kind": "not_null", "col": "id"}],
+        )
+        vt_clone(spark, src, dst, deep=deep)
+        head = _read_manifest(src, 1)
+        got = _read_manifest(dst, 1)
+        assert {k: got.get(k) for k in _PROPERTY_KEYS} == {
+            k: head.get(k) for k in _PROPERTY_KEYS
+        }
+        assert got["bloom_cols"] == ["v"]
+        v = vt_write(spark, dst, _df(spark, [(3, "c")]), mode="append")
+        m = _read_manifest(dst, v)
+        (new_dir,) = set(m["dirs"]) - set(got["dirs"])
+        assert m["bloom_cols"] == ["v"] and new_dir in m["blooms"]
 
     def test_clone_writes_are_isolated_both_ways(self, spark, tmp_path):
         from dynamicqueryengine_spark.sources.versioned import vt_clone
@@ -2549,18 +2579,8 @@ class TestSinglePassMcv:
             "*", "id AS c4", "id AS c5", "g AS c6", "x AS c7", "id AS c8"
         )
         vt_write(spark, wide_path, wide)
-        sc = spark.sparkContext
-
-        def jobs_for(p, group):
-            sc.setJobGroup(group, "vt_analyze job count")
-            try:
-                vt_analyze(spark, p)
-            finally:
-                sc.setJobGroup(None, None)
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-
-        narrow_jobs = jobs_for(path, "mcv-narrow")
-        wide_jobs = jobs_for(wide_path, "mcv-wide")
+        _, narrow_jobs = spark_jobs(spark, lambda: vt_analyze(spark, path))
+        _, wide_jobs = spark_jobs(spark, lambda: vt_analyze(spark, wide_path))
         # the job count must be INDEPENDENT of the column count — the
         # old per-column MCV loop added >= one extra job per analyzed
         # column (8 cols vs 3 cols would differ by >= 5 jobs)
@@ -5824,20 +5844,14 @@ class TestDmlJobCount:
                 spark, path, ["id"], n_partitions=4
             ),
         }
-        sc = spark.sparkContext
         counts = {}
         for verb, call in calls.items():
             if verb == "reorg":
                 # uncounted setup: a deletion vector for reorg to purge
                 vt_delete(spark, path, ("id", "=", 250), mode="dv")
-            group = f"dml-jobs-{verb}"
-            sc.setJobGroup(group, "vt DML job count")
-            try:
-                v = vt_versions(path)[-1]
-                assert call() == v + 1, verb  # every call commits
-            finally:
-                sc.setJobGroup(None, None)
-            counts[verb] = len(sc.statusTracker().getJobIdsForGroup(group))
+            v = vt_versions(path)[-1]
+            got, counts[verb] = spark_jobs(spark, call)
+            assert got == v + 1, verb  # every call commits
         for verb, n in counts.items():
             assert n <= self._MAX_JOBS[verb], counts
         got = {r["id"]: r["v"] for r in vt_read(spark, path).collect()}
@@ -5860,26 +5874,13 @@ class TestDmlJobCount:
         v = vt_versions(path)[-1]
         (flist,) = _read_manifest(path, v)["files"].values()
         assert len(flist) == 40
-        sc = spark.sparkContext
-        sc.setJobGroup("dml-jobs-update-all", "vt DML job count")
-        try:
-            assert vt_update(spark, path, ("id", ">=", 0), {"v": "'u'"}) == v + 1
-        finally:
-            sc.setJobGroup(None, None)
-        jobs = sc.statusTracker().getJobIdsForGroup("dml-jobs-update-all")
-        assert len(jobs) == 1
+        got, jobs = spark_jobs(
+            spark, lambda: vt_update(spark, path, ("id", ">=", 0), {"v": "'u'"})
+        )
+        assert got == v + 1
+        assert jobs == 1
         rows = vt_read(spark, path).collect()
         assert len(rows) == 4000 and {r["v"] for r in rows} == {"u"}
-
-    @staticmethod
-    def _status_jobs(spark, call):
-        """``(call(), Spark jobs it ran)``, counted by the scheduler, so
-        jobs started off the calling thread count too. (A status-store
-        size delta saturates once the store holds its last 1000 jobs.)"""
-        dag = spark.sparkContext._jsc.sc().dagScheduler()
-        before = dag.numTotalJobs()
-        out = call()
-        return out, dag.numTotalJobs() - before
 
     def test_change_feed_read_runs_one_job(self, spark, tmp_path):
         """Building the change feed over an append, a merge, a delete and
@@ -5905,10 +5906,10 @@ class TestDmlJobCount:
         )
         head = vt_versions(path)[-1]
         assert head == v0 + 4
-        feed, built = self._status_jobs(
+        feed, built = spark_jobs(
             spark, lambda: vt_read_changes(spark, path, v0, head)
         )
-        rows, ran = self._status_jobs(spark, feed.collect)
+        rows, ran = spark_jobs(spark, feed.collect)
         assert (built, ran) == (0, 1)
         assert Counter(r["_change_type"] for r in rows) == {
             "insert": 2, "update_preimage": 21, "update_postimage": 21,
@@ -5931,7 +5932,7 @@ class TestDmlJobCount:
             bloom_cols=["v"],
         )
         v = vt_versions(path)[-1]
-        got, jobs = self._status_jobs(
+        got, jobs = spark_jobs(
             spark,
             lambda: vt_write(
                 spark, path, _df(spark, [(40, "v40"), (41, "v41")]),
@@ -5960,7 +5961,7 @@ class TestDmlJobCount:
 
         path = self._forty_files(spark, tmp_path)
         v = vt_versions(path)[-1]
-        got, jobs = self._status_jobs(
+        got, jobs = spark_jobs(
             spark, lambda: vt_delete(spark, path, ("id", ">=", 100))
         )
         assert got == v + 1
@@ -5989,10 +5990,10 @@ class TestDmlJobCount:
         assert (plan["files_kept"], plan["files_total"]) == (38, 40)
         want = spark.range(4000).filter(f"id >= {cut}").count()
         for _ in range(2):  # the second pass is warm
-            n_all, jobs_all = self._status_jobs(
+            n_all, jobs_all = spark_jobs(
                 spark, lambda: vt_read(spark, path).count()
             )
-            n_kept, jobs_kept = self._status_jobs(
+            n_kept, jobs_kept = spark_jobs(
                 spark, lambda: vt_read(spark, path, predicate=pred).count()
             )
         assert (n_all, n_kept) == (4000, want)
@@ -6263,3 +6264,153 @@ class TestFooterSchemaParity:
         assert got == feed()
         if table == "_zero_rows":
             assert [r for r in got[1] if "'insert'" not in r] == []
+
+
+class TestMetadataCommitCarry:
+    """A metadata-only commit (schema DDL, partition-spec change,
+    ANALYZE, the deletion-vector roll-up) keeps every snapshot and
+    table-property key of the head it commits on, except the keys its
+    verb changes. The per-commit keys (``op``, the audit blob,
+    ``changes``, ``analyze``, ``clone``, ``txn``) never carry."""
+
+    _KEYS = (
+        "dirs", "files", "stats", "file_stats", "file_rows", "blooms",
+        "partial_dirs", "schema", "schema_heterogeneous", "dv",
+        "partitions", "constraints", "bloom_cols", "column_mapping",
+        "generated", "identity", "partition_by", "protocol", "txns",
+    )
+
+    @staticmethod
+    def _table(spark, path):
+        """Every snapshot and property key in one head: partitioned,
+        bloom columns, a constraint, generated and identity columns,
+        two deletion-vector sidecars and a partially rewritten dir."""
+        from dynamicqueryengine_spark.sources.versioned import vt_delete
+
+        df = spark.createDataFrame(
+            [(i, "ab"[i % 2], float(i), i, (i, f"s{i}")) for i in range(40)],
+            "id long, g string, x double, y int, s struct<a:int,b:string>",
+        ).repartition(4)
+        vt_write(
+            spark, path, df, partition_by=["g"], bloom_cols=["id", "x"],
+            constraints=[{"name": "id_nn", "kind": "not_null", "col": "id"}],
+            generated={"total": "id * 2"},
+            identity={"rid": {"start": 1, "step": 1}},
+        )
+        vt_write(
+            spark, path,
+            df.limit(10).selectExpr("id + 100 AS id", "g", "x", "y", "s"),
+            mode="append",
+        )
+        vt_delete(spark, path, ("id", "=", 5))
+        vt_delete(spark, path, ("id", "=", 3), mode="dv")
+        vt_delete(spark, path, ("id", "=", 4), mode="dv")
+        return vt_versions(path)[-1]
+
+    def _assert_carried(self, path, verb, changed):
+        from dynamicqueryengine_spark.sources.versioned import _read_manifest
+
+        head_v = vt_versions(path)[-1]
+        head = _read_manifest(path, head_v)
+        got = verb()
+        assert got == head_v + 1
+        succ = _read_manifest(path, got)
+        kept = [k for k in self._KEYS if k not in changed]
+        assert {k: succ.get(k) for k in kept} == {
+            k: head.get(k) for k in kept
+        }
+        assert not changed or any(
+            succ.get(k) != head.get(k) for k in changed
+        ), changed
+        once = {"changes", "analyze", "clone", "txn", head["op"]}
+        assert not (once - {succ["op"]}) & set(succ), sorted(succ)
+        return succ
+
+    def test_metadata_commits_carry_the_head(self, spark, tmp_path):
+        from dynamicqueryengine_spark.sources.versioned import (
+            _read_manifest,
+            vt_add_column,
+            vt_analyze,
+            vt_checkpoint,
+            vt_drop_column,
+            vt_rename_column,
+            vt_set_partition_spec,
+            vt_widen_column,
+        )
+
+        path = str(tmp_path / "t")
+        head = self._table(spark, path)
+        m = _read_manifest(path, head)
+        assert m.get("partial_dirs") and m.get("partitions")
+        assert len({e["ref"] for f in m["dv"].values() for e in f.values()}) == 2
+        carry = self._assert_carried
+        carry(path, lambda: vt_analyze(spark, path), ())
+        carry(
+            path, lambda: vt_checkpoint(spark, path, consolidate_dv=True),
+            ("dv",),
+        )
+        # a no-op spec change commits nothing
+        assert vt_set_partition_spec(path, ["g"]) == vt_versions(path)[-1]
+        carry(path, lambda: vt_set_partition_spec(path, []), ("partition_by",))
+        carry(
+            path, lambda: vt_widen_column(path, "y", "bigint"),
+            ("schema", "schema_heterogeneous"),
+        )
+        ddl = ("schema", "column_mapping", "protocol")
+        carry(
+            path, lambda: vt_rename_column(path, "x", "x2"),
+            ddl + ("bloom_cols",),
+        )
+        carry(path, lambda: vt_rename_column(path, "s.a", "a2"), ddl)
+        carry(path, lambda: vt_add_column(path, "z", "string"), ddl)
+        carry(path, lambda: vt_add_column(path, "s.c", "int"), ddl)
+        carry(
+            path, lambda: vt_drop_column(path, "x2"), ddl + ("bloom_cols",)
+        )
+        carry(path, lambda: vt_drop_column(path, "s.c"), ddl)
+        succ = _read_manifest(path, vt_versions(path)[-1])
+        assert succ["bloom_cols"] == ["id"]
+        assert succ["protocol"] == {"min_reader": 3, "min_writer": 3}
+        assert vt_read(spark, path).columns == [
+            "id", "g", "y", "s", "total", "rid", "z",
+        ]
+        assert vt_count(spark, path) == 47
+
+    def test_set_partition_spec_retries_a_lost_race(self, spark, tmp_path):
+        import dynamicqueryengine_spark.sources.versioned as V
+
+        path = str(tmp_path / "t")
+        head = self._table(spark, path)
+        real = V._commit
+        calls = []
+
+        def racing(*a, **k):
+            calls.append(a[2])
+            if len(calls) == 1:
+                # the racing append lands first: this attempt loses
+                V._commit = real
+                vt_write(
+                    spark, path,
+                    spark.createDataFrame(
+                        [(500, "a", 1.0, 1, (1, "r"))],
+                        "id long, g string, x double, y int, "
+                        "s struct<a:int,b:string>",
+                    ),
+                    mode="append",
+                )
+                V._commit = racing
+            return real(*a, **k)
+
+        V._commit = racing
+        try:
+            got = V.vt_set_partition_spec(path, [])
+        finally:
+            V._commit = real
+        assert calls == ["set_partition_spec", "set_partition_spec"]
+        assert got == head + 2
+        won = V._read_manifest(path, head + 1)
+        succ = V._read_manifest(path, got)
+        assert won["op"] == "append" and succ["op"] == "set_partition_spec"
+        assert succ["dirs"] == won["dirs"] and "partition_by" not in succ
+        assert succ["set_partition_spec"] == {"from": ["g"], "to": []}
+        assert vt_count(spark, path) == 48
